@@ -112,11 +112,11 @@ def main() -> None:
         docs = D.docs_df(spark, BENCH_CITY, n_partitions=32).cache()
         docs.count()
         t0 = time.time()
-        # eager=True warms the deep shared chain (decode → dims → trips
+        # the pipeline warms the deep shared chain (decode → dims → trips
         # → stop_times) with one sequential action; without it the
         # concurrent sink jobs below serialize on cold-cache block
         # locks (r2 lesson: 18.2 s vs 13.9 s for the identical DAG)
-        tables = run_frequency_pipeline(docs, eager=True)
+        tables = run_frequency_pipeline(docs)
         # the six members + tile map materialize concurrently, as the
         # zip sink would write them — Spark schedules independent jobs
         # in parallel, so the driver latency of 7 sequential actions
@@ -197,7 +197,7 @@ def main() -> None:
         docs = D.docs_df(spark, BENCH_CITY, n_partitions=32).cache()
         docs.count()
         t0 = time.time()
-        st = run_schedule_pipeline(docs, eager=True)
+        st = run_schedule_pipeline(docs)
         souts = [st.stop_times, st.stops, st.routes, st.trips, st.shapes, st.calendar]
         with ThreadPoolExecutor(max_workers=len(souts)) as ex:
             sched_rows = sum(ex.map(lambda t: t.count(), souts))
@@ -210,7 +210,6 @@ def main() -> None:
     # manifest-check + parquet read-back (the resume win on record)
     import shutil
 
-    from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline_checkpointed
     from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
 
     ck_root = tempfile.mkdtemp(prefix="bench_ckpt_")
@@ -221,7 +220,7 @@ def main() -> None:
             docs = D.docs_df(spark, BENCH_CITY, n_partitions=32).cache()
             docs.count()
             t0 = time.time()
-            tabs = run_frequency_pipeline_checkpointed(docs, cat)
+            tabs = run_frequency_pipeline(docs, catalog=cat)
             couts = [tabs.stop_times, tabs.stops, tabs.routes,
                      tabs.trips, tabs.shapes, tabs.frequencies]
             with ThreadPoolExecutor(max_workers=len(couts)) as ex:

@@ -14,7 +14,9 @@ output_file), with two Spark-native substitutions:
   (``docs_parquet``). No network is ever touched.
 - **refresh flags** map onto ``CheckpointCatalog.invalidate`` of the
   corresponding stage groups (the reference's pickle-cache refresh,
-  core/cache.py) when the config carries a ``cache_dir``.
+  core/cache.py) when the config carries a ``cache_dir``. Each group is
+  derived from the pipelines' stage graphs (``plans/pipeline.py``): the
+  refetched source's stage plus every stage built from it.
 
 Operational note for long backfills (ADVICE r4): operators that take a
 reliable ``checkpoint_dir`` (e.g. ``dedup.connected_components``) call
@@ -39,30 +41,16 @@ import json
 import logging
 import os
 
+from osm2gtfs_spark.plans import pipeline
+
 log = logging.getLogger("osm2gtfs_spark.cli")
 
-# stage groups for --refresh-* → CheckpointCatalog.invalidate, matching
-# the checkpointed pipeline's stage DAG (plans/pipeline.py): each group
-# is the dependency closure of the data the reference flag refetches
-# schedule-path stages carry a sched_ prefix wherever their schema
-# differs from the frequency pipeline's same-role stage (so toggling
-# schedule_source against an existing cache_dir can never resume
-# schema-incompatible data); each closure below lists every stage whose
-# output depends on the refreshed source, per pipeline
-_SCHED_DOWNSTREAM = [
-    "per_service", "sched_filled", "sched_trips", "sched_stop_times",
-    "sched_stops_final", "sched_routes_final",
-]
-STOP_STAGES = [
-    "nodes", "ways", "stops", "stations", "parent_map", "stops_final",
-    # schedule path: alignment + everything derived from it uses stops
-    "sched_filled", "sched_stop_times", "sched_stops_final", "sched_routes_final",
-]
-ROUTE_STAGES = [
-    "relations", "lines", "itineraries", "itin_stops", "shapes",
-    "trips", "frequencies", "stop_times", "routes_final", "stops_final",
-] + _SCHED_DOWNSTREAM
-SCHEDULE_STAGES = ["schedule"] + _SCHED_DOWNSTREAM
+# --refresh-* → CheckpointCatalog.invalidate: each group is the stage
+# that holds the refetched source plus every stage built from it, on
+# either pipeline's stage graph
+STOP_STAGES = pipeline.downstream({"nodes", "ways"})
+ROUTE_STAGES = pipeline.downstream({"relations"})
+SCHEDULE_STAGES = pipeline.downstream({"schedule"})
 
 DEDICATED_SELECTORS = ("gh_accra", "ci_abidjan", "br_florianopolis")
 
@@ -146,10 +134,9 @@ def run(args, spark=None) -> str:
         catalog = CheckpointCatalog(spark, config["cache_dir"])
         for stage in _refresh_stages(args):
             if catalog.manifest(stage) is None:
-                # visible no-op instead of a silent one: e.g. the
-                # schedule path is not checkpointed, so
-                # --refresh-schedule-source has nothing to clear until a
-                # 'schedule' stage exists in this cache_dir
+                # visible no-op instead of a silent one: e.g. a
+                # cache_dir built by the frequency pipeline has no
+                # 'schedule' stage for --refresh-schedule-source to clear
                 log.warning("refresh: no cached stage %r to invalidate", stage)
             catalog.invalidate(stage)
 
@@ -160,44 +147,22 @@ def run(args, spark=None) -> str:
     if "docs_parquet" in inputs:
         # interleaved docs table → the generic scalable pipelines + the
         # sharded distributed sink (corpus-scale path)
-        from osm2gtfs_spark.plans.pipeline import (
-            run_frequency_pipeline,
-            run_frequency_pipeline_checkpointed,
-            run_schedule_pipeline,
-            run_schedule_pipeline_checkpointed,
-        )
         from osm2gtfs_spark.sources.gtfs_sink import write_gtfs_zip
 
         docs = spark.read.parquet(inputs["docs_parquet"])
-        feed_start = fi.get("start_date", "20240101")
-        feed_end = fi.get("end_date", "20250101")
-        has_schedule = "timetable" in inputs or config.get("schedule_source")
-        if has_schedule:
+        if "timetable" in inputs or config.get("schedule_source"):
             if "timetable" in inputs:
                 # a configured timetable file is DATA, not just a mode
                 # switch: its schedule docs join the interleaved corpus
                 docs = docs.unionByName(timetable_docs_df(spark, inputs["timetable"]))
-            if catalog is not None:
-                # ADVICE r3 follow-through: cache_dir is honored on the
-                # schedule path too (stage-checkpointed, resume-capable)
-                tables = run_schedule_pipeline_checkpointed(
-                    docs, catalog, name_without,
-                    feed_start=feed_start, feed_end=feed_end,
-                )
-            else:
-                tables = run_schedule_pipeline(
-                    docs, name_without=name_without,
-                    feed_start=feed_start, feed_end=feed_end, eager=True,
-                )
-        elif catalog is not None:
-            tables = run_frequency_pipeline_checkpointed(
-                docs, catalog, name_without, feed_start=feed_start, feed_end=feed_end
-            )
+            run_pipeline = pipeline.run_schedule_pipeline
         else:
-            tables = run_frequency_pipeline(
-                docs, name_without=name_without,
-                feed_start=feed_start, feed_end=feed_end, eager=True,
-            )
+            run_pipeline = pipeline.run_frequency_pipeline
+        tables = run_pipeline(
+            docs, name_without=name_without, catalog=catalog,
+            feed_start=fi.get("start_date", "20240101"),
+            feed_end=fi.get("end_date", "20250101"),
+        )
         _log_validation(validate_feed(tables))
         return write_gtfs_zip(
             tables, out, agency=config.get("agency"), shards=int(config.get("sink_shards", 1))

@@ -43,11 +43,11 @@ from osm2gtfs_spark.functions.opening_hours import (
     DEFAULT_OPENING_HOURS,
     oh_windows,
 )
+from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.sources import docs as docs_mod
 
-TRANSITFEED_RADIUS_M = 6367000.0
 DEFAULT_TRIP_DURATION_MIN = 120  # trips_creator_ci_abidjan.py:30
 
 
@@ -60,16 +60,6 @@ class AbidjanTables:
     frequencies: DataFrame
     stop_times: DataFrame
     stops: DataFrame
-
-
-def _haversine_tf(lat1, lon1, lat2, lon2):
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * TRANSITFEED_RADIUS_M) * F.asin(F.sqrt(a))
 
 
 def _windows_for(tags_col, solar_times: dict | None = None):
@@ -308,7 +298,7 @@ def build_abidjan_tables(
         .withColumn(
             "leg_m",
             F.when(F.col("prev_lat").isNull(), F.lit(0.0)).otherwise(
-                _haversine_tf(F.col("prev_lat"), F.col("prev_lon"), F.col("lat"), F.col("lon"))
+                haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)
             ),
         )
         .withColumn("cum_m", F.sum("leg_m").over(w_seq))

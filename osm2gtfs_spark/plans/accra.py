@@ -32,12 +32,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.operators.spatial import cluster_stops_greedy
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.sources import docs as docs_mod
 
-TRANSITFEED_RADIUS_M = 6367000.0
 ACCRA_NAME_WITHOUT = "Add a name to the stop with JungleBus app"
 
 
@@ -49,17 +49,6 @@ class AccraTables:
     stop_times: DataFrame
     frequencies: DataFrame
     shapes: DataFrame
-
-
-def _haversine_tf(lat1, lon1, lat2, lon2):
-    """transitfeed ApproximateDistance (radius 6367000 m)."""
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * TRANSITFEED_RADIUS_M) * F.asin(F.sqrt(a))
 
 
 def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame) -> AccraTables:
@@ -217,7 +206,7 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame) -> AccraTa
             "leg_m",
             F.when(
                 F.col("prev_lat").isNull(), F.lit(0.0)
-            ).otherwise(_haversine_tf(F.col("prev_lat"), F.col("prev_lon"), F.col("lat"), F.col("lon"))),
+            ).otherwise(haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)),
         )
         .withColumn("cum_m", F.sum("leg_m").over(w_seq))
         .withColumn("total_m", F.sum("leg_m").over(w_all))

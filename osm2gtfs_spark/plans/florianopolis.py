@@ -39,12 +39,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.sources import docs as docs_mod
 from osm2gtfs_spark.sources import fenix as fx
 
-TRANSITFEED_RADIUS_M = 6367000.0
 BLACKLIST = ["10200", "12400", "328", "466", "665", "464"]
 DAY_ORDER = {"weekday": 0, "saturday": 1, "sunday": 2}
 
@@ -68,16 +68,6 @@ def normalize_stop_name(col):
     c = F.regexp_replace(c, r"Terminal Rio Tavares", "TIRIO")
     c = F.regexp_replace(c, r"Itacurubi", "Itacorubi")
     return c
-
-
-def _haversine_tf(lat1, lon1, lat2, lon2):
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * TRANSITFEED_RADIUS_M) * F.asin(F.sqrt(a))
 
 
 def build_florianopolis_tables(
@@ -404,7 +394,7 @@ def build_florianopolis_tables(
         .withColumn(
             "leg_m",
             F.when(F.col("prev_lat").isNull(), F.lit(0.0)).otherwise(
-                _haversine_tf(F.col("prev_lat"), F.col("prev_lon"), F.col("lat"), F.col("lon"))
+                haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)
             ),
         )
         .withColumn("cum_m", F.sum("leg_m").over(w_seq))

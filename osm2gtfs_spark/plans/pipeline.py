@@ -1,21 +1,32 @@
-"""End-to-end pipeline: interleaved docs → GTFS tables (Accra path).
+"""End-to-end pipelines: interleaved docs → GTFS tables.
 
-The driver-side orchestration mirrors the reference's fixed stage order
-(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. Every
-stage is a DataFrame; callers may checkpoint between stages via
-:mod:`osm2gtfs_spark.sources.checkpoint`.
+Each pipeline (frequency, schedule) is declared once, as a table of
+:class:`Stage` entries in the reference's fixed stage order
+(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. Two
+runners walk any table: in memory (``catalog=None``: cache, then warm
+before the caller's sink fan-out) and checkpointed (every output is a
+resumable catalog stage, run as a future along the dependencies). The
+CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
 """
 
 from __future__ import annotations
 
+import logging
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.plans import gtfs
+from osm2gtfs_spark.plans import schedule_path as SP
 from osm2gtfs_spark.sources import docs as docs_mod
+
+log = logging.getLogger("osm2gtfs_spark.pipeline")
 
 
 @dataclass
@@ -28,6 +39,174 @@ class GtfsTables:
     frequencies: DataFrame
     calendar: DataFrame
     stations: DataFrame
+    calendar_dates: DataFrame | None = None
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One builder call: ``build(*deps)`` gives one frame per name.
+
+    Every name is its own catalog stage (own manifest, ``inputs`` =
+    ``deps``); ``cache`` marks the multi-consumer outputs the in-memory
+    runner caches."""
+
+    names: tuple[str, ...]
+    deps: tuple[str, ...]
+    build: Callable[..., DataFrame | tuple[DataFrame, ...]]
+    cache: bool = False
+
+    def outputs(self, frames: list[DataFrame]) -> dict[str, DataFrame]:
+        out = self.build(*frames)
+        return dict(zip(self.names, out if len(self.names) > 1 else (out,)))
+
+
+def _osm_stages(name_without: str) -> tuple[Stage, ...]:
+    """Stages shared by both pipelines: decode → stops, stations, lines,
+    itinerary stops and shapes."""
+    return (
+        Stage(("nodes",), ("docs",), docs_mod.decode_nodes, cache=True),
+        Stage(("ways",), ("docs",), docs_mod.decode_ways, cache=True),
+        Stage(("relations",), ("docs",), docs_mod.decode_relations, cache=True),
+        Stage(
+            ("stops",), ("nodes", "ways"),
+            lambda nodes, ways: gtfs.build_stops(nodes, ways, name_without), cache=True,
+        ),
+        # double-precision centroid aggregation merges shuffle partials in
+        # task-completion order; caching pins one materialization so every
+        # sink sees the same last ulp
+        Stage(("stations", "parent_map"), ("relations", "stops"), gtfs.build_stations, cache=True),
+        Stage(("lines", "itineraries"), ("relations",), gtfs.build_lines, cache=True),
+        Stage(("itin_stops",), ("relations",), gtfs.itinerary_stops),
+        Stage(("shapes",), ("relations", "ways", "nodes"), _shapes),
+    )
+
+
+def _frequency_stages(name_without: str = "stop") -> tuple[Stage, ...]:
+    return _osm_stages(name_without) + (
+        # the count behind small_threshold is a cheap scan of the cached
+        # (or checkpointed) itineraries
+        Stage(
+            ("trips",), ("lines", "itineraries"),
+            partial(gtfs.build_trips, small_threshold=SMALL_INDEX_THRESHOLD), cache=True,
+        ),
+        Stage(("frequencies",), ("trips",), gtfs.build_frequencies),
+        Stage(("stop_times",), ("trips", "itin_stops"), gtfs.build_stop_times, cache=True),
+        Stage(("stops_final",), ("stops", "stop_times", "parent_map"), _stops_final),
+        Stage(("routes_final",), ("lines", "trips"), _routes_final),
+    )
+
+
+def _schedule_stages(name_without: str = "stop") -> tuple[Stage, ...]:
+    """Stages whose schema differs from the frequency pipeline's
+    same-role stage carry a ``sched_`` prefix, so toggling the schedule
+    source against an existing cache_dir never resumes incompatible data."""
+    return _osm_stages(name_without) + (
+        Stage(("schedule",), ("docs",), docs_mod.decode_schedule),
+        Stage(
+            ("per_service",), ("itineraries", "schedule"),
+            lambda itins, sched: SP.itinerary_service_schedule(SP.match_schedule(itins, sched)),
+            cache=True,
+        ),
+        Stage(
+            ("sched_filled",),
+            ("itin_stops", "stops", "parent_map", "stations", "per_service"),
+            _schedule_filled,
+        ),
+        Stage(("sched_trips",), ("per_service",), _schedule_trips_full, cache=True),
+        Stage(
+            ("sched_stop_times",), ("sched_filled", "sched_trips"),
+            _schedule_stop_times, cache=True,
+        ),
+        Stage(("sched_stops_final",), ("stops", "sched_stop_times", "parent_map"), _stops_final),
+        Stage(
+            ("sched_routes_final",), ("lines", "sched_trips", "sched_stop_times"),
+            lambda lines, trips, stop_times: _routes_final(lines, _live_trips(trips, stop_times)),
+        ),
+    )
+
+
+def downstream(roots) -> list[str]:
+    """``roots`` plus every stage, on either pipeline, built from them."""
+    stages = _frequency_stages() + _schedule_stages()
+    out, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in out:
+            out.add(name)
+            todo += [n for st in stages if name in st.deps for n in st.names]
+    return sorted(out)
+
+
+def _run_in_memory(stages, docs: DataFrame, warm: str) -> dict[str, DataFrame]:
+    """Build every stage lazily, cache the ``cache`` outputs, then warm:
+    the stop side on a background thread, ``warm`` (the deepest shared
+    chain) in the foreground.
+
+    Callers fan out into concurrent sink jobs. Concurrent actions over a
+    *cold* cache chain serialize on the block manager's per-partition
+    cache locks, so the deep chain is warmed once with one action; the
+    background thread back-fills the cores the serial trip-side jobs
+    (the small_threshold count, the warm itself) leave idle."""
+    frames = {"docs": docs}
+    with ThreadPoolExecutor(max_workers=1, thread_name_prefix="gtfs-warm") as pool:
+        # leaving the block joins the warm thread on every exit path, so
+        # no warm job outlives a failed build
+        warm_bg = None
+        for st in stages:
+            for name, df in st.outputs([frames[d] for d in st.deps]).items():
+                frames[name] = df.cache() if st.cache else df
+            if warm_bg is None and "stops" in frames and "parent_map" in frames:
+                stop_side = [frames["stops"], frames["parent_map"]]
+                warm_bg = pool.submit(lambda: [df.count() for df in stop_side])
+        frames[warm].count()
+        warm_bg.result()  # re-raises a warm-side failure
+    return frames
+
+
+def _run_checkpointed(stages, docs: DataFrame, catalog) -> dict[str, DataFrame]:
+    """Run every stage through ``catalog.run_stage`` as a future that
+    waits on its deps' futures: wall time tracks the critical path, not
+    the sum of stage costs. Each stage commits data, then manifest, and
+    logs one line: built or resumed, rows, seconds and inputs."""
+    futures: dict = {}
+
+    def frame(name: str) -> DataFrame:
+        return docs if name == "docs" else futures[name].result()[name]
+
+    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+        for st in stages:
+            fut = pool.submit(
+                lambda st=st: _checkpoint_stage(catalog, st, [frame(d) for d in st.deps])
+            )
+            futures.update(dict.fromkeys(st.names, fut))
+        return {name: frame(name) for name in futures}
+
+
+def _checkpoint_stage(catalog, st: Stage, frames: list[DataFrame]) -> dict[str, DataFrame]:
+    built: dict[str, DataFrame] = {}
+
+    def output(name: str) -> DataFrame:
+        if not built:  # one build call serves every output name
+            built.update(st.outputs(frames))
+        return built[name]
+
+    done = {}
+    for name in st.names:
+        t0 = time.perf_counter()
+        resumed = catalog.is_complete(name)
+        done[name] = catalog.run_stage(name, lambda name=name: output(name), list(st.deps))
+        log.info(
+            "stage %s %s: %d rows in %.2f s, inputs %s",
+            name, "resumed" if resumed else "built", catalog.manifest(name)["row_count"],
+            time.perf_counter() - t0, list(st.deps),
+        )
+    return done
+
+
+def _run(stages, docs: DataFrame, catalog, warm: str) -> dict[str, DataFrame]:
+    if catalog is None:
+        return _run_in_memory(stages, docs, warm)
+    return _run_checkpointed(stages, docs, catalog)
 
 
 def run_frequency_pipeline(
@@ -35,277 +214,87 @@ def run_frequency_pipeline(
     name_without: str = "stop",
     feed_start: str = "20240101",
     feed_end: str = "20250101",
-    persist: bool = True,
-    eager: bool = False,
+    catalog=None,
 ) -> GtfsTables:
-    """docs → decoded entities → GTFS tables via the frequency path.
-
-    ``persist=True`` caches the stages consumed by multiple sinks
-    (decoded entities, stops, lines, itineraries, trips) — the GTFS DAG
-    fans out into 6+ output tables, and without this every sink re-runs
-    the decode and joins. On a cluster these become checkpoint table
-    writes instead (sources/checkpoint.py), which also give resume.
-
-    ``eager=True`` materializes the deepest shared chain (stop_times,
-    which pulls decode → lines/itineraries → trips through their
-    caches) with ONE sequential action before returning. Callers that
-    fan out into concurrent sink jobs (bench.py, the zip sink) want
-    this: concurrent actions over a *cold* cache chain serialize on the
-    block-manager's per-partition cache locks (each thread blocks while
-    another computes the block), so warming the contended chain once and
-    letting only the independent subtrees (stops, shapes, tiles) race is
-    strictly faster. Independent subtrees are intentionally NOT warmed —
-    they parallelize cleanly across the sink jobs."""
-    nodes = docs_mod.decode_nodes(docs)
-    ways = docs_mod.decode_ways(docs)
-    relations = docs_mod.decode_relations(docs)
-    if persist:
-        nodes, ways, relations = nodes.cache(), ways.cache(), relations.cache()
-
-    stops = gtfs.build_stops(nodes, ways, name_without)
-    stations, parent_map = gtfs.build_stations(relations, stops)
-    if persist:
-        # double-precision centroid aggregation merges shuffle partials
-        # in task-completion order — recomputing stations per sink can
-        # wobble the last ulp; caching pins one materialization (and
-        # stations/parent_map are multi-consumer anyway)
-        stations, parent_map = stations.cache(), parent_map.cache()
-    lines, itineraries = gtfs.build_lines(relations)
-    if persist:
-        # lines feeds trips + routes_final; itineraries feeds the
-        # double-scanned global_index input; stops feeds stations +
-        # stops_final — all multi-consumer dims (MEMORY_AND_DISK, spills)
-        stops, lines, itineraries = stops.cache(), lines.cache(), itineraries.cache()
-    itin_stops = gtfs.itinerary_stops(relations)
-    shapes = gtfs.build_shapes(relations, ways, nodes).withColumn(
-        "shape_id",
-        F.concat(F.lit("relation/"), F.col("itinerary_osm_id").cast("string")),
-    )
-    # overlap the independent stop-side cache warms (nodes → ways →
-    # stops → stations/parent_map) with the serial threshold-count job
-    # inside build_trips below (guide §2.6 "overlap independent jobs"):
-    # the two subtrees share only the already-hot docs cache, so the
-    # background thread back-fills cores the count job leaves idle, and
-    # the later sink fan-out no longer collides on cold decode caches.
-    warm_fut = None
-    if eager and persist:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _warm_pool = ThreadPoolExecutor(max_workers=1)
-
-        def _warm_stop_side():
-            stops.count()
-            parent_map.count()
-
-        warm_fut = _warm_pool.submit(_warm_stop_side)
-        _warm_pool.shutdown(wait=False)
-    # the count behind small_threshold is cheap only when itineraries is
-    # cached (persist path); uncached callers always get the 2-phase plan
-    trips_full = gtfs.build_trips(
-        lines, itineraries, small_threshold=SMALL_INDEX_THRESHOLD if persist else None
-    )
-    if persist:
-        trips_full = trips_full.cache()
-    frequencies = gtfs.build_frequencies(trips_full)
-    stop_times = gtfs.build_stop_times(trips_full, itin_stops)
-    if persist:
-        stop_times = stop_times.cache()
-    trips = trips_full.drop("itinerary_osm_id", "frequency_min", "travel_min")
-
-    stops_final = gtfs.prune_unused_stops(stops, stop_times).join(
-        parent_map, "stop_key", "left"
-    )
-    routes_final = _routes_final(lines, trips)
+    """docs → GTFS tables via the frequency (Accra) path; with a
+    ``catalog``, every stage is checkpointed and resumable."""
+    s = _run(_frequency_stages(name_without), docs, catalog, warm="stop_times")
     spark = docs.sparkSession
-    calendar = spark.createDataFrame(
-        [("always", 1, 1, 1, 1, 1, 1, 1, feed_start, feed_end)],
-        "service_id string, monday int, tuesday int, wednesday int, thursday int,"
-        " friday int, saturday int, sunday int, start_date string, end_date string",
-    )
-    if eager and persist:
-        try:
-            stop_times.count()  # warms decode → dims → trips_full → stop_times
-        except BaseException:
-            # join the warm thread without masking the main-chain error
-            # (review r6): an unjoined warm would keep running against a
-            # context the caller may be about to stop
-            if warm_fut is not None:
-                warm_fut.exception()
-            raise
-        if warm_fut is not None:
-            warm_fut.result()  # re-raises a warm-side failure
     return GtfsTables(
-        stops=stops_final,
-        routes=routes_final,
-        trips=trips,
-        stop_times=stop_times,
-        shapes=shapes,
-        frequencies=frequencies,
-        calendar=calendar,
-        stations=stations,
+        stops=s["stops_final"],
+        routes=s["routes_final"],
+        trips=s["trips"].drop("itinerary_osm_id", "frequency_min", "travel_min"),
+        stop_times=s["stop_times"],
+        shapes=s["shapes"],
+        frequencies=s["frequencies"],
+        calendar=spark.createDataFrame(
+            [("always", 1, 1, 1, 1, 1, 1, 1, feed_start, feed_end)],
+            "service_id string, monday int, tuesday int, wednesday int, thursday int,"
+            " friday int, saturday int, sunday int, start_date string, end_date string",
+        ),
+        stations=s["stations"],
     )
 
 
-def run_frequency_pipeline_checkpointed(
+def run_schedule_pipeline(
     docs: DataFrame,
-    catalog,
     name_without: str = "stop",
     feed_start: str = "20240101",
     feed_end: str = "20250101",
+    catalog=None,
 ) -> GtfsTables:
-    """Frequency pipeline with every stage materialized to the
-    checkpoint catalog — a killed job resumes at the first incomplete
-    stage (north rule). Stage DAG mirrors run_frequency_pipeline.
-
-    Stages are submitted as FUTURES along the dependency DAG
-    (optimization r6, guide §2.6 "overlap independent jobs"): the
-    decode trio runs concurrently, then stops/lines/itineraries/
-    itin_stops/shapes overlap, etc. — wall time tracks the critical
-    path (docs → relations → lines → trips → stop_times → stops_final)
-    instead of the stage-cost sum. Each stage's bytes, manifest, and
-    resume semantics are unchanged: a stage still commits data-then-
-    manifest atomically, and a crash simply leaves more than one stage
-    incomplete for the next run to redo."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    cat = catalog
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        f_nodes = ex.submit(
-            cat.run_stage, "nodes", lambda: docs_mod.decode_nodes(docs), ["docs"]
-        )
-        f_ways = ex.submit(
-            cat.run_stage, "ways", lambda: docs_mod.decode_ways(docs), ["docs"]
-        )
-        f_relations = ex.submit(
-            cat.run_stage, "relations", lambda: docs_mod.decode_relations(docs), ["docs"]
-        )
-        f_stops = ex.submit(
-            lambda: cat.run_stage(
-                "stops",
-                lambda: gtfs.build_stops(f_nodes.result(), f_ways.result(), name_without),
-                ["nodes", "ways"],
-            )
-        )
-        f_lines = ex.submit(
-            lambda: cat.run_stage(
-                "lines", lambda: gtfs.build_lines(f_relations.result())[0], ["relations"]
-            )
-        )
-        f_itineraries = ex.submit(
-            lambda: cat.run_stage(
-                "itineraries",
-                lambda: gtfs.build_lines(f_relations.result())[1],
-                ["relations"],
-            )
-        )
-        f_itin_stops = ex.submit(
-            lambda: cat.run_stage(
-                "itin_stops",
-                lambda: gtfs.itinerary_stops(f_relations.result()),
-                ["relations"],
-            )
-        )
-        f_shapes = ex.submit(
-            lambda: cat.run_stage(
-                "shapes",
-                lambda: gtfs.build_shapes(
-                    f_relations.result(), f_ways.result(), f_nodes.result()
-                ).withColumn(
-                    "shape_id",
-                    F.concat(F.lit("relation/"), F.col("itinerary_osm_id").cast("string")),
-                ),
-                ["relations", "ways", "nodes"],
-            )
-        )
-        f_trips = ex.submit(
-            lambda: cat.run_stage(
-                "trips",
-                # the stage inputs are materialized checkpoint tables, so
-                # the threshold count is a cheap parquet scan
-                lambda: gtfs.build_trips(
-                    f_lines.result(),
-                    f_itineraries.result(),
-                    small_threshold=SMALL_INDEX_THRESHOLD,
-                ),
-                ["lines", "itineraries"],
-            )
-        )
-        f_frequencies = ex.submit(
-            lambda: cat.run_stage(
-                "frequencies",
-                lambda: gtfs.build_frequencies(f_trips.result()),
-                ["trips"],
-            )
-        )
-        f_stop_times = ex.submit(
-            lambda: cat.run_stage(
-                "stop_times",
-                lambda: gtfs.build_stop_times(f_trips.result(), f_itin_stops.result()),
-                ["trips", "itin_stops"],
-            )
-        )
-        f_stations = ex.submit(
-            lambda: cat.run_stage(
-                "stations",
-                lambda: gtfs.build_stations(f_relations.result(), f_stops.result())[0],
-                ["relations", "stops"],
-            )
-        )
-        f_parent_map = ex.submit(
-            lambda: cat.run_stage(
-                "parent_map",
-                lambda: gtfs.build_stations(f_relations.result(), f_stops.result())[1],
-                ["relations", "stops"],
-            )
-        )
-        f_stops_final = ex.submit(
-            lambda: cat.run_stage(
-                "stops_final",
-                lambda: gtfs.prune_unused_stops(
-                    f_stops.result(), f_stop_times.result()
-                ).join(f_parent_map.result(), "stop_key", "left"),
-                ["stops", "stop_times", "parent_map"],
-            )
-        )
-        f_routes_final = ex.submit(
-            lambda: cat.run_stage(
-                "routes_final",
-                lambda: _routes_final(f_lines.result(), f_trips.result()),
-                ["lines", "trips"],
-            )
-        )
-        stops_final = f_stops_final.result()
-        routes_final = f_routes_final.result()
-        trips_full = f_trips.result()
-        stop_times = f_stop_times.result()
-        shapes = f_shapes.result()
-        frequencies = f_frequencies.result()
-        stations_df = f_stations.result()
-    spark = docs.sparkSession
-    calendar = spark.createDataFrame(
-        [("always", 1, 1, 1, 1, 1, 1, 1, feed_start, feed_end)],
-        "service_id string, monday int, tuesday int, wednesday int, thursday int,"
-        " friday int, saturday int, sunday int, start_date string, end_date string",
+    """docs → GTFS tables via the schedule-join (Managua) path: the
+    schedule join (J5), the cursor alignment (J7) and the distance
+    interpolation (W6) live in :mod:`osm2gtfs_spark.plans.schedule_path`.
+    With a ``catalog``, every stage is checkpointed and resumable."""
+    s = _run(_schedule_stages(name_without), docs, catalog, warm="sched_stop_times")
+    calendar, calendar_dates = SP.build_calendar(
+        s["per_service"].select("service"), feed_start, feed_end
     )
     return GtfsTables(
-        stops=stops_final,
-        routes=routes_final,
-        trips=trips_full.drop("itinerary_osm_id", "frequency_min", "travel_min"),
-        stop_times=stop_times,
-        shapes=shapes,
-        frequencies=frequencies,
+        stops=s["sched_stops_final"],
+        routes=s["sched_routes_final"],
+        trips=_live_trips(s["sched_trips"], s["sched_stop_times"]).drop(
+            "itinerary_osm_id", "service", "trip_seq"
+        ),
+        stop_times=s["sched_stop_times"],
+        shapes=s["shapes"],
+        frequencies=docs.sparkSession.createDataFrame(
+            [], "trip_id string, start_time string, end_time string, headway_secs int, exact_times int"
+        ),
         calendar=calendar,
-        stations=stations_df,
+        stations=s["stations"],
+        calendar_dates=calendar_dates,
     )
 
 
-# --- shared schedule-path builders (review r4: the checkpointed and
-# plain schedule pipelines previously duplicated ~80 lines; a one-sided
-# edit would silently diverge their outputs) ---------------------------
+# --- stage builders ------------------------------------------------------
 
-def _itin_stops_named(itin_stops, stops, parent_map, stations):
-    """Stop rows with name + parent-station name (J7 fallback input)."""
-    return (
+def _shapes(relations, ways, nodes):
+    return gtfs.build_shapes(relations, ways, nodes).withColumn(
+        "shape_id",
+        F.concat(F.lit("relation/"), F.col("itinerary_osm_id").cast("string")),
+    )
+
+
+def _stops_final(stops, stop_times, parent_map):
+    return gtfs.prune_unused_stops(stops, stop_times).join(parent_map, "stop_key", "left")
+
+
+def _routes_final(lines, trips):
+    return gtfs.prune_unused_routes(lines, trips).select(
+        "route_id",
+        F.col("name").alias("route_long_name"),
+        F.col("route_id").alias("route_short_name"),
+        "route_type",
+        F.col("colour").alias("route_color"),
+    )
+
+
+def _schedule_filled(itin_stops, stops, parent_map, stations, per_service):
+    """Aligned stop times (J7) with the gaps distance-interpolated (W6).
+    The J7 fallback matches on stop name and parent-station name."""
+    named = (
         itin_stops.join(stops.select("stop_key", "name"), "stop_key", "left")
         .join(parent_map, "stop_key", "left")
         .join(
@@ -318,13 +307,15 @@ def _itin_stops_named(itin_stops, stops, parent_map, stations):
         )
         .select("itinerary_osm_id", "pos", "stop_key", "name", "parent_name")
     )
+    aligned = SP.align_stops(named, per_service)
+    return SP.interpolate_times_distance(aligned, stops.select("stop_key", "lat", "lon"))
 
 
-def _schedule_trips_full(per_service, small_threshold=None):
-    """O5 id determinism for the schedule path: two-phase global index
+def _schedule_trips_full(per_service):
+    """O5 id determinism for the schedule path: reference insertion order
+    is lines by ref, itineraries in member order, services in
+    first-occurrence order, then time rows — a two-phase global index
     over (route, itinerary seq, service order, departure)."""
-    from osm2gtfs_spark.plans import schedule_path as SP
-
     return (
         global_index(
             per_service.select(
@@ -339,7 +330,7 @@ def _schedule_trips_full(per_service, small_threshold=None):
             ),
             ["route_id", "seq", "itinerary_osm_id", "svc_order", "trip_seq"],
             "_trip_idx",
-            small_threshold=small_threshold,
+            small_threshold=SMALL_INDEX_THRESHOLD,
         )
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
         .select(
@@ -376,248 +367,7 @@ def _schedule_stop_times(filled, trips_full):
     )
 
 
-def _routes_final(lines, trips):
-    return gtfs.prune_unused_routes(lines, trips).select(
-        "route_id",
-        F.col("name").alias("route_long_name"),
-        F.col("route_id").alias("route_short_name"),
-        "route_type",
-        F.col("colour").alias("route_color"),
-    )
-
-
-def run_schedule_pipeline_checkpointed(
-    docs: DataFrame,
-    catalog,
-    name_without: str = "stop",
-    feed_start: str = "20240101",
-    feed_end: str = "20250101",
-) -> GtfsTables:
-    """Schedule-join pipeline with every stage materialized to the
-    checkpoint catalog (ADVICE r3: a configured ``cache_dir`` previously
-    fell back to full recompute on this path). Stage DAG mirrors
-    :func:`run_schedule_pipeline` through the shared builders above;
-    OSM-side stage names match the frequency pipeline so the CLI
-    ``--refresh-*`` groups invalidate the same closures. Stages whose
-    SCHEMA differs from the frequency pipeline's same-role stages carry
-    a ``sched_`` prefix (review r4: reusing 'trips'/'stop_times' names
-    meant toggling schedule_source against an existing cache_dir
-    resumed schema-incompatible cached data)."""
-    from osm2gtfs_spark.plans import schedule_path as SP
-
-    cat = catalog
-    nodes = cat.run_stage("nodes", lambda: docs_mod.decode_nodes(docs), ["docs"])
-    ways = cat.run_stage("ways", lambda: docs_mod.decode_ways(docs), ["docs"])
-    relations = cat.run_stage("relations", lambda: docs_mod.decode_relations(docs), ["docs"])
-    schedule = cat.run_stage("schedule", lambda: docs_mod.decode_schedule(docs), ["docs"])
-    stops = cat.run_stage(
-        "stops", lambda: gtfs.build_stops(nodes, ways, name_without), ["nodes", "ways"]
-    )
-    stations = cat.run_stage(
-        "stations", lambda: gtfs.build_stations(relations, stops)[0], ["relations", "stops"]
-    )
-    parent_map = cat.run_stage(
-        "parent_map", lambda: gtfs.build_stations(relations, stops)[1], ["relations", "stops"]
-    )
-    lines = cat.run_stage("lines", lambda: gtfs.build_lines(relations)[0], ["relations"])
-    itineraries = cat.run_stage(
-        "itineraries", lambda: gtfs.build_lines(relations)[1], ["relations"]
-    )
-    itin_stops = cat.run_stage(
-        "itin_stops", lambda: gtfs.itinerary_stops(relations), ["relations"]
-    )
-    shapes = cat.run_stage(
-        "shapes",
-        lambda: gtfs.build_shapes(relations, ways, nodes).withColumn(
-            "shape_id",
-            F.concat(F.lit("relation/"), F.col("itinerary_osm_id").cast("string")),
-        ),
-        ["relations", "ways", "nodes"],
-    )
-    per_service = cat.run_stage(
-        "per_service",
-        lambda: SP.itinerary_service_schedule(SP.match_schedule(itineraries, schedule)),
-        ["itineraries", "schedule"],
-    )
-
-    def _filled():
-        aligned = SP.align_stops(
-            _itin_stops_named(itin_stops, stops, parent_map, stations), per_service
-        )
-        return SP.interpolate_times_distance(
-            aligned, stops.select("stop_key", "lat", "lon")
-        )
-
-    filled = cat.run_stage(
-        "sched_filled", _filled, ["itin_stops", "stops", "parent_map", "stations", "per_service"]
-    )
-    trips_full = cat.run_stage(
-        "sched_trips",
-        lambda: _schedule_trips_full(per_service, small_threshold=SMALL_INDEX_THRESHOLD),
-        ["per_service"],
-    )
-    stop_times = cat.run_stage(
-        "sched_stop_times",
-        lambda: _schedule_stop_times(filled, trips_full),
-        ["sched_filled", "sched_trips"],
-    )
-    live_trips = trips_full.join(
-        stop_times.select("trip_id").distinct(), "trip_id", "left_semi"
-    )
-    trips = live_trips.drop("itinerary_osm_id", "service", "trip_seq")
-    calendar, calendar_dates = SP.build_calendar(
-        per_service.select("service"), feed_start, feed_end
-    )
-    stops_final = cat.run_stage(
-        "sched_stops_final",
-        lambda: gtfs.prune_unused_stops(stops, stop_times).join(
-            parent_map, "stop_key", "left"
-        ),
-        ["stops", "sched_stop_times", "parent_map"],
-    )
-    routes_final = cat.run_stage(
-        "sched_routes_final",
-        lambda: _routes_final(lines, trips),
-        ["lines", "sched_trips", "sched_stop_times"],
-    )
-    tables = GtfsTables(
-        stops=stops_final,
-        routes=routes_final,
-        trips=trips,
-        stop_times=stop_times,
-        shapes=shapes,
-        frequencies=docs.sparkSession.createDataFrame(
-            [], "trip_id string, start_time string, end_time string, headway_secs int, exact_times int"
-        ),
-        calendar=calendar,
-        stations=stations,
-    )
-    tables.calendar_dates = calendar_dates  # type: ignore[attr-defined]
-    return tables
-
-
-def run_schedule_pipeline(
-    docs: DataFrame,
-    name_without: str = "stop",
-    feed_start: str = "20240101",
-    feed_end: str = "20250101",
-    persist: bool = True,
-    eager: bool = False,
-) -> GtfsTables:
-    """docs → GTFS tables via the schedule-join (Managua) path.
-
-    Stage order mirrors osm2gtfs.py:78-93; the schedule join (J5), the
-    cursor alignment (J7) and count-interpolation (W6) live in
-    :mod:`osm2gtfs_spark.plans.schedule_path`."""
-    from osm2gtfs_spark.plans import schedule_path as SP
-
-    nodes = docs_mod.decode_nodes(docs)
-    ways = docs_mod.decode_ways(docs)
-    relations = docs_mod.decode_relations(docs)
-    schedule = docs_mod.decode_schedule(docs)
-    if persist:
-        nodes, ways, relations = nodes.cache(), ways.cache(), relations.cache()
-
-    stops = gtfs.build_stops(nodes, ways, name_without)
-    stations, parent_map = gtfs.build_stations(relations, stops)
-    if persist:
-        # double-precision centroid aggregation merges shuffle partials
-        # in task-completion order — recomputing stations per sink can
-        # wobble the last ulp; caching pins one materialization (and
-        # stations/parent_map are multi-consumer anyway)
-        stations, parent_map = stations.cache(), parent_map.cache()
-    lines, itineraries = gtfs.build_lines(relations)
-    if persist:
-        # same multi-consumer dims as the frequency path
-        stops, lines, itineraries = stops.cache(), lines.cache(), itineraries.cache()
-    itin_stops = gtfs.itinerary_stops(relations)
-    shapes = gtfs.build_shapes(relations, ways, nodes).withColumn(
-        "shape_id",
-        F.concat(F.lit("relation/"), F.col("itinerary_osm_id").cast("string")),
-    )
-    # overlap the stop-side cache warms (nodes → ways → stops →
-    # parent_map/stations) with the serial schedule-side actions below
-    # (guide §2.6): the threshold count inside _schedule_trips_full
-    # materializes the cold per_service chain (decode → lines → match →
-    # agg) without touching the stop subtree, while the deep
-    # stop_times warm afterwards needs the stop caches hot through
-    # _itin_stops_named — so the background thread fills exactly the
-    # caches the serial chain will block on next.
-    warm_fut = None
-    if eager and persist:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _warm_pool = ThreadPoolExecutor(max_workers=1)
-
-        def _warm_stop_side():
-            stops.count()
-            parent_map.count()
-
-        warm_fut = _warm_pool.submit(_warm_stop_side)
-        _warm_pool.shutdown(wait=False)
-
-    # stop rows with name + parent-station name (J7 fallback input)
-    itin_stops_named = _itin_stops_named(itin_stops, stops, parent_map, stations)
-
-    matched = SP.match_schedule(itineraries, schedule)
-    per_service = SP.itinerary_service_schedule(matched)
-    if persist:
-        per_service = per_service.cache()
-    aligned = SP.align_stops(itin_stops_named, per_service)
-    filled = SP.interpolate_times_distance(aligned, stops.select("stop_key", "lat", "lon"))
-
-    # O5: reference insertion order = lines sorted by ref, itineraries in
-    # member order, services in first-occurrence order, then time rows;
-    # two-phase global index (bucketed by route_id) — no single-partition
-    # window over the trip rows
-    trips_full = _schedule_trips_full(
-        per_service, small_threshold=SMALL_INDEX_THRESHOLD if persist else None
-    )
-    if persist:
-        trips_full = trips_full.cache()
-
-    stop_times = _schedule_stop_times(filled, trips_full)
-    if persist:
-        stop_times = stop_times.cache()
-
-    # trips that lost all stops (invalid-time truncation at the first
-    # stop) produce no stop_times and are pruned like unused routes
-    live_trips = trips_full.join(
-        stop_times.select("trip_id").distinct(), "trip_id", "left_semi"
-    )
-    trips = live_trips.drop("itinerary_osm_id", "service", "trip_seq")
-
-    calendar, calendar_dates = SP.build_calendar(
-        per_service.select("service"), feed_start, feed_end
-    )
-    stops_final = gtfs.prune_unused_stops(stops, stop_times).join(
-        parent_map, "stop_key", "left"
-    )
-    routes_final = _routes_final(lines, trips)
-    if eager and persist:
-        # same rationale as the frequency path: warm the deep shared
-        # chain once before concurrent sink fan-out
-        try:
-            stop_times.count()
-        except BaseException:
-            # join the warm thread without masking the main-chain error
-            # (review r6, as in the frequency path)
-            if warm_fut is not None:
-                warm_fut.exception()
-            raise
-        if warm_fut is not None:
-            warm_fut.result()  # re-raises a warm-side failure
-    tables = GtfsTables(
-        stops=stops_final,
-        routes=routes_final,
-        trips=trips,
-        stop_times=stop_times,
-        shapes=shapes,
-        frequencies=trips.sparkSession.createDataFrame(
-            [], "trip_id string, start_time string, end_time string, headway_secs int, exact_times int"
-        ),
-        calendar=calendar,
-        stations=stations,
-    )
-    tables.calendar_dates = calendar_dates  # type: ignore[attr-defined]
-    return tables
+def _live_trips(trips_full, stop_times):
+    """Trips that lost all stops (invalid-time truncation at the first
+    stop) produce no stop_times and are pruned like unused routes."""
+    return trips_full.join(stop_times.select("trip_id").distinct(), "trip_id", "left_semi")

@@ -14,10 +14,11 @@ schema below is deliberately a subset of what Iceberg records natively):
         {stage, snapshot_id, row_count, n_partitions, inputs: [...],
          partitions: [{pid, rows, checksum}], schema, created_unix}
 
-A stage is *complete* iff its manifest exists and the recorded row
-count matches ``sum(partitions.rows)``; incomplete stages (killed jobs
-leave data without a manifest, since the manifest is written last) are
-recomputed. ``run_stage`` memoizes: complete → read back, else compute,
+A stage is *complete* iff its manifest exists and so does its data
+directory (a zero-row marker stage carries its schema in the manifest
+and has no data directory); incomplete stages (killed jobs leave data
+without a manifest, since the manifest is written last; a lost data
+directory leaves a manifest without data) are recomputed. ``run_stage`` memoizes: complete → read back, else compute,
 write, read back. Reading back (instead of returning the in-memory
 plan) cuts lineage so downstream failure recovery never recomputes
 upstream stages.
@@ -63,7 +64,7 @@ class CheckpointCatalog:
         m = self.manifest(stage)
         if m is None:
             return False
-        return m["row_count"] == sum(p["rows"] for p in m["partitions"])
+        return "schema_json" in m or os.path.isdir(self._data_path(stage))
 
     def invalidate(self, stage: str) -> None:
         shutil.rmtree(self._dir(stage), ignore_errors=True)

@@ -11,7 +11,8 @@ import os
 
 import pytest
 
-from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline_checkpointed
+from osm2gtfs_spark.plans import pipeline
+from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline
 from osm2gtfs_spark.sources import docs as D
 from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
 
@@ -27,7 +28,7 @@ def _rows(df):
 
 def test_full_run_then_resume_identical(spark, catalog):
     docs = D.docs_df(spark, D.CitySpec(n_lines=3))
-    t1 = run_frequency_pipeline_checkpointed(docs, catalog)
+    t1 = run_frequency_pipeline(docs, catalog=catalog)
     st1 = _rows(t1.stop_times)
     snaps1 = {m["stage"]: m["snapshot_id"] for m in catalog.metrics()}
     assert catalog.is_complete("stop_times") and catalog.is_complete("nodes")
@@ -35,7 +36,7 @@ def test_full_run_then_resume_identical(spark, catalog):
     # simulate mid-job kill: drop two late stages, resume
     catalog.invalidate("stop_times")
     catalog.invalidate("stops_final")
-    t2 = run_frequency_pipeline_checkpointed(docs, catalog)
+    t2 = run_frequency_pipeline(docs, catalog=catalog)
     st2 = _rows(t2.stop_times)
     snaps2 = {m["stage"]: m["snapshot_id"] for m in catalog.metrics()}
 
@@ -48,24 +49,50 @@ def test_full_run_then_resume_identical(spark, catalog):
 
 def test_incomplete_stage_detected(spark, catalog):
     docs = D.docs_df(spark, D.CitySpec(n_lines=2))
-    run_frequency_pipeline_checkpointed(docs, catalog)
+    run_frequency_pipeline(docs, catalog=catalog)
     # a crash between data write and manifest write leaves no manifest
     os.remove(catalog._manifest_path("trips"))
     assert not catalog.is_complete("trips")
-    t = run_frequency_pipeline_checkpointed(docs, catalog)
+    t = run_frequency_pipeline(docs, catalog=catalog)
     assert catalog.is_complete("trips")
     assert t.trips.count() > 0
 
 
-def test_manifest_lineage_metrics(spark, catalog):
+def test_missing_stage_data_rebuilt(spark, catalog):
+    """A manifest whose data directory is gone is not a complete stage."""
+    import shutil
+
     docs = D.docs_df(spark, D.CitySpec(n_lines=2))
-    run_frequency_pipeline_checkpointed(docs, catalog)
+    run_frequency_pipeline(docs, catalog=catalog)
+    snap = catalog.manifest("trips")["snapshot_id"]
+    shutil.rmtree(catalog._data_path("trips"))
+    assert not catalog.is_complete("trips")
+    t = run_frequency_pipeline(docs, catalog=catalog)
+    assert catalog.is_complete("trips")
+    assert catalog.manifest("trips")["snapshot_id"] != snap
+    assert t.trips.count() > 0
+
+
+def test_manifest_lineage_metrics(spark, catalog, tmp_path):
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    run_frequency_pipeline(docs, catalog=catalog)
     ms = {m["stage"]: m for m in catalog.metrics()}
     st = ms["stop_times"]
     assert st["inputs"] == ["trips", "itin_stops"]
     assert st["row_count"] == sum(p["rows"] for p in st["partitions"])
     assert all("checksum" in p for p in st["partitions"])
     assert st["row_count"] > 0 and st["schema"].startswith("struct<")
+
+    # every stage's manifest inputs are its declared deps, on both pipelines
+    sched_catalog = CheckpointCatalog(spark, str(tmp_path / "sched_ckpt"))
+    sched_docs = D.docs_df(spark, D.CitySpec(n_lines=2, with_schedule=True))
+    pipeline.run_schedule_pipeline(sched_docs, catalog=sched_catalog)
+    for cat, stages in (
+        (catalog, pipeline._frequency_stages()),
+        (sched_catalog, pipeline._schedule_stages()),
+    ):
+        declared = {name: list(s.deps) for s in stages for name in s.names}
+        assert {m["stage"]: m["inputs"] for m in cat.metrics()} == declared
 
 
 def test_partlog_path_chars_and_empty_stage(spark, tmp_path):

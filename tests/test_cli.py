@@ -115,6 +115,34 @@ def test_cli_refresh_invalidates_checkpoint_stages(spark, tmp_path):
     assert snaps3["lines"] == snaps1["lines"]
 
 
+def test_cli_refresh_routes_rebuilds_stations(spark, tmp_path):
+    """--refresh-routes recomputes every stage built from relations,
+    stations and parent_map (stop areas are relations) included."""
+    from osm2gtfs_spark.sources import docs as D
+    from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
+
+    docs_path = str(tmp_path / "docs")
+    D.docs_df(spark, D.CitySpec(n_lines=2, with_stop_areas=True)).write.parquet(docs_path)
+    config = {
+        "inputs": {"docs_parquet": docs_path},
+        "cache_dir": str(tmp_path / "ckpt"),
+        "agency": {"agency_id": "X", "agency_name": "X", "agency_url": "u", "agency_timezone": "UTC"},
+        "output_file": str(tmp_path / "a.zip"),
+    }
+    cfg = tmp_path / "c.json"
+    cfg.write_text(json.dumps(config))
+
+    cli.run(_args(["-c", str(cfg)]), spark=spark)
+    cat = CheckpointCatalog(spark, config["cache_dir"])
+    snaps1 = {m["stage"]: m["snapshot_id"] for m in cat.metrics()}
+    cli.run(_args(["-c", str(cfg), "-o", str(tmp_path / "b.zip"), "--refresh-routes"]), spark=spark)
+    snaps2 = {m["stage"]: m["snapshot_id"] for m in cat.metrics()}
+    for stage in ("relations", "lines", "stations", "parent_map"):
+        assert snaps2[stage] != snaps1[stage], f"{stage} must be rebuilt"
+    assert snaps2["nodes"] == snaps1["nodes"]
+    assert snaps2["stops"] == snaps1["stops"]
+
+
 @pytest.mark.skipif(not os.path.exists(GOLDEN), reason="reference fixtures not available")
 def test_cli_managua_counts(spark, tmp_path):
     """ni_managua through the CLI (default creators): the reference's

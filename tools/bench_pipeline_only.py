@@ -12,7 +12,7 @@ docs.count()
 from concurrent.futures import ThreadPoolExecutor
 
 t0 = time.time()
-tables = run_frequency_pipeline(docs, eager=True)
+tables = run_frequency_pipeline(docs)
 outs = [tables.stop_times, tables.stops, tables.routes, tables.trips,
         tables.shapes, tables.frequencies]
 with ThreadPoolExecutor(max_workers=len(outs)) as ex:
