@@ -3,10 +3,20 @@
 Each pipeline (frequency, schedule) is declared once, as a table of
 :class:`Stage` entries in the reference's fixed stage order
 (``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. Two
-runners walk any table: in memory (``catalog=None``: cache, then warm
-before the caller's sink fan-out) and checkpointed (every output is a
-resumable catalog stage, run as a future along the dependencies). The
-CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
+runners walk any table:
+
+- in memory (``catalog=None``): stages are built lazily, shared
+  intermediates cached, and every output table is materialized once as
+  an eager local checkpoint, so ``validate_feed`` and the zip sink read
+  finished data, as the reference's ``feed.Validate`` and
+  ``WriteGoogleTransitFeed`` read one finished ``Schedule``
+  (``osm2gtfs.py:90-93``). Local checkpoints are executor-resident and
+  are not recomputed if an executor is lost;
+- checkpointed (``catalog``, the CLI's ``cache_dir``): every output is a
+  durable, resumable catalog stage, run as a future along the
+  dependencies. Runs that must survive executor loss use this one.
+
+The CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
 """
 
 from __future__ import annotations
@@ -20,6 +30,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.plans import gtfs
@@ -47,8 +58,8 @@ class Stage:
     """One builder call: ``build(*deps)`` gives one frame per name.
 
     Every name is its own catalog stage (own manifest, ``inputs`` =
-    ``deps``); ``cache`` marks the multi-consumer outputs the in-memory
-    runner caches."""
+    ``deps``); ``cache`` marks the intermediates several outputs read,
+    which the in-memory runner caches while it materializes the outputs."""
 
     names: tuple[str, ...]
     deps: tuple[str, ...]
@@ -137,30 +148,36 @@ def downstream(roots) -> list[str]:
     return sorted(out)
 
 
-def _run_in_memory(stages, docs: DataFrame, warm: str) -> dict[str, DataFrame]:
-    """Build every stage lazily, cache the ``cache`` outputs, then warm:
-    the stop side on a background thread, ``warm`` (the deepest shared
-    chain) in the foreground.
+def _run_in_memory(stages, docs: DataFrame, outputs) -> dict[str, DataFrame]:
+    """Build every stage lazily (caching the ``cache`` outputs), then
+    materialize each of ``outputs(frames)`` once with an eager local
+    checkpoint, all concurrently through one pool.
 
-    Callers fan out into concurrent sink jobs. Concurrent actions over a
-    *cold* cache chain serialize on the block manager's per-partition
-    cache locks, so the deep chain is warmed once with one action; the
-    background thread back-fills the cores the serial trip-side jobs
-    (the small_threshold count, the warm itself) leave idle."""
+    The returned frames plan as leaf scans, like the checkpoint runner's
+    parquet read-backs: validation and the sink fan-out read finished
+    data instead of re-analysing and re-planning the decode → stops →
+    trips lineage. Local checkpoints are executor-resident and are not
+    recomputed if an executor is lost; runs that must survive that pass
+    a ``cache_dir``, which selects the checkpoint runner. The runner's
+    own caches are dropped on every exit path; frames the caller cached
+    are left alone."""
     frames = {"docs": docs}
-    with ThreadPoolExecutor(max_workers=1, thread_name_prefix="gtfs-warm") as pool:
-        # leaving the block joins the warm thread on every exit path, so
-        # no warm job outlives a failed build
-        warm_bg = None
+    cached: list[DataFrame] = []
+    try:
         for st in stages:
             for name, df in st.outputs([frames[d] for d in st.deps]).items():
-                frames[name] = df.cache() if st.cache else df
-            if warm_bg is None and "stops" in frames and "parent_map" in frames:
-                stop_side = [frames["stops"], frames["parent_map"]]
-                warm_bg = pool.submit(lambda: [df.count() for df in stop_side])
-        frames[warm].count()
-        warm_bg.result()  # re-raises a warm-side failure
-    return frames
+                if st.cache and df.storageLevel == StorageLevel.NONE:
+                    cached.append(df.cache())
+                frames[name] = df
+        todo = outputs(frames)
+        # leaving the block joins the pool on every exit path, so no
+        # checkpoint job outlives a failed build
+        with ThreadPoolExecutor(max_workers=len(todo), thread_name_prefix="gtfs-out") as pool:
+            done = {name: pool.submit(df.localCheckpoint, True) for name, df in todo.items()}
+            return {name: fut.result() for name, fut in done.items()}
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def _run_checkpointed(stages, docs: DataFrame, catalog) -> dict[str, DataFrame]:
@@ -203,10 +220,12 @@ def _checkpoint_stage(catalog, st: Stage, frames: list[DataFrame]) -> dict[str, 
     return done
 
 
-def _run(stages, docs: DataFrame, catalog, warm: str) -> dict[str, DataFrame]:
+def _run(stages, docs: DataFrame, catalog, outputs) -> dict[str, DataFrame]:
+    """``outputs(frames)`` maps the stage frames to the GTFS tables'
+    non-literal frames."""
     if catalog is None:
-        return _run_in_memory(stages, docs, warm)
-    return _run_checkpointed(stages, docs, catalog)
+        return _run_in_memory(stages, docs, outputs)
+    return outputs(_run_checkpointed(stages, docs, catalog))
 
 
 def run_frequency_pipeline(
@@ -218,20 +237,26 @@ def run_frequency_pipeline(
 ) -> GtfsTables:
     """docs → GTFS tables via the frequency (Accra) path; with a
     ``catalog``, every stage is checkpointed and resumable."""
-    s = _run(_frequency_stages(name_without), docs, catalog, warm="stop_times")
-    spark = docs.sparkSession
-    return GtfsTables(
+    s = _run(_frequency_stages(name_without), docs, catalog, _frequency_outputs)
+    # JVM literals, not createDataFrame: no Python worker on the default path
+    days = ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")
+    calendar = docs.sparkSession.range(0, 1, 1, 1).select(
+        F.lit("always").alias("service_id"),
+        *[F.lit(1).alias(d) for d in days],
+        F.lit(feed_start).alias("start_date"),
+        F.lit(feed_end).alias("end_date"),
+    )
+    return GtfsTables(**s, calendar=calendar)
+
+
+def _frequency_outputs(s: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    return dict(
         stops=s["stops_final"],
         routes=s["routes_final"],
         trips=s["trips"].drop("itinerary_osm_id", "frequency_min", "travel_min"),
         stop_times=s["stop_times"],
         shapes=s["shapes"],
         frequencies=s["frequencies"],
-        calendar=spark.createDataFrame(
-            [("always", 1, 1, 1, 1, 1, 1, 1, feed_start, feed_end)],
-            "service_id string, monday int, tuesday int, wednesday int, thursday int,"
-            " friday int, saturday int, sunday int, start_date string, end_date string",
-        ),
         stations=s["stations"],
     )
 
@@ -247,11 +272,24 @@ def run_schedule_pipeline(
     schedule join (J5), the cursor alignment (J7) and the distance
     interpolation (W6) live in :mod:`osm2gtfs_spark.plans.schedule_path`.
     With a ``catalog``, every stage is checkpointed and resumable."""
-    s = _run(_schedule_stages(name_without), docs, catalog, warm="sched_stop_times")
+    outputs = partial(_schedule_outputs, feed_start=feed_start, feed_end=feed_end)
+    s = _run(_schedule_stages(name_without), docs, catalog, outputs)
+    # typed JVM literals over no rows: no Python worker
+    frequencies = docs.sparkSession.range(0, 0, 1, 1).select(
+        F.lit(None).cast("string").alias("trip_id"),
+        F.lit(None).cast("string").alias("start_time"),
+        F.lit(None).cast("string").alias("end_time"),
+        F.lit(None).cast("int").alias("headway_secs"),
+        F.lit(None).cast("int").alias("exact_times"),
+    )
+    return GtfsTables(**s, frequencies=frequencies)
+
+
+def _schedule_outputs(s: dict[str, DataFrame], feed_start: str, feed_end: str) -> dict[str, DataFrame]:
     calendar, calendar_dates = SP.build_calendar(
         s["per_service"].select("service"), feed_start, feed_end
     )
-    return GtfsTables(
+    return dict(
         stops=s["sched_stops_final"],
         routes=s["sched_routes_final"],
         trips=_live_trips(s["sched_trips"], s["sched_stop_times"]).drop(
@@ -259,11 +297,8 @@ def run_schedule_pipeline(
         ),
         stop_times=s["sched_stop_times"],
         shapes=s["shapes"],
-        frequencies=docs.sparkSession.createDataFrame(
-            [], "trip_id string, start_time string, end_time string, headway_secs int, exact_times int"
-        ),
-        calendar=calendar,
         stations=s["stations"],
+        calendar=calendar,
         calendar_dates=calendar_dates,
     )
 

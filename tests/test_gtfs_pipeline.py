@@ -8,12 +8,15 @@ city instead of the (unavailable) Overpass fixtures.
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline
 from osm2gtfs_spark.sources import docs as D
+from osm2gtfs_spark.sources.gtfs_sink import validate_feed
 
 
 @pytest.fixture(scope="module")
@@ -158,3 +161,42 @@ def test_auto_stop_names(spark):
     # exclusions apply to WAYS; nodes only exclude bus_stop
     assert out["node/1"] == "Autobahn"
     assert out["node/4"] == "Parada sin nombre"  # bare, no brackets
+
+
+def _plan_nodes(df) -> set[str]:
+    """Node names of ``df``'s optimized logical plan."""
+    names, todo = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        names.add(node.nodeName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_outputs_plan_as_leaf_scans(tables):
+    # the in-memory runner hands validation and the sink finished data:
+    # no table re-plans the decode → stops → trips lineage, and no
+    # runner cache is left for validation to scan
+    for field in dataclasses.fields(tables):
+        df = getattr(tables, field.name)
+        if df is not None:
+            nodes = _plan_nodes(df)
+            assert not nodes & {"Join", "Window", "Aggregate", "InMemoryRelation"}, (field.name, nodes)
+    plan = validate_feed(tables)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+
+
+def test_calendar_runs_no_python_worker(tables):
+    # built from JVM expressions, not a Python-side parallelize
+    plan = tables.calendar._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert tables.calendar.dtypes == [
+        ("service_id", "string"),
+        *[(d, "int") for d in ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")],
+        ("start_date", "string"),
+        ("end_date", "string"),
+    ]
+    assert [tuple(r) for r in tables.calendar.collect()] == [
+        ("always", 1, 1, 1, 1, 1, 1, 1, "20240101", "20250101")
+    ]

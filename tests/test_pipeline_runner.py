@@ -1,9 +1,10 @@
-"""In-memory stage runner: a failed build joins the stop-side warm thread.
+"""In-memory stage runner: output pool joins and cache cleanup.
 
-The runner warms the stop-side caches on a background thread while the
-foreground builds the trip side. When the foreground fails, the original
-error must propagate and no warm job may outlive the call (a caller may
-stop the context right after).
+The runner materializes every output table concurrently through one
+pool, then drops its own intermediate caches. When a build or an output
+fails, the original error must propagate, no job thread may outlive the
+call (a caller may stop the context right after), and no runner cache
+may stay behind. Frames the caller cached are left alone.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ from __future__ import annotations
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
 from osm2gtfs_spark.plans import gtfs, pipeline
 from osm2gtfs_spark.sources import docs as D
@@ -20,11 +22,15 @@ def _boom(*args, **kwargs):
     raise RuntimeError("boom")
 
 
-def _run_and_fail(run, docs):
+def _run_and_fail(run, docs, error=RuntimeError):
     before = set(threading.enumerate())
-    with pytest.raises(RuntimeError, match="boom"):
+    with pytest.raises(error, match="boom"):
         run(docs)
     return [t for t in threading.enumerate() if t not in before]
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_frequency_trip_failure_joins_warm_thread(spark, monkeypatch):
@@ -37,3 +43,40 @@ def test_schedule_trip_failure_joins_warm_thread(spark, monkeypatch):
     monkeypatch.setattr(pipeline, "_schedule_trips_full", _boom)
     docs = D.docs_df(spark, D.CitySpec(n_lines=2, with_stop_areas=True, with_schedule=True))
     assert _run_and_fail(pipeline.run_schedule_pipeline, docs) == []
+
+
+def test_output_failure_joins_pool_and_drops_caches(spark, monkeypatch):
+    # the error surfaces in the output pool, while other outputs'
+    # checkpoint jobs are still running
+    monkeypatch.setattr(
+        gtfs, "build_frequencies",
+        lambda trips: trips.select(F.raise_error(F.lit("boom")).alias("trip_id")),
+    )
+    spark.catalog.clearCache()
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2, with_stop_areas=True))
+    assert _run_and_fail(pipeline.run_frequency_pipeline, docs, error=Exception) == []
+    assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize(
+    "run, spec",
+    [
+        (pipeline.run_frequency_pipeline, D.CitySpec(n_lines=2, with_stop_areas=True)),
+        (
+            pipeline.run_schedule_pipeline,
+            D.CitySpec(n_lines=2, with_stop_areas=True, with_schedule=True),
+        ),
+    ],
+    ids=["frequency", "schedule"],
+)
+def test_runner_drops_its_caches(spark, run, spec):
+    spark.catalog.clearCache()
+    tables = run(D.docs_df(spark, spec))
+    assert _cache_empty(spark)
+    assert tables.stop_times.count() > 0  # outputs outlive the caches
+
+    docs = D.docs_df(spark, spec).cache()
+    run(docs)
+    assert docs.storageLevel.useMemory  # the caller's cache is kept
+    docs.unpersist()
+    assert _cache_empty(spark)

@@ -8,12 +8,15 @@ behaviors of ``trips_creator.py:75-378``.
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.plans import schedule_path as SP
 from osm2gtfs_spark.plans.pipeline import run_schedule_pipeline
 from osm2gtfs_spark.sources import docs as D
+from osm2gtfs_spark.sources.gtfs_sink import validate_feed
 
 SPEC = D.CitySpec(
     name="managua_like", n_lines=4, with_stop_areas=True, with_schedule=True, seed=7
@@ -127,3 +130,41 @@ def test_service_union_across_matching_rows(tables):
         .filter(F.col("count") > 3)  # 3 time rows per service
     )
     assert dup.count() <= 1  # route 0 Mo-Fr has 4 rows (incl. truncated)
+
+
+def _plan_nodes(df) -> set[str]:
+    """Node names of ``df``'s optimized logical plan."""
+    names, todo = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        names.add(node.nodeName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_outputs_plan_as_leaf_scans(tables):
+    # the in-memory runner hands validation and the sink finished data:
+    # no table re-plans the schedule join lineage, and no runner cache
+    # is left for validation to scan
+    for field in dataclasses.fields(tables):
+        df = getattr(tables, field.name)
+        if df is not None:
+            nodes = _plan_nodes(df)
+            assert not nodes & {"Join", "Window", "Aggregate", "InMemoryRelation"}, (field.name, nodes)
+    plan = validate_feed(tables)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+
+
+def test_empty_frequencies_run_no_python_worker(tables):
+    # built from JVM expressions, not a Python-side parallelize
+    plan = tables.frequencies._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert tables.frequencies.dtypes == [
+        ("trip_id", "string"),
+        ("start_time", "string"),
+        ("end_time", "string"),
+        ("headway_secs", "int"),
+        ("exact_times", "int"),
+    ]
+    assert tables.frequencies.count() == 0
