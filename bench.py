@@ -112,9 +112,9 @@ def main() -> None:
         docs = D.docs_df(spark, BENCH_CITY, n_partitions=32).cache()
         docs.count()
         t0 = time.time()
-        # the pipeline materializes each output table once (an eager
-        # local checkpoint) and drops its own caches, so the concurrent
-        # sink jobs below read finished data, not the shared chain
+        # the pipeline stores every stage once (an eager local
+        # checkpoint) and caches nothing, so the concurrent sink jobs
+        # below read finished data, not the shared chain
         tables = run_frequency_pipeline(docs)
         # the six members + tile map materialize concurrently, as the
         # zip sink would write them — Spark schedules independent jobs

@@ -250,11 +250,6 @@ def decode_media(media: DataFrame, fake: bool = True, batch_hint: int = 1024) ->
     return media.mapInPandas(gen, MEDIA_META_SCHEMA)
 
 
-def resize_features(meta: DataFrame, target: int = 8) -> DataFrame:
-    """'Resize' = downsample the feature vector (slice) — column ops."""
-    return meta.withColumn("features_small", F.slice("features", 1, target))
-
-
 def frame_sample(
     meta: DataFrame,
     k: int,

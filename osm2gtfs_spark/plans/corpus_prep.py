@@ -58,7 +58,6 @@ def prepare_corpus(
     overlap_threshold: int = 10,
     decontaminate_n: int = 3,
     max_shingle_docs: int | None = 15,
-    persist: bool = True,
 ) -> DataFrame:
     """docs → the prepared corpus (doc_id, n_emails, n_ips, text_clean).
 
@@ -71,18 +70,15 @@ def prepare_corpus(
     auditing sees what was redacted."""
     kept_ids = quality_keep(docs).filter("keep").select("doc_id")
     kept = docs.join(kept_ids, "doc_id", "left_semi")
-    if persist:
-        # kept feeds the pair graph (2 scans), keeper anti-join, and the
-        # downstream shingle explode — at scale this is a checkpoint
-        # table; locally MEMORY_AND_DISK
-        kept = kept.persist()
+    # kept feeds the pair graph (2 scans), keeper anti-join, and the
+    # downstream shingle explode — at scale this is a checkpoint table;
+    # locally MEMORY_AND_DISK
+    kept = kept.persist()
 
     comps = DD.connected_components(DD.token_set_dup_pairs(kept))
     deduped = DD.apply_keepers(kept, comps)
-    if persist and benchmark is not None:
-        deduped = deduped.persist()
-
     if benchmark is not None:
+        deduped = deduped.persist()
         contaminated = (
             DD.decontaminate(
                 deduped,
@@ -108,7 +104,6 @@ def prepare_corpus_packed(
     span_min_occurrences: int = 2,
     budget: int = 2048,
     n_buckets: int = 32,
-    persist: bool = True,
 ) -> DataFrame:
     """docs → packed training sequences: :func:`prepare_corpus` followed
     by duplicated-span scrubbing and GPT-style sequence packing — the
@@ -134,7 +129,6 @@ def prepare_corpus_packed(
         overlap_threshold=overlap_threshold,
         decontaminate_n=decontaminate_n,
         max_shingle_docs=max_shingle_docs,
-        persist=persist,
     )
     scrubbed = duplicated_span_scrub(
         prepped.select("doc_id", "text_clean"),

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from osm2gtfs_spark.operators.indexing import global_index
+from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.functions.geo import (
     centroid_lat,
     centroid_lon,
@@ -420,9 +420,7 @@ def secs_to_gtfs(col):
     )
 
 
-def build_trips(
-    lines: DataFrame, itineraries: DataFrame, small_threshold: int | None = None
-) -> DataFrame:
+def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
     """Accra path: one trip per itinerary, with frequency/travel columns.
 
     Semantics (gh_accra/trips_creator_gh_accra.py:40-110):
@@ -431,8 +429,9 @@ def build_trips(
     - travel_time from itinerary tags, invalid → 120 min
     - trip_id deterministic from (route_id, itinerary seq) order (O5)
 
-    Callers should cache the result: frequencies, stop_times and both
-    prune passes all consume it.
+    Pass materialized inputs (the pipelines pass stored stages): the
+    ``SMALL_INDEX_THRESHOLD`` check counts the itinerary join. Store the
+    result too: frequencies, stop_times and both prune passes read it.
     """
     # direction window partitions by route_id (1:1 with line after the J2
     # duplicate-ref guard) so it shares the global_index window's hash
@@ -446,7 +445,7 @@ def build_trips(
             itineraries.drop("route_id").join(line_dim, "line_osm_id"),
             ["route_id", "seq", "itinerary_osm_id"],
             "_trip_idx",
-            small_threshold=small_threshold,
+            small_threshold=SMALL_INDEX_THRESHOLD,
         )
         .withColumn("direction_id", (F.row_number().over(itin_order) - 1) % 2)
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))

@@ -2,19 +2,19 @@
 
 Each pipeline (frequency, schedule) is declared once, as a table of
 :class:`Stage` entries in the reference's fixed stage order
-(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. Two
-runners walk any table:
+(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. One
+walk runs any table: every stage is a future that waits on its deps'
+futures and is stored once, so each builder reads finished stages, and
+``validate_feed`` and the zip sink read leaf scans, as the reference's
+``feed.Validate`` and ``WriteGoogleTransitFeed`` read one finished
+``Schedule`` (``osm2gtfs.py:90-93``). Only the store differs:
 
-- in memory (``catalog=None``): stages are built lazily, shared
-  intermediates cached, and every output table is materialized once as
-  an eager local checkpoint, so ``validate_feed`` and the zip sink read
-  finished data, as the reference's ``feed.Validate`` and
-  ``WriteGoogleTransitFeed`` read one finished ``Schedule``
-  (``osm2gtfs.py:90-93``). Local checkpoints are executor-resident and
-  are not recomputed if an executor is lost;
-- checkpointed (``catalog``, the CLI's ``cache_dir``): every output is a
-  durable, resumable catalog stage, run as a future along the
-  dependencies. Runs that must survive executor loss use this one.
+- in memory (``catalog=None``): each stage is an eager local
+  checkpoint. Local checkpoints are executor-resident and are not
+  recomputed if an executor is lost;
+- a catalog (the CLI's ``cache_dir``): each stage is a durable,
+  resumable parquet stage with a manifest. Runs that must survive
+  executor loss use this one.
 
 The CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
 """
@@ -30,7 +30,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.plans import gtfs
@@ -57,14 +56,13 @@ class GtfsTables:
 class Stage:
     """One builder call: ``build(*deps)`` gives one frame per name.
 
-    Every name is its own catalog stage (own manifest, ``inputs`` =
-    ``deps``); ``cache`` marks the intermediates several outputs read,
-    which the in-memory runner caches while it materializes the outputs."""
+    Every name is its own stored stage (in a catalog: own manifest,
+    ``inputs`` = ``deps``), so a builder's arguments are always finished
+    stages."""
 
     names: tuple[str, ...]
     deps: tuple[str, ...]
     build: Callable[..., DataFrame | tuple[DataFrame, ...]]
-    cache: bool = False
 
     def outputs(self, frames: list[DataFrame]) -> dict[str, DataFrame]:
         out = self.build(*frames)
@@ -75,18 +73,18 @@ def _osm_stages(name_without: str) -> tuple[Stage, ...]:
     """Stages shared by both pipelines: decode → stops, stations, lines,
     itinerary stops and shapes."""
     return (
-        Stage(("nodes",), ("docs",), docs_mod.decode_nodes, cache=True),
-        Stage(("ways",), ("docs",), docs_mod.decode_ways, cache=True),
-        Stage(("relations",), ("docs",), docs_mod.decode_relations, cache=True),
+        Stage(("nodes",), ("docs",), docs_mod.decode_nodes),
+        Stage(("ways",), ("docs",), docs_mod.decode_ways),
+        Stage(("relations",), ("docs",), docs_mod.decode_relations),
         Stage(
             ("stops",), ("nodes", "ways"),
-            lambda nodes, ways: gtfs.build_stops(nodes, ways, name_without), cache=True,
+            lambda nodes, ways: gtfs.build_stops(nodes, ways, name_without),
         ),
         # double-precision centroid aggregation merges shuffle partials in
-        # task-completion order; caching pins one materialization so every
-        # sink sees the same last ulp
-        Stage(("stations", "parent_map"), ("relations", "stops"), gtfs.build_stations, cache=True),
-        Stage(("lines", "itineraries"), ("relations",), gtfs.build_lines, cache=True),
+        # task-completion order; the stage store pins one materialization
+        # so every sink sees the same last ulp
+        Stage(("stations", "parent_map"), ("relations", "stops"), gtfs.build_stations),
+        Stage(("lines", "itineraries"), ("relations",), gtfs.build_lines),
         Stage(("itin_stops",), ("relations",), gtfs.itinerary_stops),
         Stage(("shapes",), ("relations", "ways", "nodes"), _shapes),
     )
@@ -94,14 +92,9 @@ def _osm_stages(name_without: str) -> tuple[Stage, ...]:
 
 def _frequency_stages(name_without: str = "stop") -> tuple[Stage, ...]:
     return _osm_stages(name_without) + (
-        # the count behind small_threshold is a cheap scan of the cached
-        # (or checkpointed) itineraries
-        Stage(
-            ("trips",), ("lines", "itineraries"),
-            partial(gtfs.build_trips, small_threshold=SMALL_INDEX_THRESHOLD), cache=True,
-        ),
+        Stage(("trips",), ("lines", "itineraries"), gtfs.build_trips),
         Stage(("frequencies",), ("trips",), gtfs.build_frequencies),
-        Stage(("stop_times",), ("trips", "itin_stops"), gtfs.build_stop_times, cache=True),
+        Stage(("stop_times",), ("trips", "itin_stops"), gtfs.build_stop_times),
         Stage(("stops_final",), ("stops", "stop_times", "parent_map"), _stops_final),
         Stage(("routes_final",), ("lines", "trips"), _routes_final),
     )
@@ -116,23 +109,17 @@ def _schedule_stages(name_without: str = "stop") -> tuple[Stage, ...]:
         Stage(
             ("per_service",), ("itineraries", "schedule"),
             lambda itins, sched: SP.itinerary_service_schedule(SP.match_schedule(itins, sched)),
-            cache=True,
         ),
         Stage(
             ("sched_filled",),
             ("itin_stops", "stops", "parent_map", "stations", "per_service"),
             _schedule_filled,
         ),
-        Stage(("sched_trips",), ("per_service",), _schedule_trips_full, cache=True),
-        Stage(
-            ("sched_stop_times",), ("sched_filled", "sched_trips"),
-            _schedule_stop_times, cache=True,
-        ),
+        Stage(("sched_trips",), ("per_service",), _schedule_trips_full),
+        Stage(("sched_stop_times",), ("sched_filled", "sched_trips"), _schedule_stop_times),
+        Stage(("sched_live_trips",), ("sched_trips", "sched_stop_times"), _live_trips),
         Stage(("sched_stops_final",), ("stops", "sched_stop_times", "parent_map"), _stops_final),
-        Stage(
-            ("sched_routes_final",), ("lines", "sched_trips", "sched_stop_times"),
-            lambda lines, trips, stop_times: _routes_final(lines, _live_trips(trips, stop_times)),
-        ),
+        Stage(("sched_routes_final",), ("lines", "sched_live_trips"), _routes_final),
     )
 
 
@@ -148,58 +135,44 @@ def downstream(roots) -> list[str]:
     return sorted(out)
 
 
-def _run_in_memory(stages, docs: DataFrame, outputs) -> dict[str, DataFrame]:
-    """Build every stage lazily (caching the ``cache`` outputs), then
-    materialize each of ``outputs(frames)`` once with an eager local
-    checkpoint, all concurrently through one pool.
+class _LocalStore:
+    """The ``catalog=None`` stage store: every stage is an eager local
+    checkpoint; none is ever complete or has a manifest."""
 
-    The returned frames plan as leaf scans, like the checkpoint runner's
-    parquet read-backs: validation and the sink fan-out read finished
-    data instead of re-analysing and re-planning the decode → stops →
-    trips lineage. Local checkpoints are executor-resident and are not
-    recomputed if an executor is lost; runs that must survive that pass
-    a ``cache_dir``, which selects the checkpoint runner. The runner's
-    own caches are dropped on every exit path; frames the caller cached
-    are left alone."""
-    frames = {"docs": docs}
-    cached: list[DataFrame] = []
-    try:
-        for st in stages:
-            for name, df in st.outputs([frames[d] for d in st.deps]).items():
-                if st.cache and df.storageLevel == StorageLevel.NONE:
-                    cached.append(df.cache())
-                frames[name] = df
-        todo = outputs(frames)
-        # leaving the block joins the pool on every exit path, so no
-        # checkpoint job outlives a failed build
-        with ThreadPoolExecutor(max_workers=len(todo), thread_name_prefix="gtfs-out") as pool:
-            done = {name: pool.submit(df.localCheckpoint, True) for name, df in todo.items()}
-            return {name: fut.result() for name, fut in done.items()}
-    finally:
-        for df in cached:
-            df.unpersist()
+    def is_complete(self, name: str) -> bool:
+        return False
+
+    def run_stage(self, name: str, fn, inputs=None) -> DataFrame:
+        return fn().localCheckpoint(eager=True)
+
+    def manifest(self, name: str) -> None:
+        return None
 
 
-def _run_checkpointed(stages, docs: DataFrame, catalog) -> dict[str, DataFrame]:
-    """Run every stage through ``catalog.run_stage`` as a future that
-    waits on its deps' futures: wall time tracks the critical path, not
-    the sum of stage costs. Each stage commits data, then manifest, and
-    logs one line: built or resumed, rows, seconds and inputs."""
+def _run(stages, docs: DataFrame, catalog, outputs) -> dict[str, DataFrame]:
+    """Run every stage through the store's ``run_stage`` (``catalog``,
+    or :class:`_LocalStore` when it is None) as a future that waits on
+    its deps' futures: wall time tracks the critical path, not the sum
+    of stage costs. Leaving the pool joins every stage thread on every
+    exit path, so no job outlives a failed build. ``outputs(frames)``
+    maps the stored stages to the GTFS tables' non-literal frames."""
+    store = _LocalStore() if catalog is None else catalog
     futures: dict = {}
 
     def frame(name: str) -> DataFrame:
         return docs if name == "docs" else futures[name].result()[name]
 
-    with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+    with ThreadPoolExecutor(max_workers=len(stages), thread_name_prefix="gtfs-stage") as pool:
         for st in stages:
-            fut = pool.submit(
-                lambda st=st: _checkpoint_stage(catalog, st, [frame(d) for d in st.deps])
-            )
+            fut = pool.submit(lambda st=st: _store_stage(store, st, [frame(d) for d in st.deps]))
             futures.update(dict.fromkeys(st.names, fut))
-        return {name: frame(name) for name in futures}
+        return outputs({name: frame(name) for name in futures})
 
 
-def _checkpoint_stage(catalog, st: Stage, frames: list[DataFrame]) -> dict[str, DataFrame]:
+def _store_stage(store, st: Stage, frames: list[DataFrame]) -> dict[str, DataFrame]:
+    """Store each of ``st``'s outputs and log one line per output: built
+    or resumed, rows (where a catalog manifest has them; no count job
+    is added), seconds and inputs."""
     built: dict[str, DataFrame] = {}
 
     def output(name: str) -> DataFrame:
@@ -210,22 +183,15 @@ def _checkpoint_stage(catalog, st: Stage, frames: list[DataFrame]) -> dict[str, 
     done = {}
     for name in st.names:
         t0 = time.perf_counter()
-        resumed = catalog.is_complete(name)
-        done[name] = catalog.run_stage(name, lambda name=name: output(name), list(st.deps))
+        resumed = store.is_complete(name)
+        done[name] = store.run_stage(name, lambda name=name: output(name), list(st.deps))
+        manifest = store.manifest(name)
         log.info(
-            "stage %s %s: %d rows in %.2f s, inputs %s",
-            name, "resumed" if resumed else "built", catalog.manifest(name)["row_count"],
+            "stage %s %s: %s rows in %.2f s, inputs %s",
+            name, "resumed" if resumed else "built", manifest["row_count"] if manifest else "?",
             time.perf_counter() - t0, list(st.deps),
         )
     return done
-
-
-def _run(stages, docs: DataFrame, catalog, outputs) -> dict[str, DataFrame]:
-    """``outputs(frames)`` maps the stage frames to the GTFS tables'
-    non-literal frames."""
-    if catalog is None:
-        return _run_in_memory(stages, docs, outputs)
-    return outputs(_run_checkpointed(stages, docs, catalog))
 
 
 def run_frequency_pipeline(
@@ -292,9 +258,7 @@ def _schedule_outputs(s: dict[str, DataFrame], feed_start: str, feed_end: str) -
     return dict(
         stops=s["sched_stops_final"],
         routes=s["sched_routes_final"],
-        trips=_live_trips(s["sched_trips"], s["sched_stop_times"]).drop(
-            "itinerary_osm_id", "service", "trip_seq"
-        ),
+        trips=s["sched_live_trips"].drop("itinerary_osm_id", "service", "trip_seq"),
         stop_times=s["sched_stop_times"],
         shapes=s["shapes"],
         stations=s["stations"],

@@ -617,10 +617,7 @@ def route_type_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy keeping min doc_id per identical text."""
-    d = tpch.load(spark, sf_dir, "documents")
-    return d.groupBy(F.md5("text").alias("text_md5")).agg(
-        F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("dup_count")
-    )
+    return DD.exact_dedup(tpch.load(spark, sf_dir, "documents"))
 
 
 @register(
@@ -702,10 +699,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole signature chain is MD5-based column math, reproduced
     bit-identically by the oracle."""
     docs = tpch.load(spark, sf_dir, "documents")
-    # persist: lsh_candidate_pairs consumes the band table three times
-    # (hot-bucket sizing + both join sides)
-    bands = DD.minhash_bands("doc_id", "text", docs, k=8, band_size=2).persist()
-    return DD.lsh_candidate_pairs(bands)
+    return DD.lsh_candidate_pairs(DD.minhash_bands("doc_id", "text", docs, k=8, band_size=2))
 
 
 @register(
@@ -721,8 +715,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard verification on the LSH candidate pairs."""
     docs = tpch.load(spark, sf_dir, "documents")
-    bands = DD.minhash_bands("doc_id", "text", docs, 8, 2).persist()
-    pairs = DD.lsh_candidate_pairs(bands)
+    pairs = DD.lsh_candidate_pairs(DD.minhash_bands("doc_id", "text", docs, 8, 2))
     return DD.ngram_jaccard(pairs, docs)
 
 

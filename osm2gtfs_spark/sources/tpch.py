@@ -43,10 +43,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def derived_lat(key) -> F.Column:
     m, mod, div, off = _LAT_SPEC
     k = key if not isinstance(key, str) else F.col(key)

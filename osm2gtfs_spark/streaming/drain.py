@@ -1,5 +1,5 @@
 """Shared AvailableNow drain protocol for the foreachBatch ingest
-family (tile partials, CDC deltas) — one copy of the
+family (tile partials, CDC deltas, near-dup admits) — one copy of the
 trigger/timeout/stop contract (review r5c: two verbatim copies had
 already diverged risk-wise).
 

@@ -217,7 +217,10 @@ def dedup_stream(
 
 
 def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str) -> None:
-    """Drain the bounded source into a memory sink (test/bench helper)."""
+    """Drain the bounded source into a memory sink (test/bench helper).
+    A drain that times out (120 s) stops the query and raises
+    ``TimeoutError``, as :func:`osm2gtfs_spark.streaming.drain.drain_available_now`
+    does."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
@@ -230,7 +233,9 @@ def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    if not q.awaitTermination(120):
+        q.stop()
+        raise TimeoutError(f"{query_name} drain exceeded 120s; stopped")
 
 
 def sessionize_batch(

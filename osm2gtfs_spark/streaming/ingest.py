@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm2gtfs_spark.operators import dedup as DD
+from osm2gtfs_spark.streaming.drain import drain_available_now
 
 
 def _admitted_path(state_dir: str) -> str:
@@ -223,20 +224,6 @@ def neardup_ingest_available_now(
         )
 
     try:
-        q = (
-            stream_df.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # a timed-out drain must not return as if complete: the
-            # caller would read half-written state, or start a second
-            # query against the same checkpoint (review r5)
-            q.stop()
-            raise TimeoutError(
-                f"neardup ingest drain exceeded {timeout_sec}s; stopped"
-            )
+        drain_available_now(stream_df, _process, checkpoint_dir, timeout_sec, "neardup ingest")
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)

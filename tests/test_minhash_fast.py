@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.operators import dedup as DD
+from osm2gtfs_spark.plans import queries as Q
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -46,3 +47,12 @@ def test_both_families_catch_true_dups(docs):
 def test_fast_signature_shape(docs):
     sig = docs.select(DD.minhash_signature_fast(DD.shingles(F.col("text")), 8).alias("s")).first().s
     assert len(sig) == 8 and len(set(sig)) > 1
+
+
+def test_lsh_queries_leave_no_cache(spark, sf_dir):
+    # lsh_candidate_pairs materializes the band table once itself; the
+    # query constructors add no cache of their own
+    spark.catalog.clearCache()
+    for query in (Q.minhash_lsh_pairs, Q.ngram_jaccard_dedup):
+        query(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

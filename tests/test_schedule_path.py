@@ -144,7 +144,7 @@ def _plan_nodes(df) -> set[str]:
 
 
 def test_outputs_plan_as_leaf_scans(tables):
-    # the in-memory runner hands validation and the sink finished data:
+    # a catalog=None run hands validation and the sink finished data:
     # no table re-plans the schedule join lineage, and no runner cache
     # is left for validation to scan
     for field in dataclasses.fields(tables):

@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.query import StreamingQuery
 
 from osm2gtfs_spark.streaming import events as SE
+from osm2gtfs_spark.streaming import ingest as ING
 
 
 def test_windowed_counts_match_batch(spark, sf_dir, tmp_path):
@@ -313,3 +315,26 @@ def test_hot_cells_stream_equals_batch_having(spark, sf_dir):
     )
     want = {(r.w.start, r.c): r["count"] for r in batch.collect()}
     assert got == want and len(got) > 0
+
+
+def test_timed_out_drains_raise_and_stop(spark, tmp_path, monkeypatch):
+    # a drain that times out must not return as if complete: the query
+    # is stopped and the caller gets a TimeoutError
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a b c d e f")], schema).write.parquet(src)
+    base = spark.createDataFrame([(0, "u v w x y z")], schema)
+    ING.seed_state(base, str(tmp_path / "state"))
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+
+    with pytest.raises(TimeoutError):
+        SE.run_available_now(
+            spark.readStream.schema(schema).parquet(src), "dedup_timeout", str(tmp_path / "ck1")
+        )
+    assert not spark.streams.active
+    with pytest.raises(TimeoutError):
+        ING.neardup_ingest_available_now(
+            spark.readStream.schema(schema).parquet(src), base,
+            str(tmp_path / "state"), str(tmp_path / "ck2"),
+        )
+    assert not spark.streams.active
