@@ -136,15 +136,15 @@ def main() -> None:
     pipeline_sec = sorted(samples)[len(samples) // 2]
     timings["gtfs_pipeline"] = pipeline_sec
 
-    # sharded deterministic sink: full zip write with 8 parallel ordered
-    # writers per member (byte-identical to shards=1 — asserted in tests)
+    # deterministic sink: full zip write, AQE sizing the ordered writers
+    # per member (bytes invariant to the writer count — asserted in tests)
     import tempfile
 
     from osm2gtfs_spark.sources.gtfs_sink import write_gtfs_zip
 
     with tempfile.TemporaryDirectory() as td:
         t0 = time.time()
-        write_gtfs_zip(tables, os.path.join(td, "bench.zip"), shards=8)
+        write_gtfs_zip(tables, os.path.join(td, "bench.zip"))
         zip_sec = round(time.time() - t0, 3)
 
     # total keeps the r1 definition (headline + pipeline); the sink and

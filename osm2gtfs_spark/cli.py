@@ -14,9 +14,11 @@ output_file), with two Spark-native substitutions:
   (``docs_parquet``). No network is ever touched.
 - **refresh flags** map onto ``CheckpointCatalog.invalidate`` of the
   corresponding stage groups (the reference's pickle-cache refresh,
-  core/cache.py) when the config carries a ``cache_dir``. Each group is
-  derived from the pipelines' stage graphs (``plans/pipeline.py``): the
-  refetched source's stage plus every stage built from it.
+  core/cache.py) when a ``docs_parquet`` config carries a ``cache_dir``.
+  Each group is derived from the pipelines' stage graphs
+  (``plans/pipeline.py``): the refetched source's stage plus every stage
+  built from it. The XML city plans keep no checkpoints, so they ignore
+  ``cache_dir`` and log a warning saying so.
 
 Operational note for long backfills (ADVICE r4): operators that take a
 reliable ``checkpoint_dir`` (e.g. ``dedup.connected_components``) call
@@ -119,7 +121,7 @@ def run(args, spark=None) -> str:
     """Execute the configured pipeline; returns the written zip path."""
     from osm2gtfs_spark.session import build_session
     from osm2gtfs_spark.sources import feed_members as FM
-    from osm2gtfs_spark.sources.gtfs_sink import validate_feed
+    from osm2gtfs_spark.sources.gtfs_sink import validate_feed, write_members_zip
     from osm2gtfs_spark.sources.osm_xml import timetable_docs_df, xml_docs_df
 
     config = load_config(args.config)
@@ -127,27 +129,27 @@ def run(args, spark=None) -> str:
     out = _output_path(args, config)
     spark = spark or build_session("osm2gtfs")
 
-    catalog = None
-    if config.get("cache_dir"):
-        from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
-
-        catalog = CheckpointCatalog(spark, config["cache_dir"])
-        for stage in _refresh_stages(args):
-            if catalog.manifest(stage) is None:
-                # visible no-op instead of a silent one: e.g. a
-                # cache_dir built by the frequency pipeline has no
-                # 'schedule' stage for --refresh-schedule-source to clear
-                log.warning("refresh: no cached stage %r to invalidate", stage)
-            catalog.invalidate(stage)
-
     inputs = config.get("inputs", {})
     name_without = config.get("stops", {}).get("name_without", "stop")
     fi = config.get("feed_info", {})
 
     if "docs_parquet" in inputs:
         # interleaved docs table → the generic scalable pipelines + the
-        # sharded distributed sink (corpus-scale path)
+        # distributed sorted sink (corpus-scale path)
         from osm2gtfs_spark.sources.gtfs_sink import write_gtfs_zip
+
+        catalog = None
+        if config.get("cache_dir"):
+            from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
+
+            catalog = CheckpointCatalog(spark, config["cache_dir"])
+            for stage in _refresh_stages(args):
+                if catalog.manifest(stage) is None:
+                    # visible no-op instead of a silent one: e.g. a
+                    # cache_dir built by the frequency pipeline has no
+                    # 'schedule' stage for --refresh-schedule-source to clear
+                    log.warning("refresh: no cached stage %r to invalidate", stage)
+                catalog.invalidate(stage)
 
         docs = spark.read.parquet(inputs["docs_parquet"])
         if "timetable" in inputs or config.get("schedule_source"):
@@ -164,10 +166,12 @@ def run(args, spark=None) -> str:
             feed_end=fi.get("end_date", "20250101"),
         )
         _log_validation(validate_feed(tables))
-        return write_gtfs_zip(
-            tables, out, agency=config.get("agency"), shards=int(config.get("sink_shards", 1))
-        )
+        return write_gtfs_zip(tables, out, agency=config.get("agency"))
 
+    if config.get("cache_dir"):
+        # the city plans build in one pass and keep no stage checkpoints
+        log.warning("cache_dir %r is ignored for XML inputs: only docs_parquet "
+                    "pipelines checkpoint their stages", config["cache_dir"])
     stops_docs = xml_docs_df(spark, [inputs["stops_xml"]])
     routes_docs = xml_docs_df(spark, [inputs["routes_xml"]])
 
@@ -214,7 +218,7 @@ def run(args, spark=None) -> str:
         members = FM.members_default(tables, config)
 
     _log_validation(validate_feed(tables))
-    return FM.write_members_zip(members, out)
+    return write_members_zip(members, out)
 
 
 def _log_validation(report) -> None:

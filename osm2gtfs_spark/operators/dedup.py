@@ -320,7 +320,8 @@ def connected_components(
     a big graph pays the pair plan once, not twice. The probe is
     skipped automatically when ``checkpoint_dir`` is set (the explicit
     cluster-scale/reliability signal), when the id columns have
-    different types, or when NULL ids appear in the probe window —
+    different types or are neither integers nor strings, or when NULL
+    ids appear in the probe window —
     those cases take the iterative path with its original semantics.
     Executes eagerly either way — the iterative path always did
     (per-round convergence actions)."""
@@ -332,11 +333,15 @@ def connected_components(
     # shuffle stages would run twice (once for the probe, once for the
     # loop). Mixed id column types likewise fall through: the iterative
     # path's unionByName coerces to the common type, the driver path
-    # would not.
+    # would not. So do ids other than integers and strings: the
+    # union-find needs ids equal to themselves, and a NaN double id is
+    # not (its root walk would never end).
+    id_type = pairs.schema[id_a].dataType
     use_probe = (
         small_graph_threshold > 0
         and checkpoint_dir is None
-        and pairs.schema[id_a].dataType == pairs.schema[id_b].dataType
+        and id_type == pairs.schema[id_b].dataType
+        and isinstance(id_type, (T.IntegralType, T.StringType))
     )
     if use_probe:
         # Runtime physical-plan choice in the AQE / global_index
@@ -394,7 +399,6 @@ def connected_components(
                 cur = comp_min.get(root)
                 if cur is None or v < cur:
                     comp_min[root] = v
-            id_type = pairs.schema[id_a].dataType
             out_schema = T.StructType(
                 [
                     T.StructField("doc_id", id_type),

@@ -1191,9 +1191,10 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gap_fill_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6 as a generic operator: linear gap-fill between anchor rows.
 
-    Identical shape to the stop_times interpolation (schedule_path
-    .interpolate_times), applied to the events stream: 'purchase' rows
-    are anchors, everything between is count-interpolated."""
+    The stop_times gap fill (schedule_path.interpolate_times_distance)
+    weights by distance; here the events stream is filled by count:
+    'purchase' rows are anchors, everything between is
+    count-interpolated."""
     e = tpch.load(spark, sf_dir, "events")
     cents = F.when(
         F.col("event_type") == "purchase", F.round(F.col("value") * 100, 0).cast("long")

@@ -272,33 +272,6 @@ def interpolate_times_distance(aligned: DataFrame, stop_coords: DataFrame) -> Da
     ).drop("prev_t", "prev_c", "next_t", "next_c", "_plat", "_plon", "_leg", "_cum", "lat", "lon")
 
 
-def interpolate_times(aligned: DataFrame) -> DataFrame:
-    """W6 variant: fill untimed stops by equal-COUNT interpolation.
-
-    Kept as a generic operator (and the `gap_fill_interpolation`
-    contract query shape); the GTFS pipelines use the transitfeed-exact
-    distance-weighted variant above."""
-    key = ["itinerary_osm_id", "service", "trip_seq"]
-    w_back = Window.partitionBy(*key).orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    w_fwd = Window.partitionBy(*key).orderBy("pos").rowsBetween(0, Window.unboundedFollowing)
-    timed_pos = F.when(F.col("time_secs").isNotNull(), F.col("pos"))
-    df = (
-        aligned.withColumn("prev_t", F.last("time_secs", ignorenulls=True).over(w_back))
-        .withColumn("prev_p", F.last(timed_pos, ignorenulls=True).over(w_back))
-        .withColumn("next_t", F.first("time_secs", ignorenulls=True).over(w_fwd))
-        .withColumn("next_p", F.first(timed_pos, ignorenulls=True).over(w_fwd))
-    )
-    interp = F.col("prev_t") + F.floor(
-        (F.col("next_t") - F.col("prev_t"))
-        * (F.col("pos") - F.col("prev_p"))
-        / (F.col("next_p") - F.col("prev_p"))
-    )
-    return df.withColumn(
-        "time_secs_filled",
-        F.when(F.col("time_secs").isNotNull(), F.col("time_secs")).otherwise(interp),
-    ).drop("prev_t", "prev_p", "next_t", "next_p")
-
-
 # ---------------------------------------------------------------------------
 # Calendar synthesis (trips_creator.py:280-332)
 # ---------------------------------------------------------------------------

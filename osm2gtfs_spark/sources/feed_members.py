@@ -10,12 +10,11 @@ and tests/test_florianopolis_golden.py).
 
 Assembly collects each member to the driver — the right trade at feed
 scale (a whole national GTFS is MBs); corpus-scale exports go through
-``gtfs_sink.write_gtfs_zip``'s sharded distributed writers instead.
+``gtfs_sink.write_gtfs_zip``'s distributed sorted writers instead. Both
+hand their members to ``gtfs_sink.write_members_zip``.
 """
 
 from __future__ import annotations
-
-import zipfile
 
 from pyspark.sql import DataFrame
 
@@ -34,7 +33,7 @@ FEED_INFO_HEADER = [
 # _rows collects a member table to the driver — sane for national GTFS
 # feeds (MBs), catastrophic if someone points a corpus-scale table at the
 # golden-dialect assembly. Guardrail (VERDICT r3 item 5): count first,
-# refuse above this and point at the sharded distributed writer.
+# refuse above this and point at the distributed sorted writer.
 MAX_COLLECT_ROWS = 5_000_000
 
 
@@ -47,7 +46,7 @@ def _guarded_collect(df: DataFrame) -> list:
         raise ValueError(
             f"member table exceeds MAX_COLLECT_ROWS={MAX_COLLECT_ROWS}: "
             "driver-side golden-dialect assembly is for feed-scale data; "
-            "use gtfs_sink.write_gtfs_zip(shards=N) for corpus-scale exports"
+            "use gtfs_sink.write_gtfs_zip for corpus-scale exports"
         )
     return rows
 
@@ -271,12 +270,3 @@ def members_ci_abidjan(t, config: dict) -> dict[str, bytes]:
     if fi is not None:
         members["feed_info.txt"] = fi
     return members
-
-
-def write_members_zip(members: dict[str, bytes], zip_path: str) -> str:
-    """Deterministic zip: sorted member order, pinned timestamps."""
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for name in sorted(members):
-            info = zipfile.ZipInfo(name, date_time=(2024, 1, 1, 0, 0, 0))
-            z.writestr(info, members[name])
-    return zip_path

@@ -2,9 +2,13 @@
 
 S8: the reference hands a transitfeed ``Schedule`` to
 ``WriteGoogleTransitFeed`` (osm2gtfs/osm2gtfs.py:93) producing a zip of
-CSV tables. Here each table is globally ordered (O5 determinism), written
-through Spark's CSV writer as a single part, and assembled into the zip
-on the driver — byte-stable across runs and cluster layouts.
+CSV tables. Here each table is globally ordered (O5 determinism) and
+written through Spark's CSV writer, as many parts as AQE sizes the range
+exchange to; the parts are concatenated in order and every member goes
+into the zip through one deterministic assembler
+(``write_members_zip``, shared with the city sinks in
+``feed_members``) — byte-stable across runs, writer counts and cluster
+layouts.
 
 S9: transitfeed's ``feed.Validate`` (osm2gtfs.py:90) becomes a set of
 assertion DataFrames: FK joins across stops↔stop_times↔trips↔routes and
@@ -14,11 +18,16 @@ exceptions, so callers can route them to a metrics sink.
 
 from __future__ import annotations
 
+import csv
 import glob
+import io
 import os
 import shutil
 import tempfile
 import zipfile
+from collections.abc import Mapping
+from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -71,12 +80,12 @@ SORT_KEYS: dict[str, list[str]] = {
 }
 
 
-def _write_csv(df: DataFrame, filename: str, out_dir: str, shards: int = 1) -> str:
-    """Ordered CSV member. ``shards=1`` → one sorted task (fixture scale);
-    ``shards>1`` → range-partitioned parallel sorted writes, concatenated
-    on the driver in partition order — byte-identical output (range
-    partitions tile the key space in order, each sorted within), but the
-    sort/format work fans out over ``shards`` tasks instead of one."""
+def _write_csv(df: DataFrame, filename: str, out_dir: str) -> str:
+    """Write one GTFS member to ``out_dir/filename``: header, then the rows
+    globally ordered by ``SORT_KEYS``. Spark's range exchange tiles the key
+    space in order and AQE coalescing sets the writer count from the data
+    size, so concatenating the part files in name order gives the same
+    bytes whatever the number of writers."""
     cols = [c for c in GTFS_COLUMNS[filename] if c in df.columns]
     missing = [c for c in GTFS_COLUMNS[filename] if c not in df.columns]
     sel = df.select(
@@ -88,52 +97,43 @@ def _write_csv(df: DataFrame, filename: str, out_dir: str, shards: int = 1) -> s
         F.col(k).cast("double").asc_nulls_last() if k in ("trip_id", "stop_sequence", "shape_pt_sequence") else F.col(k).asc()
         for k in SORT_KEYS[filename]
     ]
-    # sharded writers only pay off for the row-scale members; the range
-    # partitioner SAMPLES its input (an extra job per member), so tiny
-    # dimension members (routes, calendar, frequencies) go through the
-    # single sorted task instead (optimization r6) — bytes identical
-    # either way (range partitions tile the key space in order).
-    # frequencies (~1 row/trip) and calendar_dates (~1 row/service-date
-    # exception) scale with the feed like trips do (review r6) — only
-    # the truly bounded dimension members (routes, calendar, agency)
-    # skip the range-sampler job
-    _ROW_SCALE_MEMBERS = {
-        "stop_times.txt",
-        "stops.txt",
-        "shapes.txt",
-        "trips.txt",
-        "frequencies.txt",
-        "calendar_dates.txt",
-    }
-    if shards <= 1 or filename not in _ROW_SCALE_MEMBERS:
-        ordered = sel.orderBy(*keys).coalesce(1)
-    else:
-        ordered = sel.repartitionByRange(shards, *keys).sortWithinPartitions(*keys)
-    tmp = tempfile.mkdtemp(prefix="gtfs_csv_")
+    parts_dir = os.path.join(out_dir, filename + ".parts")
     (
-        ordered.write.mode("overwrite")
+        sel.orderBy(*keys)
+        .write.mode("overwrite")
         .option("header", False)
         .option("emptyValue", "")
         .option("nullValue", "")
-        .csv(tmp)
+        .csv(parts_dir)
     )
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
     dest = os.path.join(out_dir, filename)
     with open(dest, "wb") as out:
         out.write((",".join(GTFS_COLUMNS[filename]) + "\n").encode("utf-8"))
-        for p in parts:
+        for p in sorted(glob.glob(os.path.join(parts_dir, "part-*.csv"))):
             with open(p, "rb") as f:
                 shutil.copyfileobj(f, out)
-    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(parts_dir)
     return dest
 
 
-def write_gtfs_zip(tables, zip_path: str, agency: dict | None = None, shards: int = 1) -> str:
+def write_members_zip(members: Mapping[str, bytes | Path], zip_path: str) -> str:
+    """Deterministic zip shared by every GTFS sink: members in sorted-name
+    order, each stamped with one pinned date, so equal member bytes give
+    equal zip bytes. A ``Path`` member is read only when its turn comes,
+    so the driver holds at most one such member in memory."""
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
+        for name in sorted(members):
+            data = members[name]
+            info = zipfile.ZipInfo(name, date_time=(2024, 1, 1, 0, 0, 0))
+            z.writestr(info, data.read_bytes() if isinstance(data, Path) else data)
+    return zip_path
+
+
+def write_gtfs_zip(tables, zip_path: str, agency: dict | None = None) -> str:
     """tables: GtfsTables (plans.pipeline). Returns the zip path.
 
-    ``shards``: parallel ordered writers per member (see _write_csv);
-    output bytes are shard-count invariant."""
-    out_dir = tempfile.mkdtemp(prefix="gtfs_feed_")
+    Each member is written by ``_write_csv`` into one scratch directory,
+    removed on every exit path, then zipped by ``write_members_zip``."""
     # stops.txt needs stop_id/location_type; stations are location_type=1
     stops = tables.stops.select(
         F.col("lon").alias("stop_lon"),
@@ -163,32 +163,23 @@ def write_gtfs_zip(tables, zip_path: str, agency: dict | None = None, shards: in
     }
     if getattr(tables, "calendar_dates", None) is not None:
         members["calendar_dates.txt"] = tables.calendar_dates
-    # members are independent files: write them as concurrent Spark jobs
-    # (the scheduler interleaves their stages), then assemble the zip in
-    # sorted-name order — byte output is unaffected by write order
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(members)) as ex:
-        files = list(
-            ex.map(
-                lambda kv: _write_csv(kv[1], kv[0], out_dir, shards=shards),
-                members.items(),
-            )
-        )
     # agency.txt / feed_info.txt are config projections (S6)
     agency = agency or {"agency_id": "O", "agency_name": "Synthetic", "agency_url": "https://example.org", "agency_timezone": "UTC"}
-    ag = os.path.join(out_dir, "agency.txt")
-    with open(ag, "w") as f:
-        f.write(",".join(agency.keys()) + "\n" + ",".join(agency.values()) + "\n")
-    files.append(ag)
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for p in sorted(files):
-            # fixed timestamp → byte-stable zip
-            info = zipfile.ZipInfo(os.path.basename(p), date_time=(2024, 1, 1, 0, 0, 0))
-            with open(p, "rb") as f:
-                z.writestr(info, f.read())
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return zip_path
+    with tempfile.TemporaryDirectory(prefix="gtfs_feed_") as out_dir:
+        # members are independent files: write them as concurrent Spark
+        # jobs (the scheduler interleaves their stages); the zip orders
+        # them by name, so write order does not reach the bytes
+        with ThreadPoolExecutor(max_workers=len(members)) as ex:
+            files = list(ex.map(lambda kv: _write_csv(kv[1], kv[0], out_dir), members.items()))
+        # csv-quoted, so a comma in a value or a non-string value (e.g. a
+        # numeric agency_phone) still gives one well-formed row
+        agency_csv = io.StringIO()
+        w = csv.writer(agency_csv, lineterminator="\n")
+        w.writerow(agency.keys())
+        w.writerow(agency.values())
+        zip_members: dict[str, bytes | Path] = {os.path.basename(p): Path(p) for p in files}
+        zip_members["agency.txt"] = agency_csv.getvalue().encode("utf-8")
+        return write_members_zip(zip_members, zip_path)
 
 
 def _gtfs_time_secs(col):
@@ -327,11 +318,8 @@ def validate_feed(tables) -> DataFrame:
 def transitfeed_csv_bytes(header: list[str], rows) -> bytes:
     """Serialize one GTFS member in the exact transitfeed dialect the
     reference's golden zips use: QUOTE_MINIMAL, CRLF, utf-8."""
-    import csv as _csv
-    import io as _io
-
-    buf = _io.StringIO()
-    w = _csv.writer(buf, lineterminator="\r\n")
+    buf = io.StringIO()
+    w = csv.writer(buf, lineterminator="\r\n")
     w.writerow(header)
     w.writerows(rows)
     return buf.getvalue().encode("utf-8")

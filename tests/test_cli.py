@@ -53,7 +53,7 @@ def test_output_precedence(tmp_path):
 
 def test_cli_docs_parquet_scalable_path(spark, tmp_path):
     """The corpus-scale front door: an interleaved docs parquet table in,
-    the sharded distributed sink out."""
+    the distributed sorted sink out."""
     from osm2gtfs_spark.sources import docs as D
 
     docs_path = str(tmp_path / "docs")
@@ -64,7 +64,6 @@ def test_cli_docs_parquet_scalable_path(spark, tmp_path):
         "agency": {"agency_id": "X", "agency_name": "X", "agency_url": "u", "agency_timezone": "UTC"},
         "feed_info": {"start_date": "20230601", "end_date": "20240531"},
         "output_file": str(tmp_path / "generic.zip"),
-        "sink_shards": 2,
     }
     cfg_path = tmp_path / "c.json"
     cfg_path.write_text(json.dumps(config))
@@ -180,10 +179,12 @@ def test_cli_managua_counts(spark, tmp_path):
         assert len(routes) == 45
 
 
-def test_cli_abidjan_selector_smoke(spark, tmp_path):
+def test_cli_abidjan_selector_smoke(spark, tmp_path, caplog):
     """ci_abidjan selector through the CLI on the synthetic opening_hours
     fixtures (the upstream routes XML is absent, so no golden parity —
-    the check is the dispatch, member assembly and frequency windows)."""
+    the check is the dispatch, member assembly and frequency windows).
+    The city plans keep no checkpoints: a configured ``cache_dir`` is
+    neither created nor silently dropped, it is reported as ignored."""
     from tests.test_opening_hours import ROUTES_XML, STOPS_XML
 
     (tmp_path / "stops.xml").write_text(STOPS_XML)
@@ -201,11 +202,15 @@ def test_cli_abidjan_selector_smoke(spark, tmp_path):
             "stops_xml": str(tmp_path / "stops.xml"),
             "routes_xml": str(tmp_path / "routes.xml"),
         },
+        "cache_dir": str(tmp_path / "ckpt"),
         "output_file": str(tmp_path / "abj.zip"),
     }
     cfg = tmp_path / "c.json"
     cfg.write_text(json.dumps(config))
-    out = cli.run(_args(["-c", str(cfg)]), spark=spark)
+    with caplog.at_level("WARNING", logger="osm2gtfs_spark.cli"):
+        out = cli.run(_args(["-c", str(cfg)]), spark=spark)
+    assert not (tmp_path / "ckpt").exists()
+    assert [r for r in caplog.records if "cache_dir" in r.getMessage() and "ignored" in r.getMessage()]
     with zipfile.ZipFile(out) as z:
         assert {"agency.txt", "routes.txt", "trips.txt", "stop_times.txt",
                 "frequencies.txt", "calendar.txt", "stops.txt"} <= set(z.namelist())

@@ -310,6 +310,31 @@ def test_connected_components_small_path_matches_iterative(spark):
     assert ssmall == siter
 
 
+def test_connected_components_nan_ids_complete(spark):
+    """A NaN double id is not equal to itself, so a driver union-find
+    walking to its root never stops: double ids must take the iterative
+    path. Run in a daemon thread so a hang fails instead of stalling."""
+    import threading
+
+    nan = float("nan")
+    pairs = spark.createDataFrame(
+        [(1.0, nan), (nan, 2.0), (3.0, 4.0)], "doc_a double, doc_b double"
+    )
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(rows=DD.connected_components(pairs).collect()), daemon=True
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "connected_components did not return on NaN ids"
+    iterative = DD.connected_components(pairs, small_graph_threshold=0).collect()
+
+    def labels(rows):  # repr: NaN != NaN would fail a direct compare
+        return sorted((repr(r.doc_id), repr(r.component_id)) for r in rows)
+
+    assert labels(out["rows"]) == labels(iterative)
+
+
 def test_wav_non_pcm_and_subbyte_null(spark):
     """ADVICE r2: non-PCM codecs / sub-byte sample widths get NULL dims
     (the frame math assumes whole-byte PCM), not a bogus frame count."""

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import csv
+import glob
+import io
+import os
 import zipfile
 
 import pytest
@@ -126,11 +130,49 @@ def test_validate_feed_seeded_violations(spark):
     assert checks["bad_headway"] == 1
 
 
-def test_zip_shard_invariance(tables, tmp_path):
-    """Range-sharded parallel sink emits byte-identical zips (O5)."""
-    p1 = write_gtfs_zip(tables, str(tmp_path / "one.zip"), shards=1)
-    p4 = write_gtfs_zip(tables, str(tmp_path / "four.zip"), shards=4)
-    assert open(p1, "rb").read() == open(p4, "rb").read()
+def test_zip_shard_invariance(spark, tables, tmp_path, monkeypatch):
+    """The writer count AQE picks does not reach the zip bytes (O5): a
+    default-conf write equals one with partition coalescing off, where
+    the range exchange keeps every shuffle partition as a writer."""
+    from types import SimpleNamespace
+
+    from osm2gtfs_spark.sources import gtfs_sink
+
+    parts: dict[str, list[str]] = {}
+
+    def recording_glob(pattern):
+        found = glob.glob(pattern)
+        parts[os.path.basename(os.path.dirname(pattern))] = found
+        return found
+
+    monkeypatch.setattr(gtfs_sink, "glob", SimpleNamespace(glob=recording_glob))
+    p1 = write_gtfs_zip(tables, str(tmp_path / "default.zip"))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    parts.clear()
+    try:
+        p2 = write_gtfs_zip(tables, str(tmp_path / "uncoalesced.zip"))
+    finally:
+        spark.conf.set(key, prev)
+    assert len(parts.get("stop_times.txt.parts", [])) > 1, "the comparison needs several writers"
+    assert open(p1, "rb").read() == open(p2, "rb").read()
+
+
+def test_agency_member_is_csv(tables, tmp_path):
+    """agency.txt is CSV-quoted: a comma inside a value stays one field,
+    and a non-string config value (a numeric phone) is written as text."""
+    agency = {
+        "agency_id": "O",
+        "agency_name": "Bus, Rail & Co",
+        "agency_url": "https://example.org",
+        "agency_timezone": "UTC",
+        "agency_phone": 5551234,
+    }
+    p = write_gtfs_zip(tables, str(tmp_path / "a.zip"), agency=agency)
+    with zipfile.ZipFile(p) as z:
+        rows = list(csv.reader(io.StringIO(z.read("agency.txt").decode("utf-8"))))
+    assert rows == [list(agency), ["O", "Bus, Rail & Co", "https://example.org", "UTC", "5551234"]]
 
 
 def test_member_rows_guardrail_and_fill_precedence(spark, monkeypatch):
