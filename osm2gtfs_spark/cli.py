@@ -14,11 +14,11 @@ output_file), with two Spark-native substitutions:
   (``docs_parquet``). No network is ever touched.
 - **refresh flags** map onto ``CheckpointCatalog.invalidate`` of the
   corresponding stage groups (the reference's pickle-cache refresh,
-  core/cache.py) when a ``docs_parquet`` config carries a ``cache_dir``.
-  Each group is derived from the pipelines' stage graphs
-  (``plans/pipeline.py``): the refetched source's stage plus every stage
-  built from it. The XML city plans keep no checkpoints, so they ignore
-  ``cache_dir`` and log a warning saying so.
+  core/cache.py) when the config carries a ``cache_dir``. Every
+  pipeline, docs-parquet or XML city selector, runs on a declared stage
+  graph (``plans/pipeline.py``) and checkpoints its stages there. Each
+  group is derived from all the graphs: the refetched source's stages
+  (or root frame, e.g. ``stops_docs``) plus every stage built from it.
 
 Operational note for long backfills (ADVICE r4): operators that take a
 reliable ``checkpoint_dir`` (e.g. ``dedup.connected_components``) call
@@ -49,10 +49,10 @@ log = logging.getLogger("osm2gtfs_spark.cli")
 
 # --refresh-* → CheckpointCatalog.invalidate: each group is the stage
 # that holds the refetched source plus every stage built from it, on
-# either pipeline's stage graph
-STOP_STAGES = pipeline.downstream({"nodes", "ways"})
-ROUTE_STAGES = pipeline.downstream({"relations"})
-SCHEDULE_STAGES = pipeline.downstream({"schedule"})
+# every declared stage graph (docs parquet and the XML city selectors)
+STOP_STAGES = pipeline.downstream({"nodes", "ways", "stops_docs"})
+ROUTE_STAGES = pipeline.downstream({"relations", "routes_docs"})
+SCHEDULE_STAGES = pipeline.downstream({"schedule", "timetable_docs", "fenix_docs"})
 
 DEDICATED_SELECTORS = ("gh_accra", "ci_abidjan", "br_florianopolis")
 
@@ -133,23 +133,24 @@ def run(args, spark=None) -> str:
     name_without = config.get("stops", {}).get("name_without", "stop")
     fi = config.get("feed_info", {})
 
+    catalog = None
+    if config.get("cache_dir"):
+        from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
+
+        catalog = CheckpointCatalog(spark, config["cache_dir"])
+        refresh = _refresh_stages(args)
+        if refresh and not any(catalog.manifest(stage) for stage in refresh):
+            # visible no-op instead of a silent one: e.g. a cache_dir
+            # built by the frequency pipeline has no schedule stage for
+            # --refresh-schedule-source to clear
+            log.warning("refresh: no cached stage of %s to invalidate", refresh)
+        for stage in refresh:
+            catalog.invalidate(stage)
+
     if "docs_parquet" in inputs:
         # interleaved docs table → the generic scalable pipelines + the
         # distributed sorted sink (corpus-scale path)
         from osm2gtfs_spark.sources.gtfs_sink import write_gtfs_zip
-
-        catalog = None
-        if config.get("cache_dir"):
-            from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
-
-            catalog = CheckpointCatalog(spark, config["cache_dir"])
-            for stage in _refresh_stages(args):
-                if catalog.manifest(stage) is None:
-                    # visible no-op instead of a silent one: e.g. a
-                    # cache_dir built by the frequency pipeline has no
-                    # 'schedule' stage for --refresh-schedule-source to clear
-                    log.warning("refresh: no cached stage %r to invalidate", stage)
-                catalog.invalidate(stage)
 
         docs = spark.read.parquet(inputs["docs_parquet"])
         if "timetable" in inputs or config.get("schedule_source"):
@@ -168,17 +169,13 @@ def run(args, spark=None) -> str:
         _log_validation(validate_feed(tables))
         return write_gtfs_zip(tables, out, agency=config.get("agency"))
 
-    if config.get("cache_dir"):
-        # the city plans build in one pass and keep no stage checkpoints
-        log.warning("cache_dir %r is ignored for XML inputs: only docs_parquet "
-                    "pipelines checkpoint their stages", config["cache_dir"])
     stops_docs = xml_docs_df(spark, [inputs["stops_xml"]])
     routes_docs = xml_docs_df(spark, [inputs["routes_xml"]])
 
     if selector == "gh_accra":
         from osm2gtfs_spark.plans.accra import build_accra_tables
 
-        tables = build_accra_tables(stops_docs, routes_docs)
+        tables = build_accra_tables(stops_docs, routes_docs, catalog=catalog)
         members = FM.members_gh_accra(tables, config)
     elif selector == "ci_abidjan":
         from osm2gtfs_spark.plans.abidjan import build_abidjan_tables
@@ -190,6 +187,7 @@ def run(args, spark=None) -> str:
             start_date=fi.get("start_date", "20200101"),
             end_date=fi.get("end_date", "20201231"),
             solar_times=config.get("solar_times"),
+            catalog=catalog,
         )
         members = FM.members_ci_abidjan(tables, config)
     elif selector == "br_florianopolis":
@@ -202,6 +200,7 @@ def run(args, spark=None) -> str:
             fenix_docs_df(spark, inputs["fenix_json"]),
             start_date=fi.get("start_date", "20180301"),
             end_date=fi.get("end_date", "20190228"),
+            catalog=catalog,
         )
         members = FM.members_br_florianopolis(tables, config)
     else:
@@ -214,6 +213,7 @@ def run(args, spark=None) -> str:
             name_without=name_without,
             feed_start=fi.get("start_date", "20240101"),
             feed_end=fi.get("end_date", "20250101"),
+            catalog=catalog,
         )
         members = FM.members_default(tables, config)
 

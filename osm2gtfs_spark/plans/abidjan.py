@@ -26,9 +26,16 @@ Reproduces the semantics of the reference's ci_abidjan creators
 - calendar: one row per service_id with its 7 day flags and the feed
   start/end dates (`:55-65`; config feed_info 20200101/20201231).
 
+Flow: :func:`stages` is the shared XML stage table
+(:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`, no shapes) plus the
+service windows and the trips; the stage walk stores each stage once,
+and :func:`build_abidjan_tables` derives the output tables from the
+stored stages.
+
 Scale shape: everything is column math + equi joins; the only Python
 is the vectorized opening_hours parser (memoized per distinct tag
-combination, so ~O(distinct schedules) not O(rows)).
+combination, so ~O(distinct schedules) not O(rows)), run once, in the
+windows stage.
 """
 
 from __future__ import annotations
@@ -43,10 +50,9 @@ from osm2gtfs_spark.functions.opening_hours import (
     DEFAULT_OPENING_HOURS,
     oh_windows,
 )
-from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
-from osm2gtfs_spark.plans import gtfs
-from osm2gtfs_spark.sources import docs as docs_mod
+from osm2gtfs_spark.plans import gtfs, pipeline
+from osm2gtfs_spark.plans.pipeline import Stage
 
 DEFAULT_TRIP_DURATION_MIN = 120  # trips_creator_ci_abidjan.py:30
 
@@ -72,100 +78,19 @@ def _windows_for(tags_col, solar_times: dict | None = None):
     )
 
 
-def build_abidjan_tables(
-    stops_docs: DataFrame,
-    routes_docs: DataFrame,
-    default_agency: dict | None = None,
-    start_date: str = "20200101",
-    end_date: str = "20201231",
-    solar_times: dict | None = None,
-) -> AbidjanTables:
-    default_agency = default_agency or {
-        "agency_id": "divers",
-        "agency_name": "Divers opérateurs",
-        "agency_url": "https://wiki.openstreetmap.org/wiki/FR:WikiProject_C%C3%B4te_d'Ivoire/Transport_Abidjan",
-        "agency_timezone": "Africa/Abidjan",
-    }
-    spark = stops_docs.sparkSession
-
-    nodes_s = docs_mod.decode_nodes(stops_docs)
-    ways_s = docs_mod.decode_ways(stops_docs)
-    relations = docs_mod.decode_relations(routes_docs)
-
-    # --- stops: default P11 precedence (no city override) ---------------
-    stops = gtfs.build_stops(nodes_s, ways_s, "Arret sans nom").cache()
-
-    lines, itins = gtfs.build_lines(relations)
-    lines = lines.cache()
-    itins = itins.cache()
-
-    # --- agencies: default + one per distinct network tag ---------------
-    line_net = lines.select(
-        "line_osm_id",
-        F.try_element_at("tags", F.lit("network")).alias("network"),
-        F.try_element_at("tags", F.lit("operator:website")).alias("op_site"),
-    )
-    net_agencies = (
-        line_net.filter(F.col("network").isNotNull() & (F.col("network") != ""))
-        .groupBy("network")
-        # last non-null operator:website wins in reference iteration order;
-        # max() is deterministic and matches when ≤1 site per network
-        .agg(F.max("op_site").alias("op_site"))
-        .select(
-            F.coalesce("op_site", F.lit(default_agency["agency_url"])).alias("agency_url"),
-            F.col("network").alias("agency_name"),
-            F.col("network").alias("agency_id"),
-            F.lit(default_agency["agency_timezone"]).alias("agency_timezone"),
-            F.lit("").alias("agency_lang"),
-        )
-    )
-    agencies = spark.createDataFrame(
-        [
-            (
-                default_agency["agency_url"],
-                default_agency["agency_name"],
-                default_agency["agency_id"],
-                default_agency["agency_timezone"],
-                "",
-            )
-        ],
-        "agency_url string, agency_name string, agency_id string, agency_timezone string, agency_lang string",
-    ).unionByName(net_agencies)
-
-    # --- routes ----------------------------------------------------------
-    w_last = Window.partitionBy("line_osm_id").orderBy(
-        F.col("seq").desc(), F.col("itinerary_osm_id").desc()
-    )
-    long_names = (
-        itins.filter(F.col("fr").isNotNull() & F.col("to").isNotNull())
-        .withColumn("_rn", F.row_number().over(w_last))
-        .filter("_rn = 1")
-        .select("line_osm_id", F.concat("fr", F.lit(" ↔ "), "to").alias("route_long_name"))
-    )
-    routes = (
-        lines.join(long_names, "line_osm_id", "left")
-        .join(line_net.select("line_osm_id", "network"), "line_osm_id", "left")
-        .select(
-            F.when(F.col("route_type") == "Tram", "0")
-            .when(F.col("route_type") == "Subway", "1")
-            .when(F.col("route_type") == "Rail", "2")
-            .when(F.col("route_type") == "Ferry", "4")
-            .otherwise("3")
-            .alias("route_type"),
-            F.col("line_osm_id").cast("string").alias("route_id"),
-            F.col("route_id").alias("route_short_name"),
-            F.coalesce("route_long_name", "name", F.lit("")).alias("route_long_name"),
-            F.coalesce(
-                F.when(F.col("network") == "", None).otherwise(F.col("network")),
-                F.lit(default_agency["agency_id"]),
-            ).alias("agency_id"),
-            F.lit("").alias("route_desc"),
-            F.lit("1779c2").alias("route_color"),
-            F.lit("ffffff").alias("route_text_color"),
-        )
+def stages(solar_times: dict | None = None) -> tuple[Stage, ...]:
+    return pipeline.xml_stages("abidjan", "Arret sans nom", shapes=False) + (
+        Stage(
+            ("abidjan_windows",), ("route_lines", "route_itineraries"),
+            lambda lines, itins: _windows(lines, itins, solar_times),
+        ),
+        Stage(("abidjan_trips",), ("abidjan_windows", "route_lines", "route_itineraries"), _trips),
     )
 
-    # --- service windows: itinerary tags ▸ line tags ▸ city default -----
+
+def _windows(lines: DataFrame, itins: DataFrame, solar_times: dict | None) -> DataFrame:
+    """One row per (itinerary, window): itinerary tags ▸ line tags ▸ city
+    default."""
     line_windows = lines.select(
         "line_osm_id", _windows_for(F.col("tags"), solar_times).alias("line_win")
     )
@@ -188,10 +113,7 @@ def build_abidjan_tables(
         )
         .drop("itin_win", "line_win", "def_win")
     )
-
-    # one row per (itinerary, window); service order within an itinerary =
-    # first-window order (reference: dict insertion order of service ids)
-    win = itin_win.select(
+    return itin_win.select(
         "line_osm_id",
         "itinerary_osm_id",
         "seq",
@@ -207,28 +129,15 @@ def build_abidjan_tables(
         F.col("w.service_id").alias("service_id"),
         F.col("w.day_flags").alias("day_flags"),
     )
+
+
+def _trips(win: DataFrame, lines: DataFrame, itins: DataFrame) -> DataFrame:
+    """One trip per (itinerary × service) in transitfeed id order. Service
+    order within an itinerary = first-window order (reference: dict
+    insertion order of service ids)."""
     svc_order = win.groupBy("line_osm_id", "itinerary_osm_id", "service_id").agg(
         F.min("win_pos").alias("svc_pos")
     )
-
-    # --- calendar --------------------------------------------------------
-    calendar = (
-        win.select("service_id", "day_flags")
-        .dropDuplicates(["service_id"])
-        .select(
-            "service_id",
-            F.lit(start_date).alias("start_date"),
-            F.lit(end_date).alias("end_date"),
-            *[
-                F.col("day_flags")[i].cast("int").cast("string").alias(day)
-                for i, day in enumerate(
-                    ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
-                )
-            ],
-        )
-    )
-
-    # --- trips: one per (itinerary × service); transitfeed id order -----
     line_ref = F.broadcast(lines.select("line_osm_id", F.col("route_id").alias("l_ref")))
     trip_keys = (
         svc_order.join(line_ref, "line_osm_id")
@@ -238,7 +147,7 @@ def build_abidjan_tables(
         )
     )
     dir_order = Window.partitionBy("l_ref").orderBy("seq", "itinerary_osm_id", "svc_pos")  # l_ref 1:1 line (J2); shares the index window partitioning
-    trips_full = (
+    return (
         global_index(
             trip_keys,
             ["l_ref", "seq", "itinerary_osm_id", "svc_pos"],
@@ -258,8 +167,96 @@ def build_abidjan_tables(
                 F.lit(DEFAULT_TRIP_DURATION_MIN),
             ),
         )
-        .cache()
     )
+
+
+def build_abidjan_tables(
+    stops_docs: DataFrame,
+    routes_docs: DataFrame,
+    default_agency: dict | None = None,
+    start_date: str = "20200101",
+    end_date: str = "20201231",
+    solar_times: dict | None = None,
+    catalog=None,
+) -> AbidjanTables:
+    default_agency = default_agency or {
+        "agency_id": "divers",
+        "agency_name": "Divers opérateurs",
+        "agency_url": "https://wiki.openstreetmap.org/wiki/FR:WikiProject_C%C3%B4te_d'Ivoire/Transport_Abidjan",
+        "agency_timezone": "Africa/Abidjan",
+    }
+    s = pipeline._run(stages(solar_times), {"stops_docs": stops_docs, "routes_docs": routes_docs}, catalog)
+    lines, win, trips_full = s["route_lines"], s["abidjan_windows"], s["abidjan_trips"]
+
+    # --- agencies: default + one per distinct network tag ---------------
+    line_net = lines.select(
+        "line_osm_id",
+        F.try_element_at("tags", F.lit("network")).alias("network"),
+        F.try_element_at("tags", F.lit("operator:website")).alias("op_site"),
+    )
+    net_agencies = (
+        line_net.filter(F.col("network").isNotNull() & (F.col("network") != ""))
+        .groupBy("network")
+        # last non-null operator:website wins in reference iteration order;
+        # max() is deterministic and matches when ≤1 site per network
+        .agg(F.max("op_site").alias("op_site"))
+        .select(
+            F.coalesce("op_site", F.lit(default_agency["agency_url"])).alias("agency_url"),
+            F.col("network").alias("agency_name"),
+            F.col("network").alias("agency_id"),
+            F.lit(default_agency["agency_timezone"]).alias("agency_timezone"),
+            F.lit("").alias("agency_lang"),
+        )
+    )
+    agencies = stops_docs.sparkSession.createDataFrame(
+        [
+            (
+                default_agency["agency_url"],
+                default_agency["agency_name"],
+                default_agency["agency_id"],
+                default_agency["agency_timezone"],
+                "",
+            )
+        ],
+        "agency_url string, agency_name string, agency_id string, agency_timezone string, agency_lang string",
+    ).unionByName(net_agencies)
+
+    # --- routes ----------------------------------------------------------
+    routes = (
+        lines.join(gtfs.last_fr_to_long_names(s["route_itineraries"]), "line_osm_id", "left")
+        .join(line_net.select("line_osm_id", "network"), "line_osm_id", "left")
+        .select(
+            gtfs.route_type_code().alias("route_type"),
+            F.col("line_osm_id").cast("string").alias("route_id"),
+            F.col("route_id").alias("route_short_name"),
+            F.coalesce("route_long_name", "name", F.lit("")).alias("route_long_name"),
+            F.coalesce(
+                F.when(F.col("network") == "", None).otherwise(F.col("network")),
+                F.lit(default_agency["agency_id"]),
+            ).alias("agency_id"),
+            F.lit("").alias("route_desc"),
+            F.lit("1779c2").alias("route_color"),
+            F.lit("ffffff").alias("route_text_color"),
+        )
+    )
+
+    # --- calendar --------------------------------------------------------
+    calendar = (
+        win.select("service_id", "day_flags")
+        .dropDuplicates(["service_id"])
+        .select(
+            "service_id",
+            F.lit(start_date).alias("start_date"),
+            F.lit(end_date).alias("end_date"),
+            *[
+                F.col("day_flags")[i].cast("int").cast("string").alias(day)
+                for i, day in enumerate(
+                    ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
+                )
+            ],
+        )
+    )
+
     trips = trips_full.select(
         F.col("line_osm_id").cast("string").alias("route_id"),
         "trip_id",
@@ -270,7 +267,6 @@ def build_abidjan_tables(
         .otherwise("")
         .alias("trip_headsign"),
     )
-
     frequencies = (
         trips_full.select("trip_id", "itinerary_osm_id", "service_id")
         .join(win, ["itinerary_osm_id", "service_id"])
@@ -282,48 +278,15 @@ def build_abidjan_tables(
             F.lit("0").alias("exact_times"),
         )
     )
-
-    # --- stop_times: distance interpolation, duration-tag travel time ---
-    itin_stops = gtfs.itinerary_stops(relations)
-    st = (
-        trips_full.select("trip_id", "itinerary_osm_id", "duration_min")
-        .join(itin_stops, "itinerary_osm_id")
-        .join(stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key")
-    )
-    w_seq = Window.partitionBy("trip_id").orderBy("pos")
-    w_all = Window.partitionBy("trip_id")
-    st = (
-        st.withColumn("prev_lat", F.lag("lat").over(w_seq))
-        .withColumn("prev_lon", F.lag("lon").over(w_seq))
-        .withColumn(
-            "leg_m",
-            F.when(F.col("prev_lat").isNull(), F.lit(0.0)).otherwise(
-                haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)
-            ),
-        )
-        .withColumn("cum_m", F.sum("leg_m").over(w_seq))
-        .withColumn("total_m", F.sum("leg_m").over(w_all))
-        .withColumn("n", F.count(F.lit(1)).over(w_all))
-        .filter(F.col("n") >= 2)
-    )
-    secs = F.round(
-        F.lit(gtfs.FIRST_DEPARTURE_SECS)
-        + F.col("duration_min") * 60 * F.col("cum_m") / F.col("total_m"),
-        0,
-    ).cast("long")
-    stop_times = st.select(
-        "trip_id",
-        gtfs.secs_to_gtfs(secs).alias("arrival_time"),
-        gtfs.secs_to_gtfs(secs).alias("departure_time"),
-        "stop_id",
-        (F.col("pos") + 1).cast("string").alias("stop_sequence"),
-    )
     return AbidjanTables(
         agencies=agencies,
         routes=routes,
         calendar=calendar,
         trips=trips,
         frequencies=frequencies,
-        stop_times=stop_times,
-        stops=stops,
+        # duration-tag travel time
+        stop_times=gtfs.interpolated_stop_times(
+            trips_full, s["route_itin_stops"], s["abidjan_stops"], "duration_min"
+        ),
+        stops=s["abidjan_stops"],
     )

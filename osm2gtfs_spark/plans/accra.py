@@ -23,6 +23,12 @@ that outputs match ``gh_accra_gtfs.zip.ref`` (its committed golden):
   interpolated proportionally to cumulative great-circle DISTANCE
   between consecutive stops (transitfeed radius 6367000 m), rounded to
   whole seconds. Verified bit-exact against the golden zip.
+
+Flow: :func:`stages` is the shared XML stage table
+(:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`) plus Accra's stop
+areas and trips; the stage walk stores each stage once, and
+:func:`build_accra_tables` derives the output tables from the stored
+stages.
 """
 
 from __future__ import annotations
@@ -32,11 +38,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.operators.spatial import cluster_stops_greedy
-from osm2gtfs_spark.plans import gtfs
-from osm2gtfs_spark.sources import docs as docs_mod
+from osm2gtfs_spark.plans import gtfs, pipeline
+from osm2gtfs_spark.plans.pipeline import Stage
 
 ACCRA_NAME_WITHOUT = "Add a name to the stop with JungleBus app"
 
@@ -51,94 +56,21 @@ class AccraTables:
     shapes: DataFrame
 
 
-def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame) -> AccraTables:
-    nodes_s = docs_mod.decode_nodes(stops_docs)
-    nodes_r = docs_mod.decode_nodes(routes_docs)
-    ways_r = docs_mod.decode_ways(routes_docs)
-    relations = docs_mod.decode_relations(routes_docs)
-
-    # --- stop points: every valid candidate, bare-osm_id stop ids -----
-    stop_points = gtfs.build_stops(nodes_s, docs_mod.decode_ways(stops_docs), ACCRA_NAME_WITHOUT).select(
-        "stop_key",
-        "osm_id",
-        F.col("osm_id").cast("string").alias("stop_id"),
-        "name",
-        "lat",
-        "lon",
-    ).cache()
-
-    # --- stop areas: greedy 500 m clustering per name ------------------
-    clusters = cluster_stops_greedy(stop_points).cache()
-    parent = clusters.select(
-        "stop_key",
-        F.concat(F.lit("SA"), F.regexp_extract("cluster_id", r"(\d+)$", 1)).alias("parent_station"),
-    )
-    centers = (
-        clusters.filter("is_center")
-        .drop("name")
-        .join(stop_points.select("stop_key", "osm_id", "name", "lat", "lon"), "stop_key")
-        .select(
-            F.concat(F.lit("SA"), F.col("osm_id").cast("string")).alias("stop_id"),
-            "name",
-            "lat",
-            "lon",
-        )
-    )
-    stops_out = (
-        stop_points.join(parent, "stop_key")
-        .select(
-            gtfs.py2_float_str("lon").alias("stop_lon"),
-            F.col("name").alias("stop_name"),
-            gtfs.py2_float_str("lat").alias("stop_lat"),
-            "stop_id",
-            F.lit("").alias("location_type"),
-            "parent_station",
-        )
-        .unionByName(
-            centers.select(
-                gtfs.py2_float_str("lon").alias("stop_lon"),
-                F.col("name").alias("stop_name"),
-                gtfs.py2_float_str("lat").alias("stop_lat"),
-                "stop_id",
-                F.lit("1").alias("location_type"),
-                F.lit("").alias("parent_station"),
-            )
-        )
+def stages() -> tuple[Stage, ...]:
+    return pipeline.xml_stages("accra", ACCRA_NAME_WITHOUT) + (
+        # stop areas: greedy 500 m clustering per name
+        Stage(("accra_clusters",), ("accra_stops",), cluster_stops_greedy),
+        Stage(("accra_trips",), ("route_lines", "route_itineraries"), _trips),
     )
 
-    # --- lines + itineraries -------------------------------------------
-    lines, itins = gtfs.build_lines(relations)
-    # Accra: only mastered lines exist; order lines by ref (lexicographic)
-    lines = lines.cache()
-    itins = itins.cache()
 
-    # long name from LAST itinerary with both fr and to (member order)
-    w_last = Window.partitionBy("line_osm_id").orderBy(F.col("seq").desc(), F.col("itinerary_osm_id").desc())
-    long_names = (
-        itins.filter(F.col("fr").isNotNull() & F.col("to").isNotNull())
-        .withColumn("_rn", F.row_number().over(w_last))
-        .filter("_rn = 1")
-        .select("line_osm_id", F.concat("fr", F.lit(" ↔ "), "to").alias("route_long_name"))
-    )
-    routes_out = (
-        lines.join(long_names, "line_osm_id", "left")
-        .select(
-            F.lit("3").alias("route_type"),
-            F.col("line_osm_id").cast("string").alias("route_id"),
-            F.col("route_id").alias("route_short_name"),
-            F.coalesce("route_long_name", F.lit("")).alias("route_long_name"),
-            F.lit("1779c2").alias("route_color"),
-            F.lit("ffffff").alias("route_text_color"),
-            F.col("route_id").alias("_ref"),
-        )
-    )
-
-    # --- trips: transitfeed insertion order = sorted(ref) then member --
+def _trips(lines: DataFrame, itins: DataFrame) -> DataFrame:
+    """transitfeed insertion order = sorted(ref) then member order."""
     itin_order = Window.partitionBy("l_ref").orderBy("seq", "itinerary_osm_id")  # l_ref 1:1 line (J2); shares the index window partitioning
     line_dim = F.broadcast(
         lines.select("line_osm_id", F.col("route_id").alias("l_ref"), F.col("tags").alias("line_tags"))
     )
-    trips_full = (
+    return (
         global_index(
             itins.drop("route_id").join(line_dim, "line_osm_id"),
             ["l_ref", "seq", "itinerary_osm_id"],
@@ -168,8 +100,55 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame) -> AccraTa
                 F.lit(gtfs.DEFAULT_TRAVEL_TIME),
             ),
         )
-        .cache()
     )
+
+
+def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame, catalog=None) -> AccraTables:
+    s = pipeline._run(stages(), {"stops_docs": stops_docs, "routes_docs": routes_docs}, catalog)
+
+    # --- stop points (bare-osm_id stop ids) + stop areas -----------------
+    stop_points = s["accra_stops"].select(
+        "stop_key",
+        "osm_id",
+        F.col("osm_id").cast("string").alias("stop_id"),
+        "name",
+        "lat",
+        "lon",
+    )
+    clusters = s["accra_clusters"]
+    parent = clusters.select(
+        "stop_key",
+        F.concat(F.lit("SA"), F.regexp_extract("cluster_id", r"(\d+)$", 1)).alias("parent_station"),
+    )
+    centers = (
+        clusters.filter("is_center")
+        .drop("name")
+        .join(stop_points.select("stop_key", "osm_id", "name", "lat", "lon"), "stop_key")
+        .select(
+            F.concat(F.lit("SA"), F.col("osm_id").cast("string")).alias("stop_id"),
+            "name",
+            "lat",
+            "lon",
+        )
+    )
+    stops_out = gtfs.stops_txt(
+        stop_points.join(parent, "stop_key"), F.col("stop_id"), "", F.col("parent_station")
+    ).unionByName(gtfs.stops_txt(centers, F.col("stop_id"), "1", F.lit("")))
+
+    # --- routes: only mastered lines exist -------------------------------
+    routes_out = (
+        s["route_lines"].join(gtfs.last_fr_to_long_names(s["route_itineraries"]), "line_osm_id", "left")
+        .select(
+            F.lit("3").alias("route_type"),
+            F.col("line_osm_id").cast("string").alias("route_id"),
+            F.col("route_id").alias("route_short_name"),
+            F.coalesce("route_long_name", F.lit("")).alias("route_long_name"),
+            F.lit("1779c2").alias("route_color"),
+            F.lit("ffffff").alias("route_text_color"),
+        )
+    )
+
+    trips_full = s["accra_trips"]
     trips_out = trips_full.select(
         F.col("line_osm_id").cast("string").alias("route_id"),
         "trip_id",
@@ -189,58 +168,16 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame) -> AccraTa
         # transitfeed writes exact_times=0 for AddFrequency (golden)
         F.lit("0").alias("exact_times"),
     )
-
-    # --- stop_times: distance-weighted interpolation -------------------
-    itin_stops = gtfs.itinerary_stops(relations)
-    st = (
-        trips_full.select("trip_id", "itinerary_osm_id", "travel_min")
-        .join(itin_stops, "itinerary_osm_id")
-        .join(stop_points.select("stop_key", "stop_id", "lat", "lon"), "stop_key")
-    )
-    w_seq = Window.partitionBy("trip_id").orderBy("pos")
-    w_all = Window.partitionBy("trip_id")
-    st = (
-        st.withColumn("prev_lat", F.lag("lat").over(w_seq))
-        .withColumn("prev_lon", F.lag("lon").over(w_seq))
-        .withColumn(
-            "leg_m",
-            F.when(
-                F.col("prev_lat").isNull(), F.lit(0.0)
-            ).otherwise(haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)),
-        )
-        .withColumn("cum_m", F.sum("leg_m").over(w_seq))
-        .withColumn("total_m", F.sum("leg_m").over(w_all))
-        .withColumn("n", F.count(F.lit(1)).over(w_all))
-        .filter(F.col("n") >= 2)
-    )
-    secs = F.round(
-        F.lit(gtfs.FIRST_DEPARTURE_SECS)
-        + F.col("travel_min") * 60 * F.col("cum_m") / F.col("total_m"),
-        0,
-    ).cast("long")
-    stop_times_out = st.select(
-        "trip_id",
-        gtfs.secs_to_gtfs(secs).alias("arrival_time"),
-        gtfs.secs_to_gtfs(secs).alias("departure_time"),
-        "stop_id",
-        (F.col("pos") + 1).cast("string").alias("stop_sequence"),
-    )
-    # --- shapes: per itinerary with trips; 1-based transitfeed seqs ----
-    shapes_out = (
-        gtfs.build_shapes(relations, ways_r, docs_mod.decode_nodes(routes_docs))
-        .join(trips_full.select("itinerary_osm_id").distinct(), "itinerary_osm_id")
-        .select(
-            F.col("itinerary_osm_id").cast("string").alias("shape_id"),
-            gtfs.py2_float_str("shape_pt_lat").alias("shape_pt_lat"),
-            gtfs.py2_float_str("shape_pt_lon").alias("shape_pt_lon"),
-            (F.col("shape_pt_sequence") + 1).cast("string").alias("shape_pt_sequence"),
-        )
+    # --- shapes: per itinerary with trips --------------------------------
+    shapes_out = gtfs.shapes_txt(
+        s["route_shapes"].join(trips_full.select("itinerary_osm_id").distinct(), "itinerary_osm_id"),
+        F.col("itinerary_osm_id").cast("string"),
     )
     return AccraTables(
         stops=stops_out,
-        routes=routes_out.drop("_ref"),
+        routes=routes_out,
         trips=trips_out,
-        stop_times=stop_times_out,
+        stop_times=gtfs.interpolated_stop_times(trips_full, s["route_itin_stops"], stop_points, "travel_min"),
         frequencies=frequencies_out,
         shapes=shapes_out,
     )

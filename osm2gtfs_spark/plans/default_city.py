@@ -12,6 +12,14 @@ insertion order = lines sorted by ref (lexicographic), itineraries in
 master-member order, services in first-occurrence (union-walk) order,
 then timetable rows in array order; ids start at 0 and are consumed by
 every AddTrip, including trips whose stop walk later breaks.
+
+Flow: :func:`stages` is the shared XML stage table
+(:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`) plus the stop-area
+stations, the timetable decode, the normalized lines, the per-service
+schedule join and the trips; the stage walk stores each stage once, and
+:func:`build_city_tables` derives the output tables from the stored
+stages, the aligned and distance-filled stop times with the schedule
+pipeline's own ``_schedule_filled``.
 """
 
 from __future__ import annotations
@@ -23,8 +31,9 @@ from pyspark.sql import functions as F
 
 from osm2gtfs_spark.functions.colors import contrast_text_colour, normalize_colour
 from osm2gtfs_spark.operators.indexing import global_index
-from osm2gtfs_spark.plans import gtfs
+from osm2gtfs_spark.plans import gtfs, pipeline
 from osm2gtfs_spark.plans import schedule_path as SP
+from osm2gtfs_spark.plans.pipeline import Stage
 from osm2gtfs_spark.sources import docs as docs_mod
 
 
@@ -68,100 +77,38 @@ def verify_itineraries(itineraries: DataFrame, schedule: DataFrame) -> DataFrame
     )
 
 
-def build_city_tables(
-    stops_docs: DataFrame,
-    routes_docs: DataFrame,
-    timetable_docs: DataFrame,
-    name_without: str = "stop",
-    feed_start: str = "20240101",
-    feed_end: str = "20250101",
-) -> CityTables:
-    nodes_s = docs_mod.decode_nodes(stops_docs)
-    ways_s = docs_mod.decode_ways(stops_docs)
-    rels_s = docs_mod.decode_relations(stops_docs)
-    rels_r = docs_mod.decode_relations(routes_docs)
-    schedule = docs_mod.decode_schedule(timetable_docs).cache()
-
-    # --- stops + stations (P11 ids; station name WITHOUT brackets) -----
-    stops = gtfs.build_stops(nodes_s, ways_s, name_without).cache()
-    stations, parent_map = gtfs.build_stations(rels_s, stops)
-    stations = stations.withColumn(
-        "name", F.when(F.col("name") == "[station]", name_without).otherwise(F.col("name"))
-    ).cache()
-    stops_txt = (
-        stops.join(parent_map, "stop_key", "left")
-        .select(
-            gtfs.py2_float_str("lon").alias("stop_lon"),
-            F.col("name").alias("stop_name"),
-            gtfs.py2_float_str("lat").alias("stop_lat"),
-            "stop_id",
-            F.lit("0").alias("location_type"),
-            F.coalesce("parent_station", F.lit("")).alias("parent_station"),
-        )
-        .unionByName(
-            stations.select(
-                gtfs.py2_float_str("lon").alias("stop_lon"),
-                F.col("name").alias("stop_name"),
-                gtfs.py2_float_str("lat").alias("stop_lat"),
-                F.col("station_key").alias("stop_id"),
-                F.lit("1").alias("location_type"),
-                F.lit("").alias("parent_station"),
-            )
-        )
-    )
-
-    # --- lines → routes.txt (colour normalization + contrast) ----------
-    lines, itins = gtfs.build_lines(rels_r)
-    lines = normalize_colour(lines, "colour", "colour_norm").cache()
-    route_type_num = (
-        F.when(F.col("route_type") == "Tram", "0")
-        .when(F.col("route_type") == "Subway", "1")
-        .when(F.col("route_type") == "Rail", "2")
-        .when(F.col("route_type") == "Bus", "3")
-        .when(F.col("route_type") == "Ferry", "4")
-        .otherwise("3")
-    )
-    text_colour = F.coalesce(
-        gtfs.tag("ref:colour_tx"), contrast_text_colour(F.col("colour_norm"))
-    )
-    routes_txt = lines.select(
-        route_type_num.alias("route_type"),
-        F.col("route_id"),
-        F.col("route_id").alias("route_short_name"),
-        F.coalesce("name", F.lit("")).alias("route_long_name"),
-        # reference strips the first character unconditionally
-        # (routes_creator.py:102-107) — '#rrggbb' → 'rrggbb'
-        F.substring(F.coalesce("colour_norm", F.lit("#FFFFFF")), 2, 10).alias("route_color"),
-        F.substring(text_colour, 2, 10).alias("route_text_color"),
-        F.concat(F.lit("https://osm.org/relation/"), F.col("line_osm_id").cast("string")).alias(
-            "route_url"
+def stages(name_without: str = "stop") -> tuple[Stage, ...]:
+    return pipeline.xml_stages("default", name_without) + (
+        Stage(("stop_relations",), ("stops_docs",), docs_mod.decode_relations),
+        Stage(
+            ("default_stations", "default_parent_map"), ("stop_relations", "default_stops"),
+            lambda rels, stops: _stations(rels, stops, name_without),
         ),
+        Stage(("timetable",), ("timetable_docs",), docs_mod.decode_schedule),
+        Stage(
+            ("default_lines",), ("route_lines",),
+            lambda lines: normalize_colour(lines, "colour", "colour_norm"),
+        ),
+        Stage(("default_per_service",), ("route_itineraries", "timetable"), _per_service),
+        Stage(("default_trips",), ("default_per_service",), _trips),
     )
 
-    # --- trips + stop_times (schedule join path, exact order) ----------
-    itins_ok = verify_itineraries(itins, schedule)
-    matched = SP.match_schedule(itins_ok, schedule)
-    per_service = SP.itinerary_service_schedule(matched).cache()
 
-    itin_stops_named = (
-        gtfs.itinerary_stops(rels_r)
-        .join(stops.select("stop_key", "name"), "stop_key", "left")
-        .join(parent_map, "stop_key", "left")
-        .join(
-            # stations scale with the corpus like parent_map — AQE decides
-            stations.select(
-                F.col("station_key").alias("parent_station"),
-                F.col("name").alias("parent_name"),
-            ),
-            "parent_station",
-            "left",
-        )
-        .select("itinerary_osm_id", "pos", "stop_key", "name", "parent_name")
-    )
-    aligned = SP.align_stops(itin_stops_named, per_service)
-    filled = SP.interpolate_times_distance(aligned, stops.select("stop_key", "lat", "lon"))
+def _stations(rels: DataFrame, stops: DataFrame, name_without: str) -> tuple[DataFrame, DataFrame]:
+    """OSM stop_area stations; the station name WITHOUT brackets."""
+    stations, parent_map = gtfs.build_stations(rels, stops)
+    return stations.withColumn(
+        "name", F.when(F.col("name") == "[station]", name_without).otherwise(F.col("name"))
+    ), parent_map
 
-    trips_full = (
+
+def _per_service(itins: DataFrame, schedule: DataFrame) -> DataFrame:
+    return SP.itinerary_service_schedule(SP.match_schedule(verify_itineraries(itins, schedule), schedule))
+
+
+def _trips(per_service: DataFrame) -> DataFrame:
+    """Schedule join path, exact order (O5)."""
+    return (
         global_index(
             per_service.select(
                 "itinerary_osm_id",
@@ -179,8 +126,51 @@ def build_city_tables(
         )
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
         .drop("_trip_idx")
-        .cache()
     )
+
+
+def build_city_tables(
+    stops_docs: DataFrame,
+    routes_docs: DataFrame,
+    timetable_docs: DataFrame,
+    name_without: str = "stop",
+    feed_start: str = "20240101",
+    feed_end: str = "20250101",
+    catalog=None,
+) -> CityTables:
+    s = pipeline._run(
+        stages(name_without),
+        {"stops_docs": stops_docs, "routes_docs": routes_docs, "timetable_docs": timetable_docs},
+        catalog,
+    )
+    stops, stations, parent_map = s["default_stops"], s["default_stations"], s["default_parent_map"]
+    per_service, trips_full = s["default_per_service"], s["default_trips"]
+
+    # --- stops + stations (P11 ids) -------------------------------------
+    stops_txt = gtfs.stops_txt(
+        stops.join(parent_map, "stop_key", "left"), F.col("stop_id"), "0",
+        F.coalesce("parent_station", F.lit("")),
+    ).unionByName(gtfs.stops_txt(stations, F.col("station_key"), "1", F.lit("")))
+
+    # --- lines → routes.txt (colour normalization + contrast) ----------
+    text_colour = F.coalesce(
+        gtfs.tag("ref:colour_tx"), contrast_text_colour(F.col("colour_norm"))
+    )
+    routes_txt = s["default_lines"].select(
+        gtfs.route_type_code().alias("route_type"),
+        F.col("route_id"),
+        F.col("route_id").alias("route_short_name"),
+        F.coalesce("name", F.lit("")).alias("route_long_name"),
+        # reference strips the first character unconditionally
+        # (routes_creator.py:102-107) — '#rrggbb' → 'rrggbb'
+        F.substring(F.coalesce("colour_norm", F.lit("#FFFFFF")), 2, 10).alias("route_color"),
+        F.substring(text_colour, 2, 10).alias("route_text_color"),
+        F.concat(F.lit("https://osm.org/relation/"), F.col("line_osm_id").cast("string")).alias(
+            "route_url"
+        ),
+    )
+
+    # --- trips + stop_times (schedule join path, exact order) ----------
     trips_txt = trips_full.select(
         "route_id",
         "trip_id",
@@ -188,6 +178,7 @@ def build_city_tables(
         SP.service_id_col().alias("service_id"),
         F.col("itinerary_id").alias("shape_id"),
     )
+    filled = pipeline._schedule_filled(s["route_itin_stops"], stops, parent_map, stations, per_service)
     st_order = Window.partitionBy("trip_id").orderBy("pos")
     stop_times_txt = (
         filled.join(
@@ -208,21 +199,13 @@ def build_city_tables(
 
     # --- shapes: one per itinerary that produced trips (W4/O1) ----------
     # reference _add_shape_to_feed (trips_creator.py:161-176): shape_id =
-    # itinerary osm id; transitfeed point sequences are 1-based
-    nodes_r = docs_mod.decode_nodes(routes_docs)
-    ways_r = docs_mod.decode_ways(routes_docs)
-    shapes_txt = (
-        gtfs.build_shapes(rels_r, ways_r, nodes_r)
-        .join(
+    # itinerary osm id
+    shapes_txt = gtfs.shapes_txt(
+        s["route_shapes"].join(
             trips_full.select("itinerary_osm_id", "itinerary_id").distinct(),
             "itinerary_osm_id",
-        )
-        .select(
-            F.col("itinerary_id").alias("shape_id"),
-            gtfs.py2_float_str("shape_pt_lat").alias("shape_pt_lat"),
-            gtfs.py2_float_str("shape_pt_lon").alias("shape_pt_lon"),
-            (F.col("shape_pt_sequence") + 1).cast("string").alias("shape_pt_sequence"),
-        )
+        ),
+        F.col("itinerary_id"),
     )
     return CityTables(
         stops=stops_txt,

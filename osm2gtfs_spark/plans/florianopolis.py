@@ -30,6 +30,13 @@ Reproduces the reference's br_florianopolis creators
   quirk preserved).
 - calendar: weekday/saturday/sunday rows over the configured feed
   dates (the golden was generated 2018-03 → 20180301/20190228).
+
+Flow: :func:`stages` is the shared XML stage table
+(:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`) plus the Fenix
+decode, the line selection, the first-stop match, the service
+exceptions and the trips; the stage walk stores each stage once, and
+:func:`build_florianopolis_tables` derives the output tables from the
+stored stages.
 """
 
 from __future__ import annotations
@@ -39,14 +46,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
 from osm2gtfs_spark.operators.indexing import global_index
-from osm2gtfs_spark.plans import gtfs
-from osm2gtfs_spark.sources import docs as docs_mod
+from osm2gtfs_spark.plans import gtfs, pipeline
+from osm2gtfs_spark.plans.pipeline import Stage
 from osm2gtfs_spark.sources import fenix as fx
 
 BLACKLIST = ["10200", "12400", "328", "466", "665", "464"]
-DAY_ORDER = {"weekday": 0, "saturday": 1, "sunday": 2}
 
 
 @dataclass
@@ -70,41 +75,31 @@ def normalize_stop_name(col):
     return c
 
 
-def build_florianopolis_tables(
-    stops_docs: DataFrame,
-    routes_docs: DataFrame,
-    fenix_docs: DataFrame,
-    start_date: str = "20180301",
-    end_date: str = "20190228",
-) -> FlorianopolisTables:
-    spark = stops_docs.sparkSession
-
-    nodes_s = docs_mod.decode_nodes(stops_docs)
-    ways_s = docs_mod.decode_ways(stops_docs)
-    nodes_r = docs_mod.decode_nodes(routes_docs)
-    ways_r = docs_mod.decode_ways(routes_docs)
-    relations = docs_mod.decode_relations(routes_docs)
-
-    fen = fx.decode_fenix(fenix_docs).cache()
-    fen_lines = fx.fenix_lines(fen)
-    fen_deps = fx.fenix_departures(fen).withColumn(
-        "saida_norm", normalize_stop_name("saida")
+def stages(start_date: str = "20180301") -> tuple[Stage, ...]:
+    return pipeline.xml_stages("floripa", "Ponto sem nome") + (
+        Stage(("fenix",), ("fenix_docs",), fx.decode_fenix),
+        Stage(("floripa_lines",), ("route_lines", "fenix"), _select_lines),
+        Stage(
+            ("floripa_matched",),
+            ("route_itineraries", "floripa_lines", "route_itin_stops", "floripa_stops", "fenix"),
+            _match_first_stops,
+        ),
+        Stage(("floripa_exceptions",), ("fenix",), lambda fen: _exceptions(fen, start_date)),
+        Stage(("floripa_trips",), ("floripa_matched", "floripa_exceptions", "fenix"), _trips),
     )
 
-    # --- stops: bare osm_id ids -----------------------------------------
-    stops = (
-        gtfs.build_stops(nodes_s, ways_s, "Ponto sem nome")
-        .withColumn("stop_id", F.col("osm_id").cast("string"))
-        .cache()
-    )
 
-    # --- line selection + transitfeed route_id sequence ------------------
-    lines, itins = gtfs.build_lines(relations)
+def _departures(fen: DataFrame) -> DataFrame:
+    return fx.fenix_departures(fen).withColumn("saida_norm", normalize_stop_name("saida"))
+
+
+def _select_lines(lines: DataFrame, fen: DataFrame) -> DataFrame:
+    """Line selection + the transitfeed route_id sequence."""
     sel = (
         lines.filter(F.col("route_id").isNotNull())
         .filter(~F.col("route_id").isin(BLACKLIST))
         .join(
-            F.broadcast(fen_lines.withColumnRenamed("ref", "route_id")),
+            F.broadcast(fx.fenix_lines(fen).withColumnRenamed("ref", "route_id")),
             "route_id",
             "inner",
         )
@@ -113,7 +108,7 @@ def build_florianopolis_tables(
     # dense 0-based route index; bucketed by a 2-char prefix of the ref
     # (monotone coarsening of the ordering) so no full-table
     # single-partition window is needed even at corpus-scale route counts
-    sel = (
+    return (
         global_index(
             sel.withColumn("_bkt", F.substring("route_id", 1, 2)),
             ["_bkt", "route_id"],
@@ -123,24 +118,13 @@ def build_florianopolis_tables(
         )
         .withColumn("gtfs_route_id", F.col("_route_idx").cast("string"))
         .drop("_bkt", "_route_idx")
-        .cache()
-    )
-    routes = sel.select(
-        F.lit("3").alias("route_type"),
-        F.col("gtfs_route_id").alias("route_id"),
-        F.col("route_id").alias("route_short_name"),
-        F.col("nome").alias("route_long_name"),
-        F.lit("BR-Floripa").alias("agency_id"),
-        F.lit("TEST DESCRIPTION").alias("route_desc"),
-        F.concat(
-            F.lit("http://www.consorciofenix.com.br/horarios?q="), F.col("route_id")
-        ).alias("route_url"),
-        F.lit("1779c2").alias("route_color"),
-        F.lit("ffffff").alias("route_text_color"),
     )
 
-    # --- first-stop match per (itinerary, day) --------------------------
-    itin_stops = gtfs.itinerary_stops(relations).cache()
+
+def _match_first_stops(
+    itins: DataFrame, sel: DataFrame, itin_stops: DataFrame, stops: DataFrame, fen: DataFrame
+) -> DataFrame:
+    """First-stop match per (itinerary, day)."""
     first_stop = (
         itin_stops.withColumn(
             "_rn",
@@ -170,8 +154,8 @@ def build_florianopolis_tables(
             "from_norm", normalize_stop_name(F.coalesce(F.col("fr"), F.lit("")))
         )
     )
-    day_keys = fen_deps.select("ref", "day_kind", "saida", "saida_norm").distinct()
-    matched = (
+    day_keys = _departures(fen).select("ref", "day_kind", "saida", "saida_norm").distinct()
+    return (
         cand.join(F.broadcast(day_keys), "ref")
         .filter(
             (F.col("saida_norm") == F.col("first_norm"))
@@ -193,18 +177,20 @@ def build_florianopolis_tables(
             .when(F.col("day_kind") == "saturday", 1)
             .otherwise(2),
         )
-        .cache()
     )
 
-    # --- service exceptions (operacoes with date >= feed start) ----------
-    # reference :137-151 + get_exception_service_period :234-253: per
-    # exception date a one-day service "<yyyymmdd>_<tipo>" is created,
-    # the matching base service gets a calendar_dates removal, and that
-    # day's Sábado/Domingo trips are ALSO emitted under the exception
-    # service — BEFORE the regular weekday/sat/sun trips, in operacoes
-    # order. (All golden dates precede the feed start, so this path is
-    # empty there; it is exercised by the synthetic-start test.)
-    exc = (
+
+def _exceptions(fen: DataFrame, start_date: str) -> DataFrame:
+    """Service exceptions (operacoes with date >= feed start).
+
+    reference :137-151 + get_exception_service_period :234-253: per
+    exception date a one-day service "<yyyymmdd>_<tipo>" is created,
+    the matching base service gets a calendar_dates removal, and that
+    day's Sábado/Domingo trips are ALSO emitted under the exception
+    service — BEFORE the regular weekday/sat/sun trips, in operacoes
+    order. (All golden dates precede the feed start, so this path is
+    empty there; it is exercised by the synthetic-start test.)"""
+    return (
         fx.fenix_exceptions(fen)
         .filter(F.to_date("data") >= F.to_date(F.lit(start_date), "yyyyMMdd"))
         .withColumn("date_str", F.date_format(F.to_date("data"), "yyyyMMdd"))
@@ -216,9 +202,12 @@ def build_florianopolis_tables(
         )
         .filter(F.col("day_kind").isNotNull())
         .withColumn("exc_service", F.concat("date_str", F.lit("_"), "tipo"))
-        .cache()
     )
-    group_cols = [c for c in matched.columns] + ["service_out", "day_order2"]
+
+
+def _groups(matched: DataFrame, exc: DataFrame) -> DataFrame:
+    """Regular day groups plus the exception-service groups."""
+    group_cols = matched.columns + ["service_out", "day_order2"]
     reg_groups = matched.withColumn("service_out", F.col("day_kind")).withColumn(
         "day_order2", F.lit(1_000_000) + F.col("day_order")
     )
@@ -230,20 +219,24 @@ def build_florianopolis_tables(
         .withColumn("service_out", F.col("exc_service"))
         .withColumn("day_order2", F.col("exc_idx"))
     )
-    groups = reg_groups.select(*group_cols).unionByName(exc_groups.select(*group_cols))
+    return reg_groups.select(*group_cols).unionByName(exc_groups.select(*group_cols))
 
-    # --- trips: transitfeed insertion order ------------------------------
-    # reference loop: line (sorted by ref) → exceptions (operacoes order)
-    # → day (weekday, sat, sun) → itinerary (member order) → group → point
-    # masterless itineraries (Itinerary.line is None, osm_connector:409-411)
-    # get DOUBLE duration when the day has more than one departure place —
-    # "only one instead of two trips" (trips_creator_br_florianopolis.py:216-221)
+
+def _trips(matched: DataFrame, exc: DataFrame, fen: DataFrame) -> DataFrame:
+    """Trips in transitfeed insertion order.
+
+    reference loop: line (sorted by ref) → exceptions (operacoes order)
+    → day (weekday, sat, sun) → itinerary (member order) → group → point
+    masterless itineraries (Itinerary.line is None, osm_connector:409-411)
+    get DOUBLE duration when the day has more than one departure place —
+    "only one instead of two trips" (trips_creator_br_florianopolis.py:216-221)"""
+    fen_deps = _departures(fen)
     n_saidas = fen_deps.groupBy("ref", "day_kind").agg(
         F.count_distinct("saida").alias("n_saidas")
     )
-    trips_full = (
+    return (
         global_index(
-            groups.join(
+            _groups(matched, exc).join(
                 fen_deps.select("ref", "day_kind", "saida", "grp", "pt", "dep_secs"),
                 ["ref", "day_kind", "saida"],
             ).join(F.broadcast(n_saidas), ["ref", "day_kind"]),
@@ -264,10 +257,42 @@ def build_florianopolis_tables(
         .withColumn(
             "end_secs", F.col("dep_secs") + F.col("duration_secs") * F.col("factor")
         )
-        .cache()
     )
+
+
+def build_florianopolis_tables(
+    stops_docs: DataFrame,
+    routes_docs: DataFrame,
+    fenix_docs: DataFrame,
+    start_date: str = "20180301",
+    end_date: str = "20190228",
+    catalog=None,
+) -> FlorianopolisTables:
+    s = pipeline._run(
+        stages(start_date),
+        {"stops_docs": stops_docs, "routes_docs": routes_docs, "fenix_docs": fenix_docs},
+        catalog,
+    )
+    sel, exc, trips_full = s["floripa_lines"], s["floripa_exceptions"], s["floripa_trips"]
+    # bare osm_id stop ids
+    stops = s["floripa_stops"].withColumn("stop_id", F.col("osm_id").cast("string"))
+
+    routes = sel.select(
+        F.lit("3").alias("route_type"),
+        F.col("gtfs_route_id").alias("route_id"),
+        F.col("route_id").alias("route_short_name"),
+        F.col("nome").alias("route_long_name"),
+        F.lit("BR-Floripa").alias("agency_id"),
+        F.lit("TEST DESCRIPTION").alias("route_desc"),
+        F.concat(
+            F.lit("http://www.consorciofenix.com.br/horarios?q="), F.col("route_id")
+        ).alias("route_url"),
+        F.lit("1779c2").alias("route_color"),
+        F.lit("ffffff").alias("route_text_color"),
+    )
+
     line_ids = F.broadcast(sel.select("line_osm_id", "gtfs_route_id"))
-    itin_names = docs_mod.decode_relations(routes_docs).select(
+    itin_names = s["route_relations"].select(
         F.col("id").alias("itinerary_osm_id"),
         F.try_element_at("tags", F.lit("name")).alias("itin_name"),
     )
@@ -288,7 +313,7 @@ def build_florianopolis_tables(
     )
 
     # --- calendar + calendar_dates ----------------------------------------
-    base_calendar = spark.createDataFrame(
+    base_calendar = stops_docs.sparkSession.createDataFrame(
         [
             ("weekday", start_date, end_date, "1", "1", "1", "1", "1", "0", "0"),
             ("saturday", start_date, end_date, "0", "0", "0", "0", "0", "1", "0"),
@@ -332,7 +357,7 @@ def build_florianopolis_tables(
 
     # --- shapes: first matched itinerary per ref owns the shape ----------
     shape_owner = (
-        groups.withColumn(
+        _groups(s["floripa_matched"], exc).withColumn(
             "_rk",
             F.row_number().over(
                 Window.partitionBy("ref").orderBy("day_order2", "seq", "itinerary_osm_id")
@@ -341,19 +366,9 @@ def build_florianopolis_tables(
         .filter("_rk = 1")
         .select("ref", "itinerary_osm_id")
     )
-    shapes = (
-        gtfs.build_shapes(relations, ways_r, nodes_r)
-        # one row per route ref — corpus-scaling, so AQE decides the
-        # join strategy (no forced broadcast)
-        .join(shape_owner, "itinerary_osm_id")
-        .select(
-            F.col("ref").alias("shape_id"),
-            gtfs.py2_float_str("shape_pt_lat").alias("shape_pt_lat"),
-            gtfs.py2_float_str("shape_pt_lon").alias("shape_pt_lon"),
-            # transitfeed Shape.AddPoint sequences are 1-based in the golden
-            (F.col("shape_pt_sequence") + 1).cast("string").alias("shape_pt_sequence"),
-        )
-    )
+    # one row per route ref — corpus-scaling, so AQE decides the join
+    # strategy (no forced broadcast)
+    shapes = gtfs.shapes_txt(s["route_shapes"].join(shape_owner, "itinerary_osm_id"), F.col("ref"))
 
     # --- stop_times: first/last timed, interior distance-interp ----------
     # A raw platform member that resolves to no stop is silently skipped
@@ -363,6 +378,7 @@ def build_florianopolis_tables(
     # member means a missing timepoint and transitfeed's interpolation
     # fails → those times stay EMPTY in the golden (helper.py:56-68
     # swallows the error).
+    itin_stops = s["route_itin_stops"]
     resolved = itin_stops.join(
         stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key"
     )
@@ -381,32 +397,18 @@ def build_florianopolis_tables(
             (F.col("max_res_pos") == F.col("max_raw_pos")).alias("last_timed"),
         )
     )
-    st = (
+    st = gtfs.cumulative_distance(
         trips_full.select("trip_id", "itinerary_osm_id", "dep_secs", "end_secs")
         .join(resolved, "itinerary_osm_id")
         .join(F.broadcast(bounds), "itinerary_osm_id")
-    )
-    w_seq = Window.partitionBy("trip_id").orderBy("pos")
-    w_all = Window.partitionBy("trip_id")
-    st = (
-        st.withColumn("prev_lat", F.lag("lat").over(w_seq))
-        .withColumn("prev_lon", F.lag("lon").over(w_seq))
-        .withColumn(
-            "leg_m",
-            F.when(F.col("prev_lat").isNull(), F.lit(0.0)).otherwise(
-                haversine_m("prev_lat", "prev_lon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)
-            ),
-        )
-        .withColumn("cum_m", F.sum("leg_m").over(w_seq))
-        .withColumn("total_m", F.sum("leg_m").over(w_all))
     )
     secs = F.round(
         F.col("dep_secs")
         + (F.col("end_secs") - F.col("dep_secs")) * F.col("cum_m") / F.col("total_m"),
         0,
     ).cast("long")
-    seq = F.row_number().over(w_seq)
-    n_rows = F.count(F.lit(1)).over(w_all)
+    seq = F.row_number().over(Window.partitionBy("trip_id").orderBy("pos"))
+    n_rows = F.count(F.lit(1)).over(Window.partitionBy("trip_id"))
     time_str = (
         F.when(
             F.col("first_timed") & F.col("last_timed"), gtfs.secs_to_gtfs(secs)

@@ -29,8 +29,10 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.functions.geo import (
+    TRANSITFEED_RADIUS_M,
     centroid_lat,
     centroid_lon,
+    haversine_m,
     spherical_centroid_aggs,
 )
 
@@ -48,6 +50,17 @@ def route_type_case():
         .when(F.col("route_kind").isin("bus", "trolleybus"), "Bus")
         .when(F.col("route_kind") == "ferry", "Ferry")
         .otherwise("Bus")
+    )
+
+
+def route_type_code():
+    """GTFS route_type code of the ``route_type`` name column."""
+    return (
+        F.when(F.col("route_type") == "Tram", "0")
+        .when(F.col("route_type") == "Subway", "1")
+        .when(F.col("route_type") == "Rail", "2")
+        .when(F.col("route_type") == "Ferry", "4")
+        .otherwise("3")
     )
 
 
@@ -518,6 +531,84 @@ def build_stop_times(trips: DataFrame, itin_stops: DataFrame) -> DataFrame:
         F.when((F.col("pos") == 0) | (F.col("pos") == F.col("n") - 1), 1)
         .otherwise(0)
         .alias("timepoint"),
+    )
+
+
+def cumulative_distance(st: DataFrame) -> DataFrame:
+    """Add ``cum_m`` (great-circle distance from the trip's first stop,
+    transitfeed radius 6367000 m) and ``total_m`` to stop rows with
+    (trip_id, pos, lat, lon): the distance weights of transitfeed's
+    ``GetTimeInterpolatedStops``."""
+    w_seq = Window.partitionBy("trip_id").orderBy("pos")
+    prev_lat, prev_lon = F.lag("lat").over(w_seq), F.lag("lon").over(w_seq)
+    leg = F.when(prev_lat.isNull(), F.lit(0.0)).otherwise(
+        haversine_m(prev_lat, prev_lon, "lat", "lon", radius=TRANSITFEED_RADIUS_M)
+    )
+    return (
+        st.withColumn("leg_m", leg)
+        .withColumn("cum_m", F.sum("leg_m").over(w_seq))
+        .withColumn("total_m", F.sum("leg_m").over(Window.partitionBy("trip_id")))
+    )
+
+
+def interpolated_stop_times(
+    trips: DataFrame, itin_stops: DataFrame, stops: DataFrame, travel_min: str
+) -> DataFrame:
+    """stop_times.txt rows of the frequency city creators: the first stop
+    at 06:00:00, the last at 06:00 + ``travel_min`` minutes, interior
+    stops by cumulative distance, rounded to whole seconds
+    (gh_accra/trips_creator_gh_accra.py:88-110, ci_abidjan :178-221).
+    Trips with fewer than two resolved stops get none."""
+    st = cumulative_distance(
+        trips.select("trip_id", "itinerary_osm_id", travel_min)
+        .join(itin_stops, "itinerary_osm_id")
+        .join(stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key")
+    )
+    st = st.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("trip_id"))).filter(F.col("n") >= 2)
+    secs = F.round(
+        F.lit(FIRST_DEPARTURE_SECS) + F.col(travel_min) * 60 * F.col("cum_m") / F.col("total_m"), 0
+    ).cast("long")
+    return st.select(
+        "trip_id",
+        secs_to_gtfs(secs).alias("arrival_time"),
+        secs_to_gtfs(secs).alias("departure_time"),
+        "stop_id",
+        (F.col("pos") + 1).cast("string").alias("stop_sequence"),
+    )
+
+
+def last_fr_to_long_names(itineraries: DataFrame) -> DataFrame:
+    """(line_osm_id, route_long_name = "fr ↔ to") of each line's LAST
+    itinerary, in member order, that carries both tags."""
+    w_last = Window.partitionBy("line_osm_id").orderBy(F.col("seq").desc(), F.col("itinerary_osm_id").desc())
+    return (
+        itineraries.filter(F.col("fr").isNotNull() & F.col("to").isNotNull())
+        .withColumn("_rn", F.row_number().over(w_last))
+        .filter("_rn = 1")
+        .select("line_osm_id", F.concat("fr", F.lit(" ↔ "), "to").alias("route_long_name"))
+    )
+
+
+def stops_txt(stops: DataFrame, stop_id, location_type: str, parent_station) -> DataFrame:
+    """stops.txt rows in transitfeed's dialect: Python-2 float strings."""
+    return stops.select(
+        py2_float_str("lon").alias("stop_lon"),
+        F.col("name").alias("stop_name"),
+        py2_float_str("lat").alias("stop_lat"),
+        stop_id.alias("stop_id"),
+        F.lit(location_type).alias("location_type"),
+        parent_station.alias("parent_station"),
+    )
+
+
+def shapes_txt(shapes: DataFrame, shape_id) -> DataFrame:
+    """shapes.txt rows in transitfeed's dialect: Python-2 float strings
+    and 1-based point sequences."""
+    return shapes.select(
+        shape_id.alias("shape_id"),
+        py2_float_str("shape_pt_lat").alias("shape_pt_lat"),
+        py2_float_str("shape_pt_lon").alias("shape_pt_lon"),
+        (F.col("shape_pt_sequence") + 1).cast("string").alias("shape_pt_sequence"),
     )
 
 

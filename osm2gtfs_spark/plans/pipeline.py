@@ -1,13 +1,17 @@
-"""End-to-end pipelines: interleaved docs → GTFS tables.
+"""End-to-end pipelines: source docs → GTFS tables.
 
-Each pipeline (frequency, schedule) is declared once, as a table of
-:class:`Stage` entries in the reference's fixed stage order
-(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. One
-walk runs any table: every stage is a future that waits on its deps'
-futures and is stored once, so each builder reads finished stages, and
-``validate_feed`` and the zip sink read leaf scans, as the reference's
-``feed.Validate`` and ``WriteGoogleTransitFeed`` read one finished
-``Schedule`` (``osm2gtfs.py:90-93``). Only the store differs:
+Each GTFS pipeline is declared once, as a table of :class:`Stage`
+entries in the reference's fixed stage order
+(``osm2gtfs/osm2gtfs.py:78-93``): stops → routes → trips → prune. The
+docs-parquet frequency and schedule pipelines are declared here; the
+four XML city selectors (``accra``, ``abidjan``, ``florianopolis``,
+``default_city``) add their override stages to :func:`xml_stages`. One
+walk (:func:`_run`) runs any table from its named root frames: every
+stage is a future that waits on its deps' futures and is stored once,
+so each builder reads finished stages, and ``validate_feed`` and the
+zip sinks read leaf scans, as the reference's ``feed.Validate`` and
+``WriteGoogleTransitFeed`` read one finished ``Schedule``
+(``osm2gtfs.py:90-93``). Only the store differs:
 
 - in memory (``catalog=None``): each stage is an eager local
   checkpoint. Local checkpoints are executor-resident and are not
@@ -25,7 +29,6 @@ import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
@@ -69,13 +72,44 @@ class Stage:
         return dict(zip(self.names, out if len(self.names) > 1 else (out,)))
 
 
-def _osm_stages(name_without: str) -> tuple[Stage, ...]:
-    """Stages shared by both pipelines: decode → stops, stations, lines,
-    itinerary stops and shapes."""
+def _decode_stages(root: str, prefix: str = "") -> tuple[Stage, ...]:
     return (
-        Stage(("nodes",), ("docs",), docs_mod.decode_nodes),
-        Stage(("ways",), ("docs",), docs_mod.decode_ways),
-        Stage(("relations",), ("docs",), docs_mod.decode_relations),
+        Stage((prefix + "nodes",), (root,), docs_mod.decode_nodes),
+        Stage((prefix + "ways",), (root,), docs_mod.decode_ways),
+        Stage((prefix + "relations",), (root,), docs_mod.decode_relations),
+    )
+
+
+def xml_stages(selector: str, name_without: str, shapes: bool = True) -> tuple[Stage, ...]:
+    """Stages every XML city selector shares, from the ``stops_docs`` and
+    ``routes_docs`` roots. Stages built from the routes XML carry a
+    ``route_`` prefix; the stops stage, whose ``name_without`` is the
+    selector's own, carries the selector's prefix, so selectors sharing
+    a cache_dir never resume each other's data. ``shapes=False`` leaves
+    out the raw shape stages for selectors that write none."""
+    stop_nodes, stop_ways, _ = _decode_stages("stops_docs", "stop_")
+    route_nodes, route_ways, route_relations = _decode_stages("routes_docs", "route_")
+    stages = (
+        stop_nodes, stop_ways, route_relations,
+        Stage(
+            (f"{selector}_stops",), ("stop_nodes", "stop_ways"),
+            lambda nodes, ways: gtfs.build_stops(nodes, ways, name_without),
+        ),
+        Stage(("route_lines", "route_itineraries"), ("route_relations",), gtfs.build_lines),
+        Stage(("route_itin_stops",), ("route_relations",), gtfs.itinerary_stops),
+    )
+    if shapes:
+        stages += (
+            route_nodes, route_ways,
+            Stage(("route_shapes",), ("route_relations", "route_ways", "route_nodes"), gtfs.build_shapes),
+        )
+    return stages
+
+
+def _osm_stages(name_without: str) -> tuple[Stage, ...]:
+    """Stages shared by both docs-parquet pipelines: decode → stops,
+    stations, lines, itinerary stops and shapes."""
+    return _decode_stages("docs") + (
         Stage(
             ("stops",), ("nodes", "ways"),
             lambda nodes, ways: gtfs.build_stops(nodes, ways, name_without),
@@ -124,15 +158,22 @@ def _schedule_stages(name_without: str = "stop") -> tuple[Stage, ...]:
 
 
 def downstream(roots) -> list[str]:
-    """``roots`` plus every stage, on either pipeline, built from them."""
-    stages = _frequency_stages() + _schedule_stages()
+    """Every stage, on any declared GTFS graph, that is in ``roots`` or
+    is built from one of them; a root may also be a root frame such as
+    ``stops_docs``."""
+    from osm2gtfs_spark.plans import abidjan, accra, default_city, florianopolis
+
+    stages = (
+        _frequency_stages() + _schedule_stages() + accra.stages() + abidjan.stages()
+        + florianopolis.stages() + default_city.stages()
+    )
     out, todo = set(), list(roots)
     while todo:
         name = todo.pop()
         if name not in out:
             out.add(name)
             todo += [n for st in stages if name in st.deps for n in st.names]
-    return sorted(out)
+    return sorted(out & {n for st in stages for n in st.names})
 
 
 class _LocalStore:
@@ -149,24 +190,25 @@ class _LocalStore:
         return None
 
 
-def _run(stages, docs: DataFrame, catalog, outputs) -> dict[str, DataFrame]:
+def _run(stages, roots: dict[str, DataFrame], catalog) -> dict[str, DataFrame]:
     """Run every stage through the store's ``run_stage`` (``catalog``,
     or :class:`_LocalStore` when it is None) as a future that waits on
     its deps' futures: wall time tracks the critical path, not the sum
-    of stage costs. Leaving the pool joins every stage thread on every
-    exit path, so no job outlives a failed build. ``outputs(frames)``
-    maps the stored stages to the GTFS tables' non-literal frames."""
+    of stage costs. A dep is a stage name or a key of ``roots`` (the
+    source frames). Leaving the pool joins every stage thread on every
+    exit path, so no job outlives a failed build. Returns every stored
+    stage by name."""
     store = _LocalStore() if catalog is None else catalog
     futures: dict = {}
 
     def frame(name: str) -> DataFrame:
-        return docs if name == "docs" else futures[name].result()[name]
+        return roots[name] if name in roots else futures[name].result()[name]
 
     with ThreadPoolExecutor(max_workers=len(stages), thread_name_prefix="gtfs-stage") as pool:
         for st in stages:
             fut = pool.submit(lambda st=st: _store_stage(store, st, [frame(d) for d in st.deps]))
             futures.update(dict.fromkeys(st.names, fut))
-        return outputs({name: frame(name) for name in futures})
+        return {name: frame(name) for name in futures}
 
 
 def _store_stage(store, st: Stage, frames: list[DataFrame]) -> dict[str, DataFrame]:
@@ -203,7 +245,7 @@ def run_frequency_pipeline(
 ) -> GtfsTables:
     """docs → GTFS tables via the frequency (Accra) path; with a
     ``catalog``, every stage is checkpointed and resumable."""
-    s = _run(_frequency_stages(name_without), docs, catalog, _frequency_outputs)
+    s = _frequency_outputs(_run(_frequency_stages(name_without), {"docs": docs}, catalog))
     # JVM literals, not createDataFrame: no Python worker on the default path
     days = ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")
     calendar = docs.sparkSession.range(0, 1, 1, 1).select(
@@ -238,8 +280,7 @@ def run_schedule_pipeline(
     schedule join (J5), the cursor alignment (J7) and the distance
     interpolation (W6) live in :mod:`osm2gtfs_spark.plans.schedule_path`.
     With a ``catalog``, every stage is checkpointed and resumable."""
-    outputs = partial(_schedule_outputs, feed_start=feed_start, feed_end=feed_end)
-    s = _run(_schedule_stages(name_without), docs, catalog, outputs)
+    s = _schedule_outputs(_run(_schedule_stages(name_without), {"docs": docs}, catalog), feed_start, feed_end)
     # typed JVM literals over no rows: no Python worker
     frequencies = docs.sparkSession.range(0, 0, 1, 1).select(
         F.lit(None).cast("string").alias("trip_id"),

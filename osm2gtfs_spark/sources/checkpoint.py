@@ -12,16 +12,22 @@ schema below is deliberately a subset of what Iceberg records natively):
     <root>/<stage>/data/*.parquet
     <root>/<stage>/manifest.json:
         {stage, snapshot_id, row_count, n_partitions, inputs: [...],
+         input_snapshots: {input: snapshot_id}, files: {name: bytes},
          partitions: [{pid, rows, checksum}], schema, created_unix}
 
-A stage is *complete* iff its manifest exists and so does its data
-directory (a zero-row marker stage carries its schema in the manifest
-and has no data directory); incomplete stages (killed jobs leave data
-without a manifest, since the manifest is written last; a lost data
-directory leaves a manifest without data) are recomputed. ``run_stage`` memoizes: complete → read back, else compute,
-write, read back. Reading back (instead of returning the in-memory
-plan) cuts lineage so downstream failure recovery never recomputes
-upstream stages.
+The manifest also records ``files`` (each data file's name and size)
+and ``input_snapshots`` (each input stage's ``snapshot_id`` when this
+stage was written). A stage is *complete* iff its manifest exists,
+every recorded data file is there with its recorded size, and every
+input still has the recorded snapshot (a zero-row marker stage carries
+its schema in the manifest and has no data directory). Incomplete
+stages are recomputed: killed jobs leave data without a manifest, since
+the manifest is written last; a lost or truncated data file fails the
+file check; an input rebuilt since fails the snapshot check, so its
+dependants are rebuilt too. ``run_stage`` memoizes: complete → read
+back, else compute, write, read back. Reading back (instead of
+returning the in-memory plan) cuts lineage so downstream failure
+recovery never recomputes upstream stages.
 """
 
 from __future__ import annotations
@@ -60,11 +66,28 @@ class CheckpointCatalog:
         with open(p) as f:
             return json.load(f)
 
+    def _files(self, stage: str) -> dict[str, int]:
+        data = self._data_path(stage)
+        if not os.path.isdir(data):
+            return {}
+        return {e.name: e.stat().st_size for e in os.scandir(data) if e.is_file()}
+
+    def _snapshot(self, stage: str) -> str | None:
+        m = self.manifest(stage)
+        return m and m["snapshot_id"]
+
     def is_complete(self, stage: str) -> bool:
         m = self.manifest(stage)
         if m is None:
             return False
-        return "schema_json" in m or os.path.isdir(self._data_path(stage))
+        if "schema_json" in m:
+            return True
+        files = self._files(stage)
+        return (
+            bool(files)
+            and all(files.get(name) == size for name, size in m.get("files", {}).items())
+            and all(self._snapshot(i) == snap for i, snap in m.get("input_snapshots", {}).items())
+        )
 
     def invalidate(self, stage: str) -> None:
         shutil.rmtree(self._dir(stage), ignore_errors=True)
@@ -73,6 +96,7 @@ class CheckpointCatalog:
     def write(self, stage: str, df: DataFrame, inputs: list[str] | None = None) -> DataFrame:
         """Materialize a stage: data first, manifest last (atomicity)."""
         data = self._data_path(stage)
+        input_snapshots = {i: self._snapshot(i) for i in inputs or []}
         shutil.rmtree(self._dir(stage), ignore_errors=True)
         df.write.mode("overwrite").parquet(data)
         back = self.spark.read.parquet(data)
@@ -94,6 +118,8 @@ class CheckpointCatalog:
             "row_count": int(sum(r.rows for r in parts)),
             "n_partitions": len(parts),
             "inputs": inputs or [],
+            "input_snapshots": input_snapshots,
+            "files": self._files(stage),
             "partitions": [
                 {"pid": int(r._pid), "rows": int(r.rows), "checksum": int(r.checksum)}
                 for r in sorted(parts, key=lambda r: r._pid)

@@ -73,6 +73,48 @@ def test_missing_stage_data_rebuilt(spark, catalog):
     assert t.trips.count() > 0
 
 
+def _snaps(catalog) -> dict[str, str]:
+    return {m["stage"]: m["snapshot_id"] for m in catalog.metrics()}
+
+
+def test_truncated_stage_rebuilt(spark, catalog):
+    """A stage that lost one data file after its commit is rebuilt, and
+    so is every stage built from it."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    run_frequency_pipeline(docs, catalog=catalog)
+    snaps1, rows = _snaps(catalog), catalog.manifest("nodes")["row_count"]
+    data = catalog._data_path("nodes")
+    parts = [f for f in os.listdir(data) if f.startswith("part-")]
+    assert len(parts) > 1
+    os.remove(os.path.join(data, max(parts, key=lambda f: os.path.getsize(os.path.join(data, f)))))
+    assert not catalog.is_complete("nodes")
+
+    run_frequency_pipeline(docs, catalog=catalog)
+    snaps2 = _snaps(catalog)
+    assert catalog.read("nodes").count() == rows
+    for stage in ("nodes", "stops", "stations", "shapes", "stops_final"):
+        assert snaps2[stage] != snaps1[stage], f"{stage} must be rebuilt"
+    for stage in ("ways", "relations", "lines", "trips"):
+        assert snaps2[stage] == snaps1[stage], f"{stage} must be reused"
+
+
+def test_rebuilt_input_invalidates_dependants(spark, catalog):
+    """An input stage rebuilt on its own (new snapshot) is not silently
+    paired with dependants built from its old snapshot."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    run_frequency_pipeline(docs, catalog=catalog)
+    snaps1 = _snaps(catalog)
+    catalog.invalidate("relations")
+    catalog.run_stage("relations", lambda: D.decode_relations(docs), ["docs"])
+
+    run_frequency_pipeline(docs, catalog=catalog)
+    snaps2 = _snaps(catalog)
+    for stage in ("lines", "itineraries", "itin_stops", "stations", "shapes", "trips"):
+        assert snaps2[stage] != snaps1[stage], f"{stage} must be rebuilt"
+    for stage in ("nodes", "ways", "stops"):
+        assert snaps2[stage] == snaps1[stage], f"{stage} must be reused"
+
+
 def test_manifest_lineage_metrics(spark, catalog, tmp_path):
     docs = D.docs_df(spark, D.CitySpec(n_lines=2))
     run_frequency_pipeline(docs, catalog=catalog)

@@ -183,8 +183,8 @@ def test_cli_abidjan_selector_smoke(spark, tmp_path, caplog):
     """ci_abidjan selector through the CLI on the synthetic opening_hours
     fixtures (the upstream routes XML is absent, so no golden parity —
     the check is the dispatch, member assembly and frequency windows).
-    The city plans keep no checkpoints: a configured ``cache_dir`` is
-    neither created nor silently dropped, it is reported as ignored."""
+    With a ``cache_dir``, a second run resumes every stage and writes the
+    same zip bytes."""
     from tests.test_opening_hours import ROUTES_XML, STOPS_XML
 
     (tmp_path / "stops.xml").write_text(STOPS_XML)
@@ -207,10 +207,13 @@ def test_cli_abidjan_selector_smoke(spark, tmp_path, caplog):
     }
     cfg = tmp_path / "c.json"
     cfg.write_text(json.dumps(config))
-    with caplog.at_level("WARNING", logger="osm2gtfs_spark.cli"):
-        out = cli.run(_args(["-c", str(cfg)]), spark=spark)
-    assert not (tmp_path / "ckpt").exists()
-    assert [r for r in caplog.records if "cache_dir" in r.getMessage() and "ignored" in r.getMessage()]
+    out = cli.run(_args(["-c", str(cfg)]), spark=spark)
+    caplog.clear()
+    with caplog.at_level("INFO", logger="osm2gtfs_spark.pipeline"):
+        again = cli.run(_args(["-c", str(cfg), "-o", str(tmp_path / "again.zip")]), spark=spark)
+    logged = [r.getMessage() for r in caplog.records if r.getMessage().startswith("stage ")]
+    assert logged and all(" resumed: " in m for m in logged)
+    assert open(again, "rb").read() == open(out, "rb").read()
     with zipfile.ZipFile(out) as z:
         assert {"agency.txt", "routes.txt", "trips.txt", "stop_times.txt",
                 "frequencies.txt", "calendar.txt", "stops.txt"} <= set(z.namelist())

@@ -22,6 +22,10 @@ from osm2gtfs_spark.plans.default_city import build_city_tables
 from osm2gtfs_spark.sources.osm_xml import timetable_docs_df, xml_docs_df
 
 FIX = "/root/reference/osm2gtfs/tests/creators/fixtures"
+
+pytestmark = pytest.mark.skipif(
+    not os.path.exists(f"{FIX}/ni_esteli/ni_esteli_gtfs.zip.ref"), reason="reference fixtures not available"
+)
 CITIES = {
     "ni_esteli": {
         "name_without": "Parada sin nombre",
