@@ -20,14 +20,16 @@ output_file), with two Spark-native substitutions:
   group is derived from all the graphs: the refetched source's stages
   (or root frame, e.g. ``stops_docs``) plus every stage built from it.
 
-Operational note for long backfills (ADVICE r4): operators that take a
-reliable ``checkpoint_dir`` (e.g. ``dedup.connected_components``) call
-``SparkContext.setCheckpointDir``, which is process-global and set-only
-— if no checkpoint dir existed before, the setting persists for later
-jobs on the same context. Spark also keeps superseded per-iteration
-checkpoint copies unless ``spark.cleaner.referenceTracking.
-cleanCheckpoints=true`` is set (or the directory is cleaned after the
-job).
+Operational note for long backfills: every lineage cut in the engine
+(operators, registry queries and the in-memory pipeline stages) goes
+through ``session.materialize``, which writes reliable checkpoints,
+surviving executor loss, when the SparkContext has a checkpoint dir:
+launch with ``--conf spark.checkpoint.dir=<hdfs/s3 path>`` on clusters
+with dynamic allocation or spot nodes. Without one, the cuts are
+executor-local blocks. Spark keeps superseded reliable checkpoint
+files (e.g. ``dedup.connected_components``' per-iteration copies)
+unless ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` is
+set (or the directory is cleaned after the job).
 
 Selector resolution mirrors the creator factory
 (core/creator_factory.py:40-133): a selector with a dedicated plan

@@ -20,37 +20,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osm2gtfs_spark.operators import text as TXT
+from osm2gtfs_spark.session import materialize
+
 
 def shingles(text_col, n: int = 3) -> Column:
-    """Word n-gram shingles (mirrors the 1-based SQL oracles).
-
-    Formulated as ``zip_with`` over n shifted slices of the token array
-    (optimization r6): the previous ``transform(idx, λi: get(toks,
-    i+j-1)...)`` referenced the ``split`` INSIDE the lambda, and
-    higher-order lambdas get no common-subexpression elimination — the
-    text was re-split once per output element, O(tokens²) per doc
-    (measured 3.1 s → 0.36 s over the sf0.1 corpus, outputs
-    bit-identical). Slices run out tail-first, zip_with pads the short
-    side with NULL, and concat_ws skips NULLs — exactly the old
-    ``F.get`` overrun behavior, safe under BOTH ANSI modes."""
-    toks = F.split(text_col, " ", -1)
-    length = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    out = F.slice(toks, 1, length)
-    for j in range(1, n):
-        out = F.zip_with(
-            out,
-            F.slice(toks, j + 1, length),
-            lambda acc, t: F.concat_ws(" ", acc, t),
-        )
-    return F.array_distinct(out)
+    """Distinct word n-gram shingles of :func:`~osm2gtfs_spark.operators.
+    text.word_grams` (mirrors :func:`shingles_sql`)."""
+    return F.array_distinct(TXT.word_grams(text_col, n))
 
 
 def shingles_sql(text_expr: str, n: int = 3) -> str:
     """Identical shingling in DuckDB SQL (1-based lists)."""
     toks = f"string_split({text_expr}, ' ')"
-    parts = " || ' ' || ".join(
-        [f"COALESCE({toks}[i + {j}], '')" if j else f"{toks}[i]" for j in range(n)]
-    )
     # DuckDB concat_ws skips NULLs like Spark; emulate via list_transform
     cat = ", ".join([f"{toks}[i + {j}]" for j in range(n)])
     return (
@@ -178,8 +160,8 @@ def lsh_candidate_pairs(
     # signature-fold plan, each reference re-folds the text (higher-
     # order folds get no CSE across plan references — optimization r6,
     # same boundary as incremental_dedup). The band rows are narrow
-    # (id, idx, hash); localCheckpoint materializes them once.
-    bands = bands.localCheckpoint(eager=False)
+    # (id, idx, hash), so they are materialized once.
+    bands = materialize(bands)
     if max_bucket is not None:
         sizes = bands.groupBy("band_idx", "band_hash").count()
         bands = (
@@ -204,9 +186,7 @@ def ngram_jaccard(pairs: DataFrame, docs: DataFrame, doc_id: str = "doc_id", tex
     # the shingle projection feeds BOTH sides of the pair join — without
     # a materialization boundary every doc is shingled twice
     # (optimization r6, same rationale as the band-table checkpoint)
-    sh = docs.select(
-        F.col(doc_id), shingles(F.col(text_col), n).alias("sh")
-    ).localCheckpoint(eager=False)
+    sh = materialize(docs.select(F.col(doc_id), shingles(F.col(text_col), n).alias("sh")))
     j = (
         pairs.join(sh.select(F.col(doc_id).alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
         .join(sh.select(F.col(doc_id).alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
@@ -270,7 +250,6 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
     small_graph_threshold: int = 65536,
 ) -> DataFrame:
     """Near-dup clusters: (doc_id, component_id=min doc in component).
@@ -285,9 +264,10 @@ def connected_components(
       equi join), the pointer-doubling step that makes convergence
       O(log diameter) instead of O(diameter) — the standard
       large-star/small-star trick;
-    - lineage is truncated each round (localCheckpoint) so the plan
-      doesn't grow with iterations; convergence is detected by a
-      changed-count action (1 tiny job per round).
+    - lineage is truncated each round (:func:`~osm2gtfs_spark.session.
+      materialize`) so the plan doesn't grow with iterations;
+      convergence is detected by a changed-count action (1 tiny job per
+      round).
 
     Deterministic output (the min id per component is
     iteration-order-independent). At corpus scale each round is two
@@ -295,19 +275,15 @@ def connected_components(
     dup clusters) are bounded upstream by lsh_candidate_pairs'
     max_bucket cap.
 
-    ``checkpoint_dir`` (VERDICT r3 item 4) switches lineage truncation
-    from ``localCheckpoint`` (executor-local blocks — fast, but a lost
-    executor kills the whole iteration chain) to RELIABLE checkpointing
-    into that directory (HDFS/S3/DBFS path on a cluster): iteration
-    state then survives executor loss, the right trade at cluster
-    scale. Local mode keeps the default ``localCheckpoint``.
-
-    The SparkContext's previous checkpoint dir is restored on exit
-    (review r4 — setCheckpointDir is process-global). Each iteration
-    writes a checkpoint copy under ``checkpoint_dir`` and Spark does
-    not delete superseded ones by default: set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or clean
-    the directory after the job) for repeated backfills.
+    When the SparkContext has a checkpoint dir (``spark.checkpoint.dir``,
+    VERDICT r3 item 4), every round's cut is a RELIABLE checkpoint into
+    it (HDFS/S3/DBFS path on a cluster): iteration state then survives
+    executor loss, the right trade at cluster scale. Each round writes
+    a copy there and Spark does not delete superseded ones by default:
+    set ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or
+    clean the directory after the job) for repeated backfills. Without
+    one, the cuts are executor-local blocks — fast, but a lost executor
+    kills the whole iteration chain.
 
     ``small_graph_threshold`` (optimization r6): when the COMPLETE pair
     list fits under this many rows (checked with a bounded
@@ -316,9 +292,9 @@ def connected_components(
     fixpoint, bounded driver memory (≤ threshold edge rows ≈ a few MB),
     and none of the per-round fixed cost that dominates small graphs.
     ``0`` disables the probe (always iterate). The probe shares ONE
-    lazy-localCheckpoint materialization of ``pairs`` with the loop, so
-    a big graph pays the pair plan once, not twice. The probe is
-    skipped automatically when ``checkpoint_dir`` is set (the explicit
+    lazy materialization of ``pairs`` with the loop, so a big graph
+    pays the pair plan once, not twice. The probe is skipped
+    automatically when the SparkContext has a checkpoint dir (the
     cluster-scale/reliability signal), when the id columns have
     different types or are neither integers nor strings, or when NULL
     ids appear in the probe window —
@@ -327,9 +303,9 @@ def connected_components(
     (per-round convergence actions)."""
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    # review r6: the probe is skipped entirely when the caller asked for
-    # RELIABLE checkpointing — that flag is the explicit cluster-scale
-    # signal, where the pair plan is expensive and the probe's upstream
+    # review r6: the probe is skipped entirely when the context has a
+    # checkpoint dir — the cluster-scale signal, where every cut is
+    # reliable, the pair plan is expensive and the probe's upstream
     # shuffle stages would run twice (once for the probe, once for the
     # loop). Mixed id column types likewise fall through: the iterative
     # path's unionByName coerces to the common type, the driver path
@@ -339,7 +315,7 @@ def connected_components(
     id_type = pairs.schema[id_a].dataType
     use_probe = (
         small_graph_threshold > 0
-        and checkpoint_dir is None
+        and pairs.sparkSession.sparkContext.getCheckpointDir() is None
         and id_type == pairs.schema[id_b].dataType
         and isinstance(id_type, (T.IntegralType, T.StringType))
     )
@@ -360,13 +336,11 @@ def connected_components(
         # probe short-circuits after ~threshold rows and the iterative
         # path runs unchanged.
         # ONE materialization shared between the probe and (if the graph
-        # turns out big) the iterative loop (review r6): the lazy
-        # localCheckpoint's blocks are filled by whatever partitions the
-        # limit probe scans and completed by the loop's first action, so
-        # an expensive pair plan (LSH self-join + distinct) never runs
-        # twice. Same lineage-cut semantics the loop's per-round
-        # localCheckpoint already imposes on this path.
-        pairs = pairs.localCheckpoint(eager=False)
+        # turns out big) the iterative loop (review r6): the lazy cut's
+        # blocks are filled by whatever partitions the limit probe scans
+        # and completed by the loop's first action, so an expensive pair
+        # plan (LSH self-join + distinct) never runs twice.
+        pairs = materialize(pairs)
         probe = (
             pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
             .limit(small_graph_threshold + 1)
@@ -408,41 +382,10 @@ def connected_components(
             return pairs.sparkSession.createDataFrame(
                 [(v, comp_min[_find(v)]) for v in sorted(parent)], out_schema
             )
-    if checkpoint_dir is not None:
-        sc = pairs.sparkSession.sparkContext
-        prev_opt = sc._jsc.sc().getCheckpointDir()
-        prev_dir = prev_opt.get() if prev_opt.isDefined() else None
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-        try:
-            return _cc_run(pairs, id_a, id_b, max_iters, _ckpt)
-        finally:
-            if prev_dir is not None:
-                sc.setCheckpointDir(prev_dir)
-            else:
-                # setCheckpointDir is set-only: with no prior dir there is
-                # nothing to restore, so the setting LEAKS to later jobs on
-                # this context (ADVICE r4) — say so instead of hiding it
-                import warnings
-
-                warnings.warn(
-                    "connected_components: SparkContext had no checkpoint dir "
-                    f"before this call; {checkpoint_dir!r} remains the "
-                    "process-global checkpoint dir (setCheckpointDir cannot "
-                    "be unset). Superseded per-iteration checkpoints are not "
-                    "auto-deleted unless "
-                    "spark.cleaner.referenceTracking.cleanCheckpoints=true.",
-                    stacklevel=2,
-                )
-    return _cc_run(
-        pairs, id_a, id_b, max_iters, lambda df: df.localCheckpoint(eager=False)
-    )
+    return _cc_run(pairs, id_a, id_b, max_iters)
 
 
-def _cc_run(pairs, id_a, id_b, max_iters, _ckpt):
+def _cc_run(pairs, id_a, id_b, max_iters):
     # per-round job budget (optimization r6, guide §1.2 "the distributed
     # algorithm"): the round's new labels carry the OLD label as a
     # column, so convergence detection is a filter-count over the
@@ -452,12 +395,12 @@ def _cc_run(pairs, id_a, id_b, max_iters, _ckpt):
     # 0 convergence shuffles per round, down from 2 jobs + a 2-shuffle
     # join. Labels and convergence math are unchanged (same min-label
     # fixpoint, same round count).
-    edges = _ckpt(
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
     )
-    labels = _ckpt(
+    labels = materialize(
         edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
     )
     for _ in range(max_iters):
@@ -502,7 +445,7 @@ def _cc_run(pairs, id_a, id_b, max_iters, _ckpt):
                 )
                 .select("id", "old", F.coalesce("ll", "label").alias("label"))
             )
-        jumped = _ckpt(jumped)
+        jumped = materialize(jumped)
         changed = jumped.filter(F.col("label") != F.col("old")).count()
         labels = jumped.select("id", "label")
         if changed == 0:
@@ -537,7 +480,7 @@ def token_set_dup_pairs(docs: DataFrame, doc_id: str = "doc_id", text_col: str =
     # both sides of the self join reference the simhash fold — one
     # materialization of the narrow band rows instead of two folds
     # (optimization r6, the minhash band-table pattern)
-    bands = bands.localCheckpoint(eager=False)
+    bands = materialize(bands)
     a = bands.select(F.col(doc_id).alias("doc_a"), "band_idx", "band_val")
     b = bands.select(F.col(doc_id).alias("doc_b"), "band_idx", "band_val")
     cand = (
@@ -780,12 +723,11 @@ def incremental_dedup(
     # materialization boundary every consumer re-folds the text
     # (optimization r6, guide §5 "caching is worth it when a DataFrame
     # is reused and recomputing is more expensive": measured 9.5 s →
-    # 3.2 s at the sf0.1 gate). localCheckpoint keeps the narrow band
-    # rows in executor-local blocks and cuts the lineage; per-call
+    # 3.2 s at the sf0.1 gate). The narrow band rows are per-call
     # state, recomputed from the inputs on every invocation.
-    nb = nb.localCheckpoint(eager=False)
+    nb = materialize(nb)
     if corpus_bands is None:
-        cb = cb.localCheckpoint(eager=False)
+        cb = materialize(cb)
     if max_bucket is not None:
         hot = (
             cb.groupBy("band_idx", "band_hash")

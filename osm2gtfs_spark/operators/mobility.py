@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.functions.geo import cell_id
+from osm2gtfs_spark.session import materialize
 
 
 def od_matrix(
@@ -208,7 +209,7 @@ def route_overlap_jaccard(
     # the cell self join — materialize the narrow (route, cell) rows
     # once instead of re-running the bbox-cover explode per reference
     # (optimization r6, the dedup band-table pattern)
-    cov = cov.localCheckpoint(eager=False)
+    cov = materialize(cov)
     sizes = cov.groupBy(route_col).agg(F.count(F.lit(1)).alias("_n"))
     a = cov.select(F.col(route_col).alias("route_a"), "_cell")
     b = cov.select(F.col(route_col).alias("route_b"), "_cell")

@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2gtfs_spark.session import materialize
+
 log = logging.getLogger(__name__)
 
 
@@ -301,7 +303,7 @@ def cosine_topk_lsh(
     # AND the candidate join — without a materialization boundary the
     # plane dot products run once per consumer (optimization r6, the
     # dedup band-table pattern); narrow (id, table, bucket) rows
-    cb = cb.localCheckpoint(eager=False)
+    cb = materialize(cb)
     if max_bucket is not None:
         hot = _hot_bucket_keys_checked(cb, max_bucket, n_planes, "cosine_topk_lsh")
         qb = _cap_hot_buckets(qb, hot)
@@ -353,7 +355,7 @@ def embedding_near_dup(
     # referenced by the hot-bucket aggregate + both sides of the self
     # join — materialize the narrow bucket rows once (optimization r6,
     # the dedup band-table pattern)
-    b = b.localCheckpoint(eager=False)
+    b = materialize(b)
     if max_bucket is not None:
         b = _cap_hot_buckets(
             b, _hot_bucket_keys_checked(b, max_bucket, n_planes, "embedding_near_dup")

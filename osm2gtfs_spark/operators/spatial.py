@@ -2035,7 +2035,6 @@ def grid_dbscan(
     min_pts: int,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Density-based spatial clustering on the cell grid:
     (cell_id, n, cluster_id) for every CORE cell (count ≥ ``min_pts``),
@@ -2076,7 +2075,7 @@ def grid_dbscan(
     edges = nbr.join(
         core.select(F.col("cell_id").alias("_dst")), "_dst"
     ).select(F.col("_src").alias("doc_a"), F.col("_dst").alias("doc_b"))
-    comps = connected_components(edges, checkpoint_dir=checkpoint_dir)
+    comps = connected_components(edges)
     return (
         core.join(comps, core.cell_id == comps.doc_id, "left")
         .select(

@@ -13,9 +13,10 @@ composition is value-checked end-to-end, not just per stage.
 Scale shape: each stage consumes only ids + the columns it needs;
 the dedup closure runs on the quality-surviving subset (smaller
 graph); decontamination is shingle-keyed (never doc×doc); the scrub is
-pure codegen. One deliberate materialization boundary: the kept-id set
-feeds three downstream joins, so callers at scale should persist or
-checkpoint ``kept`` — mirrored by the gate query's ``.persist()``.
+pure codegen. Two materialization boundaries
+(:func:`~osm2gtfs_spark.session.materialize`): ``kept`` feeds the pair
+graph, the keeper anti-join and the shingle explode, and the deduped
+set feeds both the decontamination scan and its anti-join.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 
 from osm2gtfs_spark.operators import dedup as DD
 from osm2gtfs_spark.operators import text as TXT
+from osm2gtfs_spark.session import materialize
 
 # C4/Gopher-style keep thresholds (shared with quality_filter_composite)
 TOK_MIN, TOK_MAX = 30, 80
@@ -71,14 +73,13 @@ def prepare_corpus(
     kept_ids = quality_keep(docs).filter("keep").select("doc_id")
     kept = docs.join(kept_ids, "doc_id", "left_semi")
     # kept feeds the pair graph (2 scans), keeper anti-join, and the
-    # downstream shingle explode — at scale this is a checkpoint table;
-    # locally MEMORY_AND_DISK
-    kept = kept.persist()
+    # downstream shingle explode
+    kept = materialize(kept)
 
     comps = DD.connected_components(DD.token_set_dup_pairs(kept))
     deduped = DD.apply_keepers(kept, comps)
     if benchmark is not None:
-        deduped = deduped.persist()
+        deduped = materialize(deduped)
         contaminated = (
             DD.decontaminate(
                 deduped,
@@ -115,8 +116,8 @@ def prepare_corpus_packed(
     span-scrubbed clean text (docs scrubbed to empty emit nothing).
 
     Scale shape: the three appended stages are a linear chain, each
-    consuming the previous stage's output exactly once — no new persist
-    boundary beyond :func:`prepare_corpus`'s internal ones. The span
+    consuming the previous stage's output exactly once — no new
+    materialization boundary beyond :func:`prepare_corpus`'s internal ones. The span
     scrub adds its two corpus shuffles (distinct-window hash, doc id);
     packing adds the bucket-local running-offset window. Nothing here
     is corpus×corpus."""

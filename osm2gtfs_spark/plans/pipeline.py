@@ -13,12 +13,14 @@ zip sinks read leaf scans, as the reference's ``feed.Validate`` and
 ``WriteGoogleTransitFeed`` read one finished ``Schedule``
 (``osm2gtfs.py:90-93``). Only the store differs:
 
-- in memory (``catalog=None``): each stage is an eager local
-  checkpoint. Local checkpoints are executor-resident and are not
-  recomputed if an executor is lost;
+- in memory (``catalog=None``): each stage is an eager
+  :func:`~osm2gtfs_spark.session.materialize` cut, a reliable
+  checkpoint when the SparkContext has a checkpoint dir
+  (``spark.checkpoint.dir``) and executor-resident local blocks,
+  lost with their executor, otherwise. Nothing is resumable;
 - a catalog (the CLI's ``cache_dir``): each stage is a durable,
-  resumable parquet stage with a manifest. Runs that must survive
-  executor loss use this one.
+  resumable parquet stage with a manifest. Runs that must resume
+  after a failure use this one.
 
 The CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
 """
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.plans import schedule_path as SP
+from osm2gtfs_spark.session import materialize
 from osm2gtfs_spark.sources import docs as docs_mod
 
 log = logging.getLogger("osm2gtfs_spark.pipeline")
@@ -177,14 +180,15 @@ def downstream(roots) -> list[str]:
 
 
 class _LocalStore:
-    """The ``catalog=None`` stage store: every stage is an eager local
-    checkpoint; none is ever complete or has a manifest."""
+    """The ``catalog=None`` stage store: every stage is an eager
+    :func:`~osm2gtfs_spark.session.materialize` cut; none is ever
+    complete or has a manifest."""
 
     def is_complete(self, name: str) -> bool:
         return False
 
     def run_stage(self, name: str, fn, inputs=None) -> DataFrame:
-        return fn().localCheckpoint(eager=True)
+        return materialize(fn(), eager=True)
 
     def manifest(self, name: str) -> None:
         return None

@@ -42,6 +42,7 @@ from osm2gtfs_spark.operators import dedup as DD
 from osm2gtfs_spark.operators import multimodal as MM
 from osm2gtfs_spark.operators import similarity as SIM
 from osm2gtfs_spark.operators import text as TXT
+from osm2gtfs_spark.session import materialize
 from osm2gtfs_spark.sources import tpch
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1389,12 +1390,23 @@ _PLANT_RANK_SQL = """
 
 def _plant_ranked_neighbors(emb: DataFrame) -> DataFrame:
     """Corpus ∪ 5 perturbed copies per query vector (see _PLANT_RANK_SQL)."""
+    # each query pairs with the vector at vec_id + 100 through a union +
+    # groupBy on the query id, not a join: the optimizer sizes an inner
+    # join as the product of its sides (~14 GB for two 190 kB scans), a
+    # materialized corpus keeps that estimate, and the joins downstream
+    # would then plan a runtime bloom filter on its strength
+    none = F.lit(None).cast(emb.schema["embedding"].dataType)
     q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_vec")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_vec"), none.alias("r_vec")
     )
-    r = emb.select((F.col("vec_id") - 100).alias("qid"), F.col("embedding").alias("r_vec"))
+    r = emb.filter(F.col("vec_id") < 120).select(
+        (F.col("vec_id") - 100).alias("qid"), none.alias("q_vec"), F.col("embedding").alias("r_vec")
+    )
     planted = (
-        q.join(r, "qid")
+        q.unionByName(r)
+        .groupBy("qid")
+        .agg(F.max("q_vec").alias("q_vec"), F.max("r_vec").alias("r_vec"))
+        .filter(F.col("q_vec").isNotNull() & F.col("r_vec").isNotNull())
         .select("qid", "q_vec", "r_vec", F.explode(F.array(*[F.lit(j) for j in range(1, 6)])).alias("j"))
         .select(
             (F.col("qid") + F.col("j") * 10_000_000).alias("vec_id"),
@@ -1419,9 +1431,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs brute force on the raw corpus is additionally asserted in
     tests/test_dedup_similarity.py."""
     emb = tpch.load(spark, sf_dir, "embeddings")
-    # persist: the default scale guards (corpus count for auto_n_planes +
+    # the default scale guards (corpus count for auto_n_planes +
     # hot-bucket stats) each run an action over the planted lineage
-    corpus = _plant_ranked_neighbors(emb).persist()
+    corpus = materialize(_plant_ranked_neighbors(emb))
     q = emb.filter(F.col("vec_id") < 20)
     return SIM.cosine_topk_lsh(q, corpus, dim=64, k=5).select("query_id", "neighbor_id", "rank")
 
@@ -1446,7 +1458,8 @@ def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = emb.filter(F.col("vec_id") < 20).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
-    corpus = emb.unionByName(planted).persist()
+    # read by the auto_n_planes count, the hot-bucket stats and the join
+    corpus = materialize(emb.unionByName(planted))
     return SIM.embedding_near_dup(corpus, dim=64, threshold=0.99).select(
         "id_a", "id_b"
     )
@@ -1784,10 +1797,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     they land in the query's probed cells). Exactness at nprobe=n_cells
     and recall monotonicity are asserted in tests/test_dedup_similarity.py."""
     emb = tpch.load(spark, sf_dir, "embeddings")
-    # persist: the k-means runs 1 init + 3 iteration jobs over the
-    # corpus — without it each job recomputes the planted-perturbation
+    # the k-means runs 1 init + 3 iteration jobs over the corpus —
+    # without one boundary each job recomputes the planted-perturbation
     # lineage (this was the slowest gate query; VERDICT r3 item 2)
-    corpus = _plant_ranked_neighbors(emb).persist()
+    corpus = materialize(_plant_ranked_neighbors(emb))
     cents = SIM.ivf_centroids(corpus, n_cells=8, iters=3)
     q = emb.filter(F.col("vec_id") < 20)
     return SIM.cosine_topk_ivf(q, corpus, cents, k=5, nprobe=3).select(
@@ -2157,7 +2170,8 @@ def corpus_prep_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     individually-green stages can't hide."""
     from osm2gtfs_spark.plans.corpus_prep import prepare_corpus
 
-    d = tpch.load(spark, sf_dir, "documents").persist()
+    # read by the quality signals, the kept join and the benchmark filter
+    d = materialize(tpch.load(spark, sf_dir, "documents"))
     bench = d.filter(F.col("doc_id") < 20)
     out = prepare_corpus(d, benchmark=bench, overlap_threshold=5)
     return out.select(
@@ -2480,14 +2494,14 @@ def corpus_prep_packed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tpch.load(spark, sf_dir, "documents")
     b = F.lit(_BOILER)
-    synth = d.select(
+    synth = materialize(d.select(
         "doc_id",
         F.concat(
             F.col("text"),
             F.when(F.col("doc_id") % 4 == 0, F.concat(F.lit(" "), b)).otherwise(F.lit("")),
             F.when(F.col("doc_id") % 7 == 0, F.concat(F.lit(" "), b, F.lit(" "), b)).otherwise(F.lit("")),
         ).alias("text"),
-    ).persist()
+    ))
     bench = synth.filter(F.col("doc_id") < 20)
     return prepare_corpus_packed(
         synth, benchmark=bench, overlap_threshold=5, budget=64, n_buckets=8
@@ -5284,7 +5298,7 @@ def tile_pyramid_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sever lineage from the temp state BEFORE deleting it, so the
         # returned frame survives cleanup (review r5c: mkdtemp leaked a
         # partials tree per gate run)
-        return merged.localCheckpoint(eager=True)
+        return materialize(merged, eager=True)
     finally:
         shutil.rmtree(td, ignore_errors=True)
 
@@ -5975,7 +5989,7 @@ def cdc_snapshot_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         CDC.process_batch(dels, 1000, f"{td}/state", base_cols)
         snap = CDC.read_snapshot(spark, d, f"{td}/state", key_col="doc_id")
-        return snap.localCheckpoint(eager=True)
+        return materialize(snap, eager=True)
     finally:
         shutil.rmtree(td, ignore_errors=True)
 
@@ -6025,7 +6039,7 @@ def cdc_changes_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = CDC.snapshot_changes(
             spark, d, f"{td}/state", key_col="doc_id", from_batch=-1
         )
-        return feed.localCheckpoint(eager=True)
+        return materialize(feed, eager=True)
     finally:
         shutil.rmtree(td, ignore_errors=True)
 

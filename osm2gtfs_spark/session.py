@@ -12,13 +12,18 @@ one we would ship to a 1000-executor cluster:
   from every enrichment join.
 - Cross joins disabled — the north rule bans them; any accidental
   cartesian plan fails loudly instead of melting the cluster.
+
+It also holds :func:`materialize`, the engine's one lineage cut.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger("osm2gtfs_spark.session")
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -73,3 +78,26 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: every operator, query and pipeline stage
+    that reads a frame more than once, or must outlive its sources,
+    materializes it here.
+
+    When the SparkContext has a checkpoint dir (``spark.checkpoint.dir``
+    at launch, or ``SparkContext.setCheckpointDir``), the cut is a
+    reliable ``checkpoint``: its files survive a lost executor, as a
+    cluster with dynamic allocation or spot nodes needs. Without one it
+    is a ``localCheckpoint``: executor-resident blocks, fastest, but lost
+    with their executor. Local blocks are released when the returned
+    frame is garbage collected; reliable files only with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``.
+
+    Lazy by default: the first action that reads the frame fills it and
+    later actions read it; ``eager=True`` fills it now, in one job.
+    Neither path adds a cache-manager entry. The path taken is logged
+    at DEBUG."""
+    reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
+    log.debug("materialize: %s checkpoint, eager=%s", "reliable" if reliable else "local", eager)
+    return df.checkpoint(eager) if reliable else df.localCheckpoint(eager)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm2gtfs_spark.operators import dedup as DD
+from osm2gtfs_spark.session import materialize
 from osm2gtfs_spark.streaming.drain import drain_available_now
 
 
@@ -159,9 +160,9 @@ def process_batch(
     # lineage references the path, and the second write would then
     # re-resolve the mutated directory with the stale pre-write schema
     # (found the hard way: batch N's bands write failing to read batch
-    # N's own freshly-written admitted files). localCheckpoint truncates
+    # N's own freshly-written admitted files). An eager cut truncates
     # the lineage entirely, so neither write can invalidate it.
-    admitted = DD.incremental_dedup(
+    admitted = materialize(DD.incremental_dedup(
         batch_df.select(doc_id, text_col),
         corpus_text,
         doc_id=doc_id,
@@ -171,7 +172,7 @@ def process_batch(
         jaccard_threshold_permille=jaccard_threshold_permille,
         max_bucket=max_bucket,
         corpus_bands=cb,
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     admitted.withColumn("_batch_id", F.lit(batch_id)).write.partitionBy(
         "_batch_id"
     ).mode("overwrite").parquet(_admitted_path(state_dir))

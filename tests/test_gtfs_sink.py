@@ -4,20 +4,55 @@ from __future__ import annotations
 
 import csv
 import glob
+import hashlib
 import io
 import os
 import zipfile
 
 import pytest
 
-from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline
+from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline, run_schedule_pipeline
 from osm2gtfs_spark.sources import docs as D
+from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
 from osm2gtfs_spark.sources.gtfs_sink import validate_feed, write_gtfs_zip
+
+# (pipeline, store) → sha256 of the zip written from that run's tables
+ZIP_PINS = {
+    ("frequency", "memory"): "69c36240e95e2fa201705a94e9a534bf80e76972c52f591c1d8d13004d7368c0",
+    ("frequency", "cache_dir"): "69c36240e95e2fa201705a94e9a534bf80e76972c52f591c1d8d13004d7368c0",
+    ("schedule", "memory"): "05693e2904d7e8f41a42a525439f4f127d0efc2d5ec458e07e488ee574b874cb",
+    ("schedule", "cache_dir"): "05693e2904d7e8f41a42a525439f4f127d0efc2d5ec458e07e488ee574b874cb",
+}
 
 
 @pytest.fixture(scope="module")
 def tables(spark):
     return run_frequency_pipeline(D.docs_df(spark, D.CitySpec(n_lines=3, with_stop_areas=True)))
+
+
+@pytest.fixture(scope="module")
+def feeds(spark, tmp_path_factory):
+    """Both docs-parquet pipelines on one small city, each run in memory
+    and on a ``CheckpointCatalog``."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=3, with_stop_areas=True, with_schedule=True))
+    runs = {"frequency": run_frequency_pipeline, "schedule": run_schedule_pipeline}
+    out = {}
+    for (pipeline, store) in ZIP_PINS:
+        catalog = None
+        if store == "cache_dir":
+            catalog = CheckpointCatalog(spark, str(tmp_path_factory.mktemp(pipeline)))
+        out[pipeline, store] = runs[pipeline](docs, catalog=catalog)
+    return out
+
+
+def test_zip_pins(feeds, tmp_path):
+    """The zip bytes of each docs-parquet pipeline, in memory and with a
+    cache_dir, are pinned."""
+    got = {}
+    for (pipeline, store), t in feeds.items():
+        path = write_gtfs_zip(t, str(tmp_path / f"{pipeline}_{store}.zip"))
+        got[pipeline, store] = hashlib.sha256(open(path, "rb").read()).hexdigest()
+    assert got == ZIP_PINS
 
 
 def test_zip_members_and_determinism(tables, tmp_path):
@@ -130,10 +165,12 @@ def test_validate_feed_seeded_violations(spark):
     assert checks["bad_headway"] == 1
 
 
-def test_zip_shard_invariance(spark, tables, tmp_path, monkeypatch):
+def test_zip_shard_invariance(spark, tables, feeds, tmp_path, monkeypatch):
     """The writer count AQE picks does not reach the zip bytes (O5): a
     default-conf write equals one with partition coalescing off, where
-    the range exchange keeps every shuffle partition as a writer."""
+    the range exchange keeps every shuffle partition as a writer. Runs
+    on the in-memory frequency tables and on the other three pinned
+    runs."""
     from types import SimpleNamespace
 
     from osm2gtfs_spark.sources import gtfs_sink
@@ -146,17 +183,20 @@ def test_zip_shard_invariance(spark, tables, tmp_path, monkeypatch):
         return found
 
     monkeypatch.setattr(gtfs_sink, "glob", SimpleNamespace(glob=recording_glob))
-    p1 = write_gtfs_zip(tables, str(tmp_path / "default.zip"))
+    runs = {"tables": tables}
+    runs.update({f"{p}_{s}": t for (p, s), t in feeds.items() if (p, s) != ("frequency", "memory")})
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    parts.clear()
-    try:
-        p2 = write_gtfs_zip(tables, str(tmp_path / "uncoalesced.zip"))
-    finally:
-        spark.conf.set(key, prev)
-    assert len(parts.get("stop_times.txt.parts", [])) > 1, "the comparison needs several writers"
-    assert open(p1, "rb").read() == open(p2, "rb").read()
+    for name, t in runs.items():
+        p1 = write_gtfs_zip(t, str(tmp_path / f"{name}_default.zip"))
+        spark.conf.set(key, "false")
+        parts.clear()
+        try:
+            p2 = write_gtfs_zip(t, str(tmp_path / f"{name}_uncoalesced.zip"))
+        finally:
+            spark.conf.set(key, prev)
+        assert len(parts.get("stop_times.txt.parts", [])) > 1, f"{name}: the comparison needs several writers"
+        assert open(p1, "rb").read() == open(p2, "rb").read(), name
 
 
 def test_agency_member_is_csv(tables, tmp_path):

@@ -50,9 +50,27 @@ def test_fast_signature_shape(docs):
 
 
 def test_lsh_queries_leave_no_cache(spark, sf_dir):
-    # lsh_candidate_pairs materializes the band table once itself; the
-    # query constructors add no cache of their own
-    spark.catalog.clearCache()
-    for query in (Q.minhash_lsh_pairs, Q.ngram_jaccard_dedup):
+    """No registry query leaves a cache-manager entry behind: each one
+    materializes through lineage cuts, never a cache or persist. Every
+    ``queries()`` entry is built and collected after ``clearCache()``."""
+    leaked = []
+    for name, query in Q.queries().items():
+        spark.catalog.clearCache()
         query(spark, sf_dir).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            leaked.append(name)
+    assert leaked == []
+
+
+def test_lsh_candidate_pairs_reliable_checkpoint(docs, reliable_checkpoints):
+    """With a checkpoint dir on the SparkContext, the band table is a
+    reliable checkpoint: the same pairs, and checkpoint files on disk."""
+    import os
+
+    bands = DD.minhash_bands("doc_id", "text", docs, 8, 2)
+    local = _pairs(bands)
+    with reliable_checkpoints() as ckdir:
+        assert _pairs(bands) == local
+    assert (1, 2) in local
+    found = [f for _, _, fs in os.walk(ckdir) for f in fs]
+    assert found, "no reliable checkpoint files written"
