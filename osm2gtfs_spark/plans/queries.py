@@ -3080,10 +3080,8 @@ def neardup_ingest_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ck,
                 max_bucket=None,
             )
-        admitted = ING.read_admitted(spark, state).select("doc_id")
-        # materialize off the temp state before it is deleted
-        rows = admitted.collect()
-    return spark.createDataFrame(rows, "doc_id long")
+        # cut lineage from the temp state before it is deleted
+        return materialize(ING.read_admitted(spark, state, base).select("doc_id"), eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -5268,9 +5266,9 @@ def geofence_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tile_pyramid_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resumable tiling in the correctness gate
     (streaming/tile_ingest): foreachBatch writes per-batch pyramid
-    partials under _batch_id (idempotent replay via dynamic partition
-    overwrite — additive partials need no state read); the merged
-    read-side pyramid hash-matches the one-shot batch ladder."""
+    partials under _batch_id (a replay rewrites only its own partition
+    — additive partials need no state read); the merged read-side
+    pyramid hash-matches the one-shot batch ladder."""
     import tempfile
 
     from osm2gtfs_spark.streaming import events as SE
@@ -5281,10 +5279,7 @@ def tile_pyramid_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
         ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
     )
-    import shutil
-
-    td = tempfile.mkdtemp(prefix="tile_ingest_gate_")
-    try:
+    with tempfile.TemporaryDirectory() as td:
         TI.tile_ingest_available_now(
             pts,
             state_dir=f"{td}/state",
@@ -5295,12 +5290,8 @@ def tile_pyramid_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = TI.read_pyramid(spark, f"{td}/state")
         if merged is None:  # zero-batch drain: fail loudly, not AttributeError
             raise ValueError("tile ingest drain produced no state")
-        # sever lineage from the temp state BEFORE deleting it, so the
-        # returned frame survives cleanup (review r5c: mkdtemp leaked a
-        # partials tree per gate run)
+        # cut lineage from the temp state before it is deleted
         return materialize(merged, eager=True)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
 
 
 @register(
@@ -5964,7 +5955,6 @@ def cdc_snapshot_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     process_batch call (the replay entry point), so read_snapshot must
     resolve latest-wins ACROSS partitions and drop tombstones. The
     snapshot hash-matches the batch MERGE truth."""
-    import shutil
     import tempfile
 
     from osm2gtfs_spark.streaming import cdc as CDC
@@ -5979,8 +5969,7 @@ def cdc_snapshot_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ups = _cdc_changes(d_stream).filter(F.col("op") == "upsert")
     dels = _cdc_changes(d).filter(F.col("op") == "delete")
-    td = tempfile.mkdtemp(prefix="cdc_gate_")
-    try:
+    with tempfile.TemporaryDirectory() as td:
         CDC.cdc_upsert_available_now(
             ups,
             state_dir=f"{td}/state",
@@ -5990,8 +5979,6 @@ def cdc_snapshot_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDC.process_batch(dels, 1000, f"{td}/state", base_cols)
         snap = CDC.read_snapshot(spark, d, f"{td}/state", key_col="doc_id")
         return materialize(snap, eager=True)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
 
 
 @register(
@@ -6016,7 +6003,6 @@ def cdc_changes_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     with null-safe payload comparison — inserted/updated/deleted
     classification a downstream consumer reads instead of re-diffing
     snapshots."""
-    import shutil
     import tempfile
 
     from osm2gtfs_spark.streaming import cdc as CDC
@@ -6032,16 +6018,13 @@ def cdc_changes_feed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ups = _cdc_changes(d).filter(F.col("op") == "upsert").unionByName(inserts)
     dels = _cdc_changes(d).filter(F.col("op") == "delete")
-    td = tempfile.mkdtemp(prefix="cdc_feed_gate_")
-    try:
+    with tempfile.TemporaryDirectory() as td:
         CDC.process_batch(ups, 0, f"{td}/state", cols)
         CDC.process_batch(dels, 1, f"{td}/state", cols)
         feed = CDC.snapshot_changes(
             spark, d, f"{td}/state", key_col="doc_id", from_batch=-1
         )
         return materialize(feed, eager=True)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
 
 
 @register(

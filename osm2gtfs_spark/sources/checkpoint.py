@@ -28,6 +28,12 @@ dependants are rebuilt too. ``run_stage`` memoizes: complete → read
 back, else compute, write, read back. Reading back (instead of
 returning the in-memory plan) cuts lineage so downstream failure
 recovery never recomputes upstream stages.
+
+Batch-partitioned state (``run_partitioned_stage`` and the streaming
+ingests' tile partials, CDC deltas and near-dup admits) is written by
+:func:`write_partitioned` and read by :func:`read_if_exists`: one
+writer that decides what an overwrite replaces, one reader that tells
+a missing table from a broken one.
 """
 
 from __future__ import annotations
@@ -38,8 +44,51 @@ import shutil
 import time
 import urllib.parse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def write_partitioned(
+    df: DataFrame, path: str, part_col: str = "_batch_id", whole_table: bool = False
+) -> None:
+    """Write ``df`` as a parquet table hive-partitioned by ``part_col``,
+    replacing only the partitions whose values are present in ``df``:
+    a replayed batch rewrites its own partition and leaves every other
+    one in place. ``whole_table=True`` replaces the whole table instead.
+    The mode is this writer's own option, so the session conf never
+    decides what an overwrite deletes."""
+    df.write.partitionBy(part_col).option(
+        "partitionOverwriteMode", "static" if whole_table else "dynamic"
+    ).mode("overwrite").parquet(path)
+
+
+def read_if_exists(
+    spark: SparkSession, path: str, schema: T.StructType | None
+) -> DataFrame | None:
+    """The parquet table at ``path`` read with ``schema``, or None when
+    the path does not exist yet. The read's own error decides, so the
+    test holds on any filesystem (``os.path.exists`` is always False on
+    HDFS or S3). With a schema, a table whose every partition wrote zero
+    rows (only ``_SUCCESS``) reads as an empty frame; ``None`` infers
+    the schema from the parquet footers."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
+def _dump_json(path: str, obj: dict) -> None:
+    """Write ``obj`` to ``path`` atomically: a reader sees the old file
+    or the new one, never a half-written record."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
 
 
 class CheckpointCatalog:
@@ -127,10 +176,7 @@ class CheckpointCatalog:
             "schema": back.schema.simpleString(),
             "created_unix": time.time(),
         }
-        tmp = self._manifest_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(stage))
+        _dump_json(self._manifest_path(stage), manifest)
         return back
 
     def read(self, stage: str) -> DataFrame:
@@ -143,10 +189,8 @@ class CheckpointCatalog:
         ):
             # zero-row marker stage (see run_partitioned_stage): no data
             # directory exists, the schema travels in the manifest
-            from pyspark.sql.types import StructType
-
             return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema_json"]))
+                [], T.StructType.fromJson(json.loads(m["schema_json"]))
             )
         return self.spark.read.parquet(self._data_path(stage))
 
@@ -190,9 +234,9 @@ class CheckpointCatalog:
 
         The stage output is hive-partitioned by ``part_col`` (e.g. the
         coarse tile cell, non-null); each partition value commits
-        independently — its data directory is written first (dynamic
-        partition overwrite, so a half-written partition from a killed
-        job is replaced idempotently), then its one-line commit record
+        independently — its data directory is written first
+        (:func:`write_partitioned`, so a half-written partition from a
+        killed job is replaced idempotently), then its commit record
         (value, rows, checksum, snapshot_id) lands in the partition log.
         On restart only the values missing from the log are computed:
         the plan is filtered to the todo set, so completed tiles are
@@ -200,24 +244,16 @@ class CheckpointCatalog:
         """
         done = self.committed_partitions(stage)
         df = fn()
-        if done:
-            todo_df = df.filter(
-                ~F.col(part_col).cast("string").isin(*done.keys())
-            )
-        else:
-            todo_df = df
+        todo_df = (
+            df.filter(~F.col(part_col).cast("string").isin(*done.keys())) if done else df
+        )
         data = self._data_path(stage)
         todo_vals = [
             str(r[0])
             for r in todo_df.select(F.col(part_col).cast("string")).distinct().collect()
         ]
         if todo_vals:
-            prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                todo_df.write.mode("overwrite").partitionBy(part_col).parquet(data)
-            finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            write_partitioned(todo_df, data, part_col)
             back = self.spark.read.parquet(data).filter(
                 F.col(part_col).cast("string").isin(*todo_vals)
             )
@@ -245,17 +281,13 @@ class CheckpointCatalog:
                 # '..' etc. cannot escape the partlog dir; resume reads
                 # the value back from the record body, not the filename
                 safe = urllib.parse.quote(str(r._v), safe="")
-                path = os.path.join(self._partlog_dir(stage), f"{safe}.json")
-                tmp = path + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(rec, f)
-                os.replace(tmp, path)
+                _dump_json(os.path.join(self._partlog_dir(stage), f"{safe}.json"), rec)
         if todo_vals and os.path.exists(self._manifest_path(stage)):
             # a previous run committed the zero-row marker; real data
             # exists now, so the marker manifest is stale — drop it
             # (partitioned stages track completion in the partlog)
             os.remove(self._manifest_path(stage))
-        if not os.path.exists(data):
+        if not os.path.exists(data) and not os.path.exists(self._manifest_path(stage)):
             # first run with an empty stage output (ADVICE r3): commit a
             # zero-row marker manifest so the stage is readable by other
             # callers (catalog.read) and visible in metrics() like every
@@ -264,8 +296,6 @@ class CheckpointCatalog:
             # a PREVIOUS empty run is kept as-is (review r4): committed
             # snapshot ids must stay stable across plain re-runs, the
             # same contract non-empty partitions honor via the partlog.
-            if os.path.exists(self._manifest_path(stage)):
-                return self.read(stage)
             os.makedirs(self._dir(stage), exist_ok=True)
             manifest = {
                 "stage": stage,
@@ -278,9 +308,5 @@ class CheckpointCatalog:
                 "schema_json": json.dumps(df.schema.jsonValue()),
                 "created_unix": time.time(),
             }
-            tmp = self._manifest_path(stage) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, self._manifest_path(stage))
-            return self.read(stage)
+            _dump_json(self._manifest_path(stage), manifest)
         return self.read(stage)

@@ -9,9 +9,10 @@ parquet — the third ingest shape in the engine's streaming family:
 The reference consumes OSM snapshots; a production feed consumes OSM
 DIFFS. ``apply_changeset`` is the batch MERGE (one anti join + one
 union — the plain-DataFrame expression of ``MERGE INTO``), and the
-streaming path writes each micro-batch's changes as a DELTA partition
-under ``_batch_id`` with per-writer dynamic overwrite — the same
-merge-on-read layout an Iceberg table uses for row-level deletes:
+streaming path writes each micro-batch's changes as its own DELTA
+partition under ``_batch_id``
+(:func:`~osm2gtfs_spark.sources.checkpoint.write_partitioned`) — the
+same merge-on-read layout an Iceberg table uses for row-level deletes:
 
 - replay idempotency is structural (a replayed batch overwrites its
   own partition; no read-modify-write of live state);
@@ -34,10 +35,14 @@ All arithmetic integer/string — oracle bit-exact.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from osm2gtfs_spark.sources.checkpoint import read_if_exists, write_partitioned
+from osm2gtfs_spark.streaming.drain import drain_available_now
 
 UPSERT = "upsert"
 DELETE = "delete"
@@ -103,16 +108,14 @@ def process_batch(
     seq_col: str = "seq",
     op_col: str = "op",
 ) -> None:
-    """One micro-batch: append the batch's changes as its own DELTA
-    partition. No state read (merge happens at read time), so replay
-    idempotency is structural; the overwrite mode rides on the writer
-    (a static-mode session must not truncate other batches' deltas —
-    same review-r5c contract as tile_ingest)."""
+    """One micro-batch: write the batch's changes as its own DELTA
+    partition, replacing only that partition. No state read (merge
+    happens at read time), so replay idempotency is structural,
+    whatever the session's overwrite mode."""
     cols = [*base_columns, seq_col, op_col]
-    batch_df.select(*cols).withColumn("_batch_id", F.lit(batch_id)).write.partitionBy(
-        "_batch_id"
-    ).option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
-        _deltas_path(state_dir)
+    write_partitioned(
+        batch_df.select(*cols).withColumn("_batch_id", F.lit(batch_id)),
+        _deltas_path(state_dir),
     )
 
 
@@ -135,14 +138,11 @@ def read_snapshot(
     the same mechanics as an Iceberg snapshot read. Missing delta
     directory (no drain yet) reads as the base unchanged."""
     payload = [c for c in base.columns]
-    try:
-        deltas = spark.read.schema(_delta_schema(base, seq_col, op_col)).parquet(
-            _deltas_path(state_dir)
-        )
-    except Exception as e:  # PATH_NOT_FOUND / AnalysisException pre-4.0
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return base
-        raise
+    deltas = read_if_exists(
+        spark, _deltas_path(state_dir), _delta_schema(base, seq_col, op_col)
+    )
+    if deltas is None:
+        return base
     if as_of_batch is not None:
         deltas = deltas.filter(F.col("_batch_id") <= as_of_batch)
     tagged_base = base.select(
@@ -209,14 +209,16 @@ def cdc_upsert_available_now(
     """Drain a bounded change stream into delta partitions. Restart
     skips processed files via the stream checkpoint; replays overwrite
     their own partition with an identical recomputation."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df, batch_id, state_dir, base_columns, seq_col, op_col
-        )
-
-    from osm2gtfs_spark.streaming.drain import drain_available_now
-
-    drain_available_now(stream_df, _process, checkpoint_dir, timeout_sec, "cdc")
+    process = partial(
+        process_batch,
+        state_dir=state_dir,
+        base_columns=base_columns,
+        seq_col=seq_col,
+        op_col=op_col,
+    )
+    drain_available_now(
+        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec, "cdc"
+    )
 
 
 def snapshot_changes(

@@ -1,7 +1,7 @@
-"""Shared AvailableNow drain protocol for the foreachBatch ingest
-family (tile partials, CDC deltas, near-dup admits) — one copy of the
-trigger/timeout/stop contract (review r5c: two verbatim copies had
-already diverged risk-wise).
+"""The one AvailableNow drain in the engine: every bounded streaming
+run goes through :func:`drain_available_now` — the foreachBatch ingests
+(tile partials, CDC deltas, near-dup admits) and the memory-sink runs
+of :func:`osm2gtfs_spark.streaming.events.run_available_now` alike.
 
 A timed-out drain must NOT return as if complete: the caller would
 read half-written state or start a second query against the same
@@ -12,22 +12,25 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def drain_available_now(
     stream_df: DataFrame,
-    process: Callable[[DataFrame, int], None],
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
     checkpoint_dir: str,
     timeout_sec: int,
     label: str,
 ) -> None:
+    """Drain ``stream_df`` once through the writer ``sink`` configures
+    (its foreachBatch body, or its format and output mode), resuming
+    from ``checkpoint_dir``."""
     q = (
-        stream_df.writeStream.foreachBatch(process)
+        sink(stream_df.writeStream)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
+    if not q.awaitTermination(timeout_sec):
         q.stop()
         raise TimeoutError(f"{label} drain exceeded {timeout_sec}s; stopped")

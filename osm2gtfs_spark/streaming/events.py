@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from osm2gtfs_spark.streaming.drain import drain_available_now
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -217,25 +219,18 @@ def dedup_stream(
 
 
 def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str) -> None:
-    """Drain the bounded source into a memory sink (test/bench helper).
-    A drain that times out (120 s) stops the query and raises
-    ``TimeoutError``, as :func:`osm2gtfs_spark.streaming.drain.drain_available_now`
-    does."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(
-            "append"
-            if ("session" in query_name or "dedup" in query_name)
-            else "complete"
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Drain the bounded source into the memory table ``query_name``
+    (test/bench helper) through
+    :func:`osm2gtfs_spark.streaming.drain.drain_available_now`, with a
+    120 s timeout."""
+    mode = "append" if ("session" in query_name or "dedup" in query_name) else "complete"
+    drain_available_now(
+        stream_df,
+        lambda w: w.format("memory").queryName(query_name).outputMode(mode),
+        checkpoint_dir,
+        120,
+        query_name,
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(f"{query_name} drain exceeded 120s; stopped")
 
 
 def sessionize_batch(

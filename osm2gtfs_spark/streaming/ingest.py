@@ -18,9 +18,10 @@ accumulating on-disk state:
   the candidate-id filter prunes the scan itself.
 
 Exactly-once effect: ``foreachBatch`` is at-least-once, so both state
-writes are partitioned by ``_batch_id`` under dynamic partition
-overwrite — a replayed batch overwrites its own partition instead of
-appending twice (the standard idempotent-sink recipe).
+writes are partitioned by ``_batch_id`` and replace only their own
+partition (:func:`~osm2gtfs_spark.sources.checkpoint.write_partitioned`)
+— a replayed batch overwrites its own partition instead of appending
+twice (the standard idempotent-sink recipe).
 
 Scale: per batch, work = band join of the batch against the persisted
 band table (equi join on (band_idx, band_hash)) + verify on candidate
@@ -31,6 +32,7 @@ compact artifact (k/band_size hashes per doc, no text).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +40,7 @@ from pyspark.sql import types as T
 
 from osm2gtfs_spark.operators import dedup as DD
 from osm2gtfs_spark.session import materialize
+from osm2gtfs_spark.sources.checkpoint import read_if_exists, write_partitioned
 from osm2gtfs_spark.streaming.drain import drain_available_now
 
 
@@ -57,28 +60,16 @@ def seed_state(
     doc_id: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Write the base corpus's band table as batch −1 (run once per
-    corpus snapshot; the stream then only ever appends)."""
-    DD.minhash_bands(doc_id, text_col, base_corpus, k, band_size).withColumn(
-        "_batch_id", F.lit(-1)
-    ).write.partitionBy("_batch_id").mode("overwrite").parquet(_bands_path(state_dir))
-
-
-def _read_state(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame | None:
-    """Read a state table with an EXPLICIT schema, returning None when
-    the path does not exist yet. Filesystem-agnostic (review r5: an
-    os.path.exists gate is always False on HDFS/S3 and would silently
-    drop admitted text from the verify corpus), and schema-explicit so
-    a directory whose every partition wrote zero rows (only _SUCCESS)
-    reads as an empty frame instead of failing parquet inference."""
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except Exception as e:  # PATH_NOT_FOUND / AnalysisException pre-4.0
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+    """Write the base corpus's band table as batch −1, replacing the
+    whole band table (run once per corpus snapshot; the stream then
+    only ever appends)."""
+    write_partitioned(
+        DD.minhash_bands(doc_id, text_col, base_corpus, k, band_size).withColumn(
+            "_batch_id", F.lit(-1)
+        ),
+        _bands_path(state_dir),
+        whole_table=True,
+    )
 
 
 def _admitted_schema(base_corpus: DataFrame, doc_id: str, text_col: str) -> T.StructType:
@@ -105,12 +96,11 @@ def read_admitted(
     text_col: str = "text",
 ) -> DataFrame | None:
     """The admitted-docs state table (None before the first drain).
-    Pass ``base_corpus`` for a filesystem-agnostic, inference-free read
-    (its schema types the state); without it, local-path inference."""
-    p = _admitted_path(state_dir)
-    if base_corpus is not None:
-        return _read_state(spark, p, _admitted_schema(base_corpus, doc_id, text_col))
-    return spark.read.parquet(p) if os.path.exists(p) else None
+    Pass ``base_corpus`` to type the read with its schema; without it
+    the schema is inferred, which fails while no batch has admitted a
+    row."""
+    schema = None if base_corpus is None else _admitted_schema(base_corpus, doc_id, text_col)
+    return read_if_exists(spark, _admitted_path(state_dir), schema)
 
 
 def process_batch(
@@ -128,18 +118,17 @@ def process_batch(
     """One micro-batch admission round (the foreachBatch body;
     module-level so replay idempotency is directly testable).
 
-    Requires ``spark.sql.sources.partitionOverwriteMode=dynamic``. A
-    REPLAYED batch (same batch_id) excludes its own prior partition
-    from both state reads (review r5): checking a replay against its
-    own previous output would reject everything it admitted last time
-    — worse, a doc whose buckets are hot would slip the candidate
-    stage and the overwrite would replace the partition with a strict
-    subset. Excluding the partition reproduces the pre-batch state, so
-    the recomputation — and the overwrite — is bit-identical."""
+    Both state writes replace only this batch's partition, whatever the
+    session's overwrite mode. A REPLAYED batch (same batch_id) excludes
+    its own prior partition from both state reads: checking a replay
+    against its own previous output would reject everything it
+    admitted last time — worse, a doc whose buckets are hot would slip
+    the candidate stage and the overwrite would replace the partition
+    with a strict subset. Excluding the partition reproduces the
+    pre-batch state, so the recomputation — and the overwrite — is
+    bit-identical."""
     s = batch_df.sparkSession
-    admitted_prev = _read_state(
-        s, _admitted_path(state_dir), _admitted_schema(base_corpus, doc_id, text_col)
-    )
+    admitted_prev = read_admitted(s, state_dir, base_corpus, doc_id, text_col)
     if admitted_prev is not None:
         admitted_prev = admitted_prev.filter(F.col("_batch_id") != batch_id)
     corpus_text = (
@@ -150,7 +139,7 @@ def process_batch(
         )
     )
     cb = (
-        _read_state(s, _bands_path(state_dir), _bands_schema(base_corpus, doc_id))
+        read_if_exists(s, _bands_path(state_dir), _bands_schema(base_corpus, doc_id))
         .filter(F.col("_batch_id") != batch_id)
         .select(doc_id, "band_idx", "band_hash")
     )
@@ -173,13 +162,14 @@ def process_batch(
         max_bucket=max_bucket,
         corpus_bands=cb,
     ), eager=True)
-    admitted.withColumn("_batch_id", F.lit(batch_id)).write.partitionBy(
-        "_batch_id"
-    ).mode("overwrite").parquet(_admitted_path(state_dir))
-    DD.minhash_bands(doc_id, text_col, admitted, k, band_size).withColumn(
-        "_batch_id", F.lit(batch_id)
-    ).write.partitionBy("_batch_id").mode("overwrite").parquet(
-        _bands_path(state_dir)
+    write_partitioned(
+        admitted.withColumn("_batch_id", F.lit(batch_id)), _admitted_path(state_dir)
+    )
+    write_partitioned(
+        DD.minhash_bands(doc_id, text_col, admitted, k, band_size).withColumn(
+            "_batch_id", F.lit(batch_id)
+        ),
+        _bands_path(state_dir),
     )
 
 
@@ -199,32 +189,21 @@ def neardup_ingest_available_now(
     """Drain the bounded source, admitting each micro-batch against
     base corpus + previously admitted docs. Requires :func:`seed_state`
     to have been run for ``state_dir``. Restartable: the checkpoint
-    skips already-processed files, and batch-partitioned dynamic
-    overwrite makes replays idempotent — a replayed batch EXCLUDES its
-    own prior partition from the state reads (review r5: checking a
-    replay against its own previous output would reject everything it
-    admitted last time and overwrite the partition with a subset), so
-    it sees exactly the pre-batch state and recomputes the identical
-    result."""
-    spark = stream_df.sparkSession
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df,
-            batch_id,
-            base_corpus,
-            state_dir,
-            k=k,
-            band_size=band_size,
-            jaccard_threshold_permille=jaccard_threshold_permille,
-            max_bucket=max_bucket,
-            doc_id=doc_id,
-            text_col=text_col,
-        )
-
-    try:
-        drain_available_now(stream_df, _process, checkpoint_dir, timeout_sec, "neardup ingest")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    skips already-processed files, and a replayed batch rewrites only
+    its own partitions from exactly the pre-batch state
+    (:func:`process_batch`), so it recomputes the identical result."""
+    process = partial(
+        process_batch,
+        base_corpus=base_corpus,
+        state_dir=state_dir,
+        k=k,
+        band_size=band_size,
+        jaccard_threshold_permille=jaccard_threshold_permille,
+        max_bucket=max_bucket,
+        doc_id=doc_id,
+        text_col=text_col,
+    )
+    drain_available_now(
+        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec,
+        "neardup ingest",
+    )

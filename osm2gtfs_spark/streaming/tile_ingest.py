@@ -7,7 +7,8 @@ Design: tile counts are ADDITIVE, so unlike the near-dup ingest
 accumulated state) each micro-batch is self-contained — it aggregates
 its OWN points into pyramid partials
 (:func:`~osm2gtfs_spark.operators.spatial.cell_pyramid` over the batch)
-and writes them under ``_batch_id`` with dynamic partition overwrite.
+and writes them as its own ``_batch_id`` partition
+(:func:`~osm2gtfs_spark.sources.checkpoint.write_partitioned`).
 That makes replay idempotency trivial (a replayed batch overwrites its
 own partition with the identical recomputation — no self-exclusion
 dance needed), the per-batch write is the per-partition lineage log the
@@ -25,6 +26,7 @@ additive metrics), expressed with the engine's own operators.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +34,8 @@ from pyspark.sql import types as T
 
 from osm2gtfs_spark.functions.geo import cell_id
 from osm2gtfs_spark.operators.spatial import cell_pyramid
+from osm2gtfs_spark.sources.checkpoint import read_if_exists, write_partitioned
+from osm2gtfs_spark.streaming.drain import drain_available_now
 
 _TILES_SCHEMA = T.StructType(
     [
@@ -57,52 +61,39 @@ def process_batch(
     lon_col: str = "lon",
 ) -> None:
     """One micro-batch: aggregate the batch's points to the finest
-    level, ladder them into pyramid partials, write the partials as
-    this batch's partition (dynamic overwrite → idempotent replay).
-    Module-level so replay idempotency is directly testable.
-
-    The dynamic overwrite mode is set PER WRITER (review r5c), not via
-    the session conf: this function is a public replay entry point,
-    and under the session default ``static`` a bare mode("overwrite")
-    would truncate the ENTIRE tiles directory — silently destroying
-    every other batch's partials — instead of replacing just this
-    batch's partition."""
+    level, ladder them into pyramid partials, and write the partials as
+    this batch's partition, replacing only that partition (idempotent
+    replay, whatever the session's overwrite mode). Module-level so
+    replay idempotency is directly testable."""
     counts = batch_df.groupBy(
         cell_id(lat_col, lon_col, res_fine).alias("cell_id")
     ).agg(F.count(F.lit(1)).alias("n"))
     partials = cell_pyramid(counts, res_fine=res_fine, res_coarse=res_coarse)
-    partials.withColumn("_batch_id", F.lit(batch_id)).write.partitionBy(
-        "_batch_id"
-    ).option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
-        _tiles_path(state_dir)
-    )
+    write_partitioned(partials.withColumn("_batch_id", F.lit(batch_id)), _tiles_path(state_dir))
 
 
 def read_pyramid(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The CURRENT pyramid: one merging aggregate over all partials
-    (None before the first drain). Schema-explicit, filesystem-agnostic
-    (no os.path.exists — false on S3/HDFS; zero-row partition dirs read
-    as empty frames instead of failing inference)."""
-    try:
-        partials = spark.read.schema(_TILES_SCHEMA).parquet(_tiles_path(state_dir))
-    except Exception as e:  # PATH_NOT_FOUND / AnalysisException pre-4.0
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+    (None before the first drain). Schema-explicit and
+    filesystem-agnostic (zero-row partition dirs read as empty frames)."""
+    partials = read_if_exists(spark, _tiles_path(state_dir), _TILES_SCHEMA)
+    if partials is None:
+        return None
     return partials.groupBy("res", "cell_id").agg(F.sum("n").alias("n"))
 
 
 def compact_state(spark: SparkSession, state_dir: str, snapshot_dir: str) -> None:
     """Fold every partial into one snapshot table at ``snapshot_dir``
     (a NEW directory — never rewrite live state in place on an object
-    store). A long-running feed points new ingest at a fresh state dir
-    seeded by the snapshot; reads union both."""
+    store), replacing whatever table was there. A long-running feed
+    points new ingest at a fresh state dir seeded by the snapshot;
+    reads union both."""
     merged = read_pyramid(spark, state_dir)
     if merged is None:
         raise ValueError(f"no tile state under {state_dir}")
-    merged.withColumn("_batch_id", F.lit(-1)).write.partitionBy(
-        "_batch_id"
-    ).mode("overwrite").parquet(_tiles_path(snapshot_dir))
+    write_partitioned(
+        merged.withColumn("_batch_id", F.lit(-1)), _tiles_path(snapshot_dir), whole_table=True
+    )
 
 
 def tile_ingest_available_now(
@@ -118,22 +109,15 @@ def tile_ingest_available_now(
     """Drain the bounded point source, writing per-batch pyramid
     partials. Restartable: the stream checkpoint skips processed files
     and a replayed batch overwrites its own partition with an identical
-    recomputation (additive partials need no state read at all). The
-    dynamic overwrite mode rides on each writer (process_batch), so no
-    session conf is mutated — concurrent writes in a shared session
-    keep their own overwrite semantics."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df,
-            batch_id,
-            state_dir,
-            res_fine=res_fine,
-            res_coarse=res_coarse,
-            lat_col=lat_col,
-            lon_col=lon_col,
-        )
-
-    from osm2gtfs_spark.streaming.drain import drain_available_now
-
-    drain_available_now(stream_df, _process, checkpoint_dir, timeout_sec,
-                        "tile ingest")
+    recomputation (additive partials need no state read at all)."""
+    process = partial(
+        process_batch,
+        state_dir=state_dir,
+        res_fine=res_fine,
+        res_coarse=res_coarse,
+        lat_col=lat_col,
+        lon_col=lon_col,
+    )
+    drain_available_now(
+        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec, "tile ingest"
+    )

@@ -11,25 +11,9 @@ sequential batch replay, and restart/idempotency."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from osm2gtfs_spark.operators import dedup as DD
 from osm2gtfs_spark.streaming import ingest as ING
-
-
-@pytest.fixture(name="dyn_mode")
-def _dyn_mode_fixture(spark):
-    """Set dynamic partition-overwrite for one test and RESTORE after —
-    an unrestored set leaks into later tests asserting the static
-    default (found by the full-suite run)."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-
-    def _set(s):
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    yield _set
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
 
 
 def _doc(i: int) -> str:
@@ -91,7 +75,7 @@ def test_neardup_ingest_matches_sequential_replay(spark, tmp_path):
     assert {100, 101, 102, 103, 104, 200, 201, 202, 250, 300} <= got
 
 
-def test_neardup_batch_replay_is_idempotent(spark, tmp_path, dyn_mode):
+def test_neardup_batch_replay_is_idempotent(spark, tmp_path):
     """Review r5: foreachBatch is at-least-once — a REPLAYED batch
     (same batch_id, state writes already committed) must reproduce the
     identical partitions, not re-check against its own prior output
@@ -101,7 +85,6 @@ def test_neardup_batch_replay_is_idempotent(spark, tmp_path, dyn_mode):
     base = spark.createDataFrame([(0, _doc(0))], "doc_id long, text string")
     state = str(tmp_path / "state")
     ING.seed_state(base, state)
-    dyn_mode(spark)
     b1 = spark.createDataFrame(
         [(10, _doc(10)), (11, _doc(11)), (12, _doc(0))], "doc_id long, text string"
     )
@@ -119,20 +102,48 @@ def test_neardup_batch_replay_is_idempotent(spark, tmp_path, dyn_mode):
     assert final == {10, 11}, "dup of a batch-0 admit must be rejected in batch 1"
 
 
-def test_neardup_ingest_empty_first_batch_state_readable(spark, tmp_path, dyn_mode):
+def test_neardup_ingest_empty_first_batch_state_readable(spark, tmp_path):
     """Review r5: a first batch that admits NOTHING creates the state
     dir with only _SUCCESS; subsequent batches must read it as empty
     (explicit schema), not crash parquet inference."""
     base = spark.createDataFrame([(0, _doc(0))], "doc_id long, text string")
     state = str(tmp_path / "state")
     ING.seed_state(base, state)
-    dyn_mode(spark)
     all_dups = spark.createDataFrame([(10, _doc(0))], "doc_id long, text string")
     ING.process_batch(all_dups, 0, base, state)  # admits nothing
     novel = spark.createDataFrame([(20, _doc(20))], "doc_id long, text string")
     ING.process_batch(novel, 1, base, state)  # must not raise
     got = {r.doc_id for r in ING.read_admitted(spark, state, base).collect()}
     assert got == {20}
+
+
+def test_neardup_replay_is_idempotent_under_static_session_mode(spark, tmp_path):
+    # both state writes set their own overwrite mode: under the session
+    # default 'static' a bare overwrite would truncate every other
+    # batch's admits and bands, the seeded base-corpus bands included
+    base = spark.createDataFrame([(0, _doc(0))], "doc_id long, text string")
+    state = str(tmp_path / "state")
+    b0 = spark.createDataFrame([(10, _doc(10)), (11, _doc(0))], "doc_id long, text string")
+    b1 = spark.createDataFrame([(20, _doc(20))], "doc_id long, text string")
+    # FORCE static for the duration (other suite tests may leave the
+    # shared session at dynamic): the per-writer option must win
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    try:
+        ING.seed_state(base, state)
+
+        def snapshot():
+            admitted = {r.doc_id for r in ING.read_admitted(spark, state, base).collect()}
+            bands = spark.read.parquet(f"{state}/bands").select("_batch_id").distinct()
+            return admitted, {r._batch_id for r in bands.collect()}
+
+        ING.process_batch(b0, 0, base, state)
+        ING.process_batch(b1, 1, base, state)
+        once = snapshot()
+        ING.process_batch(b0, 0, base, state)  # failure replay of batch 0
+        assert snapshot() == once == ({10, 20}, {-1, 0, 1})
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def test_neardup_ingest_restart_is_idempotent(spark, tmp_path):
