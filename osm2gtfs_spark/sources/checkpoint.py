@@ -50,18 +50,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_partitioned(
-    df: DataFrame, path: str, part_col: str = "_batch_id", whole_table: bool = False
-) -> None:
+def write_partitioned(df: DataFrame, path: str, part_col: str = "_batch_id") -> None:
     """Write ``df`` as a parquet table hive-partitioned by ``part_col``,
     replacing only the partitions whose values are present in ``df``:
     a replayed batch rewrites its own partition and leaves every other
-    one in place. ``whole_table=True`` replaces the whole table instead.
-    The mode is this writer's own option, so the session conf never
-    decides what an overwrite deletes."""
-    df.write.partitionBy(part_col).option(
-        "partitionOverwriteMode", "static" if whole_table else "dynamic"
-    ).mode("overwrite").parquet(path)
+    one in place. The mode is this writer's own option, so the session
+    conf never decides what an overwrite deletes."""
+    df.write.partitionBy(part_col).option("partitionOverwriteMode", "dynamic").mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def read_if_exists(
@@ -82,12 +79,12 @@ def read_if_exists(
         raise
 
 
-def _dump_json(path: str, obj: dict) -> None:
+def _dump_json(path: str, obj: dict, indent: int | None = 1) -> None:
     """Write ``obj`` to ``path`` atomically: a reader sees the old file
     or the new one, never a half-written record."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1)
+        json.dump(obj, f, indent=indent)
     os.replace(tmp, path)
 
 
@@ -236,7 +233,7 @@ class CheckpointCatalog:
         coarse tile cell, non-null); each partition value commits
         independently — its data directory is written first
         (:func:`write_partitioned`, so a half-written partition from a
-        killed job is replaced idempotently), then its commit record
+        killed job is replaced idempotently), then its one-line commit record
         (value, rows, checksum, snapshot_id) lands in the partition log.
         On restart only the values missing from the log are computed:
         the plan is filtered to the todo set, so completed tiles are
@@ -244,9 +241,12 @@ class CheckpointCatalog:
         """
         done = self.committed_partitions(stage)
         df = fn()
-        todo_df = (
-            df.filter(~F.col(part_col).cast("string").isin(*done.keys())) if done else df
-        )
+        if done:
+            todo_df = df.filter(
+                ~F.col(part_col).cast("string").isin(*done.keys())
+            )
+        else:
+            todo_df = df
         data = self._data_path(stage)
         todo_vals = [
             str(r[0])
@@ -281,13 +281,15 @@ class CheckpointCatalog:
                 # '..' etc. cannot escape the partlog dir; resume reads
                 # the value back from the record body, not the filename
                 safe = urllib.parse.quote(str(r._v), safe="")
-                _dump_json(os.path.join(self._partlog_dir(stage), f"{safe}.json"), rec)
+                _dump_json(
+                    os.path.join(self._partlog_dir(stage), f"{safe}.json"), rec, indent=None
+                )
         if todo_vals and os.path.exists(self._manifest_path(stage)):
             # a previous run committed the zero-row marker; real data
             # exists now, so the marker manifest is stale — drop it
             # (partitioned stages track completion in the partlog)
             os.remove(self._manifest_path(stage))
-        if not os.path.exists(data) and not os.path.exists(self._manifest_path(stage)):
+        if not os.path.exists(data):
             # first run with an empty stage output (ADVICE r3): commit a
             # zero-row marker manifest so the stage is readable by other
             # callers (catalog.read) and visible in metrics() like every
@@ -296,6 +298,8 @@ class CheckpointCatalog:
             # a PREVIOUS empty run is kept as-is (review r4): committed
             # snapshot ids must stay stable across plain re-runs, the
             # same contract non-empty partitions honor via the partlog.
+            if os.path.exists(self._manifest_path(stage)):
+                return self.read(stage)
             os.makedirs(self._dir(stage), exist_ok=True)
             manifest = {
                 "stage": stage,
@@ -309,4 +313,5 @@ class CheckpointCatalog:
                 "created_unix": time.time(),
             }
             _dump_json(self._manifest_path(stage), manifest)
+            return self.read(stage)
         return self.read(stage)

@@ -217,7 +217,7 @@ def cdc_upsert_available_now(
         op_col=op_col,
     )
     drain_available_now(
-        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec, "cdc"
+        stream_df.writeStream.foreachBatch(process), checkpoint_dir, timeout_sec, "cdc"
     )
 
 

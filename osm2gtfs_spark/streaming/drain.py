@@ -9,28 +9,23 @@ checkpoint, so the query is stopped and a TimeoutError raised."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
 
 def drain_available_now(
-    stream_df: DataFrame,
-    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    writer: DataStreamWriter,
     checkpoint_dir: str,
     timeout_sec: int,
     label: str,
 ) -> None:
-    """Drain ``stream_df`` once through the writer ``sink`` configures
-    (its foreachBatch body, or its format and output mode), resuming
-    from ``checkpoint_dir``."""
+    """Drain the configured ``writer`` (its foreachBatch body, or its
+    format and output mode) once, resuming from ``checkpoint_dir``."""
     q = (
-        sink(stream_df.writeStream)
-        .option("checkpointLocation", checkpoint_dir)
+        writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
+    finished = q.awaitTermination(timeout_sec)
+    if not finished:
         q.stop()
         raise TimeoutError(f"{label} drain exceeded {timeout_sec}s; stopped")

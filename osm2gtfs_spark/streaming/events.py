@@ -223,10 +223,14 @@ def run_available_now(stream_df: DataFrame, query_name: str, checkpoint_dir: str
     (test/bench helper) through
     :func:`osm2gtfs_spark.streaming.drain.drain_available_now`, with a
     120 s timeout."""
-    mode = "append" if ("session" in query_name or "dedup" in query_name) else "complete"
     drain_available_now(
-        stream_df,
-        lambda w: w.format("memory").queryName(query_name).outputMode(mode),
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(
+            "append"
+            if ("session" in query_name or "dedup" in query_name)
+            else "complete"
+        ),
         checkpoint_dir,
         120,
         query_name,

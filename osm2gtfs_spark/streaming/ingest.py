@@ -60,15 +60,13 @@ def seed_state(
     doc_id: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Write the base corpus's band table as batch −1, replacing the
-    whole band table (run once per corpus snapshot; the stream then
-    only ever appends)."""
+    """Write the base corpus's band table as batch −1 (run once per
+    corpus snapshot; the stream then only ever appends)."""
     write_partitioned(
         DD.minhash_bands(doc_id, text_col, base_corpus, k, band_size).withColumn(
             "_batch_id", F.lit(-1)
         ),
         _bands_path(state_dir),
-        whole_table=True,
     )
 
 
@@ -138,11 +136,10 @@ def process_batch(
             admitted_prev.select(doc_id, text_col)
         )
     )
-    cb = (
-        read_if_exists(s, _bands_path(state_dir), _bands_schema(base_corpus, doc_id))
-        .filter(F.col("_batch_id") != batch_id)
-        .select(doc_id, "band_idx", "band_hash")
-    )
+    bands = read_if_exists(s, _bands_path(state_dir), _bands_schema(base_corpus, doc_id))
+    if bands is None:
+        raise ValueError(f"no band table under {state_dir}; run seed_state first")
+    cb = bands.filter(F.col("_batch_id") != batch_id).select(doc_id, "band_idx", "band_hash")
     # materialize AND sever lineage BEFORE writing: the plan reads the
     # very paths the writes below mutate. A persist() is not enough —
     # the first write's refreshByPath invalidates any cached plan whose
@@ -204,6 +201,5 @@ def neardup_ingest_available_now(
         text_col=text_col,
     )
     drain_available_now(
-        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec,
-        "neardup ingest",
+        stream_df.writeStream.foreachBatch(process), checkpoint_dir, timeout_sec, "neardup ingest"
     )

@@ -85,15 +85,12 @@ def read_pyramid(spark: SparkSession, state_dir: str) -> DataFrame | None:
 def compact_state(spark: SparkSession, state_dir: str, snapshot_dir: str) -> None:
     """Fold every partial into one snapshot table at ``snapshot_dir``
     (a NEW directory — never rewrite live state in place on an object
-    store), replacing whatever table was there. A long-running feed
-    points new ingest at a fresh state dir seeded by the snapshot;
-    reads union both."""
+    store). A long-running feed points new ingest at a fresh state dir
+    seeded by the snapshot; reads union both."""
     merged = read_pyramid(spark, state_dir)
     if merged is None:
         raise ValueError(f"no tile state under {state_dir}")
-    write_partitioned(
-        merged.withColumn("_batch_id", F.lit(-1)), _tiles_path(snapshot_dir), whole_table=True
-    )
+    write_partitioned(merged.withColumn("_batch_id", F.lit(-1)), _tiles_path(snapshot_dir))
 
 
 def tile_ingest_available_now(
@@ -119,5 +116,5 @@ def tile_ingest_available_now(
         lon_col=lon_col,
     )
     drain_available_now(
-        stream_df, lambda w: w.foreachBatch(process), checkpoint_dir, timeout_sec, "tile ingest"
+        stream_df.writeStream.foreachBatch(process), checkpoint_dir, timeout_sec, "tile ingest"
     )

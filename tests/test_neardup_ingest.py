@@ -11,6 +11,7 @@ sequential batch replay, and restart/idempotency."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from osm2gtfs_spark.operators import dedup as DD
 from osm2gtfs_spark.streaming import ingest as ING
@@ -144,6 +145,29 @@ def test_neardup_replay_is_idempotent_under_static_session_mode(spark, tmp_path)
         assert snapshot() == once == ({10, 20}, {-1, 0, 1})
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def test_neardup_reseed_keeps_admitted_batches_bands(spark, tmp_path):
+    # re-seeding replaces only the base-corpus partition: the bands of
+    # admitted docs stay, so a near-dup of one is still rejected
+    base = spark.createDataFrame([(0, _doc(0))], "doc_id long, text string")
+    state = str(tmp_path / "state")
+    admit = spark.createDataFrame([(10, _doc(10))], "doc_id long, text string")
+    near_dup = spark.createDataFrame([(11, _doc(10))], "doc_id long, text string")
+    ING.seed_state(base, state)
+    ING.process_batch(admit, 0, base, state)
+    ING.seed_state(base, state)
+    bands = spark.read.parquet(f"{state}/bands").select("_batch_id").distinct()
+    assert {r._batch_id for r in bands.collect()} == {-1, 0}
+    ING.process_batch(near_dup, 1, base, state)
+    assert {r.doc_id for r in ING.read_admitted(spark, state, base).collect()} == {10}
+
+
+def test_neardup_process_batch_without_seed_raises(spark, tmp_path):
+    base = spark.createDataFrame([(0, _doc(0))], "doc_id long, text string")
+    batch = spark.createDataFrame([(10, _doc(10))], "doc_id long, text string")
+    with pytest.raises(ValueError, match="seed_state"):
+        ING.process_batch(batch, 0, base, str(tmp_path / "state"))
 
 
 def test_neardup_ingest_restart_is_idempotent(spark, tmp_path):

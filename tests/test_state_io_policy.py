@@ -8,8 +8,8 @@ An AST scan of ``osm2gtfs_spark/`` that fails when:
 - the overwrite-mode key or the missing-path error condition appears
   outside ``sources/checkpoint.write_partitioned`` and
   ``sources/checkpoint.read_if_exists``;
-- ``writeStream`` or ``awaitTermination`` appears outside
-  ``streaming/drain.py``, so every bounded drain keeps the one
+- a ``trigger(availableNow=...)`` call or ``awaitTermination`` appears
+  outside ``streaming/drain.py``, so every bounded drain keeps the one
   stop-and-raise timeout contract.
 """
 
@@ -26,7 +26,6 @@ STATE_MARKERS = {
     "PATH_NOT_FOUND": ("sources/checkpoint.py", "read_if_exists"),
 }
 DRAIN_FILE = "streaming/drain.py"
-DRAIN_ATTRS = {"writeStream", "awaitTermination"}
 
 
 def _nodes():
@@ -61,11 +60,21 @@ def test_state_io_and_drains_have_one_home():
                     seen.add(marker)
                     if (rel, func) != home:
                         stray.append(f"{marker} at {where}")
-        if isinstance(node, ast.Attribute) and node.attr in DRAIN_ATTRS:
-            seen.add(node.attr)
+        drain_site = None
+        if isinstance(node, ast.Attribute) and node.attr == "awaitTermination":
+            drain_site = "awaitTermination"
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "trigger"
+            and any(kw.arg == "availableNow" for kw in node.keywords)
+        ):
+            drain_site = "trigger(availableNow=...)"
+        if drain_site:
+            seen.add(drain_site)
             if rel != DRAIN_FILE:
-                stray.append(f"{node.attr} at {where}")
+                stray.append(f"{drain_site} at {where}")
     assert conf_sets == []
     assert stray == []
     # the scan is not vacuous: it sees every allowed site
-    assert seen == set(STATE_MARKERS) | DRAIN_ATTRS
+    assert seen == set(STATE_MARKERS) | {"awaitTermination", "trigger(availableNow=...)"}
