@@ -298,21 +298,35 @@ def in_bbox(lat, lon, south: float, west: float, north: float, east: float) -> C
     return lat.between(south, north) & lon.between(west, east)
 
 
-def spherical_centroid_aggs(lat, lon) -> dict[str, Column]:
+def spherical_centroid_aggs(lat, lon, pos) -> dict[str, Column]:
     """Aggregate expressions for the unit-vector (spherical) centroid.
 
     Reference: ``Helper.get_center_of_nodes`` (``helper.py:28-54``) —
     mean of 3-D unit vectors, projected back with atan2. Usage::
 
-        df.groupBy(key).agg(*spherical_centroid_aggs('lat','lon').values())
+        df.groupBy(key).agg(*spherical_centroid_aggs('lat','lon','pos').values())
           .select(centroid_lat('cx','cy','cz'), centroid_lon('cx','cy'))
+
+    Each component is summed in ``pos`` order (the member position), as
+    the reference sums its node list, never in the order shuffle blocks
+    arrive: a double sum depends on its order, so an ``avg`` moves a
+    centroid's last bit with the input's partitioning. Rows with a NULL
+    coordinate are skipped, as ``avg`` skips them.
     """
     lat, lon = _as_col(lat), _as_col(lon)
-    return {
-        "cx": F.avg(F.cos(F.radians(lat)) * F.cos(F.radians(lon))).alias("cx"),
-        "cy": F.avg(F.cos(F.radians(lat)) * F.sin(F.radians(lon))).alias("cy"),
-        "cz": F.avg(F.sin(F.radians(lat))).alias("cz"),
-    }
+    rlat, rlon = F.radians(lat), F.radians(lon)
+    unit = F.struct(
+        _as_col(pos).alias("p"),
+        (F.cos(rlat) * F.cos(rlon)).alias("x"),
+        (F.cos(rlat) * F.sin(rlon)).alias("y"),
+        F.sin(rlat).alias("z"),
+    )
+    pts = F.array_sort(F.collect_list(F.when(lat.isNotNull() & lon.isNotNull(), unit)))
+
+    def mean(f: str) -> Column:
+        return F.aggregate(pts, F.lit(0.0), lambda acc, e: acc + e[f]) / F.size(pts)
+
+    return {c: mean(f).alias(c) for c, f in (("cx", "x"), ("cy", "y"), ("cz", "z"))}
 
 
 def centroid_lat(cx, cy, cz) -> Column:

@@ -10,7 +10,7 @@ Scale shape: shuffle keyed by time bucket; an interval costs
 ceil(span/bucket)+1 rows, so pick `bucket_secs` near the typical span.
 Hot buckets (event storms) are ordinary group skew — AQE skew-join
 splits them, or salt the bucket. This is the temporal analog of the
-cell-ring spatial join (operators/spatial.knn_snap).
+cell-ring spatial join (operators/spatial.ring_candidates).
 """
 
 from __future__ import annotations

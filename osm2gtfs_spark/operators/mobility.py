@@ -102,25 +102,21 @@ def space_time_match(
     ``window_ms`` milliseconds in TIME — the spatiotemporal join that
     attributes an incident/reading to the vehicle pass that caused it.
 
-    Candidates are pruned on BOTH axes before any geometry math: the
-    cell equi join bounds space (event explodes its ``k_ring``; points
-    carry their single cell) and an integer time-bucket equality bounds
-    time — each event probes its own and the two adjacent buckets of
-    width ``window_ms``, so a candidate pair always shares a (cell,
-    bucket) key and the shuffle is keyed by that composite, never a
-    cross join. The winner is a min-struct argmin on (d², |dt|, trace,
-    seq) — floats order, integers break ties, the emitted columns are
-    integers only (oracle-exact)."""
-    from osm2gtfs_spark.functions.geo import cell_ring
+    Candidates are pruned on BOTH axes before any geometry math:
+    :func:`~osm2gtfs_spark.operators.spatial.ring_candidates` bounds
+    space (event explodes its ``k_ring``; points carry their single
+    cell) with an integer time-bucket equality as the extra join key —
+    each event probes its own and the two adjacent buckets of width
+    ``window_ms``, so a candidate pair always shares a (cell, bucket)
+    key and the shuffle is keyed by that composite, never a cross join.
+    The winner is a min-struct argmin on (d², |dt|, trace, seq) —
+    floats order, integers break ties, the emitted columns are integers
+    only (oracle-exact)."""
+    from osm2gtfs_spark.operators.spatial import argmin_struct, ring_candidates
 
-    ev_epoch = F.unix_millis(F.col("ts").cast("timestamp"))
-    pt_epoch = F.unix_millis(F.col("ts").cast("timestamp"))
+    epoch = F.unix_millis(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(event_key),
-        F.col("lat").alias("_e_lat"),
-        F.col("lon").alias("_e_lon"),
-        ev_epoch.alias("_e_t"),
-        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_cell"),
+        F.col(event_key), "lat", "lon", epoch.alias("_e_t")
     ).withColumn(
         "_bucket",
         F.explode(
@@ -136,14 +132,14 @@ def space_time_match(
         F.col("obs_seq"),
         F.col("lat").alias("_p_lat"),
         F.col("lon").alias("_p_lon"),
-        pt_epoch.alias("_p_t"),
+        epoch.alias("_p_t"),
         cell_id("lat", "lon", res).alias("_cell"),
     ).withColumn("_bucket", F.expr(f"_p_t div {window_ms}"))
     cand = (
-        ev.join(pt, ["_cell", "_bucket"])
+        ring_candidates(ev, pt, res, k_ring, keys=["_bucket"])
         .filter(F.abs(F.col("_p_t") - F.col("_e_t")) <= window_ms)
         .select(
-            event_key, "_e_lat", "_e_lon", "_e_t",
+            event_key, "lat", "lon", "_e_t",
             "trace_id", "obs_seq", "_p_lat", "_p_lon", "_p_t",
         )
         # a point carries ONE (cell, bucket); the event's ring x bucket
@@ -151,25 +147,20 @@ def space_time_match(
         # the distinct is cheap insurance for that edge
         .distinct()
     )
-    dx = F.col("_p_lat") - F.col("_e_lat")
-    dy = F.col("_p_lon") - F.col("_e_lon")
-    best = cand.groupBy(event_key).agg(
-        F.min(
-            F.struct(
-                (dx * dx + dy * dy).alias("d"),
-                F.abs(F.col("_p_t") - F.col("_e_t")).alias("adt"),
-                F.col("trace_id").alias("tr"),
-                F.col("obs_seq").alias("sq"),
-                (F.col("_p_t") - F.col("_e_t")).alias("dt"),
-            )
-        ).alias("_b")
-    )
-    return best.select(
+    dx = F.col("_p_lat") - F.col("lat")
+    dy = F.col("_p_lon") - F.col("lon")
+    best = argmin_struct(
+        cand,
         event_key,
-        F.col("_b.tr").alias("trace_id"),
-        F.col("_b.sq").alias("obs_seq"),
-        F.col("_b.dt").alias("dt_ms"),
+        [
+            (dx * dx + dy * dy).alias("d"),
+            F.abs(F.col("_p_t") - F.col("_e_t")).alias("adt"),
+            F.col("trace_id"),
+            F.col("obs_seq"),
+        ],
+        [(F.col("_p_t") - F.col("_e_t")).alias("dt_ms")],
     )
+    return best.select(event_key, "trace_id", "obs_seq", "dt_ms")
 
 
 def route_overlap_jaccard(

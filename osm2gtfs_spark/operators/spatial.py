@@ -10,12 +10,16 @@ serially:
   point-in-polygon.
 - tile coverage — new surface (north rule): per-cell aggregates.
 
-Scale notes (100 TB / 10^12 docs):
-- the kNN join shuffles only (points × ring_size) rows keyed by cell id;
-  candidate sets are bounded by cell area, never a cross join.
+Scale notes (100 TB / 10^12 docs): every cell-bucketed join goes
+through :func:`ring_candidates` and every cell-neighbourhood scatter
+through :func:`ring_neighbors`, so the shape below holds for all of them.
+- the candidate join shuffles only (probes × ring_size) rows keyed by
+  cell id; candidate sets are bounded by cell area, never a cross join.
 - the probe side explodes its ring (≤ (2k+1)^2 ids/point); the build side
-  is keyed by its own single cell — so build-side rows are NOT replicated
-  and the shuffle stays linear in input size.
+  is keyed by its own single cell (or its cover cells) — so build-side
+  rows are NOT replicated and the shuffle stays linear in input size.
+- argmin winners come from :func:`argmin_struct`'s map-side-combined
+  min(struct), so the exchange carries points, not candidates.
 - hot cells (dense urban areas) are handled by AQE skew-join splitting
   plus :func:`adaptive_resolution` which re-encodes over-dense cells at a
   finer resolution before aggregation.
@@ -23,10 +27,14 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.functions.geo import (
+    _IX_SHIFT,
+    _RES_SHIFT,
     cell_id,
     cell_ix,
     cell_iy,
@@ -56,6 +64,80 @@ def _map_parallelism_floor(df: DataFrame) -> DataFrame:
     return df.repartition(target) if current < target else df
 
 
+def ring_candidates(
+    probe: DataFrame,
+    build: DataFrame,
+    res: int,
+    k_ring: int,
+    radius_deg: float | None = None,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """The one cell-ring candidate join (SURVEY.md J9): every (probe,
+    build) row pair whose cells lie within Chebyshev distance ``k_ring``
+    at resolution ``res`` — never a cross join.
+
+    ``probe`` carries ``lat``/``lon``; its cell ring is exploded here,
+    on the probe side only. ``build`` carries ``_cell``: its own cell id
+    at ``res``, or one row per cover cell, and must not carry
+    ``lat``/``lon``. ``keys`` are extra equi-join columns present on both
+    sides. The output is every probe and build column but ``_cell``.
+
+    A build row seen from several cells of one probe's ring (a cover
+    wider than one cell, or the ring wrapping on itself at tiny ``res``)
+    pairs with that probe once per shared cell; set-valued callers
+    dedupe, argmin callers need not.
+
+    ``radius_deg``, when given, is the caller's distance cut. A pair at
+    distance ≤ r spans at most ceil(r / min_cell_dim) cells, so
+    ``radius_deg > k_ring · 180 / 2^res`` (latitude cells are the
+    smaller side) would silently drop pairs and raises instead.
+
+    The probe gets :func:`_map_parallelism_floor` before the fanout; the
+    ring wraps at the antimeridian and drops rows past the poles
+    (:func:`~osm2gtfs_spark.functions.geo.cell_ring`)."""
+    if radius_deg is not None:
+        min_cell_dim = 180.0 / (2**res)
+        if radius_deg > k_ring * min_cell_dim:
+            raise ValueError(
+                f"radius_deg={radius_deg} exceeds ring reach "
+                f"{k_ring} * {min_cell_dim} at res={res}; candidates would be "
+                f"dropped — use a coarser res or a larger k_ring"
+            )
+    ringed = _map_parallelism_floor(probe).select(
+        "*",
+        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_cell"),
+    )
+    return ringed.join(build, ["_cell", *keys]).drop("_cell")
+
+
+def ring_neighbors(cells: DataFrame, res: int, k: int, cell_col: str = "cell_id") -> DataFrame:
+    """Scatter to the ring: each row of ``cells`` once per cell within
+    Chebyshev distance ``k`` of its ``cell_col`` (itself included), with
+    ``cell_col`` replaced by that neighbour's id; every other column is
+    carried. A groupBy on ``cell_col`` then sums each cell's
+    neighbourhood — 9·|cells| rows at k=1, empty cells never exist.
+
+    No parallelism floor: the inputs are per-cell aggregates, and
+    ``.rdd`` on them would finalize their adaptive plan at construction."""
+    ring = F.explode(cell_ring(F.col(cell_col), res, k)).alias(cell_col)
+    return cells.select(*[ring if c == cell_col else F.col(c) for c in cells.columns])
+
+
+def argmin_struct(
+    df: DataFrame, key: str, order: Sequence[Column], carry: Sequence[Column] = ()
+) -> DataFrame:
+    """One row per ``key``: the fields of the row whose ``order`` tuple
+    is least, compared left to right, then ``carry`` (which only breaks
+    ties ``order`` leaves). Every field is named by its alias.
+
+    A two-phase min(struct) aggregate, not a window: it combines
+    map-side, so the exchange carries one row per (key, map partition)
+    instead of every candidate row; a candidate duplicated by the ring
+    join does not change a min."""
+    best = df.groupBy(key).agg(F.min(F.struct(*order, *carry)).alias("_b"))
+    return best.select(key, "_b.*")
+
+
 def knn_snap(
     points: DataFrame,
     targets: DataFrame,
@@ -63,81 +145,39 @@ def knn_snap(
     k_ring: int = 1,
     point_key: str = "stop_key",
     target_key: str = "station_key",
-    n_neighbors: int = 1,
     distance: str = "sqdeg",
 ) -> DataFrame:
     """Nearest-target snap via cell-ring candidate join (SURVEY.md J9).
 
     For every point, candidates are targets whose cell lies within
     Chebyshev distance ``k_ring`` of the point's cell at resolution
-    ``res``; the winner is the argmin by distance with deterministic
-    tie-break on ``target_key``. Points with no candidate in the ring are
-    *omitted* (caller may re-run with a larger ring / coarser res for the
-    residue — bounded driver-side iteration, never a cross join).
+    ``res`` (:func:`ring_candidates`); the winner is the argmin by
+    distance with deterministic tie-break on ``target_key``. Points with
+    no candidate in the ring are *omitted* (caller may re-run with a
+    larger ring / coarser res for the residue — bounded driver-side
+    iteration, never a cross join).
 
     ``distance='sqdeg'`` ranks by exact squared degree distance
     (reproducible bit-for-bit in any engine — used by correctness
     oracles); ``'haversine'`` ranks by meters (used by the pipeline).
 
-    Returns (point_key, nearest_<target_key>, n-best rank).
+    Returns (point_key, nearest_<target_key>).
     """
-    pts = _map_parallelism_floor(
-        points.select(
-            F.col(point_key),
-            F.col("lat").alias("_p_lat"),
-            F.col("lon").alias("_p_lon"),
-        )
-    ).select(
-        F.col(point_key),
-        "_p_lat",
-        "_p_lon",
-        F.explode(cell_ring(cell_id("_p_lat", "_p_lon", res), res, k_ring)).alias("_cell"),
-    )
     tgt = targets.select(
         F.col(target_key),
         F.col("lat").alias("_t_lat"),
         F.col("lon").alias("_t_lon"),
         cell_id("lat", "lon", res).alias("_cell"),
     )
+    cand = ring_candidates(points.select(point_key, "lat", "lon"), tgt, res, k_ring)
     if distance == "haversine":
-        dist: Column = haversine_m("_p_lat", "_p_lon", "_t_lat", "_t_lon")
+        dist: Column = haversine_m("lat", "lon", "_t_lat", "_t_lon")
     else:
-        dlat = F.col("_p_lat") - F.col("_t_lat")
-        dlon = F.col("_p_lon") - F.col("_t_lon")
+        dlat = F.col("lat") - F.col("_t_lat")
+        dlon = F.col("lon") - F.col("_t_lon")
         dist = dlat * dlat + dlon * dlon
-    cand = pts.join(tgt, "_cell").withColumn("_dist", dist)
-    if n_neighbors == 1:
-        # argmin as a two-phase aggregate, not a window: min over
-        # struct(dist, key) combines map-side, so the exchange carries
-        # ONE row per (point, map partition) instead of every candidate
-        # row — at dense-cell scale (25-cell ring × urban stations) the
-        # window shuffle is candidate-cardinality, this is point-
-        # cardinality. Struct comparison is lexicographic = the same
-        # (dist asc, key asc) order with deterministic tie-break.
-        best = cand.groupBy(point_key).agg(
-            F.min(
-                F.struct(F.col("_dist").alias("d"), F.col(target_key).alias("k"))
-            ).alias("_b")
-        )
-        return best.select(
-            F.col(point_key),
-            F.col("_b.k").alias(f"nearest_{target_key}"),
-            F.lit(1).alias("rank"),
-        )
-    w = Window.partitionBy(point_key).orderBy(F.col("_dist").asc(), F.col(target_key).asc())
-    out = (
-        cand.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= n_neighbors)
-        .select(
-            F.col(point_key),
-            F.col(target_key).alias(f"nearest_{target_key}"),
-            F.col("_rank").alias("rank"),
-        )
-    )
-    # a point that straddles ring membership may see the same target via
-    # several of its own exploded cells — dedup happens naturally because
-    # explode is on the PROBE side only and targets carry one cell each.
-    return out
+    best = argmin_struct(cand, point_key, [dist.alias("d"), F.col(target_key)])
+    return best.select(point_key, F.col(target_key).alias(f"nearest_{target_key}"))
 
 
 def tile_coverage(
@@ -506,7 +546,6 @@ def snap_to_polyline(
     k_ring: int = 1,
     point_key: str = "stop_key",
     seg_key: str = "seg_id",
-    n_neighbors: int = 1,
     oversample: int = 2,
     max_steps: int = 4096,
 ) -> DataFrame:
@@ -515,8 +554,8 @@ def snap_to_polyline(
     clamped perpendicular distance, plus the snap position along it.
 
     :func:`knn_snap` snaps to target POINTS; this operator snaps to
-    segments (lat1, lon1)→(lat2, lon2). Candidates come from the same
-    cell-ring discipline — segments are rasterized to the cells they
+    segments (lat1, lon1)→(lat2, lon2). Candidates come from
+    :func:`ring_candidates` — segments are rasterized to the cells they
     cross (:func:`polyline_cell_coverage`), each point explodes its
     k-ring and equi-joins on cell, so a point only ever sees segments
     passing near it, never a cross join. Points with no segment in the
@@ -530,45 +569,19 @@ def snap_to_polyline(
     arithmetic — bit-identical in any engine. Production meters would
     swap in a haversine ranking exactly as knn_snap does.
 
-    Returns (point_key, nearest_<seg_key>, t_permille, rank):
+    Returns (point_key, nearest_<seg_key>, t_permille):
     ``t_permille`` = floor(1000·t*) locates the snap along the winner
     for downstream stop-ordering / cursor alignment.
 
     Scale shape: rasterize (bounded fanout per segment) → ring-explode
     probe side only → cell equi join → per-pair closed-form math →
-    two-phase min(struct) argmin (map-side combined; the exchange
-    carries one row per point per map partition, not per candidate)."""
+    :func:`argmin_struct`. A segment crossing several ring cells
+    duplicates its (point, seg) pair; the min does not care, so no
+    candidate-cardinality distinct runs (optimization r6, guide §2.4)."""
     cov = polyline_cell_coverage(
         segments, res=res, id_col=seg_key, oversample=oversample, max_steps=max_steps
-    )
-    pts = _map_parallelism_floor(
-        points.select(
-            F.col(point_key),
-            F.col("lat").alias("_p_lat"),
-            F.col("lon").alias("_p_lon"),
-        )
-    ).select(
-        F.col(point_key),
-        "_p_lat",
-        "_p_lon",
-        F.explode(cell_ring(cell_id("_p_lat", "_p_lon", res), res, k_ring)).alias(
-            "cell_id"
-        ),
-    )
-    # a segment crossing several ring cells duplicates the (point, seg)
-    # pair. For the argmin path (n_neighbors == 1) duplicates are
-    # HARMLESS — min over a multiset equals min over its set, and the
-    # duplicated rows carry identical (_d, t) — so skipping the
-    # distinct removes a full candidate-cardinality exchange
-    # (optimization r6, guide §2.4): the only exchange left is the
-    # map-side-combined min(struct) aggregate, which carries one row
-    # per (point, map partition). The ranked path (n_neighbors > 1)
-    # still needs the dedup: a duplicate pair would occupy two ranks.
-    cand_keys = pts.join(cov, "cell_id").select(
-        point_key, "_p_lat", "_p_lon", seg_key
-    )
-    if n_neighbors > 1:
-        cand_keys = cand_keys.distinct()
+    ).withColumnRenamed("cell_id", "_cell")
+    cand_keys = ring_candidates(points.select(point_key, "lat", "lon"), cov, res, k_ring)
     seg = segments.select(
         F.col(seg_key),
         F.col("lat1").cast("double").alias("_a1"),
@@ -579,48 +592,24 @@ def snap_to_polyline(
     cand = cand_keys.join(seg, seg_key)
     vx = F.col("_a2") - F.col("_a1")
     vy = F.col("_o2") - F.col("_o1")
-    wx = F.col("_p_lat") - F.col("_a1")
-    wy = F.col("_p_lon") - F.col("_o1")
+    wx = F.col("lat") - F.col("_a1")
+    wy = F.col("lon") - F.col("_o1")
     denom = vx * vx + vy * vy
     # explicit zero-length branch: engines disagree on double x/0
     # (Spark NULL, DuckDB inf) — both would otherwise diverge here
     t = F.when(denom == 0, F.lit(0.0)).otherwise(
         F.greatest(F.lit(0.0), F.least(F.lit(1.0), (wx * vx + wy * vy) / denom))
     )
-    dx = F.col("_p_lat") - (F.col("_a1") + t * vx)
-    dy = F.col("_p_lon") - (F.col("_o1") + t * vy)
-    scored = cand.select(
+    dx = F.col("lat") - (F.col("_a1") + t * vx)
+    dy = F.col("lon") - (F.col("_o1") + t * vy)
+    best = argmin_struct(
+        cand,
         point_key,
-        seg_key,
-        (dx * dx + dy * dy).alias("_d"),
-        F.floor(t * 1000).cast("long").alias("t_permille"),
+        [(dx * dx + dy * dy).alias("d"), F.col(seg_key)],
+        [F.floor(t * 1000).cast("long").alias("t_permille")],
     )
-    if n_neighbors == 1:
-        best = scored.groupBy(point_key).agg(
-            F.min(
-                F.struct(
-                    F.col("_d").alias("d"),
-                    F.col(seg_key).alias("k"),
-                    F.col("t_permille").alias("t"),
-                )
-            ).alias("_b")
-        )
-        return best.select(
-            F.col(point_key),
-            F.col("_b.k").alias(f"nearest_{seg_key}"),
-            F.col("_b.t").alias("t_permille"),
-            F.lit(1).alias("rank"),
-        )
-    w = Window.partitionBy(point_key).orderBy(F.col("_d").asc(), F.col(seg_key).asc())
-    return (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= n_neighbors)
-        .select(
-            F.col(point_key),
-            F.col(seg_key).alias(f"nearest_{seg_key}"),
-            "t_permille",
-            F.col("_rank").alias("rank"),
-        )
+    return best.select(
+        point_key, F.col(seg_key).alias(f"nearest_{seg_key}"), "t_permille"
     )
 
 
@@ -634,19 +623,14 @@ def within_distance_pairs(
 ) -> DataFrame:
     """Spatial SELF-join: every unordered pair of points within
     ``radius_deg`` (squared-degree Euclidean in the equirectangular
-    plane), via the same cell-bucket discipline as :func:`knn_snap` —
-    never a cross join.
+    plane), via :func:`ring_candidates` — never a cross join.
 
     The reference needs exactly this shape when it merges stop_area
     candidates by proximity (``osm2gtfs/core/osm_connector.py:258-283``
     walks all pairs serially); here the pair space is pruned to cells
     within Chebyshev ring ``k_ring`` before any distance math runs.
-
-    Correct-by-construction ring: a pair at distance ≤ r can only span
-    cells whose Chebyshev cell-distance is ≤ ceil(r / min_cell_dim), so
-    ``radius_deg`` must satisfy ``radius_deg <= k_ring * 180 / 2^res``
-    (the latitude cell height is the smaller dimension) — violating
-    that silently drops pairs, so it raises instead.
+    ``radius_deg`` beyond the ring's reach raises (see
+    :func:`ring_candidates`).
 
     Each unordered pair is emitted EXACTLY once as (key_a < key_b):
     the probe side explodes its ring, the build side carries its own
@@ -654,26 +638,15 @@ def within_distance_pairs(
     contains the partner's cell — once per direction — and the key
     ordering keeps one direction.
 
-    Scale shape: shuffle keyed by cell id, probe fanout (2k+1)^2,
-    build side not replicated; per-cell candidate sets bounded by cell
-    area (dense urban cells are ordinary AQE skew). The oracle replay
-    is the O(n^2) brute-force join — tractable only at gate scale,
-    which is precisely the point: the bucketed plan must reproduce the
-    quadratic semantics exactly.
+    The oracle replay is the O(n^2) brute-force join — tractable only
+    at gate scale, which is precisely the point: the bucketed plan must
+    reproduce the quadratic semantics exactly.
     """
-    min_cell_dim = 180.0 / (2**res)
-    if radius_deg > k_ring * min_cell_dim:
-        raise ValueError(
-            f"radius_deg={radius_deg} exceeds ring reach "
-            f"{k_ring} * {min_cell_dim} at res={res}; pairs would be dropped "
-            f"— use a coarser res or a larger k_ring"
-        )
     probe = points.select(
         F.col(key_col).alias("key_a"),
-        F.col("lat").alias("_a_lat"),
-        F.col("lon").alias("_a_lon"),
+        "lat",
+        "lon",
         *[F.col(c).alias(f"a_{c}") for c in carry_cols],
-        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_cell"),
     )
     build = points.select(
         F.col(key_col).alias("key_b"),
@@ -682,11 +655,11 @@ def within_distance_pairs(
         *[F.col(c).alias(f"b_{c}") for c in carry_cols],
         cell_id("lat", "lon", res).alias("_cell"),
     )
-    dlat = F.col("_a_lat") - F.col("_b_lat")
-    dlon = F.col("_a_lon") - F.col("_b_lon")
+    dlat = F.col("lat") - F.col("_b_lat")
+    dlon = F.col("lon") - F.col("_b_lon")
     d2 = dlat * dlat + dlon * dlon
     return (
-        probe.join(build, "_cell")
+        ring_candidates(probe, build, res, k_ring, radius_deg)
         .filter(F.col("key_a") < F.col("key_b"))
         .filter(d2 <= F.lit(radius_deg) * F.lit(radius_deg))
         .select(
@@ -1418,12 +1391,12 @@ def raster_regions(
         raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
     n = 2**res
     base = cells.select(F.col(cell_col).alias("cell_id")).distinct()
-    c = F.col("cell_id") - F.lit(res).cast("long") * F.lit(2**52)
-    ix = F.floor(c / F.lit(2**26)).cast("long")
-    iy = (c % F.lit(2**26)).cast("long")
+    c = F.col("cell_id") - F.lit(res).cast("long") * F.lit(_RES_SHIFT)
+    ix = F.floor(c / F.lit(_IX_SHIFT)).cast("long")
+    iy = (c % F.lit(_IX_SHIFT)).cast("long")
     mk = (
-        lambda nx, ny: F.lit(res).cast("long") * F.lit(2**52)
-        + nx * F.lit(2**26)
+        lambda nx, ny: F.lit(res).cast("long") * F.lit(_RES_SHIFT)
+        + nx * F.lit(_IX_SHIFT)
         + ny
     )
     # distinct + self-excluded (review r5): at res<=1 the east and west
@@ -1469,13 +1442,11 @@ def raster_regions(
 # Segment intersection join / trace dwell detection / turn classification
 # ---------------------------------------------------------------------------
 
-_IX_SHIFT = 2**26
-
-
 def _segment_cells(
     seg: DataFrame, id_col: str, res: int, max_cells: int, prefix: str
 ) -> DataFrame:
-    """One row per (segment, covering bbox cell). The cover is the full
+    """One row per (segment, covering bbox cell ``_cell``, a standard
+    :func:`~osm2gtfs_spark.functions.geo.cell_id`). The cover is the full
     integer rectangle [min_ix..max_ix] × [min_iy..max_iy] of the
     segment's endpoints — a complete superset of every cell the segment
     touches (two intersecting segments meet at a point inside BOTH
@@ -1508,7 +1479,10 @@ def _segment_cells(
         F.transform(
             F.sequence(lo_x, guard),
             lambda ix: F.transform(
-                F.sequence(lo_y, hi_y), lambda iy: ix * F.lit(_IX_SHIFT) + iy
+                F.sequence(lo_y, hi_y),
+                lambda iy: F.lit(res).cast("long") * F.lit(_RES_SHIFT)
+                + ix * F.lit(_IX_SHIFT)
+                + iy,
             ),
         )
     )
@@ -1728,17 +1702,10 @@ def corridor_match(
     every touched cell), points explode their Chebyshev ``k_ring``; the
     nearest segment point to a hit lies in a covered cell within ring
     reach, so no hit can be missed — provided ``radius_deg ≤ k_ring ·
-    cell_dim``, which is validated up front exactly as in
-    :func:`within_distance_pairs`. Distance dialect is
-    :func:`snap_to_polyline`'s (shared-IEEE closed form, explicit
-    zero-length branch). Scale shape: cell equi join, probe-side-only
-    ring fanout, distinct on (point, route) — never a cross join."""
-    min_cell_dim = 180.0 / (2**res)
-    if radius_deg > k_ring * min_cell_dim:
-        raise ValueError(
-            f"radius_deg={radius_deg} exceeds ring reach "
-            f"{k_ring} * {min_cell_dim} at res={res}; hits would be dropped"
-        )
+    cell_dim``, which :func:`ring_candidates` validates up front.
+    Distance dialect is :func:`snap_to_polyline`'s (shared-IEEE closed
+    form, explicit zero-length branch). Scale shape: :func:`ring_candidates`, then a
+    distinct on (point, route) — never a cross join."""
     # the cover CARRIES the segment coords (no synthetic segment id, no
     # join-back — a generated id evaluated in two plan branches is a
     # correctness hazard under re-computation)
@@ -1750,33 +1717,19 @@ def corridor_match(
         F.col("lon2").cast("double").alias("_slon2"),
     )
     cov = _segment_cells(named, route_col, res, max_cells, "_s")
-    pts = points.select(
-        F.col(point_key),
-        F.col("lat").alias("_p_lat"),
-        F.col("lon").alias("_p_lon"),
-        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_rcell"),
-    ).withColumn(
-        "_cell",
-        (F.col("_rcell") - F.lit(res) * F.lit(2**52)),
-    )
-    cand = (
-        pts.join(cov, "_cell")
-        .select(
-            point_key, "_p_lat", "_p_lon", route_col,
-            "_slat1", "_slon1", "_slat2", "_slon2",
-        )
-        .distinct()
-    )
+    cand = ring_candidates(
+        points.select(point_key, "lat", "lon"), cov, res, k_ring, radius_deg
+    ).distinct()
     vx = F.col("_slat2") - F.col("_slat1")
     vy = F.col("_slon2") - F.col("_slon1")
-    wx = F.col("_p_lat") - F.col("_slat1")
-    wy = F.col("_p_lon") - F.col("_slon1")
+    wx = F.col("lat") - F.col("_slat1")
+    wy = F.col("lon") - F.col("_slon1")
     denom = vx * vx + vy * vy
     t = F.when(denom == 0, F.lit(0.0)).otherwise(
         F.greatest(F.lit(0.0), F.least(F.lit(1.0), (wx * vx + wy * vy) / denom))
     )
-    dx = F.col("_p_lat") - (F.col("_slat1") + t * vx)
-    dy = F.col("_p_lon") - (F.col("_slon1") + t * vy)
+    dx = F.col("lat") - (F.col("_slat1") + t * vx)
+    dy = F.col("lon") - (F.col("_slon1") + t * vy)
     hit = cand.filter(dx * dx + dy * dy <= F.lit(radius_deg) * F.lit(radius_deg))
     return hit.select(point_key, route_col).distinct()
 
@@ -1796,9 +1749,9 @@ def idw_grid(
     the coverage/heat surface estimator of the tiling family.
 
     Each grid point sees only observations in its Chebyshev ``k_ring``
-    cell neighborhood (cell equi join on the obs cell, ring exploded on
-    the grid side — never a cross join; estimator support is
-    deliberately local, the standard practice for IDW at scale).
+    cell neighborhood (:func:`ring_candidates`, the grid as probe —
+    never a cross join; estimator support is deliberately local, the
+    standard practice for IDW at scale).
     Weights are EXACT integers: w = w_scale div (1 + d²_scaled) on
     ``int_scale``-floored coordinates, pred = Σw·v div Σw — every bit
     reproducible by the oracle; an observation coincident with the grid
@@ -1814,15 +1767,16 @@ def idw_grid(
     )
     g = grid.select(
         F.col(grid_key),
+        "lat",
+        "lon",
         F.floor(F.col("lon") * s).alias("_gx"),
         F.floor(F.col("lat") * s).alias("_gy"),
-        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_cell"),
     )
     d2 = (F.col("_ox") - F.col("_gx")) * (F.col("_ox") - F.col("_gx")) + (
         F.col("_oy") - F.col("_gy")
     ) * (F.col("_oy") - F.col("_gy"))
     w = F.expr(f"{w_scale} div (1 + _d2)")
-    pairs = g.join(o, "_cell").withColumn("_d2", d2).withColumn("_w", w)
+    pairs = ring_candidates(g, o, res, k_ring).withColumn("_d2", d2).withColumn("_w", w)
     agg = pairs.groupBy(grid_key).agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.sum(F.col("_w") * F.col("_v")).alias("_wv"),
@@ -1846,14 +1800,14 @@ def focal_sum(
     density surface before hotspot detection.
 
     SCATTER shape, not gather: each occupied cell explodes its ring
-    once and contributes its value to each neighbor position, then one
-    map-side-combined sum per target cell; an inner join back to the
-    occupied set keeps the support identical to the input raster.
+    once (:func:`ring_neighbors`) and contributes its value to each
+    neighbor position, then one map-side-combined sum per target cell;
+    an inner join back to the occupied set keeps the support identical
+    to the input raster.
     Cost is 9·|occupied| rows (k=1) regardless of grid size — empty
     cells are never materialized. Integer in, integer out."""
-    contrib = cell_counts.select(
-        F.explode(cell_ring(F.col(cell_col), res, k_ring)).alias(cell_col),
-        F.col(value_col).alias("_v"),
+    contrib = ring_neighbors(
+        cell_counts.select(cell_col, F.col(value_col).alias("_v")), res, k_ring, cell_col
     )
     sums = contrib.groupBy(cell_col).agg(F.sum("_v").alias("focal_sum"))
     return (
@@ -1969,8 +1923,9 @@ def gi_star(
     the caller aggregated); mean/variance are over that support, which
     is the standard formulation for sparse rasters.
 
-    Plan shape: one scatter-to-ring + map-side-combined sum for the
-    neighborhood terms (9·|occupied| rows at k=1 — same shape as
+    Plan shape: one scatter-to-ring (:func:`ring_neighbors`) +
+    map-side-combined sum for the neighborhood terms (9·|occupied|
+    rows at k=1 — same shape as
     :func:`focal_sum`), then the global first/second moments attach via
     an unpartitioned window over the PER-CELL aggregate table. That
     SinglePartition step carries at most 4^res cell rows — grid-bounded
@@ -1987,10 +1942,7 @@ def gi_star(
     CASE branch on both sides.
     """
     v = F.col(value_col)
-    contrib = cell_values.select(
-        F.explode(cell_ring(F.col(cell_col), res, k_ring)).alias(cell_col),
-        v.alias("_v"),
-    )
+    contrib = ring_neighbors(cell_values.select(cell_col, v.alias("_v")), res, k_ring, cell_col)
     ring = contrib.groupBy(cell_col).agg(
         F.sum("_v").alias("s_ring"), F.count(F.lit(1)).alias("w_ring")
     )
@@ -2051,8 +2003,8 @@ def grid_dbscan(
     the CELL graph (bounded by 4^res vertices), never on points.
 
     Plan shape: count-per-cell aggregate → density filter → scatter
-    ring ⋈ core (equi join on cell id, no distance predicate survives
-    to the join) → :func:`~osm2gtfs_spark.operators.dedup.
+    ring (:func:`ring_neighbors`) ⋈ core (equi join on cell id, no
+    distance predicate survives to the join) → :func:`~osm2gtfs_spark.operators.dedup.
     connected_components` min-label propagation (O(log diameter)
     rounds, lineage-truncated). Isolated core cells keep their own id
     as ``cluster_id``. Non-core cells are noise and are not emitted,
@@ -2068,9 +2020,11 @@ def grid_dbscan(
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= F.lit(min_pts))
     )
-    nbr = core.select(
-        F.col("cell_id").alias("_src"),
-        F.explode(cell_ring(F.col("cell_id"), res, 1)).alias("_dst"),
+    nbr = ring_neighbors(
+        core.select(F.col("cell_id").alias("_src"), F.col("cell_id").alias("_dst")),
+        res,
+        1,
+        "_dst",
     ).filter(F.col("_src") < F.col("_dst"))
     edges = nbr.join(
         core.select(F.col("cell_id").alias("_dst")), "_dst"
@@ -2110,8 +2064,6 @@ def cell_pyramid(
     the parent re-encode is pure integer arithmetic (`div` by a
     per-level power of two), all inside whole-stage codegen.
     """
-    from osm2gtfs_spark.functions.geo import _IX_SHIFT, _RES_SHIFT
-
     c = F.col(cell_col) - F.lit(res_fine) * F.lit(_RES_SHIFT)
     ladder = F.array(
         *[
@@ -2173,8 +2125,6 @@ def grid_voronoi(
     (pmod), latitude rows outside the grid are dropped — identical
     conventions to :func:`~osm2gtfs_spark.functions.geo.cell_ring`.
     """
-    from osm2gtfs_spark.functions.geo import _IX_SHIFT, _RES_SHIFT
-
     if not 0 <= k_max <= 6:
         raise ValueError(f"k_max must be in [0, 6], got {k_max}")
     n = 2**res
@@ -2247,8 +2197,6 @@ def polygon_rasterize(
     :func:`~osm2gtfs_spark.operators.spatial.cell_pyramid`-style
     drill-down instead of letting one row fan out unbounded.
     """
-    from osm2gtfs_spark.functions.geo import _IX_SHIFT, _RES_SHIFT
-
     n = 2**res
     lat_min = F.array_min(F.transform("vertices", lambda v: v["lat"]))
     lat_max = F.array_max(F.transform("vertices", lambda v: v["lat"]))
@@ -2326,8 +2274,8 @@ def moran_i(
 
     Every moment is an exact BIGINT sum — n, Σx, Σx², W = Σ wᵢ,
     Σ wᵢxᵢ and the adjacency cross term Σᵢ xᵢ·rᵢ (rᵢ = neighbor sum) —
-    derived from the SAME scatter-to-ring + join shape as gi_star
-    (self excluded arithmetically: rᵢ = ring_sum − xᵢ, wᵢ = ring_cnt −
+    derived from the SAME scatter-to-ring (:func:`ring_neighbors`) +
+    join shape as gi_star (self excluded arithmetically: rᵢ = ring_sum − xᵢ, wᵢ = ring_cnt −
     1), so no second shuffle family. The final I is double arithmetic
     over those six integers, mirrored token-for-token in the oracle;
     W = 0 (no adjacent occupied cells) or zero variance yield I = 0
@@ -2336,10 +2284,7 @@ def moran_i(
     corpus_stats.
     """
     v = F.col(value_col)
-    contrib = cell_values.select(
-        F.explode(cell_ring(F.col(cell_col), res, 1)).alias(cell_col),
-        v.alias("_v"),
-    )
+    contrib = ring_neighbors(cell_values.select(cell_col, v.alias("_v")), res, 1, cell_col)
     ring = contrib.groupBy(cell_col).agg(
         F.sum("_v").alias("_rs"), F.count(F.lit(1)).alias("_rc")
     )
@@ -2430,8 +2375,6 @@ def bilinear_splat(
     lat clamps to the grid edge so polar mass stays on the globe).
     Fanout exactly 4 rows per point, one map-side-combined sum.
     """
-    from osm2gtfs_spark.functions.geo import _IX_SHIFT, _RES_SHIFT
-
     n = 2**res
     x = (F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)) - F.lit(0.5)
     y = (F.col(lat_col) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)) - F.lit(0.5)

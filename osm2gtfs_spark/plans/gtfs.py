@@ -28,8 +28,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
+from osm2gtfs_spark.operators.spatial import argmin_struct, ring_candidates
 from osm2gtfs_spark.functions.geo import (
     TRANSITFEED_RADIUS_M,
+    cell_id,
     centroid_lat,
     centroid_lon,
     haversine_m,
@@ -99,10 +101,10 @@ def build_stops(nodes: DataFrame, ways: DataFrame, name_without: str = "stop") -
     )
     way_candidates = ways.filter(valid_stop_pred())
     way_pts = (
-        way_candidates.select("id", "tags", F.explode("node_refs").alias("nref"))
+        way_candidates.select("id", "tags", F.posexplode("node_refs").alias("pos", "nref"))
         .join(nodes.select(F.col("id").alias("nref"), "lat", "lon"), "nref")
     )
-    cents = spherical_centroid_aggs("lat", "lon")
+    cents = spherical_centroid_aggs("lat", "lon", "pos")
     way_stops = (
         way_pts.groupBy("id")
         .agg(F.first("tags").alias("tags"), *cents.values())
@@ -150,17 +152,20 @@ def build_stations(relations: DataFrame, stops: DataFrame) -> tuple[DataFrame, D
         areas.select(
             F.col("id").alias("area_id"),
             tag("name").alias("area_name"),
-            F.explode(F.filter("members", lambda m: m.role == F.lit("platform"))).alias("m"),
+            F.posexplode(F.filter("members", lambda m: m.role == F.lit("platform"))).alias("pos", "m"),
         )
         .select(
             "area_id",
             "area_name",
+            "pos",
             F.concat("m.mtype", F.lit("/"), F.col("m.ref").cast("string")).alias("stop_key"),
         )
-        .dropDuplicates(["area_id", "stop_key"])
+        # a member listed twice counts once, at its first position
+        .groupBy("area_id", "area_name", "stop_key")
+        .agg(F.min("pos").alias("pos"))
     )
     resolved = memb.join(stops.select("stop_key", "lat", "lon"), "stop_key")
-    cents = spherical_centroid_aggs("lat", "lon")
+    cents = spherical_centroid_aggs("lat", "lon", "pos")
     stations = (
         resolved.groupBy("area_id")
         .agg(F.first("area_name").alias("name"), F.count(F.lit(1)).alias("n_members"), *cents.values())
@@ -538,7 +543,9 @@ def cumulative_distance(st: DataFrame) -> DataFrame:
     """Add ``cum_m`` (great-circle distance from the trip's first stop,
     transitfeed radius 6367000 m) and ``total_m`` to stop rows with
     (trip_id, pos, lat, lon): the distance weights of transitfeed's
-    ``GetTimeInterpolatedStops``."""
+    ``GetTimeInterpolatedStops``. ``total_m`` is the trip's last
+    ``cum_m`` (legs are ≥ 0, so its max): a second, unordered sum of
+    the legs could differ from it in the last bit."""
     w_seq = Window.partitionBy("trip_id").orderBy("pos")
     prev_lat, prev_lon = F.lag("lat").over(w_seq), F.lag("lon").over(w_seq)
     leg = F.when(prev_lat.isNull(), F.lit(0.0)).otherwise(
@@ -547,7 +554,7 @@ def cumulative_distance(st: DataFrame) -> DataFrame:
     return (
         st.withColumn("leg_m", leg)
         .withColumn("cum_m", F.sum("leg_m").over(w_seq))
-        .withColumn("total_m", F.sum("leg_m").over(Window.partitionBy("trip_id")))
+        .withColumn("total_m", F.max("cum_m").over(Window.partitionBy("trip_id")))
     )
 
 
@@ -655,7 +662,6 @@ def auto_stop_names(
     radius_m: float = 50.0,
     res: int = 18,
     k_ring: int = 2,
-    distance: str = "haversine",
 ) -> DataFrame:
     """name_auto: guess names for unnamed stops from surroundings (J9).
 
@@ -667,16 +673,13 @@ def auto_stop_names(
     ApproximateDistance; no candidate → the bare ``name_without`` (no
     brackets), so the stop isn't re-queried next run.
 
-    Here: ONE batched cell-ring join over the whole corpus instead of a
-    network round-trip per stop. res=18 cells are ~76 m tall, so
-    k_ring=2 over-covers the 50 m radius for |lat| < 80° — the ring is
-    a candidate SUPERSET and the radius filter below makes the result
-    exactly the per-stop brute force. ``distance='sqdeg'`` ranks by
-    squared degrees (bit-reproducible across engines, used by the
-    oracle); 'haversine' ranks by meters.
+    Here: ONE batched :func:`~osm2gtfs_spark.operators.spatial.
+    ring_candidates` join over the whole corpus instead of a network
+    round-trip per stop. res=18 cells are ~76 m tall, so k_ring=2
+    over-covers the 50 m radius for |lat| < 80° — the ring is a
+    candidate SUPERSET and the radius filter below makes the result
+    exactly the per-stop brute force; the nearest in meters wins.
     """
-    from osm2gtfs_spark.functions.geo import cell_id, cell_ring, haversine_m
-
     placeholder = f"[{name_without}]"
     unnamed = stops.filter(F.col("name") == placeholder)
 
@@ -689,9 +692,9 @@ def auto_stop_names(
         & ~(F.coalesce(tag("amenity"), F.lit("")) == "bus_station")
     )
     way_pts = way_named.select(
-        "id", tag("name").alias("cand_name"), F.explode("node_refs").alias("nref")
+        "id", tag("name").alias("cand_name"), F.posexplode("node_refs").alias("pos", "nref")
     ).join(nodes.select(F.col("id").alias("nref"), "lat", "lon"), "nref")
-    cents = spherical_centroid_aggs("lat", "lon")
+    cents = spherical_centroid_aggs("lat", "lon", "pos")
     way_cand = (
         way_pts.groupBy("id")
         .agg(F.first("cand_name").alias("cand_name"), *cents.values())
@@ -707,28 +710,11 @@ def auto_stop_names(
         F.col("lon").alias("_c_lon"),
         cell_id("lat", "lon", res).alias("_cell"),
     )
-    probe = unnamed.select(
-        "stop_key",
-        F.col("lat").alias("_s_lat"),
-        F.col("lon").alias("_s_lon"),
-        F.explode(cell_ring(cell_id("lat", "lon", res), res, k_ring)).alias("_cell"),
-    )
-    meters = haversine_m("_s_lat", "_s_lon", "_c_lat", "_c_lon")
-    if distance == "haversine":
-        rank_dist = meters
-    else:
-        dlat = F.col("_s_lat") - F.col("_c_lat")
-        dlon = F.col("_s_lon") - F.col("_c_lon")
-        rank_dist = dlat * dlat + dlon * dlon
-    # argmin via min(struct) — map-side combine instead of a window
-    # shuffle of every candidate row (same rationale as knn_snap)
-    best = (
-        probe.join(cand, "_cell")
-        .filter(meters <= F.lit(radius_m))
-        .withColumn("_d", rank_dist)
-        .groupBy("stop_key")
-        .agg(F.min(F.struct(F.col("_d").alias("d"), F.col("cand_name").alias("n"))).alias("_b"))
-        .select("stop_key", F.col("_b.n").alias("guessed_name"))
+    probe = unnamed.select("stop_key", "lat", "lon")
+    meters = haversine_m("lat", "lon", "_c_lat", "_c_lon")
+    near = ring_candidates(probe, cand, res, k_ring).filter(meters <= F.lit(radius_m))
+    best = argmin_struct(near, "stop_key", [meters.alias("d"), F.col("cand_name")]).select(
+        "stop_key", F.col("cand_name").alias("guessed_name")
     )
     # no broadcast hint: the unnamed set can be large at corpus scale —
     # AQE picks broadcast when it actually fits

@@ -10,6 +10,7 @@ import os
 import zipfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline, run_schedule_pipeline
 from osm2gtfs_spark.sources import docs as D
@@ -53,6 +54,34 @@ def test_zip_pins(feeds, tmp_path):
         path = write_gtfs_zip(t, str(tmp_path / f"{pipeline}_{store}.zip"))
         got[pipeline, store] = hashlib.sha256(open(path, "rb").read()).hexdigest()
     assert got == ZIP_PINS
+
+
+def test_zip_layout_invariance(spark, tmp_path):
+    """The frequency zip of the ``feeds`` city does not depend on the
+    physical layout of its docs parquet: as written, reversed in one
+    partition, and round-robin into 8 partitions give the same bytes
+    (and the pinned ones). A centroid summed in shuffle-arrival order
+    moves a station's last coordinate bit between these layouts."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=3, with_stop_areas=True, with_schedule=True))
+    src = str(tmp_path / "docs")
+    docs.write.parquet(src)
+    built = spark.read.parquet(src)
+    layouts = {
+        "as_built": built,
+        "reversed": built.withColumn("_i", F.monotonically_increasing_id())
+        .orderBy(F.col("_i").desc())
+        .drop("_i")
+        .coalesce(1),
+        "round_robin_8": built.repartition(8),
+    }
+    got = {}
+    for name, df in layouts.items():
+        path = str(tmp_path / f"docs_{name}")
+        df.write.parquet(path)
+        feed = run_frequency_pipeline(spark.read.parquet(path))
+        zpath = write_gtfs_zip(feed, str(tmp_path / f"{name}.zip"))
+        got[name] = hashlib.sha256(open(zpath, "rb").read()).hexdigest()
+    assert set(got.values()) == {ZIP_PINS["frequency", "memory"]}, got
 
 
 def test_zip_members_and_determinism(tables, tmp_path):

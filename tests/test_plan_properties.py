@@ -22,6 +22,7 @@ from osm2gtfs_spark.plans import queries as Q
 GUARDED = {
     "q1_pricing_summary": 0,
     "knn_snap": 0,
+    "within_distance_pairs": 0,
     "minhash_lsh_pairs": 0,
     "ngram_jaccard_dedup": 0,
     "ann_lsh_topk": 0,

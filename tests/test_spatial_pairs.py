@@ -11,11 +11,18 @@ encoder.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
-from osm2gtfs_spark.functions.geo import GEOHASH_B32, geohash
-from osm2gtfs_spark.operators.spatial import polygon_stats, within_distance_pairs
+from osm2gtfs_spark.functions.geo import GEOHASH_B32, cell_id, geohash
+from osm2gtfs_spark.operators.spatial import (
+    corridor_match,
+    polygon_stats,
+    ring_candidates,
+    within_distance_pairs,
+)
 
 
 @pytest.fixture(scope="module")
@@ -67,11 +74,89 @@ def test_pairs_emitted_exactly_once(pts):
 
 def test_pairs_ring_reach_validated(pts):
     """A radius beyond the ring's Chebyshev reach would silently drop
-    pairs — the operator must refuse instead."""
-    with pytest.raises(ValueError, match="ring reach"):
-        within_distance_pairs(pts, res=6, radius_deg=3.0, k_ring=1)
-    # same radius is fine with a wider ring
-    within_distance_pairs(pts, res=6, radius_deg=3.0, k_ring=2)
+    pairs — every operator that takes ``radius_deg`` must refuse
+    instead, and so must the ring join they share."""
+    segs = pts.select(
+        F.col("stop_key").alias("route_id"),
+        F.col("lat").alias("lat1"),
+        F.col("lon").alias("lon1"),
+        F.col("lat").alias("lat2"),
+        F.col("lon").alias("lon2"),
+    )
+    build = pts.select("stop_key", cell_id("lat", "lon", 6).alias("_cell"))
+    callers = {
+        "within_distance_pairs": lambda k: within_distance_pairs(
+            pts, res=6, radius_deg=3.0, k_ring=k
+        ),
+        "corridor_match": lambda k: corridor_match(
+            pts.select(F.col("stop_key").alias("p"), "lat", "lon"),
+            segs, res=6, radius_deg=3.0, k_ring=k, point_key="p",
+        ),
+        "ring_candidates": lambda k: ring_candidates(
+            pts.select(F.col("stop_key").alias("p"), "lat", "lon"),
+            build, 6, k, radius_deg=3.0,
+        ),
+    }
+    for call in callers.values():
+        with pytest.raises(ValueError, match="ring reach"):
+            call(1)
+        # same radius is fine with a wider ring
+        call(2)
+
+
+def _cell_xy(lat, lon, res):
+    n = 2**res
+    return (
+        min(int(math.floor((lon + 180.0) / 360.0 * n)), n - 1),
+        min(int(math.floor((lat + 90.0) / 180.0 * n)), n - 1),
+    )
+
+
+# (probes, partners) at res 4 (22.5° x 11.25° cells): probes on both
+# sides of the antimeridian whose partners sit across it, and probes in
+# the top and bottom lat rows, where the ring has no row beyond the pole
+_EDGE_LATS = (-89.99, -85.0, -80.0, -70.0, 0.0, 70.0, 80.0, 85.0, 89.99)
+_EDGE_LONS = (-179.99, -170.0, -160.0, -150.0, 0.0, 150.0, 160.0, 170.0, 179.99)
+EDGE_CASES = {
+    "antimeridian": [(0.0, 179.99), (0.0, -179.99), (5.0, 170.0), (-5.0, -165.0)],
+    "poles": [(89.99, 0.0), (-89.99, 150.0), (85.0, -179.99), (-85.0, 179.99)],
+}
+
+
+@pytest.mark.parametrize("k_ring", [1, 2])
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_ring_candidates_grid_edges(spark, case, k_ring):
+    """``ring_candidates`` returns exactly the pairs whose cells are
+    within Chebyshev ``k_ring`` — longitude wrapping at ±180, latitude
+    not wrapping past the poles — each pair once."""
+    res = 4
+    probes = [(i, la, lo) for i, (la, lo) in enumerate(EDGE_CASES[case])]
+    partners = [
+        (100 + i, la, lo)
+        for i, (la, lo) in enumerate((la, lo) for la in _EDGE_LATS for lo in _EDGE_LONS)
+    ]
+    probe = spark.createDataFrame(probes, "p long, lat double, lon double")
+    build = spark.createDataFrame(partners, "b long, lat double, lon double").select(
+        "b", cell_id("lat", "lon", res).alias("_cell")
+    )
+    got = [(r.p, r.b) for r in ring_candidates(probe, build, res, k_ring).collect()]
+    n = 2**res
+    want = set()
+    for p, pla, plo in probes:
+        px, py = _cell_xy(pla, plo, res)
+        for b, bla, blo in partners:
+            bx, by = _cell_xy(bla, blo, res)
+            if min(abs(px - bx), n - abs(px - bx)) <= k_ring and abs(py - by) <= k_ring:
+                want.add((p, b))
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    # the case is not vacuous: it finds pairs across ±180 / in a pole row
+    lon_of = {k: lo for k, _, lo in probes + partners}
+    lat_of = {k: la for k, la, _ in probes + partners}
+    if case == "antimeridian":
+        assert any(abs(lon_of[p] - lon_of[b]) > 180 for p, b in want)
+    else:
+        assert any(abs(lat_of[p]) > 89 and abs(lat_of[b]) > 89 for p, b in want)
 
 
 def test_pairs_carry_cols(pts):
