@@ -178,7 +178,6 @@ def run(args, spark=None) -> str:
         from osm2gtfs_spark.plans.accra import build_accra_tables
 
         tables = build_accra_tables(stops_docs, routes_docs, catalog=catalog)
-        members = FM.members_gh_accra(tables, config)
     elif selector == "ci_abidjan":
         from osm2gtfs_spark.plans.abidjan import build_abidjan_tables
 
@@ -191,7 +190,6 @@ def run(args, spark=None) -> str:
             solar_times=config.get("solar_times"),
             catalog=catalog,
         )
-        members = FM.members_ci_abidjan(tables, config)
     elif selector == "br_florianopolis":
         from osm2gtfs_spark.plans.florianopolis import build_florianopolis_tables
         from osm2gtfs_spark.sources.fenix import fenix_docs_df
@@ -204,7 +202,6 @@ def run(args, spark=None) -> str:
             end_date=fi.get("end_date", "20190228"),
             catalog=catalog,
         )
-        members = FM.members_br_florianopolis(tables, config)
     else:
         from osm2gtfs_spark.plans.default_city import build_city_tables
 
@@ -217,10 +214,9 @@ def run(args, spark=None) -> str:
             feed_end=fi.get("end_date", "20250101"),
             catalog=catalog,
         )
-        members = FM.members_default(tables, config)
 
     _log_validation(validate_feed(tables))
-    return write_members_zip(members, out)
+    return write_members_zip(FM.members(selector, tables, config), out)
 
 
 def _log_validation(report) -> None:

@@ -54,7 +54,13 @@ def _map_parallelism_floor(df: DataFrame) -> DataFrame:
     pre-fanout rows are the narrow side, so this moves the minimum
     possible bytes). Scale-adaptive: a production-size table scans as
     many splits, the condition is false, and no exchange is added —
-    the target tracks ``defaultParallelism``, never a constant."""
+    the target tracks ``defaultParallelism``, never a constant.
+
+    A ``df`` whose physical plan holds an exchange is returned as is:
+    its map side already follows the shuffle's partitioning, and reading
+    its partition count would run the shuffle stages at construction."""
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

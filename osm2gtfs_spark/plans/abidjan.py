@@ -65,7 +65,7 @@ class AbidjanTables:
     trips: DataFrame
     frequencies: DataFrame
     stop_times: DataFrame
-    stops: DataFrame
+    stops: DataFrame  # stops.txt shape
 
 
 def _windows_for(tags_col, solar_times: dict | None = None):
@@ -157,16 +157,7 @@ def _trips(win: DataFrame, lines: DataFrame, itins: DataFrame) -> DataFrame:
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
         .drop("_trip_idx")
         .withColumn("direction_id", (F.row_number().over(dir_order) - 1) % 2)
-        .withColumn(
-            "duration_min",
-            F.coalesce(
-                F.when(
-                    F.try_element_at("tags", F.lit("duration")).cast("int") > 0,
-                    F.try_element_at("tags", F.lit("duration")).cast("int"),
-                ),
-                F.lit(DEFAULT_TRIP_DURATION_MIN),
-            ),
-        )
+        .withColumn("duration_min", gtfs.positive_int_tag("tags", "duration", DEFAULT_TRIP_DURATION_MIN))
     )
 
 
@@ -288,5 +279,5 @@ def build_abidjan_tables(
         stop_times=gtfs.interpolated_stop_times(
             trips_full, s["route_itin_stops"], s["abidjan_stops"], "duration_min"
         ),
-        stops=s["abidjan_stops"],
+        stops=gtfs.stops_txt(s["abidjan_stops"], F.col("stop_id"), "0", F.lit("")),
     )

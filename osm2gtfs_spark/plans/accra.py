@@ -80,26 +80,8 @@ def _trips(lines: DataFrame, itins: DataFrame) -> DataFrame:
         .withColumn("direction_id", (F.row_number().over(itin_order) - 1) % 2)
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
         .drop("_trip_idx")
-        .withColumn(
-            "frequency_min",
-            F.coalesce(
-                F.when(
-                    F.try_element_at("line_tags", F.lit("frequency")).cast("int") > 0,
-                    F.try_element_at("line_tags", F.lit("frequency")).cast("int"),
-                ),
-                F.lit(gtfs.DEFAULT_ROUTE_FREQUENCY),
-            ),
-        )
-        .withColumn(
-            "travel_min",
-            F.coalesce(
-                F.when(
-                    F.try_element_at("tags", F.lit("travel_time")).cast("int") > 0,
-                    F.try_element_at("tags", F.lit("travel_time")).cast("int"),
-                ),
-                F.lit(gtfs.DEFAULT_TRAVEL_TIME),
-            ),
-        )
+        .withColumn("frequency_min", gtfs.positive_int_tag("line_tags", "frequency", gtfs.DEFAULT_ROUTE_FREQUENCY))
+        .withColumn("travel_min", gtfs.positive_int_tag("tags", "travel_time", gtfs.DEFAULT_TRAVEL_TIME))
     )
 
 

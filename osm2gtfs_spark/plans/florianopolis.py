@@ -56,7 +56,7 @@ BLACKLIST = ["10200", "12400", "328", "466", "665", "464"]
 
 @dataclass
 class FlorianopolisTables:
-    stops: DataFrame
+    stops: DataFrame  # stops.txt shape
     routes: DataFrame
     calendar: DataFrame
     calendar_dates: DataFrame
@@ -425,7 +425,7 @@ def build_florianopolis_tables(
         seq.cast("string").alias("stop_sequence"),
     )
     return FlorianopolisTables(
-        stops=stops,
+        stops=gtfs.stops_txt(stops, F.col("stop_id"), "0", F.lit("")),
         routes=routes,
         calendar=calendar,
         calendar_dates=calendar_dates,

@@ -70,6 +70,13 @@ def tag(key: str):
     return F.try_element_at("tags", F.lit(key))
 
 
+def positive_int_tag(tags: str, key: str, default: int):
+    """``tags[key]`` as an int when it parses to a positive one, else
+    ``default`` (the creators' invalid-tag fallback)."""
+    v = F.try_element_at(tags, F.lit(key)).cast("int")
+    return F.coalesce(F.when(v > 0, v), F.lit(default))
+
+
 # ---------------------------------------------------------------------------
 # Stops (reference osm_connector.py:253-283,430-464; stops_creator.py:105-124)
 # ---------------------------------------------------------------------------
@@ -468,26 +475,8 @@ def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
         .withColumn("direction_id", (F.row_number().over(itin_order) - 1) % 2)
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
         .drop("_trip_idx")
-        .withColumn(
-            "frequency_min",
-            F.coalesce(
-                F.when(
-                    F.try_element_at("line_tags", F.lit("frequency")).cast("int") > 0,
-                    F.try_element_at("line_tags", F.lit("frequency")).cast("int"),
-                ),
-                F.lit(DEFAULT_ROUTE_FREQUENCY),
-            ),
-        )
-        .withColumn(
-            "travel_min",
-            F.coalesce(
-                F.when(
-                    F.try_element_at("tags", F.lit("travel_time")).cast("int") > 0,
-                    F.try_element_at("tags", F.lit("travel_time")).cast("int"),
-                ),
-                F.lit(DEFAULT_TRAVEL_TIME),
-            ),
-        )
+        .withColumn("frequency_min", positive_int_tag("line_tags", "frequency", DEFAULT_ROUTE_FREQUENCY))
+        .withColumn("travel_min", positive_int_tag("tags", "travel_time", DEFAULT_TRAVEL_TIME))
         .select(
             "trip_id",
             F.col("route_id"),

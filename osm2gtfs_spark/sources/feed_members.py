@@ -1,12 +1,23 @@
-"""Per-selector GTFS member assembly in the golden transitfeed dialect.
+"""GTFS member writer for the XML city selectors, in the golden
+transitfeed dialect.
 
-The reference writes its zip through transitfeed's ``WriteGoogleTransitFeed``
-(osm2gtfs/osm2gtfs.py:93); member column ORDER in the goldens is py2
-dict-iteration order and therefore differs arbitrarily per city — it is
-specification pinned by each city's committed ``.zip.ref``, not derivable
-from the config. The layouts below cite the golden zips they reproduce
-(verified line-multiset + byte-size equal by tests/test_zip_byte_parity.py
-and tests/test_florianopolis_golden.py).
+The reference writes every feed through one transitfeed
+``WriteGoogleTransitFeed`` call (osm2gtfs/osm2gtfs.py:93); member column
+ORDER in the goldens is py2 dict-iteration order and therefore differs
+arbitrarily per city — it is specification pinned by each city's
+committed ``.zip.ref``, not derivable from the config. So the column
+orders are data: :data:`LAYOUTS` maps each selector to its members'
+headers, each citing the golden it reproduces (verified line-multiset +
+byte-size equal by tests/test_zip_byte_parity.py and
+tests/test_florianopolis_golden.py), and :func:`members` is the one
+writer for all of them.
+
+A member with a plan table is sorted by ``gtfs_sink.member_order`` — the
+row order the distributed sink writes too — collected, and serialized
+as it comes: the plans already hold GTFS-formatted strings, so the bytes
+do not depend on the input's physical layout. agency.txt (except
+Abidjan's plan-built agencies), feed_info.txt and Accra's one-service
+calendar are projections of the config.
 
 Assembly collects each member to the driver — the right trade at feed
 scale (a whole national GTFS is MBs); corpus-scale exports go through
@@ -16,18 +27,74 @@ hand their members to ``gtfs_sink.write_members_zip``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
 
-from osm2gtfs_spark.sources.gtfs_sink import transitfeed_csv_bytes
+from pyspark.sql import Column, DataFrame
 
-FEED_INFO_HEADER = [
-    "feed_publisher_name",
-    "feed_start_date",
-    "feed_version",
-    "feed_end_date",
-    "feed_lang",
-    "feed_publisher_url",
-]
+from osm2gtfs_spark.sources.gtfs_sink import member_order, transitfeed_csv_bytes
+
+DAYS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
+AGENCY = ["agency_url", "agency_name", "agency_id", "agency_timezone", "agency_lang"]
+CALENDAR = ["service_id", "start_date", "end_date", *DAYS]
+FREQUENCIES = ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"]
+ROUTES = ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"]
+STOPS = ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"]
+STOP_TIMES = ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"]
+SHAPES = ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"]
+FEED_INFO = ["feed_publisher_name", "feed_start_date", "feed_version", "feed_end_date", "feed_lang", "feed_publisher_url"]
+
+# selector → member → header, in the cited golden's column order
+LAYOUTS: dict[str, dict[str, list[str]]] = {
+    # gh_accra_gtfs.zip.ref (frequency path, no feed_info)
+    "gh_accra": {
+        "agency.txt": AGENCY,
+        "calendar.txt": CALENDAR,
+        "stops.txt": ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"],
+        "routes.txt": ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_color", "route_text_color"],
+        "trips.txt": ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"],
+        "frequencies.txt": FREQUENCIES,
+        "stop_times.txt": STOP_TIMES,
+        "shapes.txt": SHAPES,
+    },
+    # ni_esteli_gtfs.zip.ref / cr_gam_gtfs.zip.ref (schedule-join path);
+    # cr_gam leads agency.txt with agency_phone: configs pin that order
+    # in ``member_headers["agency.txt"]``
+    "default": {
+        "agency.txt": AGENCY,
+        "calendar.txt": CALENDAR,
+        "stops.txt": STOPS,
+        "routes.txt": ROUTES,
+        "trips.txt": ["route_id", "trip_id", "trip_headsign", "service_id", "shape_id", "block_id", "wheelchair_accessible", "bikes_allowed", "direction_id"],
+        "stop_times.txt": STOP_TIMES,
+        "shapes.txt": SHAPES,
+        "feed_info.txt": FEED_INFO,
+    },
+    # br_florianopolis_gtfs.zip.ref (Fenix schedule path)
+    "br_florianopolis": {
+        "agency.txt": ["agency_phone", "agency_url", "agency_id", "agency_name", "agency_timezone", "agency_lang"],
+        "calendar.txt": CALENDAR,
+        "calendar_dates.txt": ["service_id", "date", "exception_type"],
+        "routes.txt": ROUTES,
+        "trips.txt": ["route_id", "trip_id", "trip_headsign", "service_id", "block_id", "wheelchair_accessible", "bikes_allowed", "shape_id", "direction_id"],
+        "stops.txt": STOPS,
+        "stop_times.txt": STOP_TIMES,
+        "shapes.txt": SHAPES,
+        "feed_info.txt": FEED_INFO,
+    },
+    # ci_abidjan (opening_hours path): the upstream golden zip is not
+    # published — canonical layouts, with the plan's per-network agencies
+    # table instead of the config's agency
+    "ci_abidjan": {
+        "agency.txt": ["agency_id", "agency_name", "agency_url", "agency_timezone"],
+        "calendar.txt": CALENDAR,
+        "routes.txt": ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_color", "route_text_color"],
+        "trips.txt": ["route_id", "trip_id", "service_id", "direction_id", "trip_headsign"],
+        "frequencies.txt": FREQUENCIES,
+        "stops.txt": ["stop_lat", "stop_lon", "stop_id", "stop_name", "location_type"],
+        "stop_times.txt": ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"],
+        "feed_info.txt": FEED_INFO,
+    },
+}
 
 
 # _rows collects a member table to the driver — sane for national GTFS
@@ -37,11 +104,14 @@ FEED_INFO_HEADER = [
 MAX_COLLECT_ROWS = 5_000_000
 
 
-def _guarded_collect(df: DataFrame) -> list:
+def _guarded_collect(df: DataFrame, order: Sequence[Column] = ()) -> list:
     # ONE action: collect at most MAX+1 rows (the limit bounds what can
     # reach the driver even before the check), then refuse if over — no
     # separate count job that would recompute the member chain twice.
-    rows = df.limit(MAX_COLLECT_ROWS + 1).collect()
+    # ``order`` sorts the limited frame: a limit over a sort plans as a
+    # top-K whose per-partition buffer is sized by the limit.
+    limited = df.limit(MAX_COLLECT_ROWS + 1)
+    rows = (limited.orderBy(*order) if order else limited).collect()
     if len(rows) > MAX_COLLECT_ROWS:
         raise ValueError(
             f"member table exceeds MAX_COLLECT_ROWS={MAX_COLLECT_ROWS}: "
@@ -51,15 +121,17 @@ def _guarded_collect(df: DataFrame) -> list:
     return rows
 
 
-def _rows(df: DataFrame, cols: list[str], fill: dict[str, str] | None = None) -> list[list[str]]:
-    """Member rows with config-level fill DEFAULTS: a column value
-    present and non-null on the row wins; ``fill`` supplies the value
-    only when the column is absent or null (ADVICE r3 — a table that
-    legitimately carries per-row agency_id must not be overwritten by
-    the config constant)."""
+def _rows(
+    df: DataFrame, cols: list[str], fill: dict[str, str] | None = None, order: Sequence[Column] = ()
+) -> list[list[str]]:
+    """Member rows in ``order`` with config-level fill DEFAULTS: a column
+    value present and non-null on the row wins; ``fill`` supplies the
+    value only when the column is absent or null (ADVICE r3 — a table
+    that legitimately carries per-row agency_id must not be overwritten
+    by the config constant)."""
     fill = fill or {}
     out = []
-    for r in _guarded_collect(df):
+    for r in _guarded_collect(df, order):
         d = r.asDict()
         out.append(
             [
@@ -70,203 +142,45 @@ def _rows(df: DataFrame, cols: list[str], fill: dict[str, str] | None = None) ->
     return out
 
 
-def _agency_member(config: dict, header: list[str]) -> bytes:
-    ag = config.get("agency", {})
-    return transitfeed_csv_bytes(header, [[str(ag.get(h, "")) for h in header]])
-
-
-def _feed_info_member(config: dict) -> bytes | None:
-    fi = config.get("feed_info")
-    if not fi:
-        return None
-    row = [
-        fi.get("publisher_name", ""),
-        fi.get("start_date", ""),
-        fi.get("version", ""),
-        fi.get("end_date", ""),
-        config.get("agency", {}).get("agency_lang", ""),
-        fi.get("publisher_url", ""),
-    ]
-    return transitfeed_csv_bytes(FEED_INFO_HEADER, [row])
-
-
-def members_gh_accra(t, config: dict) -> dict[str, bytes]:
-    """Layouts from gh_accra_gtfs.zip.ref (frequency path, no feed_info)."""
-    fi = config.get("feed_info", {})
-    agency_id = config.get("agency", {}).get("agency_id", "")
-    members = {
-        "agency.txt": _agency_member(
-            config, ["agency_url", "agency_name", "agency_id", "agency_timezone", "agency_lang"]
-        ),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            [["0", fi.get("start_date", "20170901"), fi.get("end_date", "20180730"), "1", "1", "1", "1", "1", "1", "1"]],
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"],
-            _rows(t.stops, ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_color", "route_text_color"],
-            _rows(
-                t.routes,
-                ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_color", "route_text_color"],
-                fill={"agency_id": agency_id, "route_desc": ""},
-            ),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"],
-            _rows(t.trips, ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"]),
-        ),
-        "frequencies.txt": transitfeed_csv_bytes(
-            ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"],
-            _rows(t.frequencies, ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"]),
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-            _rows(t.stop_times, ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"]),
-        ),
-        "shapes.txt": transitfeed_csv_bytes(
-            ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-            _rows(t.shapes, ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"]),
-        ),
+def _config_row(name: str, config: dict) -> dict | None:
+    """The one row of a member without a plan table (S6), or None when
+    the config has none to give."""
+    agency, fi = config.get("agency", {}), config.get("feed_info")
+    if name == "agency.txt":
+        return agency
+    if name == "feed_info.txt":
+        return {**{f"feed_{k}": v for k, v in fi.items()}, "feed_lang": agency.get("agency_lang", "")} if fi else None
+    # calendar.txt: gh_accra's one always-on service, its golden's dates by default
+    fi = fi or {}
+    return {
+        "service_id": "0",
+        "start_date": fi.get("start_date", "20170901"),
+        "end_date": fi.get("end_date", "20180730"),
+        **dict.fromkeys(DAYS, "1"),
     }
-    return members
 
 
-def members_default(t, config: dict) -> dict[str, bytes]:
-    """Layouts from ni_esteli/cr_gam goldens (schedule-join path).
+def members(selector: str, tables, config: dict) -> dict[str, bytes]:
+    """Every member of ``LAYOUTS[selector]`` as transitfeed CSV bytes.
 
-    The agency header order is city-specific in the goldens (cr_gam
-    leads with agency_phone); configs may pin it via
-    ``member_headers["agency.txt"]`` — default covers the common case."""
-    header = (config.get("member_headers", {}) or {}).get(
-        "agency.txt",
-        ["agency_url", "agency_name", "agency_id", "agency_timezone", "agency_lang"],
-    )
-    agency_id = config.get("agency", {}).get("agency_id", "")
-    members = {
-        "agency.txt": _agency_member(config, header),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            _rows(t.calendar, ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]),
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"],
-            _rows(t.stops, ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-            _rows(
-                t.routes,
-                ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-                fill={"agency_id": agency_id, "route_desc": ""},
-            ),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "trip_headsign", "service_id", "shape_id", "block_id", "wheelchair_accessible", "bikes_allowed", "direction_id"],
-            _rows(t.trips, ["route_id", "trip_id", "trip_headsign", "service_id", "shape_id", "block_id", "wheelchair_accessible", "bikes_allowed", "direction_id"]),
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-            _rows(t.stop_times, ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"]),
-        ),
-        "shapes.txt": transitfeed_csv_bytes(
-            ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-            _rows(t.shapes, ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"]),
-        ),
-    }
-    fi = _feed_info_member(config)
-    if fi is not None:
-        members["feed_info.txt"] = fi
-    return members
-
-
-def members_br_florianopolis(t, config: dict) -> dict[str, bytes]:
-    """Layouts from br_florianopolis_gtfs.zip.ref (Fenix schedule path);
-    stop coordinates are py2 str(float) like the golden."""
-
-    def py2str(v):
-        return "%.12g" % v
-
-    members = {
-        "agency.txt": _agency_member(
-            config,
-            ["agency_phone", "agency_url", "agency_id", "agency_name", "agency_timezone", "agency_lang"],
-        ),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            _rows(t.calendar, ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]),
-        ),
-        "calendar_dates.txt": transitfeed_csv_bytes(
-            ["service_id", "date", "exception_type"],
-            _rows(t.calendar_dates, ["service_id", "date", "exception_type"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-            _rows(t.routes, ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"]),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "trip_headsign", "service_id", "block_id", "wheelchair_accessible", "bikes_allowed", "shape_id", "direction_id"],
-            _rows(t.trips, ["route_id", "trip_id", "trip_headsign", "service_id", "block_id", "wheelchair_accessible", "bikes_allowed", "shape_id", "direction_id"]),
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"],
-            [[py2str(r["lat"]), py2str(r["lon"]), r["stop_id"], "", r["name"], "0"] for r in _guarded_collect(t.stops)],
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-            [[r["trip_id"], r["arrival_time"], r["departure_time"], r["stop_id"], r["stop_sequence"], "", "", "", "", ""] for r in _guarded_collect(t.stop_times)],
-        ),
-        "shapes.txt": transitfeed_csv_bytes(
-            ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-            [[r["shape_id"], r["shape_pt_lat"], r["shape_pt_lon"], r["shape_pt_sequence"], ""] for r in _guarded_collect(t.shapes)],
-        ),
-    }
-    fi = _feed_info_member(config)
-    if fi is not None:
-        members["feed_info.txt"] = fi
-    return members
-
-
-def members_ci_abidjan(t, config: dict) -> dict[str, bytes]:
-    """Abidjan (opening_hours path). The upstream golden zip is absent
-    (/root/reference/.MISSING_LARGE_BLOBS) — canonical layouts, with the
-    per-network agencies table from the plan instead of the config."""
-    members = {
-        "agency.txt": transitfeed_csv_bytes(
-            ["agency_id", "agency_name", "agency_url", "agency_timezone"],
-            _rows(t.agencies, ["agency_id", "agency_name", "agency_url", "agency_timezone"]),
-        ),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            _rows(t.calendar, ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_color", "route_text_color"],
-            _rows(t.routes, ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_color", "route_text_color"]),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "service_id", "direction_id", "trip_headsign"],
-            _rows(t.trips, ["route_id", "trip_id", "service_id", "direction_id", "trip_headsign"]),
-        ),
-        "frequencies.txt": transitfeed_csv_bytes(
-            ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"],
-            _rows(t.frequencies, ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"]),
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lat", "stop_lon", "stop_id", "stop_name", "location_type"],
-            [
-                [str(r["lat"]), str(r["lon"]), r["stop_id"], r["name"], "0"]
-                for r in _guarded_collect(t.stops)
-            ],
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"],
-            _rows(t.stop_times, ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"]),
-        ),
-    }
-    fi = _feed_info_member(config)
-    if fi is not None:
-        members["feed_info.txt"] = fi
-    return members
+    The member's plan table (``tables.agencies`` for agency.txt, else
+    the field named after the file) is written in ``member_order``; a
+    column absent or null on a row takes the config's agency_id for
+    ``agency_id`` and "" otherwise. A member without a plan table is
+    the config's row; ``member_headers["agency.txt"]`` overrides that
+    header."""
+    fill = {"agency_id": config.get("agency", {}).get("agency_id", "")}
+    out = {}
+    for name, header in LAYOUTS[selector].items():
+        df = getattr(tables, "agencies" if name == "agency.txt" else name[: -len(".txt")], None)
+        if df is not None:
+            rows = _rows(df, header, fill, member_order(name))
+        else:
+            row = _config_row(name, config)
+            if row is None:
+                continue
+            if name == "agency.txt":
+                header = (config.get("member_headers") or {}).get(name, header)
+            rows = [[row.get(h, "") for h in header]]
+        out[name] = transitfeed_csv_bytes(header, rows)
+    return out

@@ -2,13 +2,13 @@
 
 S8: the reference hands a transitfeed ``Schedule`` to
 ``WriteGoogleTransitFeed`` (osm2gtfs/osm2gtfs.py:93) producing a zip of
-CSV tables. Here each table is globally ordered (O5 determinism) and
-written through Spark's CSV writer, as many parts as AQE sizes the range
-exchange to; the parts are concatenated in order and every member goes
-into the zip through one deterministic assembler
-(``write_members_zip``, shared with the city sinks in
-``feed_members``) — byte-stable across runs, writer counts and cluster
-layouts.
+CSV tables. Here each table is globally ordered in ``member_order`` (O5
+determinism; the XML selectors' writer in ``feed_members`` sorts by it
+too) and written through Spark's CSV writer, as many parts as AQE sizes
+the range exchange to; the parts are concatenated in order and every
+member goes into the zip through one deterministic assembler
+(``write_members_zip``, shared with ``feed_members``) — byte-stable
+across runs, writer counts and cluster layouts.
 
 S9: transitfeed's ``feed.Validate`` (osm2gtfs.py:90) becomes a set of
 assertion DataFrames: FK joins across stops↔stop_times↔trips↔routes and
@@ -29,7 +29,7 @@ from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # column order observed in the reference's golden zips (FIXTURES.md §5)
@@ -69,6 +69,7 @@ GTFS_COLUMNS: dict[str, list[str]] = {
 }
 
 SORT_KEYS: dict[str, list[str]] = {
+    "agency.txt": ["agency_id"],
     "stops.txt": ["stop_id"],
     "routes.txt": ["route_id"],
     "trips.txt": ["route_id", "trip_id"],
@@ -80,9 +81,18 @@ SORT_KEYS: dict[str, list[str]] = {
 }
 
 
+def member_order(filename: str) -> list[Column]:
+    """The row order of GTFS member ``filename``, shared by every sink:
+    its ``SORT_KEYS``, numeric-string keys numerically when castable."""
+    return [
+        F.col(k).cast("double").asc_nulls_last() if k in ("trip_id", "stop_sequence", "shape_pt_sequence") else F.col(k).asc()
+        for k in SORT_KEYS[filename]
+    ]
+
+
 def _write_csv(df: DataFrame, filename: str, out_dir: str) -> str:
     """Write one GTFS member to ``out_dir/filename``: header, then the rows
-    globally ordered by ``SORT_KEYS``. Spark's range exchange tiles the key
+    globally in ``member_order``. Spark's range exchange tiles the key
     space in order and AQE coalescing sets the writer count from the data
     size, so concatenating the part files in name order gives the same
     bytes whatever the number of writers."""
@@ -92,14 +102,9 @@ def _write_csv(df: DataFrame, filename: str, out_dir: str) -> str:
         *[F.col(c).cast("string") for c in cols],
         *[F.lit("").alias(c) for c in missing],
     ).select(*GTFS_COLUMNS[filename])
-    # numeric-string sort keys sort numerically when castable
-    keys = [
-        F.col(k).cast("double").asc_nulls_last() if k in ("trip_id", "stop_sequence", "shape_pt_sequence") else F.col(k).asc()
-        for k in SORT_KEYS[filename]
-    ]
     parts_dir = os.path.join(out_dir, filename + ".parts")
     (
-        sel.orderBy(*keys)
+        sel.orderBy(*member_order(filename))
         .write.mode("overwrite")
         .option("header", False)
         .option("emptyValue", "")

@@ -8,7 +8,8 @@ departure from each line's ``Terminal {i}A``, a Saturday one from
 ``Terminal {i}B``, and one Saturday ``operacoes`` date after the feed
 start, so the exception-service path runs. Each table's columns, row
 count and sorted-row sha256 are pinned inline, like
-``test_managua_parity.py::test_managua_pinned_regression``.
+``test_managua_parity.py::test_managua_pinned_regression``, and so is
+each selector's members zip under ``CONFIG``.
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ from osm2gtfs_spark.plans.accra import build_accra_tables
 from osm2gtfs_spark.plans.default_city import build_city_tables
 from osm2gtfs_spark.plans.florianopolis import build_florianopolis_tables
 from osm2gtfs_spark.sources import docs as D
+from osm2gtfs_spark.sources import feed_members as FM
 from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
 from osm2gtfs_spark.sources.fenix import fenix_docs_df
+from osm2gtfs_spark.sources.gtfs_sink import write_members_zip
 
 SPEC = D.CitySpec(n_lines=6, with_stop_areas=True, with_schedule=True)
 
@@ -40,7 +43,6 @@ BUILDERS = {
 }
 
 STOPS_TXT = ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"]
-STOPS_RAW = ["stop_key", "osm_type", "osm_id", "stop_id", "name", "lat", "lon", "tags"]
 TRIPS_FREQ = ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"]
 FREQS = ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"]
 STOP_TIMES = ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"]
@@ -78,10 +80,10 @@ PINS = {
         "trips": (TRIPS_FREQ, 12, "691b831cbc41cbb20694728370e6c8ce0f8353c1dd06ef9820f84ee8f0a519d3"),
         "frequencies": (FREQS, 12, "268bf166f37cc6e7531cba4acd75934f80e8221934af5fe5297ed60df5963b6e"),
         "stop_times": (STOP_TIMES, 96, "70d1def388bf17365f1b2ac6260e4fde7dd6b33f03ca5dbb9e9a98e8f4f1c9c4"),
-        "stops": (STOPS_RAW, 96, "2f18f6362024a28da58b315ab2e464e8c8d979bcaf818624b89807fdd24468b1"),
+        "stops": (STOPS_TXT, 96, "ece876c02c8fa8b711b1e943c44a57ff24c7f45ae2a5678ad35f8f2b0943d99b"),
     },
     "br_florianopolis": {
-        "stops": (STOPS_RAW, 96, "0a1f2e40724d4ef475521d65191665755eadef4a7cbe0fc9d12c8bdde2597d5d"),
+        "stops": (STOPS_TXT, 96, "3dd46ec86ad438238141e9d618b5ad70fbd00409aba4fe070ab055830d843866"),
         "routes": (
             ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id",
              "route_desc", "route_url", "route_color", "route_text_color"],
@@ -120,6 +122,31 @@ PINS = {
             4, "da02d8f9053e4e380f12f76259eb2f5df2600d23f2817230bba07ec43ab9dac3",
         ),
         "shapes": (SHAPES, 107, "0f168994409684f1c05d24e33f600f6289d465e6934de57142e78dfad1a6e7bc"),
+    },
+}
+
+# selector → sha256 of write_members_zip(FM.members(selector, tables, CONFIG))
+MEMBERS_ZIP_PINS = {
+    "gh_accra": "632bd5e21c26819cd9b5577f816cd55919e63a1c348bd89856965e501ac74aa8",
+    "ci_abidjan": "a749008e7332260c5d94de41620176152cf0ab9adf2316965252e91fe54ea86c",
+    "br_florianopolis": "5dac012c098588ef692a574edad25c83576a5b4c4c8152f05f7ac6545625fa19",
+    "default": "962407fd67a7fcfad11b16e1c80b97949b0fa87c631e5e00cce9dffc36ca5469",
+}
+CONFIG = {
+    "agency": {
+        "agency_phone": "+1 555 0100",
+        "agency_url": "https://example.org",
+        "agency_id": "AG",
+        "agency_name": "Agency, Inc.",
+        "agency_timezone": "UTC",
+        "agency_lang": "en",
+    },
+    "feed_info": {
+        "publisher_name": "Publisher",
+        "publisher_url": "https://example.org/feed",
+        "version": "0.1",
+        "start_date": "20180301",
+        "end_date": "20190228",
     },
 }
 
@@ -200,3 +227,24 @@ def test_city_selector_resumes(spark, corpus, selector, tmp_path, caplog):
     logged = {r.getMessage().split()[1]: r.getMessage().split()[2] for r in caplog.records}
     assert logged == dict.fromkeys(stages, "resumed:")
     assert fingerprints(tables) == PINS[selector]
+
+
+@pytest.mark.parametrize("selector", list(PINS))
+def test_city_selector_zip_layout_invariance(spark, corpus, selector, tmp_path):
+    """The members zip does not depend on the physical layout of the
+    docs parquet: as written, round-robin into 8 partitions and
+    coalesced into one give the pinned bytes. Rows collected in shuffle
+    order, unsorted, moved stops.txt (and trips.txt, frequencies.txt)
+    between layouts and between runs."""
+    src = str(tmp_path / "docs")
+    corpus["docs"].write.parquet(src)
+    built = spark.read.parquet(src)
+    layouts = {"as_written": built, "round_robin_8": built.repartition(8), "coalesced_1": built.coalesce(1)}
+    got = {}
+    for name, df in layouts.items():
+        path = str(tmp_path / f"docs_{name}")
+        df.write.parquet(path)
+        tables = BUILDERS[selector]({**corpus, "docs": spark.read.parquet(path)})
+        zpath = write_members_zip(FM.members(selector, tables, CONFIG), str(tmp_path / f"{name}.zip"))
+        got[name] = hashlib.sha256(open(zpath, "rb").read()).hexdigest()
+    assert set(got.values()) == {MEMBERS_ZIP_PINS[selector]}, got

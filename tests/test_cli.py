@@ -225,6 +225,35 @@ def test_cli_abidjan_selector_smoke(spark, tmp_path, caplog):
         assert all(line.split(",")[0] not in ("", "None") for line in stops)
 
 
+def test_cli_abidjan_stop_coordinates_transitfeed_format(spark, tmp_path):
+    """ci_abidjan stops.txt coordinates are transitfeed's ``%.12g``, the
+    Abidjan golden's dialect, also for a coordinate that carries more
+    significant digits (Python 3 ``str`` would write all 17)."""
+    import csv
+    import io
+
+    from tests.test_opening_hours import ROUTES_XML, STOPS_XML
+
+    lat, lon = "5.6396587620508285", "-4.0112345678901234"
+    for name, xml in (("stops.xml", STOPS_XML), ("routes.xml", ROUTES_XML)):
+        (tmp_path / name).write_text(xml.replace('lat="5.31" lon="-4.01"', f'lat="{lat}" lon="{lon}"'))
+    config = {
+        "selector": "ci_abidjan",
+        "inputs": {"stops_xml": str(tmp_path / "stops.xml"), "routes_xml": str(tmp_path / "routes.xml")},
+        "output_file": str(tmp_path / "abj.zip"),
+    }
+    cfg = tmp_path / "c.json"
+    cfg.write_text(json.dumps(config))
+    out = cli.run(_args(["-c", str(cfg)]), spark=spark)
+    with zipfile.ZipFile(out) as z:
+        stops = {
+            r["stop_name"]: (r["stop_lat"], r["stop_lon"])
+            for r in csv.DictReader(io.TextIOWrapper(z.open("stops.txt"), encoding="utf-8"))
+        }
+    assert stops["Bravo"] == ("5.63965876205", "-4.01123456789")
+    assert stops["Alpha"] == ("5.3", "-4")
+
+
 def _assert_zip_parity(out_zip: str, golden_zip: str, skip=()):
     with zipfile.ZipFile(out_zip) as ours, zipfile.ZipFile(golden_zip) as gold:
         gold_names = set(gold.namelist()) - set(skip)

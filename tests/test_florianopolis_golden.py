@@ -111,9 +111,8 @@ def test_stops_full_equality(tables):
         for r in _golden("stops.txt")
     )
     # golden coords are Python-2 str(float): 12 significant digits
-    py2str = lambda v: "%.12g" % v  # noqa: E731
     got = sorted(
-        (r["stop_id"], r["name"], py2str(r["lat"]), py2str(r["lon"]))
+        (r["stop_id"], r["stop_name"], r["stop_lat"], r["stop_lon"])
         for r in tables.stops.collect()
     )
     assert got == golden
@@ -177,60 +176,32 @@ def test_service_exceptions_with_early_start(spark):
 def test_zip_members_byte_parity(tables):
     """The reference's own acceptance check (creators_tests.py:234-250)
     compares per-member unzipped sizes — we check the stronger property:
-    every member's LINE MULTISET and total byte size equal the golden
-    (row order inside a file is py2 dict-iteration order, semantically
-    irrelevant in GTFS, and the only thing not reproduced)."""
+    every member the production writer gives for the golden's config
+    has the golden's LINE MULTISET and total byte size (row order inside
+    a file is py2 dict-iteration order, semantically irrelevant in GTFS,
+    and the only thing not reproduced)."""
     import collections
-    import csv as _csv
-    import io as _io
 
-    def serialize(header: list[str], rows: list[list[str]]) -> bytes:
-        buf = _io.StringIO()
-        w = _csv.writer(buf, lineterminator="\r\n")  # QUOTE_MINIMAL = transitfeed
-        w.writerow(header)
-        w.writerows(rows)
-        return buf.getvalue().encode("utf-8")
+    from osm2gtfs_spark.sources import feed_members as FM
 
-    py2str = lambda v: "%.12g" % v  # noqa: E731
-    members: dict[str, bytes] = {}
-    members["agency.txt"] = serialize(
-        ["agency_phone", "agency_url", "agency_id", "agency_name", "agency_timezone", "agency_lang"],
-        [["+55 (48) 3025-6868", "http://www.consorciofenix.com.br/", "BR-Floripa", "Consórcio Fênix", "America/Sao_Paulo", "pt"]],
-    )
-    members["feed_info.txt"] = serialize(
-        ["feed_publisher_name", "feed_start_date", "feed_version", "feed_end_date", "feed_lang", "feed_publisher_url"],
-        [["Torsten Grote", "20180301", "0.1", "20190228", "pt", "https://transportr.grobox.de"]],
-    )
-    members["calendar.txt"] = serialize(
-        ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-        [[r[c] for c in ("service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")]
-         for r in tables.calendar.collect()],
-    )
-    members["routes.txt"] = serialize(
-        ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-        [[r[c] for c in ("route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color")]
-         for r in tables.routes.collect()],
-    )
-    members["trips.txt"] = serialize(
-        ["route_id", "trip_id", "trip_headsign", "service_id", "block_id", "wheelchair_accessible", "bikes_allowed", "shape_id", "direction_id"],
-        [[r[c] for c in ("route_id", "trip_id", "trip_headsign", "service_id", "block_id", "wheelchair_accessible", "bikes_allowed", "shape_id", "direction_id")]
-         for r in tables.trips.collect()],
-    )
-    members["stops.txt"] = serialize(
-        ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"],
-        [[py2str(r["lat"]), py2str(r["lon"]), r["stop_id"], "", r["name"], "0"]
-         for r in tables.stops.collect()],
-    )
-    members["stop_times.txt"] = serialize(
-        ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-        [[r["trip_id"], r["arrival_time"], r["departure_time"], r["stop_id"], r["stop_sequence"], "", "", "", "", ""]
-         for r in tables.stop_times.collect()],
-    )
-    members["shapes.txt"] = serialize(
-        ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-        [[r["shape_id"], r["shape_pt_lat"], r["shape_pt_lon"], r["shape_pt_sequence"], ""]
-         for r in tables.shapes.collect()],
-    )
+    config = {
+        "agency": {
+            "agency_phone": "+55 (48) 3025-6868",
+            "agency_url": "http://www.consorciofenix.com.br/",
+            "agency_id": "BR-Floripa",
+            "agency_name": "Consórcio Fênix",
+            "agency_timezone": "America/Sao_Paulo",
+            "agency_lang": "pt",
+        },
+        "feed_info": {
+            "publisher_name": "Torsten Grote",
+            "publisher_url": "https://transportr.grobox.de",
+            "version": "0.1",
+            "start_date": "20180301",
+            "end_date": "20190228",
+        },
+    }
+    members = FM.members("br_florianopolis", tables, config)
 
     with zipfile.ZipFile(GOLDEN) as z:
         for name, ours in members.items():

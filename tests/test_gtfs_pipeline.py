@@ -163,6 +163,26 @@ def test_auto_stop_names(spark):
     assert out["node/4"] == "Parada sin nombre"  # bare, no brackets
 
 
+def test_auto_stop_names_construction_runs_no_job(spark):
+    """Building the plan starts no Spark job: the ring join's probe (the
+    stops, a union with the way-centroid aggregate) holds an exchange,
+    so the parallelism floor leaves it as is instead of reading its
+    partition count, which would run the shuffle stages."""
+    from osm2gtfs_spark.plans.gtfs import auto_stop_names, build_stops
+    from osm2gtfs_spark.sources import docs as D
+
+    docs = D.docs_df(spark, D.CitySpec(n_lines=3, with_stop_areas=True))
+    nodes, ways = D.decode_nodes(docs), D.decode_ways(docs)
+    stops = build_stops(nodes, ways, "stop")
+    sc = spark.sparkContext
+    sc.setJobGroup("auto_stop_names_construct", "probe")
+    try:
+        auto_stop_names(stops, nodes, ways, "stop")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("auto_stop_names_construct") == []
+
+
 def _plan_nodes(df) -> set[str]:
     """Node names of ``df``'s optimized logical plan."""
     names, todo = set(), [df._jdf.queryExecution().optimizedPlan()]

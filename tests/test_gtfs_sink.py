@@ -56,12 +56,15 @@ def test_zip_pins(feeds, tmp_path):
     assert got == ZIP_PINS
 
 
-def test_zip_layout_invariance(spark, tmp_path):
-    """The frequency zip of the ``feeds`` city does not depend on the
-    physical layout of its docs parquet: as written, reversed in one
-    partition, and round-robin into 8 partitions give the same bytes
-    (and the pinned ones). A centroid summed in shuffle-arrival order
-    moves a station's last coordinate bit between these layouts."""
+@pytest.mark.parametrize("pipeline", ["frequency", "schedule"])
+def test_zip_layout_invariance(spark, tmp_path, pipeline):
+    """Each docs-parquet pipeline's zip of the ``feeds`` city does not
+    depend on the physical layout of its docs parquet: as written,
+    reversed in one partition, and round-robin into 8 partitions give
+    the same bytes (and the pinned ones). A centroid summed in
+    shuffle-arrival order moves a station's last coordinate bit between
+    these layouts."""
+    run = {"frequency": run_frequency_pipeline, "schedule": run_schedule_pipeline}[pipeline]
     docs = D.docs_df(spark, D.CitySpec(n_lines=3, with_stop_areas=True, with_schedule=True))
     src = str(tmp_path / "docs")
     docs.write.parquet(src)
@@ -78,10 +81,10 @@ def test_zip_layout_invariance(spark, tmp_path):
     for name, df in layouts.items():
         path = str(tmp_path / f"docs_{name}")
         df.write.parquet(path)
-        feed = run_frequency_pipeline(spark.read.parquet(path))
+        feed = run(spark.read.parquet(path))
         zpath = write_gtfs_zip(feed, str(tmp_path / f"{name}.zip"))
         got[name] = hashlib.sha256(open(zpath, "rb").read()).hexdigest()
-    assert set(got.values()) == {ZIP_PINS["frequency", "memory"]}, got
+    assert set(got.values()) == {ZIP_PINS[pipeline, "memory"]}, got
 
 
 def test_zip_members_and_determinism(tables, tmp_path):

@@ -1,9 +1,11 @@
 """Zip-member byte parity for gh_accra / ni_esteli / cr_gam.
 
-Same statement as the Florianópolis test: every golden-zip member is
-reproduced byte-size- and line-multiset-equal in the exact transitfeed
-CSV dialect. Row order within a file is py2 dict-iteration order (GTFS-
-semantically irrelevant) and is the only thing not reproduced.
+Same statement as the Florianópolis test: every golden-zip member the
+production writer (``feed_members.members``) gives for the city's config
+is byte-size- and line-multiset-equal to the golden, in the exact
+transitfeed CSV dialect. Row order within a file is py2 dict-iteration
+order (GTFS-semantically irrelevant) and is the only thing not
+reproduced.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import zipfile
 
 import pytest
 
-from osm2gtfs_spark.sources.gtfs_sink import transitfeed_csv_bytes
+from osm2gtfs_spark.sources import feed_members as FM
 from osm2gtfs_spark.sources.osm_xml import timetable_docs_df, xml_docs_df
 
 FIX = "/root/reference/osm2gtfs/tests/creators/fixtures"
@@ -41,15 +43,6 @@ def _check_members(city: str, members: dict[str, bytes]) -> None:
             )
 
 
-def _rows(df, cols, fill: dict[str, str] | None = None):
-    fill = fill or {}
-    out = []
-    for r in df.collect():
-        d = r.asDict()
-        out.append([fill.get(c, d.get(c, "")) for c in cols])
-    return out
-
-
 def test_accra_zip_byte_parity(spark):
     from osm2gtfs_spark.plans.accra import build_accra_tables
 
@@ -58,106 +51,71 @@ def test_accra_zip_byte_parity(spark):
         xml_docs_df(spark, [f"{fx}/overpass-stops.xml"]),
         xml_docs_df(spark, [f"{fx}/overpass-routes.xml"]),
     )
-    members = {
-        "agency.txt": transitfeed_csv_bytes(
-            ["agency_url", "agency_name", "agency_id", "agency_timezone", "agency_lang"],
-            [["https://ama.gov.gh/welcome/transport/", "Accra Tro tro", "AM3", "Africa/Accra", "en"]],
-        ),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            [["0", "20170901", "20180730", "1", "1", "1", "1", "1", "1", "1"]],
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"],
-            _rows(t.stops, ["stop_lon", "stop_name", "stop_lat", "stop_id", "location_type", "parent_station"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_color", "route_text_color"],
-            _rows(t.routes, ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_color", "route_text_color"],
-                  fill={"agency_id": "AM3", "route_desc": ""}),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"],
-            _rows(t.trips, ["route_id", "trip_id", "service_id", "shape_id", "direction_id", "trip_headsign"]),
-        ),
-        "frequencies.txt": transitfeed_csv_bytes(
-            ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"],
-            _rows(t.frequencies, ["trip_id", "start_time", "end_time", "headway_secs", "exact_times"]),
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-            _rows(t.stop_times, ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"]),
-        ),
-        "shapes.txt": transitfeed_csv_bytes(
-            ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-            _rows(t.shapes, ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"]),
-        ),
+    config = {
+        "agency": {
+            "agency_url": "https://ama.gov.gh/welcome/transport/",
+            "agency_name": "Accra Tro tro",
+            "agency_id": "AM3",
+            "agency_timezone": "Africa/Accra",
+            "agency_lang": "en",
+        },
+        "feed_info": {"start_date": "20170901", "end_date": "20180730"},
     }
-    _check_members("gh_accra", members)
+    _check_members("gh_accra", FM.members("gh_accra", t, config))
 
 
-CITY_CONSTANTS = {
+CITY_CONFIGS = {
     "ni_esteli": {
-        "agency": [["https://wiki.openstreetmap.org/wiki/ES:Wikiproyecto_Nicaragua/Transporte_p%C3%BAblico/Estel%C3%AD", "Estelí", "NI-Estelí", "America/Managua", "es"]],
-        "agency_header": ["agency_url", "agency_name", "agency_id", "agency_timezone", "agency_lang"],
-        "feed_info": [["MapaNica.net", "20191201", "0.1", "20201130", "es", "https://mapanica.net"]],
-        "dates": ("20191201", "20201130"),
-        "name_without": "Parada sin nombre",
+        "agency": {
+            "agency_url": "https://wiki.openstreetmap.org/wiki/ES:Wikiproyecto_Nicaragua/Transporte_p%C3%BAblico/Estel%C3%AD",
+            "agency_name": "Estelí",
+            "agency_id": "NI-Estelí",
+            "agency_timezone": "America/Managua",
+            "agency_lang": "es",
+        },
+        "feed_info": {
+            "publisher_name": "MapaNica.net",
+            "publisher_url": "https://mapanica.net",
+            "version": "0.1",
+            "start_date": "20191201",
+            "end_date": "20201130",
+        },
     },
     "cr_gam": {
-        "agency": [["506 25425800", "http://www.incofer.go.cr", "CR-Incofer", "Incofer", "America/Costa_Rica", "ES"]],
-        "agency_header": ["agency_phone", "agency_url", "agency_id", "agency_name", "agency_timezone", "agency_lang"],
-        "feed_info": [["Laboratorio Experimental", "20200101", "0.1", "20201231", "ES", "http://www.labexp.org"]],
-        "dates": ("20200101", "20201231"),
-        "name_without": "Parada sin nombre",
+        "agency": {
+            "agency_phone": "506 25425800",
+            "agency_url": "http://www.incofer.go.cr",
+            "agency_id": "CR-Incofer",
+            "agency_name": "Incofer",
+            "agency_timezone": "America/Costa_Rica",
+            "agency_lang": "ES",
+        },
+        "member_headers": {
+            "agency.txt": ["agency_phone", "agency_url", "agency_id", "agency_name", "agency_timezone", "agency_lang"],
+        },
+        "feed_info": {
+            "publisher_name": "Laboratorio Experimental",
+            "publisher_url": "http://www.labexp.org",
+            "version": "0.1",
+            "start_date": "20200101",
+            "end_date": "20201231",
+        },
     },
 }
 
 
-@pytest.mark.parametrize("city", list(CITY_CONSTANTS))
+@pytest.mark.parametrize("city", list(CITY_CONFIGS))
 def test_default_city_zip_byte_parity(spark, city):
     from osm2gtfs_spark.plans.default_city import build_city_tables
 
-    cfg = CITY_CONSTANTS[city]
+    cfg = CITY_CONFIGS[city]
     fx = f"{FIX}/{city}"
     t = build_city_tables(
         xml_docs_df(spark, [f"{fx}/overpass-stops.xml"]),
         xml_docs_df(spark, [f"{fx}/overpass-routes.xml"]),
         timetable_docs_df(spark, f"{fx}/timetable.json"),
-        name_without=cfg["name_without"],
-        feed_start=cfg["dates"][0],
-        feed_end=cfg["dates"][1],
+        name_without="Parada sin nombre",
+        feed_start=cfg["feed_info"]["start_date"],
+        feed_end=cfg["feed_info"]["end_date"],
     )
-    members = {
-        "agency.txt": transitfeed_csv_bytes(cfg["agency_header"], cfg["agency"]),
-        "feed_info.txt": transitfeed_csv_bytes(
-            ["feed_publisher_name", "feed_start_date", "feed_version", "feed_end_date", "feed_lang", "feed_publisher_url"],
-            cfg["feed_info"],
-        ),
-        "calendar.txt": transitfeed_csv_bytes(
-            ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"],
-            _rows(t.calendar, ["service_id", "start_date", "end_date", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]),
-        ),
-        "stops.txt": transitfeed_csv_bytes(
-            ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"],
-            _rows(t.stops, ["stop_lat", "stop_lon", "stop_id", "parent_station", "stop_name", "location_type"]),
-        ),
-        "routes.txt": transitfeed_csv_bytes(
-            ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-            _rows(t.routes, ["route_type", "route_id", "route_short_name", "route_long_name", "agency_id", "route_desc", "route_url", "route_color", "route_text_color"],
-                  fill={"agency_id": cfg["agency"][0][cfg["agency_header"].index("agency_id")], "route_desc": ""}),
-        ),
-        "trips.txt": transitfeed_csv_bytes(
-            ["route_id", "trip_id", "trip_headsign", "service_id", "shape_id", "block_id", "wheelchair_accessible", "bikes_allowed", "direction_id"],
-            _rows(t.trips, ["route_id", "trip_id", "trip_headsign", "service_id", "shape_id", "block_id", "wheelchair_accessible", "bikes_allowed", "direction_id"]),
-        ),
-        "stop_times.txt": transitfeed_csv_bytes(
-            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"],
-            _rows(t.stop_times, ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence", "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled", "timepoint"]),
-        ),
-        "shapes.txt": transitfeed_csv_bytes(
-            ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"],
-            _rows(t.shapes, ["shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence", "shape_dist_traveled"]),
-        ),
-    }
-    _check_members(city, members)
+    _check_members(city, FM.members("default", t, cfg))
