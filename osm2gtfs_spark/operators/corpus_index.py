@@ -15,10 +15,11 @@ two-level aggregations + equi joins:
   explosions.
 - ``inverted_index``: groupBy(token).collect_list — the ONE operator
   here with a genuine skew hazard (a stopword's posting list is the
-  corpus); ``max_df`` anti-joins hot tokens away first, the same
-  hot-key cap as dedup.lsh_candidate_pairs / decontaminate.
+  corpus); ``max_df`` anti-joins hot tokens away first, through
+  ``dedup.hot_keys``, the one hot-key cap of the LSH candidate joins.
 - ``tfidf_topk``: tf ⋈ df on token (AQE picks broadcast when the
-  vocabulary fits) + a per-doc top-k window.
+  vocabulary fits) + a per-doc top-k window
+  (``aggregates.topk_per_group``).
 - ``bm25_topk``: query tokens become an IN-list filter that prunes the
   term table BEFORE any join (predicate pushdown to the scan), then
   score-sum per doc and a bounded TakeOrdered top-k.
@@ -38,6 +39,9 @@ import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from osm2gtfs_spark.operators.aggregates import topk_per_group
+from osm2gtfs_spark.operators.dedup import hot_keys
 
 log = logging.getLogger(__name__)
 
@@ -161,12 +165,7 @@ def inverted_index(
             cap = max(1, n * round(max_df * 1000) // 1000)
         else:
             cap = max_df
-        hot = (
-            tc.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > cap)
-            .select("token")
-        )
+        hot = hot_keys(tc, ["token"], cap)
         if log_dropped:
             sample = sorted(r["token"] for r in hot.limit(11).collect())
             if sample:
@@ -220,11 +219,8 @@ def tfidf_topk(
         "tf",
         (F.col("tf") * F.expr(f"({n_docs} * {IDF_SCALE}) div df")).alias("score"),
     )
-    w = Window.partitionBy(doc_id).orderBy(F.col("score").desc(), F.col("token").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(doc_id, "token", "tf", "score", "rank")
+    return topk_per_group(scored, doc_id, "score", k, tie_cols=("token",)).select(
+        doc_id, "token", "tf", "score", "rank"
     )
 
 

@@ -10,8 +10,11 @@ lexicographic MIN over hex strings is a valid minhash.
 Scale shape: signatures are per-row map work (no shuffle); the LSH
 candidate join shuffles on (band_idx, band_hash) — collision buckets
 only, never all-pairs; exact Jaccard verification runs only on
-candidate pairs. Hot buckets (boilerplate text) are the skew case: cap
-bucket size or salt — see ``lsh_candidate_pairs(max_bucket)``.
+candidate pairs. Every banded candidate join in the engine (MinHash and
+SimHash bands here, hyperplane buckets in ``similarity``) is one
+:func:`bucket_pairs` call. Hot buckets (boilerplate text) are the skew
+case: :func:`hot_keys` is the one row-count cap, anti-joined away
+before the join.
 """
 
 from __future__ import annotations
@@ -147,14 +150,63 @@ def minhash_bands(doc_id: str, text_col: str, docs: DataFrame, k: int = 8, band_
     return sig.select(doc_id, F.posexplode(bands).alias("band_idx", "band_hash"))
 
 
+BAND_KEYS = ["band_idx", "band_hash"]
+
+
+def hot_keys(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame | None:
+    """The ``keys`` whose row count in ``df`` is above ``cap``, as a lazy
+    frame (None when ``cap`` is None: no cap).
+
+    The one hot-key cap of the banded joins and the stopword guard: a
+    bucket of m rows yields m²/2 pairs (a posting list of m docs), so
+    one hot key — boilerplate text, all-zero embeddings, a stopword —
+    dominates the whole join. The frame is anti-joined away by
+    :func:`bucket_pairs`; it is never collected, so a hot set of any
+    size stays distributed."""
+    if cap is None:
+        return None
+    return df.groupBy(*keys).count().filter(F.col("count") > cap).select(*keys)
+
+
+def bucket_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    left_id: tuple[str, str],
+    right_id: tuple[str, str],
+    pair: str | None = None,
+    hot: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct (left id, right id) pairs that share a bucket: the one
+    candidate join of the MinHash, SimHash and hyperplane LSH sites.
+
+    ``left_id`` / ``right_id`` are (id column, output name) per side.
+    In order: ``hot`` (a :func:`hot_keys` frame) is broadcast and
+    anti-joined away from each distinct input frame (once when ``left``
+    is ``right``), the sides are equi-joined on ``keys``, ``pair`` keeps
+    ``"<"`` (left < right) or ``"!="`` pairs (None keeps all), and the
+    pairs are made distinct. Only bucket collisions shuffle, never all
+    pairs."""
+    if pair not in (None, "<", "!="):
+        raise ValueError(f"pair must be None, '<' or '!=', got {pair!r}")
+    if hot is not None:
+        capped = left.join(F.broadcast(hot), keys, "left_anti")
+        right = capped if right is left else right.join(F.broadcast(hot), keys, "left_anti")
+        left = capped
+    (lc, a), (rc, b) = left_id, right_id
+    j = left.select(F.col(lc).alias(a), *keys).join(right.select(F.col(rc).alias(b), *keys), keys)
+    if pair is not None:
+        j = j.filter(F.col(a) < F.col(b) if pair == "<" else F.col(a) != F.col(b))
+    return j.select(a, b).distinct()
+
+
 def lsh_candidate_pairs(
     bands: DataFrame, doc_id: str = "doc_id", max_bucket: int | None = 1000
 ) -> DataFrame:
     """Self-join per band bucket → distinct candidate pairs (a < b).
 
     ``max_bucket`` drops degenerate buckets (boilerplate/empty text that
-    collides everywhere) — the skew guard: a bucket of size m yields
-    m²/2 pairs, so one hot bucket can dominate the whole join."""
+    collides everywhere) — the skew guard of :func:`hot_keys`."""
     # ``bands`` is referenced up to three times below (bucket-size agg +
     # both sides of the self join); when the caller hands a raw
     # signature-fold plan, each reference re-folds the text (higher-
@@ -162,22 +214,9 @@ def lsh_candidate_pairs(
     # same boundary as incremental_dedup). The band rows are narrow
     # (id, idx, hash), so they are materialized once.
     bands = materialize(bands)
-    if max_bucket is not None:
-        sizes = bands.groupBy("band_idx", "band_hash").count()
-        bands = (
-            bands.join(
-                F.broadcast(sizes.filter(F.col("count") > max_bucket)),
-                ["band_idx", "band_hash"],
-                "left_anti",
-            )
-        )
-    a = bands.select(F.col(doc_id).alias("doc_a"), "band_idx", "band_hash")
-    b = bands.select(F.col(doc_id).alias("doc_b"), "band_idx", "band_hash")
-    return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    return bucket_pairs(
+        bands, bands, BAND_KEYS, (doc_id, "doc_a"), (doc_id, "doc_b"), "<",
+        hot_keys(bands, BAND_KEYS, max_bucket),
     )
 
 
@@ -475,20 +514,9 @@ def token_set_dup_pairs(docs: DataFrame, doc_id: str = "doc_id", text_col: str =
         doc_id,
         F.posexplode(
             F.array(*[(F.shiftrightunsigned("simhash", i * 16) % F.lit(65536)).cast("long") for i in range(4)])
-        ).alias("band_idx", "band_val"),
+        ).alias(*BAND_KEYS),
     )
-    # both sides of the self join reference the simhash fold — one
-    # materialization of the narrow band rows instead of two folds
-    # (optimization r6, the minhash band-table pattern)
-    bands = materialize(bands)
-    a = bands.select(F.col(doc_id).alias("doc_a"), "band_idx", "band_val")
-    b = bands.select(F.col(doc_id).alias("doc_b"), "band_idx", "band_val")
-    cand = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = lsh_candidate_pairs(bands, doc_id, max_bucket=None)
     ts = docs.select(
         F.col(doc_id),
         F.array_sort(F.array_distinct(F.split(F.col(text_col), " ", -1))).alias("ts"),
@@ -519,7 +547,9 @@ def decontaminate(
     pair join. ``max_shingle_docs`` drops shingles present in more than
     that many BENCHMARK docs (stopword-gram guard, the same anti-join
     skew cap as the LSH hot-bucket rule): a ubiquitous n-gram would
-    fan out to every corpus doc and flag the whole corpus.
+    fan out to every corpus doc and flag the whole corpus. It counts
+    DISTINCT benchmark ids, not rows, so it is not a :func:`hot_keys`
+    cap.
     """
     c = corpus.select(F.col(doc_id), F.explode(shingles(F.col(text_col), n)).alias("sh"))
     b = benchmark.select(
@@ -728,33 +758,9 @@ def incremental_dedup(
     nb = materialize(nb)
     if corpus_bands is None:
         cb = materialize(cb)
-    if max_bucket is not None:
-        hot = (
-            cb.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("band_idx", "band_hash")
-        )
-        nb = nb.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-        cb = cb.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-    n_side = nb.select(F.col(doc_id).alias("new_id"), "band_idx", "band_hash")
-    cand_old = (
-        n_side.join(
-            cb.select(F.col(doc_id).alias("old_id"), "band_idx", "band_hash"),
-            ["band_idx", "band_hash"],
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    cand_self = (
-        n_side.join(
-            nb.select(F.col(doc_id).alias("old_id"), "band_idx", "band_hash"),
-            ["band_idx", "band_hash"],
-        )
-        .filter(F.col("old_id") < F.col("new_id"))
-        .select("new_id", "old_id")
-        .distinct()
-    )
+    hot = hot_keys(cb, BAND_KEYS, max_bucket)
+    cand_old = bucket_pairs(nb, cb, BAND_KEYS, (doc_id, "new_id"), (doc_id, "old_id"), hot=hot)
+    cand_self = bucket_pairs(nb, nb, BAND_KEYS, (doc_id, "old_id"), (doc_id, "new_id"), "<", hot)
     new_sh = new_docs.select(
         F.col(doc_id).alias("new_id"), shingles(F.col(text_col)).alias("sh_n")
     )

@@ -8,8 +8,12 @@
   path: random-hyperplane LSH. Each vector gets a sign-pattern bucket
   from R fixed hyperplanes; candidates share a bucket (multi-probe via
   several independent tables), so the join is equi on (table, bucket)
-  and shuffles only collisions. Recall vs brute force is asserted in
-  tests, not assumed.
+  and shuffles only collisions: one ``dedup.bucket_pairs`` call, with
+  the ``max_bucket`` cap as ``dedup.hot_keys`` of the corpus buckets.
+  Recall vs brute force is asserted in tests, not assumed.
+
+Every top-k is ``aggregates.topk_per_group`` over cosine desc, ties on
+neighbor_id asc.
 
 Dot products use ``F.zip_with`` + ``F.aggregate`` — JVM-side, no UDF.
 Hyperplanes are seeded numpy, broadcast as literal arrays.
@@ -21,9 +25,11 @@ import json
 import logging
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm2gtfs_spark.operators import dedup as DD
+from osm2gtfs_spark.operators.aggregates import topk_per_group
 from osm2gtfs_spark.session import materialize
 
 log = logging.getLogger(__name__)
@@ -72,11 +78,8 @@ def cosine_topk_bruteforce(
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
     j = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
     j = j.withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+    return topk_per_group(j, "query_id", "cos", k, tie_cols=("neighbor_id",)).select(
+        "query_id", "neighbor_id", "rank"
     )
 
 
@@ -109,53 +112,48 @@ def auto_n_planes(corpus_size: int) -> int:
     return max(_MIN_PLANES, min(_MAX_PLANES, math.ceil(math.log2(corpus_size / TARGET_BUCKET_ROWS))))
 
 
-def _hot_bucket_keys_checked(
-    sizing: DataFrame, max_bucket: int, n_planes: int, op: str
-) -> DataFrame:
-    """(table, bucket) keys whose *corpus-side* population exceeds
-    ``max_bucket`` (the skew guard ported from dedup.lsh_candidate_pairs:
-    a bucket of m vectors yields m²/2 pairs, so one hot bucket — all-zero
-    embeddings, boilerplate — dominates the whole join), plus the
-    undersized-plane guard (VERDICT r3 #1):
-    if the cap would eliminate EVERY non-empty bucket the candidate join
-    degenerates to an empty result — a wrong-shaped answer, not an
-    approximation — so fail loudly with the fix in the message. A
-    mostly-hot table (>50 %) logs a warning.
+BUCKET_KEYS = ["table", "bucket"]
 
-    ONE materialization of the bucket-count aggregate serves both the
-    guard stats and the hot-key list: counts persist for the stats
-    action, the hot keys (≤ N/max_bucket rows — bounded metadata by
-    construction) are collected to the driver, the cache is released
-    immediately, and the anti-join side gets a literal DataFrame — no
-    second pass over the bucket table at any scale."""
-    counts = sizing.groupBy("table", "bucket").count().persist()
-    try:
-        stats = counts.agg(
+
+def _hot_bucket_keys_checked(
+    buckets: DataFrame, max_bucket: int | None, n_planes: int, op: str
+) -> DataFrame | None:
+    """:func:`~osm2gtfs_spark.operators.dedup.hot_keys` of the
+    *corpus-side* (table, bucket) populations, plus the undersized-plane
+    guard (VERDICT r3 #1): if the cap would eliminate EVERY non-empty
+    bucket the candidate join degenerates to an empty result — a
+    wrong-shaped answer, not an approximation — so fail loudly with the
+    fix in the message. A mostly-hot table (>50 %) logs a warning.
+
+    The guard is ONE stats action over the bucket counts at
+    construction; the hot keys themselves stay a lazy frame for the
+    anti-join, never collected to the driver."""
+    if max_bucket is None:
+        return None
+    stats = (
+        buckets.groupBy(*BUCKET_KEYS)
+        .count()
+        .agg(
             F.count(F.lit(1)).alias("total"),
             F.sum((F.col("count") > max_bucket).cast("long")).alias("hot"),
-        ).first()
-        total, hot = stats["total"], stats["hot"] or 0
-        if total > 0 and hot == total:
-            raise ValueError(
-                f"{op}: max_bucket={max_bucket} eliminates all {total} LSH buckets "
-                f"(n_planes={n_planes} is too coarse for this corpus). Pass "
-                f"n_planes=None to auto-size buckets to the corpus, or raise "
-                f"max_bucket."
-            )
-        if total > 0 and hot * 2 > total:
-            log.warning(
-                "%s: %d/%d LSH buckets exceed max_bucket=%d and will be dropped; "
-                "recall may suffer — consider n_planes=None (auto-sizing)",
-                op, hot, total, max_bucket,
-            )
-        hot_rows = [(r["table"], r["bucket"]) for r in counts.filter(F.col("count") > max_bucket).collect()]
-    finally:
-        counts.unpersist()
-    return sizing.sparkSession.createDataFrame(hot_rows, "table int, bucket long")
-
-
-def _cap_hot_buckets(buckets: DataFrame, hot: DataFrame) -> DataFrame:
-    return buckets.join(F.broadcast(hot), ["table", "bucket"], "left_anti")
+        )
+        .first()
+    )
+    total, hot = stats["total"], stats["hot"] or 0
+    if total > 0 and hot == total:
+        raise ValueError(
+            f"{op}: max_bucket={max_bucket} eliminates all {total} LSH buckets "
+            f"(n_planes={n_planes} is too coarse for this corpus). Pass "
+            f"n_planes=None to auto-size buckets to the corpus, or raise "
+            f"max_bucket."
+        )
+    if total > 0 and hot * 2 > total:
+        log.warning(
+            "%s: %d/%d LSH buckets exceed max_bucket=%d and will be dropped; "
+            "recall may suffer — consider n_planes=None (auto-sizing)",
+            op, hot, total, max_bucket,
+        )
+    return DD.hot_keys(buckets, BUCKET_KEYS, max_bucket)
 
 
 # Above this many per-row multiply-adds (n_tables × n_planes × dim) the
@@ -293,26 +291,15 @@ def cosine_topk_lsh(
     an empty result."""
     if n_planes is None:
         n_planes = auto_n_planes(corpus_size if corpus_size is not None else corpus.count())
-    qb = hyperplane_buckets(queries, dim, n_planes, n_tables, id_col, vec_col).withColumnRenamed(
-        id_col, "query_id"
-    )
-    cb = hyperplane_buckets(corpus, dim, n_planes, n_tables, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    )
+    qb = hyperplane_buckets(queries, dim, n_planes, n_tables, id_col, vec_col)
     # the corpus bucket table is consumed by the hot-bucket aggregate
     # AND the candidate join — without a materialization boundary the
     # plane dot products run once per consumer (optimization r6, the
     # dedup band-table pattern); narrow (id, table, bucket) rows
-    cb = materialize(cb)
-    if max_bucket is not None:
-        hot = _hot_bucket_keys_checked(cb, max_bucket, n_planes, "cosine_topk_lsh")
-        qb = _cap_hot_buckets(qb, hot)
-        cb = _cap_hot_buckets(cb, hot)
-    cand = (
-        qb.join(cb, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cb = materialize(hyperplane_buckets(corpus, dim, n_planes, n_tables, id_col, vec_col))
+    hot = _hot_bucket_keys_checked(cb, max_bucket, n_planes, "cosine_topk_lsh")
+    cand = DD.bucket_pairs(
+        qb, cb, BUCKET_KEYS, (id_col, "query_id"), (id_col, "neighbor_id"), "!=", hot
     )
     j = (
         cand.join(
@@ -325,11 +312,8 @@ def cosine_topk_lsh(
         )
         .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return topk_per_group(j, "query_id", "cos", k, tie_cols=("neighbor_id",)).select(
+        "query_id", "neighbor_id", "rank", "cos"
     )
 
 
@@ -351,23 +335,12 @@ def embedding_near_dup(
     caps hot buckets and raises if the cap would empty every bucket."""
     if n_planes is None:
         n_planes = auto_n_planes(corpus_size if corpus_size is not None else vectors.count())
-    b = hyperplane_buckets(vectors, dim, n_planes, n_tables, id_col=id_col, vec_col=vec_col)
     # referenced by the hot-bucket aggregate + both sides of the self
     # join — materialize the narrow bucket rows once (optimization r6,
     # the dedup band-table pattern)
-    b = materialize(b)
-    if max_bucket is not None:
-        b = _cap_hot_buckets(
-            b, _hot_bucket_keys_checked(b, max_bucket, n_planes, "embedding_near_dup")
-        )
-    a = b.withColumnRenamed(id_col, "id_a")
-    c = b.withColumnRenamed(id_col, "id_b")
-    cand = (
-        a.join(c, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    b = materialize(hyperplane_buckets(vectors, dim, n_planes, n_tables, id_col=id_col, vec_col=vec_col))
+    hot = _hot_bucket_keys_checked(b, max_bucket, n_planes, "embedding_near_dup")
+    cand = DD.bucket_pairs(b, b, BUCKET_KEYS, (id_col, "id_a"), (id_col, "id_b"), "<", hot)
     v = vectors.select(F.col(id_col), F.col(vec_col))
     j = (
         cand.join(v.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")), "id_a")
@@ -536,11 +509,8 @@ def cosine_topk_ivf(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return topk_per_group(j, "query_id", "cos", k, tie_cols=("neighbor_id",)).select(
+        "query_id", "neighbor_id", "rank", "cos"
     )
 
 

@@ -734,11 +734,6 @@ _TSE_PAIRS_SQL = """
 """
 
 
-def _token_set_dup_pairs(docs: DataFrame) -> DataFrame:
-    """Delegates to the public operator (moved to operators/dedup.py)."""
-    return DD.token_set_dup_pairs(docs)
-
-
 @register(
     "dedup_components",
     """
@@ -768,7 +763,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token-set-dup edges (operators/dedup.connected_components) —
     O(log diameter) rounds, two vertex-id shuffles per round. The oracle
     is a DuckDB recursive CTE over the same edge set."""
-    pairs = _token_set_dup_pairs(tpch.load(spark, sf_dir, "documents"))
+    pairs = DD.token_set_dup_pairs(tpch.load(spark, sf_dir, "documents"))
     return DD.connected_components(pairs)
 
 
@@ -837,7 +832,7 @@ def dedup_keeper_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs → connected components → apply_keepers anti-join. What a
     training pipeline actually ships: the surviving corpus."""
     d = tpch.load(spark, sf_dir, "documents")
-    comps = DD.connected_components(_token_set_dup_pairs(d))
+    comps = DD.connected_components(DD.token_set_dup_pairs(d))
     return DD.apply_keepers(d, comps).select("doc_id", "n_chars")
 
 
@@ -853,7 +848,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     discarded before hashing), making the oracle SQL-expressible.
     Hamming-threshold variants (near-dups) are covered by the pandas
     brute-force oracle in tests/test_dedup_similarity.py."""
-    return _token_set_dup_pairs(tpch.load(spark, sf_dir, "documents"))
+    return DD.token_set_dup_pairs(tpch.load(spark, sf_dir, "documents"))
 
 
 @register(

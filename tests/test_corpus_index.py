@@ -323,6 +323,27 @@ def test_incremental_dedup_admission(spark):
     assert got == {101, 102}
 
 
+def test_incremental_dedup_hot_cap_counts_corpus_side(spark):
+    """max_bucket counts bucket rows in the CORPUS only: a text copied
+    three times in the corpus fills hot buckets, so its new copy finds
+    no candidate and is admitted; a text copied four times inside the
+    batch alone fills no corpus bucket, so its new×new pairs survive
+    and only the first copy is admitted."""
+    from osm2gtfs_spark.operators.dedup import incremental_dedup
+
+    old_text = " ".join(f"alpha{i} bravo{i} carol{i}" for i in range(10))
+    batch_dup = " ".join(f"mike{i} nov{i} osc{i}" for i in range(10))
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame([(i, old_text) for i in (1, 2, 3)], schema)
+    new = spark.createDataFrame(
+        [(200 + i, batch_dup) for i in range(4)] + [(300, old_text)], schema
+    )
+    got = {r.doc_id for r in incremental_dedup(new, corpus, max_bucket=2).collect()}
+    assert got == {200, 300}
+    uncapped = {r.doc_id for r in incremental_dedup(new, corpus, max_bucket=None).collect()}
+    assert uncapped == {200}
+
+
 def test_url_canonicalize_anchored_params(spark):
     """Review r4: only WHOLE param names are tracking params — 'href='
     must survive; consecutive tracking params must all be removed."""

@@ -152,6 +152,49 @@ def test_lsh_bucket_skew_guard(docs):
     assert capped <= unlimited
 
 
+# (id, band_idx, band_hash): key (0, "a") is hot on the left only,
+# (0, "b") on the right only, at cap 2
+BUCKET_LEFT = [(1, 0, "a"), (2, 0, "a"), (3, 0, "a"), (4, 0, "b"), (5, 1, "a"), (2, 1, "a"), (1, 1, "c")]
+BUCKET_RIGHT = [(3, 0, "a"), (7, 0, "a"), (4, 0, "b"), (8, 0, "b"), (9, 0, "b"), (2, 1, "a"), (6, 1, "a"), (1, 1, "c")]
+PAIR_PREDICATES = {None: lambda a, b: True, "<": lambda a, b: a < b, "!=": lambda a, b: a != b}
+
+
+@pytest.mark.parametrize("pair", [None, "<", "!="])
+@pytest.mark.parametrize("capped", [False, True])
+@pytest.mark.parametrize("self_join", [False, True])
+def test_bucket_pairs_matches_brute_force(spark, pair, capped, self_join):
+    """bucket_pairs == the brute-force pair set over every bucket; the
+    hot set (counted on the left) drops a key from BOTH sides, a key hot
+    only on the right stays."""
+    schema = "doc_id long, band_idx int, band_hash string"
+    left = spark.createDataFrame(BUCKET_LEFT, schema)
+    right = left if self_join else spark.createDataFrame(BUCKET_RIGHT, schema)
+    hot = DD.hot_keys(left, DD.BAND_KEYS, 2) if capped else None
+    got = DD.bucket_pairs(
+        left, right, DD.BAND_KEYS, ("doc_id", "id_l"), ("doc_id", "id_r"), pair, hot
+    )
+    assert got.columns == ["id_l", "id_r"]
+    hot_set = {(0, "a")} if capped else set()
+    want = {
+        (i, j)
+        for i, *k in BUCKET_LEFT
+        for j, *k2 in (BUCKET_LEFT if self_join else BUCKET_RIGHT)
+        if k == k2 and tuple(k) not in hot_set and PAIR_PREDICATES[pair](i, j)
+    }
+    rows = [(r.id_l, r.id_r) for r in got.collect()]
+    assert len(rows) == len(set(rows)), "pairs must be distinct"
+    assert set(rows) == want
+
+
+def test_hot_keys_counts_rows_above_cap(spark):
+    df = spark.createDataFrame(BUCKET_RIGHT, "doc_id long, band_idx int, band_hash string")
+    assert {tuple(r) for r in DD.hot_keys(df, DD.BAND_KEYS, 2).collect()} == {(0, "b")}
+    assert {tuple(r) for r in DD.hot_keys(df, DD.BAND_KEYS, 1).collect()} == {(0, "a"), (0, "b"), (1, "a")}
+    assert DD.hot_keys(df, DD.BAND_KEYS, None) is None
+    with pytest.raises(ValueError, match="pair must be"):
+        DD.bucket_pairs(df, df, DD.BAND_KEYS, ("doc_id", "a"), ("doc_id", "b"), ">")
+
+
 def test_ivf_topk_recall_and_exactness(spark, sf_dir):
     """IVF coarse-quantizer ANN: recall grows with nprobe and probing
     ALL cells recovers exact brute-force results (the posting lists

@@ -5,7 +5,7 @@ Every materialization boundary goes through
 local checkpoint from the SparkContext's checkpoint dir. This scan
 fails on any other cut in ``osm2gtfs_spark/``: a ``localCheckpoint``,
 ``checkpoint`` or ``cache`` call or a ``setCheckpointDir`` outside the
-helper, or a ``persist`` outside the three sites that release their
+helper, or a ``persist`` outside the two sites that release their
 blocks before they return.
 """
 
@@ -22,7 +22,6 @@ CUTS = {"localCheckpoint", "checkpoint", "cache", "setCheckpointDir"}
 SCOPED_PERSISTS = {
     ("operators/spatial.py", "convex_hull"),
     ("operators/spatial.py", "simplify_polyline"),
-    ("operators/similarity.py", "_hot_bucket_keys_checked"),
 }
 
 
@@ -55,7 +54,7 @@ def test_every_lineage_cut_goes_through_materialize():
     ]
     assert stray == []
     # the scan is not vacuous: it sees the helper's two cuts and the
-    # three scoped persists
+    # two scoped persists
     seen = {(rel, func, attr) for rel, func, attr, _ in sites}
     assert {(*HELPER, "checkpoint"), (*HELPER, "localCheckpoint")} <= seen
     assert {(rel, func, "persist") for rel, func in SCOPED_PERSISTS} <= seen

@@ -77,7 +77,7 @@ def workload(spark, sf_dir: str, doc_mult: int, pt_mult: int) -> dict[str, float
     n_docs = docs.count()
     t0 = time.time()
     bands = DD.minhash_bands_fast("doc_id", "text", docs, 8, 2)
-    pairs = DD.lsh_candidate_pairs(bands.withColumnRenamed("band_hash", "band_hash"))
+    pairs = DD.lsh_candidate_pairs(bands)
     n_pairs = DD.ngram_jaccard(pairs, docs).count()
     out["dedup_sec"] = time.time() - t0
     rows += n_docs + n_pairs
