@@ -234,14 +234,11 @@ def main() -> None:
     # batch-equivalence of the results is asserted in tests; the wall
     # times here put the streaming overhead on the per-round record
     from osm2gtfs_spark.functions.geo import cell_id
+    from osm2gtfs_spark.sources import tpch
     from osm2gtfs_spark.streaming import events as SE
 
     def to_points(df):
-        return df.select(
-            "ts",
-            ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-            ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
-        )
+        return df.select("ts", *tpch.event_lat_lon())
 
     with tempfile.TemporaryDirectory() as td:
         t0 = time.time()

@@ -16,21 +16,23 @@ every AddTrip, including trips whose stop walk later breaks.
 Flow: :func:`stages` is the shared XML stage table
 (:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`) plus the stop-area
 stations, the timetable decode, the normalized lines, the per-service
-schedule join and the trips; the stage walk stores each stage once, and
-:func:`build_city_tables` derives the output tables from the stored
-stages, the aligned and distance-filled stop times with the schedule
-pipeline's own ``_schedule_filled``.
+schedule join and the trips, numbered from 0 by the schedule
+pipeline's own ``_schedule_trips_full``; the stage walk stores each
+stage once, and :func:`build_city_tables` derives the output tables
+from the stored stages. Its stop times are the schedule pipeline's:
+``_schedule_filled`` aligns them and fills the gaps with the one W6
+fill (:func:`~osm2gtfs_spark.plans.gtfs.interpolate_times_distance`),
+and ``_schedule_stop_times`` numbers them per trip.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.functions.colors import contrast_text_colour, normalize_colour
-from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.plans import gtfs, pipeline
 from osm2gtfs_spark.plans import schedule_path as SP
 from osm2gtfs_spark.plans.pipeline import Stage
@@ -90,7 +92,10 @@ def stages(name_without: str = "stop") -> tuple[Stage, ...]:
             lambda lines: normalize_colour(lines, "colour", "colour_norm"),
         ),
         Stage(("default_per_service",), ("route_itineraries", "timetable"), _per_service),
-        Stage(("default_trips",), ("default_per_service",), _trips),
+        Stage(
+            ("default_sched_trips",), ("default_per_service",),
+            lambda per_service: pipeline._schedule_trips_full(per_service, start=0),
+        ),
     )
 
 
@@ -104,29 +109,6 @@ def _stations(rels: DataFrame, stops: DataFrame, name_without: str) -> tuple[Dat
 
 def _per_service(itins: DataFrame, schedule: DataFrame) -> DataFrame:
     return SP.itinerary_service_schedule(SP.match_schedule(verify_itineraries(itins, schedule), schedule))
-
-
-def _trips(per_service: DataFrame) -> DataFrame:
-    """Schedule join path, exact order (O5)."""
-    return (
-        global_index(
-            per_service.select(
-                "itinerary_osm_id",
-                "service",
-                "route_id",
-                "to",
-                "itinerary_id",
-                "seq",
-                "svc_order",
-                F.posexplode("times").alias("trip_seq", "_t"),
-            ),
-            ["route_id", "seq", "itinerary_osm_id", "svc_order", "trip_seq"],
-            "_trip_idx",
-            start=0,
-        )
-        .withColumn("trip_id", F.col("_trip_idx").cast("string"))
-        .drop("_trip_idx")
-    )
 
 
 def build_city_tables(
@@ -144,7 +126,7 @@ def build_city_tables(
         catalog,
     )
     stops, stations, parent_map = s["default_stops"], s["default_stations"], s["default_parent_map"]
-    per_service, trips_full = s["default_per_service"], s["default_trips"]
+    per_service, trips_full = s["default_per_service"], s["default_sched_trips"]
 
     # --- stops + stations (P11 ids) -------------------------------------
     stops_txt = gtfs.stops_txt(
@@ -171,28 +153,17 @@ def build_city_tables(
     )
 
     # --- trips + stop_times (schedule join path, exact order) ----------
-    trips_txt = trips_full.select(
-        "route_id",
-        "trip_id",
-        F.col("to").alias("trip_headsign"),
-        SP.service_id_col().alias("service_id"),
-        F.col("itinerary_id").alias("shape_id"),
-    )
+    trips_txt = trips_full.select("route_id", "trip_id", "trip_headsign", "service_id", "shape_id")
     filled = pipeline._schedule_filled(s["route_itin_stops"], stops, parent_map, stations, per_service)
-    st_order = Window.partitionBy("trip_id").orderBy("pos")
     stop_times_txt = (
-        filled.join(
-            trips_full.select("trip_id", "itinerary_osm_id", "service", "trip_seq"),
-            ["itinerary_osm_id", "service", "trip_seq"],
-        )
-        .filter(F.col("time_secs_filled").isNotNull())
+        pipeline._schedule_stop_times(filled, trips_full)
         .join(stops.select("stop_key", "stop_id"), "stop_key")
         .select(
             "trip_id",
-            gtfs.secs_to_gtfs(F.col("time_secs_filled")).alias("arrival_time"),
-            gtfs.secs_to_gtfs(F.col("time_secs_filled")).alias("departure_time"),
+            "arrival_time",
+            "departure_time",
             "stop_id",
-            F.row_number().over(st_order).cast("string").alias("stop_sequence"),
+            F.col("stop_sequence").cast("string").alias("stop_sequence"),
         )
     )
     calendar, _ = SP.build_calendar(per_service.select("service"), feed_start, feed_end)
@@ -202,10 +173,10 @@ def build_city_tables(
     # itinerary osm id
     shapes_txt = gtfs.shapes_txt(
         s["route_shapes"].join(
-            trips_full.select("itinerary_osm_id", "itinerary_id").distinct(),
+            trips_full.select("itinerary_osm_id", "shape_id").distinct(),
             "itinerary_osm_id",
         ),
-        F.col("itinerary_id"),
+        F.col("shape_id"),
     )
     return CityTables(
         stops=stops_txt,

@@ -24,7 +24,8 @@ Reproduces the reference's br_florianopolis creators
   direction_id/block_id/wheelchair/bikes empty (navitia quirk).
 - stop_times (:234-253, add_trip_stops :300-332): first stop timed at
   the departure, last stop at departure + Fenix duration, interior
-  stops distance-interpolated (transitfeed kernel, radius 6367000 m).
+  stops filled by the one W6 fill
+  (:func:`~osm2gtfs_spark.plans.gtfs.interpolate_times_distance`).
 - shapes (:190-198): shape_id = ref; the points are the FIRST matched
   itinerary's stitched shape (both directions share it — reference
   quirk preserved).
@@ -260,6 +261,43 @@ def _trips(matched: DataFrame, exc: DataFrame, fen: DataFrame) -> DataFrame:
     )
 
 
+def _stop_times(trips_full: DataFrame, itin_stops: DataFrame, stops: DataFrame) -> DataFrame:
+    """stop_times.txt rows: the first stop timed at the departure, the
+    last at ``end_secs``, interior stops distance-interpolated.
+
+    A raw platform member that resolves to no stop is silently skipped
+    by the reference (add_trip_stops isinstance check, :303-305) — but
+    the departure is only written at raw index 1 and the arrival only
+    at raw index len(stops) (:306-320), so an unresolved FIRST/LAST
+    member means a missing timepoint and transitfeed's interpolation
+    fails → those times stay EMPTY in the golden (helper.py:56-68
+    swallows the error). So raw pos 0 and the last raw pos are the only
+    timepoints, each only when it resolves; the fill leaves every stop
+    past a missing one NULL, which ``secs_to_gtfs`` writes as ''."""
+    resolved = itin_stops.join(stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key")
+    last_raw = itin_stops.groupBy("itinerary_osm_id").agg(F.max("pos").alias("last_raw_pos"))
+    st = (
+        trips_full.select("trip_id", "itinerary_osm_id", "dep_secs", "end_secs")
+        .join(resolved, "itinerary_osm_id")
+        .join(F.broadcast(last_raw), "itinerary_osm_id")
+        .withColumn(
+            "time_secs",
+            F.when(F.col("pos") == 0, F.col("dep_secs"))
+            .when(F.col("pos") == F.col("last_raw_pos"), F.col("end_secs"))
+            .cast("long"),
+        )
+    )
+    time_str = gtfs.secs_to_gtfs(F.col("time_secs_filled"))
+    seq = F.row_number().over(Window.partitionBy("trip_id").orderBy("pos"))
+    return gtfs.interpolate_times_distance(st, ["trip_id"]).select(
+        "trip_id",
+        time_str.alias("arrival_time"),
+        time_str.alias("departure_time"),
+        "stop_id",
+        seq.cast("string").alias("stop_sequence"),
+    )
+
+
 def build_florianopolis_tables(
     stops_docs: DataFrame,
     routes_docs: DataFrame,
@@ -370,66 +408,12 @@ def build_florianopolis_tables(
     # strategy (no forced broadcast)
     shapes = gtfs.shapes_txt(s["route_shapes"].join(shape_owner, "itinerary_osm_id"), F.col("ref"))
 
-    # --- stop_times: first/last timed, interior distance-interp ----------
-    # A raw platform member that resolves to no stop is silently skipped
-    # by the reference (add_trip_stops isinstance check, :303-305) — but
-    # the departure is only written at raw index 1 and the arrival only
-    # at raw index len(stops) (:306-320), so an unresolved FIRST/LAST
-    # member means a missing timepoint and transitfeed's interpolation
-    # fails → those times stay EMPTY in the golden (helper.py:56-68
-    # swallows the error).
-    itin_stops = s["route_itin_stops"]
-    resolved = itin_stops.join(
-        stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key"
-    )
-    bounds = (
-        itin_stops.groupBy("itinerary_osm_id")
-        .agg(F.max("pos").alias("max_raw_pos"))
-        .join(
-            resolved.groupBy("itinerary_osm_id").agg(
-                F.min("pos").alias("min_res_pos"), F.max("pos").alias("max_res_pos")
-            ),
-            "itinerary_osm_id",
-        )
-        .select(
-            "itinerary_osm_id",
-            (F.col("min_res_pos") == 0).alias("first_timed"),
-            (F.col("max_res_pos") == F.col("max_raw_pos")).alias("last_timed"),
-        )
-    )
-    st = gtfs.cumulative_distance(
-        trips_full.select("trip_id", "itinerary_osm_id", "dep_secs", "end_secs")
-        .join(resolved, "itinerary_osm_id")
-        .join(F.broadcast(bounds), "itinerary_osm_id")
-    )
-    secs = F.round(
-        F.col("dep_secs")
-        + (F.col("end_secs") - F.col("dep_secs")) * F.col("cum_m") / F.col("total_m"),
-        0,
-    ).cast("long")
-    seq = F.row_number().over(Window.partitionBy("trip_id").orderBy("pos"))
-    n_rows = F.count(F.lit(1)).over(Window.partitionBy("trip_id"))
-    time_str = (
-        F.when(
-            F.col("first_timed") & F.col("last_timed"), gtfs.secs_to_gtfs(secs)
-        )
-        .when((seq == 1) & F.col("first_timed"), gtfs.secs_to_gtfs(F.col("dep_secs")))
-        .when((seq == n_rows) & F.col("last_timed"), gtfs.secs_to_gtfs(F.col("end_secs")))
-        .otherwise(F.lit(""))
-    )
-    stop_times = st.select(
-        "trip_id",
-        time_str.alias("arrival_time"),
-        time_str.alias("departure_time"),
-        "stop_id",
-        seq.cast("string").alias("stop_sequence"),
-    )
     return FlorianopolisTables(
         stops=gtfs.stops_txt(stops, F.col("stop_id"), "0", F.lit("")),
         routes=routes,
         calendar=calendar,
         calendar_dates=calendar_dates,
         trips=trips,
-        stop_times=stop_times,
+        stop_times=_stop_times(trips_full, s["route_itin_stops"], stops),
         shapes=shapes,
     )

@@ -30,7 +30,6 @@ from pyspark.sql.pandas.functions import pandas_udf
 from osm2gtfs_spark.operators.indexing import SMALL_INDEX_THRESHOLD, global_index
 from osm2gtfs_spark.operators.spatial import argmin_struct, ring_candidates
 from osm2gtfs_spark.functions.geo import (
-    TRANSITFEED_RADIUS_M,
     cell_id,
     centroid_lat,
     centroid_lon,
@@ -433,7 +432,9 @@ def build_shapes(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> Dat
 # ---------------------------------------------------------------------------
 
 def secs_to_gtfs(col):
-    """Seconds-since-midnight → 'HH:MM:SS'; hours may exceed 24 (GTFS)."""
+    """Seconds-since-midnight → 'HH:MM:SS'; hours may exceed 24 (GTFS).
+    NULL gives '' (``concat_ws`` skips nulls): an untimed stop's empty
+    time."""
     h = F.floor(col / 3600)
     m = F.floor((col % 3600) / 60)
     s = col % 60
@@ -443,6 +444,54 @@ def secs_to_gtfs(col):
         F.lpad(m.cast("string"), 2, "0"),
         F.lpad(s.cast("string"), 2, "0"),
     )
+
+
+def interpolate_times_distance(rows: DataFrame, key: list[str]) -> DataFrame:
+    """W6, transitfeed-exact: add ``time_secs_filled``, the untimed
+    stops filled by DISTANCE-weighted linear interpolation between the
+    surrounding timepoints. The one stop-time fill of every creator.
+
+    ``rows`` carry the trip key ``key``, ``pos`` (stop order), ``lat``,
+    ``lon`` and ``time_secs``, set only at timepoints. transitfeed's
+    ``GetTimeInterpolatedStops`` (``Helper.interpolate_stop_times``,
+    helper.py:56-68) splits the time between two timepoints in
+    proportion to the cumulative great-circle distance (radius
+    6367000 m) along the trip's stops, rounded to whole seconds —
+    verified bit-exact against the reference's golden feeds. A stop
+    before the first or after the last timepoint stays NULL; a stop
+    between two timepoints at the same distance (a zero-length span)
+    gets the earlier one's time. Pure window expressions, no UDF."""
+    from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M
+
+    w_seq = Window.partitionBy(*key).orderBy("pos")
+    w_back = w_seq.rowsBetween(Window.unboundedPreceding, 0)
+    w_fwd = w_seq.rowsBetween(0, Window.unboundedFollowing)
+    prev_lat, prev_lon = F.lag("lat").over(w_seq), F.lag("lon").over(w_seq)
+    leg = F.when(prev_lat.isNull(), F.lit(0.0)).otherwise(
+        haversine_m(prev_lat, prev_lon, "lat", "lon", radius=TRANSITFEED_RADIUS_M)
+    )
+    df = rows.withColumn("_leg", leg).withColumn("_cum", F.sum("_leg").over(w_back))
+    timed_cum = F.when(F.col("time_secs").isNotNull(), F.col("_cum"))
+    df = (
+        df.withColumn("prev_t", F.last("time_secs", ignorenulls=True).over(w_back))
+        .withColumn("prev_c", F.last(timed_cum, ignorenulls=True).over(w_back))
+        .withColumn("next_t", F.first("time_secs", ignorenulls=True).over(w_fwd))
+        .withColumn("next_c", F.first(timed_cum, ignorenulls=True).over(w_fwd))
+    )
+    interp = F.round(
+        F.col("prev_t")
+        + (F.col("next_t") - F.col("prev_t"))
+        * (F.col("_cum") - F.col("prev_c"))
+        / (F.col("next_c") - F.col("prev_c")),
+        0,
+    ).cast("long")
+    return df.withColumn(
+        "time_secs_filled",
+        F.when(F.col("time_secs").isNotNull(), F.col("time_secs"))
+        .when(F.col("prev_t").isNull() | F.col("next_t").isNull(), F.lit(None))
+        .when(F.col("next_c") == F.col("prev_c"), F.col("prev_t"))
+        .otherwise(interp),
+    ).drop("prev_t", "prev_c", "next_t", "next_c", "_leg", "_cum")
 
 
 def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
@@ -504,10 +553,12 @@ def build_frequencies(trips: DataFrame) -> DataFrame:
 
 
 def build_stop_times(trips: DataFrame, itin_stops: DataFrame) -> DataFrame:
-    """W6: equal-count interpolation between first/last timepoints.
+    """stop_times of the docs frequency pipeline, spaced by stop COUNT.
 
-    First stop departs 06:00:00, last at 06:00 + travel_time, interior
-    stops equally spaced by stop count (transitfeed interpolation)."""
+    The first stop departs 06:00:00 and the last at 06:00 +
+    travel_time; interior stops are equally spaced by raw member
+    position, floored to whole seconds. This is not the reference's W6
+    rule, which weights by distance (:func:`interpolate_times_distance`)."""
     st = trips.select("trip_id", "itinerary_osm_id", "travel_min").join(
         itin_stops, "itinerary_osm_id"
     )
@@ -528,46 +579,31 @@ def build_stop_times(trips: DataFrame, itin_stops: DataFrame) -> DataFrame:
     )
 
 
-def cumulative_distance(st: DataFrame) -> DataFrame:
-    """Add ``cum_m`` (great-circle distance from the trip's first stop,
-    transitfeed radius 6367000 m) and ``total_m`` to stop rows with
-    (trip_id, pos, lat, lon): the distance weights of transitfeed's
-    ``GetTimeInterpolatedStops``. ``total_m`` is the trip's last
-    ``cum_m`` (legs are ≥ 0, so its max): a second, unordered sum of
-    the legs could differ from it in the last bit."""
-    w_seq = Window.partitionBy("trip_id").orderBy("pos")
-    prev_lat, prev_lon = F.lag("lat").over(w_seq), F.lag("lon").over(w_seq)
-    leg = F.when(prev_lat.isNull(), F.lit(0.0)).otherwise(
-        haversine_m(prev_lat, prev_lon, "lat", "lon", radius=TRANSITFEED_RADIUS_M)
-    )
-    return (
-        st.withColumn("leg_m", leg)
-        .withColumn("cum_m", F.sum("leg_m").over(w_seq))
-        .withColumn("total_m", F.max("cum_m").over(Window.partitionBy("trip_id")))
-    )
-
-
 def interpolated_stop_times(
     trips: DataFrame, itin_stops: DataFrame, stops: DataFrame, travel_min: str
 ) -> DataFrame:
-    """stop_times.txt rows of the frequency city creators: the first stop
-    at 06:00:00, the last at 06:00 + ``travel_min`` minutes, interior
-    stops by cumulative distance, rounded to whole seconds
+    """stop_times.txt rows of the frequency city creators: the first
+    resolved stop at 06:00:00, the last at 06:00 + ``travel_min``
+    minutes, interior stops by :func:`interpolate_times_distance`
     (gh_accra/trips_creator_gh_accra.py:88-110, ci_abidjan :178-221).
     Trips with fewer than two resolved stops get none."""
-    st = cumulative_distance(
+    by_trip = Window.partitionBy("trip_id")
+    st = (
         trips.select("trip_id", "itinerary_osm_id", travel_min)
         .join(itin_stops, "itinerary_osm_id")
         .join(stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key")
+        .withColumn("n", F.count(F.lit(1)).over(by_trip))
+        .filter(F.col("n") >= 2)
     )
-    st = st.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("trip_id"))).filter(F.col("n") >= 2)
-    secs = F.round(
-        F.lit(FIRST_DEPARTURE_SECS) + F.col(travel_min) * 60 * F.col("cum_m") / F.col("total_m"), 0
-    ).cast("long")
-    return st.select(
+    first = F.lit(FIRST_DEPARTURE_SECS).cast("long")
+    timepoints = F.when(F.col("pos") == F.min("pos").over(by_trip), first).when(
+        F.col("pos") == F.max("pos").over(by_trip), first + F.col(travel_min) * 60
+    )
+    filled = interpolate_times_distance(st.withColumn("time_secs", timepoints), ["trip_id"])
+    return filled.select(
         "trip_id",
-        secs_to_gtfs(secs).alias("arrival_time"),
-        secs_to_gtfs(secs).alias("departure_time"),
+        secs_to_gtfs(F.col("time_secs_filled")).alias("arrival_time"),
+        secs_to_gtfs(F.col("time_secs_filled")).alias("departure_time"),
         "stop_id",
         (F.col("pos") + 1).cast("string").alias("stop_sequence"),
     )

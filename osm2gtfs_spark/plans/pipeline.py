@@ -23,6 +23,15 @@ zip sinks read leaf scans, as the reference's ``feed.Validate`` and
   after a failure use this one.
 
 The CLI's ``--refresh-*`` groups come from the same tables (:func:`downstream`).
+
+Stop times (W6) have one fill, :func:`~osm2gtfs_spark.plans.gtfs.
+interpolate_times_distance`; each creator sets its own timepoints and
+calls it: the schedule path here (:func:`_schedule_filled`, which the
+default city shares with :func:`_schedule_trips_full` and
+:func:`_schedule_stop_times`), Accra and Abidjan
+(``gtfs.interpolated_stop_times``) and Florianópolis. The docs
+frequency pipeline's ``gtfs.build_stop_times`` spaces stops by count
+instead.
 """
 
 from __future__ import annotations
@@ -351,15 +360,20 @@ def _schedule_filled(itin_stops, stops, parent_map, stations, per_service):
         )
         .select("itinerary_osm_id", "pos", "stop_key", "name", "parent_name")
     )
-    aligned = SP.align_stops(named, per_service)
-    return SP.interpolate_times_distance(aligned, stops.select("stop_key", "lat", "lon"))
+    aligned = SP.align_stops(named, per_service).join(
+        stops.select("stop_key", "lat", "lon"), "stop_key"
+    )
+    return gtfs.interpolate_times_distance(
+        aligned, ["itinerary_osm_id", "service", "trip_seq"]
+    ).drop("lat", "lon")
 
 
-def _schedule_trips_full(per_service):
+def _schedule_trips_full(per_service, start=1):
     """O5 id determinism for the schedule path: reference insertion order
     is lines by ref, itineraries in member order, services in
     first-occurrence order, then time rows — a two-phase global index
-    over (route, itinerary seq, service order, departure)."""
+    over (route, itinerary seq, service order, departure). Ids count
+    from ``start``: the default city's transitfeed ids from 0."""
     return (
         global_index(
             per_service.select(
@@ -374,6 +388,7 @@ def _schedule_trips_full(per_service):
             ),
             ["route_id", "seq", "itinerary_osm_id", "svc_order", "trip_seq"],
             "_trip_idx",
+            start=start,
             small_threshold=SMALL_INDEX_THRESHOLD,
         )
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
@@ -391,6 +406,8 @@ def _schedule_trips_full(per_service):
 
 
 def _schedule_stop_times(filled, trips_full):
+    """The filled stops of each trip (untimed ones dropped), numbered
+    1.. in stop order."""
     st_order = Window.partitionBy("trip_id").orderBy("pos")
     return (
         filled.join(
@@ -405,9 +422,7 @@ def _schedule_stop_times(filled, trips_full):
             "stop_key",
             F.row_number().over(st_order).alias("stop_sequence"),
             "timepoint",
-            "pos",
         )
-        .drop("pos")
     )
 
 

@@ -1187,7 +1187,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gap_fill_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6 as a generic operator: linear gap-fill between anchor rows.
 
-    The stop_times gap fill (schedule_path.interpolate_times_distance)
+    The stop_times gap fill (gtfs.interpolate_times_distance)
     weights by distance; here the events stream is filled by count:
     'purchase' rows are anchors, everything between is
     count-interpolated."""
@@ -2269,8 +2269,7 @@ def tile_coverage_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     out = SE.tile_coverage_stream(pts, res=5, window="1 hour", watermark="2 hours")
     with tempfile.TemporaryDirectory() as td:
@@ -4692,8 +4691,7 @@ def hot_cells_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     out = SE.hot_cells_stream(
         pts, res=3, min_points=6, window="6 hours", watermark="2 hours"
@@ -5215,8 +5213,7 @@ def geofence_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     n = tpch.load(spark, sf_dir, "nation")
     polygons = _district_polygons(n)
@@ -5271,8 +5268,7 @@ def tile_pyramid_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     with tempfile.TemporaryDirectory() as td:
         TI.tile_ingest_available_now(
@@ -5370,8 +5366,7 @@ def cell_anomaly_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tpch.load(spark, sf_dir, "events")
     pts = ev.select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     return cell_anomaly(pts, res=5, window="1 hour")
 
@@ -5496,8 +5491,7 @@ def speed_map_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     return speed_map(pings, res=5)
 
@@ -5771,8 +5765,7 @@ def cell_type_gini_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tpch.load(spark, sf_dir, "events")
     pts = ev.select(
         "event_type",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     return cell_mix_gini(pts, res=5, category_col="event_type")
 

@@ -17,14 +17,16 @@ Reference semantics (osm2gtfs/creators/trips_creator.py):
   stop (last-stop pinning); invalid "%H:%M" time → stop adding stops
   (truncate); matched stops become timepoints.
 - W6 `Helper.interpolate_stop_times` (helper.py:56-68): untimed stops
-  get times linearly interpolated by stop COUNT between surrounding
-  timepoints.
+  get times linearly interpolated by cumulative DISTANCE between
+  surrounding timepoints — the engine's one fill,
+  :func:`osm2gtfs_spark.plans.gtfs.interpolate_times_distance`, which
+  ``pipeline._schedule_filled`` calls on the aligned rows.
 - `_create_gtfs_service_period` (:280-332): service keywords → day
   flags; YYYY-MM-DD → a dated service with a calendar_dates exception.
 
 Spark shape: J5 is a broadcast join (schedule ≪ itineraries' corpus);
 J7 is the one genuinely sequential kernel — a cogrouped applyInPandas
-per (itinerary, service); W6 is a pure window expression.
+per (itinerary, service).
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -220,56 +222,6 @@ def align_stops(
     return joined.groupBy("itinerary_osm_id", "service").applyInPandas(
         _align_group, _ALIGN_SCHEMA
     )
-
-
-def interpolate_times_distance(aligned: DataFrame, stop_coords: DataFrame) -> DataFrame:
-    """W6, transitfeed-exact: fill untimed stops by DISTANCE-weighted
-    linear interpolation between surrounding timepoints.
-
-    transitfeed's ``GetTimeInterpolatedStops`` splits the time between
-    two timepoints proportionally to the cumulative great-circle
-    distance (radius 6367000 m) along the trip's stops — verified
-    bit-exact against the reference's golden feeds. Pure window
-    expressions, no UDF. ``stop_coords``: (stop_key, lat, lon)."""
-    from osm2gtfs_spark.functions.geo import TRANSITFEED_RADIUS_M, haversine_m
-
-    key = ["itinerary_osm_id", "service", "trip_seq"]
-    w_seq = Window.partitionBy(*key).orderBy("pos")
-    w_back = Window.partitionBy(*key).orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    w_fwd = Window.partitionBy(*key).orderBy("pos").rowsBetween(0, Window.unboundedFollowing)
-    df = (
-        aligned.join(stop_coords, "stop_key")
-        .withColumn("_plat", F.lag("lat").over(w_seq))
-        .withColumn("_plon", F.lag("lon").over(w_seq))
-        .withColumn(
-            "_leg",
-            F.when(F.col("_plat").isNull(), F.lit(0.0)).otherwise(
-                haversine_m("_plat", "_plon", "lat", "lon", radius=TRANSITFEED_RADIUS_M)
-            ),
-        )
-        .withColumn("_cum", F.sum("_leg").over(w_back))
-    )
-    timed_cum = F.when(F.col("time_secs").isNotNull(), F.col("_cum"))
-    df = (
-        df.withColumn("prev_t", F.last("time_secs", ignorenulls=True).over(w_back))
-        .withColumn("prev_c", F.last(timed_cum, ignorenulls=True).over(w_back))
-        .withColumn("next_t", F.first("time_secs", ignorenulls=True).over(w_fwd))
-        .withColumn("next_c", F.first(timed_cum, ignorenulls=True).over(w_fwd))
-    )
-    interp = F.round(
-        F.col("prev_t")
-        + (F.col("next_t") - F.col("prev_t"))
-        * (F.col("_cum") - F.col("prev_c"))
-        / (F.col("next_c") - F.col("prev_c")),
-        0,
-    ).cast("long")
-    return df.withColumn(
-        "time_secs_filled",
-        F.when(F.col("time_secs").isNotNull(), F.col("time_secs"))
-        .when(F.col("prev_t").isNull() | F.col("next_t").isNull(), F.lit(None))
-        .when(F.col("next_c") == F.col("prev_c"), F.col("prev_t"))
-        .otherwise(interp),
-    ).drop("prev_t", "prev_c", "next_t", "next_c", "_plat", "_plon", "_leg", "_cum", "lat", "lon")
 
 
 # ---------------------------------------------------------------------------

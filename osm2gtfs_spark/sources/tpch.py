@@ -55,6 +55,19 @@ def derived_lon(key) -> F.Column:
     return ((k * F.lit(m)) % F.lit(mod)) / F.lit(div) + F.lit(off)
 
 
+def event_lat_lon() -> tuple[F.Column, F.Column]:
+    """(lat, lon) of an ``events`` row, from ``user_id``, ``event_id``
+    and ``value`` (events carry no geo columns). Every event-point gate
+    and its oracle CTE share these coordinates; one Spark-side source
+    keeps the copies from drifting apart from the SQL
+    (``(user_id % 180) - 90 + value / 1000.0`` and
+    ``(event_id % 360) - 180 + value / 1000.0``)."""
+    return (
+        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
+        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+    )
+
+
 def derived_lat_sql(key_expr: str) -> str:
     m, mod, div, off = _LAT_SPEC
     return f"((({key_expr}) * {m}) % {mod}) / {div} + ({off})"

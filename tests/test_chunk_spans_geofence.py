@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm2gtfs_spark.operators.spans import chunk_spans
+from osm2gtfs_spark.sources import tpch
 from osm2gtfs_spark.streaming import events as SE
 
 
@@ -69,8 +70,7 @@ def test_chunk_budget_validation(spark):
 def test_geofence_stream_equals_batch(spark, sf_dir, tmp_path):
     pts = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     # sf0.001 events have few distinct users -> lats cluster near the
     # south pole; park the fences there
@@ -96,8 +96,7 @@ def test_geofence_stream_equals_batch(spark, sf_dir, tmp_path):
 
     batch_pts = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     batch = (
         polygon_table_join(batch_pts, fences, res=3)

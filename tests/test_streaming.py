@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.query import StreamingQuery
 
+from osm2gtfs_spark.sources import tpch
 from osm2gtfs_spark.streaming import events as SE
 from osm2gtfs_spark.streaming import ingest as ING
 
@@ -177,8 +178,7 @@ def test_tile_coverage_stream_matches_batch(spark, sf_dir, tmp_path):
         # no geo columns; the operator only needs (ts, lat, lon))
         return df.select(
             "ts",
-            ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-            ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+            *tpch.event_lat_lon(),
         )
 
     stream = to_points(SE.stream_events(spark, sf_dir))
@@ -292,8 +292,7 @@ def test_hot_cells_stream_equals_batch_having(spark, sf_dir):
 
     pts_stream = SE.stream_events(spark, sf_dir).select(
         "ts",
-        ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-        ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+        *tpch.event_lat_lon(),
     )
     out = SE.hot_cells_stream(pts_stream, res=3, min_points=3, window="12 hours")
     with tempfile.TemporaryDirectory() as td:
@@ -306,8 +305,7 @@ def test_hot_cells_stream_equals_batch_having(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select(
             "ts",
-            ((F.col("user_id") % 180) - 90 + F.col("value") / 1000.0).alias("lat"),
-            ((F.col("event_id") % 360) - 180 + F.col("value") / 1000.0).alias("lon"),
+            *tpch.event_lat_lon(),
         )
         .groupBy(F.window("ts", "12 hours").alias("w"), cell_id("lat", "lon", 3).alias("c"))
         .count()
