@@ -128,7 +128,6 @@ def inverted_index(
     text_col: str = "text",
     max_df: int | float | None = 0.8,
     n_docs: int | None = None,
-    log_dropped: bool = True,
 ) -> DataFrame:
     """(token, df, postings): sorted posting lists per token.
 
@@ -151,9 +150,9 @@ def inverted_index(
     ABSOLUTE cap on a web corpus the hot set is O(vocab), unbounded on
     the driver; the anti-join handles any size distributed, and for the
     fractional default the set is tiny so the broadcast is free).
-    Dropped stopwords are logged via a BOUNDED sample (limit 10+1 —
-    one extra job over the term counts; pass ``log_dropped=False`` on
-    hot serving paths to skip it). Postings are sort_array'd structs
+    Dropped stopwords are logged via a BOUNDED sample (limit 10+1),
+    which costs one extra job over the term counts whenever the cap is
+    on. Postings are sort_array'd structs
     (doc_id asc) so the index is deterministic under any
     partitioning."""
     tc = term_counts(docs, doc_id, text_col)
@@ -166,15 +165,14 @@ def inverted_index(
         else:
             cap = max_df
         hot = hot_keys(tc, ["token"], cap)
-        if log_dropped:
-            sample = sorted(r["token"] for r in hot.limit(11).collect())
-            if sample:
-                log.info(
-                    "inverted_index: max_df cap %d drops %s stopword token(s), e.g. %s",
-                    cap,
-                    f"{len(sample)}" if len(sample) <= 10 else ">10",
-                    sample[:10],
-                )
+        sample = sorted(r["token"] for r in hot.limit(11).collect())
+        if sample:
+            log.info(
+                "inverted_index: max_df cap %d drops %s stopword token(s), e.g. %s",
+                cap,
+                f"{len(sample)}" if len(sample) <= 10 else ">10",
+                sample[:10],
+            )
         tc = tc.join(F.broadcast(hot), "token", "left_anti")
     return (
         tc.groupBy("token")

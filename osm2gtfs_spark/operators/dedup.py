@@ -44,19 +44,6 @@ def shingles_sql(text_expr: str, n: int = 3) -> str:
     )
 
 
-def _salted_min(sh: Column, salt: str) -> Column:
-    # NB: the transform lambda must be single-arg — PySpark passes the
-    # array index as a second argument when the lambda's arity is 2,
-    # which would silently replace a closed-over default parameter.
-    salt_col = F.lit(salt)
-    return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(salt_col, s))))
-
-
-def minhash_signature(sh: Column, k: int = 8) -> list[Column]:
-    """k minhashes: lexicographic MIN of salted MD5 over the shingle set."""
-    return [_salted_min(sh, f"{i}:").alias(f"mh{i}") for i in range(k)]
-
-
 def minhash_signature_sql(sh_expr: str, k: int = 8) -> list[str]:
     return [
         f"list_aggregate(list_transform({sh_expr}, s -> md5('{i}:' || s)), 'min') AS mh{i}"
@@ -113,9 +100,10 @@ def minhash_bands_fast(doc_id: str, text_col: str, docs: DataFrame, k: int = 8, 
 def minhash_signature_md5_fold(sh: Column, k: int = 8) -> Column:
     """All k MD5 minhashes in ONE aggregate fold (array<string>).
 
-    Bit-identical to :func:`minhash_signature` (same ``i:`` salts, same
-    lexicographic min over md5 hex), but the shingle array is traversed
-    once by a compact expression instead of k independent
+    Bit-identical to the k-column formulation that
+    :func:`minhash_signature_sql` writes for the oracle (same ``i:``
+    salts, same lexicographic min over md5 hex), but the shingle array
+    is traversed once by a compact expression instead of k independent
     array_min(transform(...)) trees. The compactness is load-bearing
     for the banding step: posexplode's GenerateExec re-evaluates its
     generator per OUTPUT row outside whole-stage codegen, so feeding it

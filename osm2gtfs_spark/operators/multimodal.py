@@ -54,13 +54,6 @@ MEDIA_META_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 
-def media_spans(docs: DataFrame) -> DataFrame:
-    """Extract (doc_id, media_ref) rows from interleaved docs."""
-    return docs.select(
-        "doc_id", F.explode(F.filter("spans", lambda s: s.kind == F.lit("image"))).alias("s")
-    ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
-
-
 # ---------------------------------------------------------------------------
 # real byte decoders (stdlib-only header parsers)
 # ---------------------------------------------------------------------------

@@ -553,8 +553,3 @@ def quantize_embeddings(
             codes.alias("codes"),
         )
     )
-
-
-def dequantize(codes: Column, scale: Column) -> Column:
-    """codes + scale → approximate float vector (column math)."""
-    return F.transform(codes, lambda c: c.cast("double") * scale)

@@ -1,13 +1,11 @@
-"""Explicit skew tools: salted repartition/join (north rule).
+"""Explicit skew tools: salted aggregate/join (north rule).
 
 AQE's skew-join splitting handles sort-merge skew at runtime; these
 helpers handle the cases AQE can't: hot GROUP keys (one urban cell with
 millions of stops) and hot broadcast-probe keys.
 
-- :func:`salted_repartition` — spread one logical key over S physical
-  partitions by appending a salt; downstream per-key aggregation runs
-  two-phase (partial per salt, final per key).
-- :func:`salted_agg` — the two-phase aggregate in one call.
+- :func:`salted_agg` — spread one logical key over S salts and
+  aggregate in two phases (partial per (key, salt), final per key).
 - :func:`replicated_salted_join` — equi join where the LEFT side is
   salted and the (smaller) RIGHT side is replicated S×, so one hot key
   no longer lands on a single reducer.
@@ -22,20 +20,6 @@ from pyspark.sql import functions as F
 def salt_col(df_col: str | Column, n_salts: int) -> Column:
     c = F.col(df_col) if isinstance(df_col, str) else df_col
     return F.pmod(F.xxhash64(c, F.monotonically_increasing_id()), F.lit(n_salts)).cast("int")
-
-
-def salted_repartition(
-    df: DataFrame, key: str, n_salts: int = 8, num_partitions: int | None = None
-) -> DataFrame:
-    """Repartition by (key, salt) — hot keys spread across n_salts.
-
-    Without ``num_partitions`` AQE may coalesce small shuffles back into
-    few partitions (fine at scale, where partitions are large); pass an
-    explicit count to pin the physical spread."""
-    salted = df.withColumn("_salt", salt_col(key, n_salts))
-    if num_partitions is not None:
-        return salted.repartition(num_partitions, key, "_salt")
-    return salted.repartition(key, "_salt")
 
 
 def salted_agg(df: DataFrame, key: str, aggs: dict[str, str], n_salts: int = 8) -> DataFrame:

@@ -15,14 +15,13 @@ training-data pipeline runs over any such corpus:
   two shuffles, linear per doc, and the round-trip itself exercises
   the north-rule span-sequence invariant (order restored by position,
   never by arrival).
-- ``media_dedup``: exact deduplication of media ASSETS across the
-  corpus.  The same image referenced from many documents should be
+- ``media_asset_table``: exact deduplication of media ASSETS across
+  the corpus.  The same image referenced from many documents should be
   stored once: group media spans by their content key (``media_ref``
-  here; at production scale the bytes' xxhash64 — same plan), elect a
-  canonical (doc, position) winner per key with a min-struct aggregate
-  (one shuffle, map-side combining), and rewrite every span to the
-  canonical reference.  The asset table this yields is what a
-  dedup-aware media store ingests.
+  here; at production scale the bytes' xxhash64 — same plan) and elect
+  a canonical (doc, position) winner per key with a min-struct
+  aggregate (one shuffle, map-side combining).  The asset table this
+  yields is what a dedup-aware media store ingests.
 - ``pack_interleaved``: concat-and-chunk sequence packing at SPAN
   granularity — the interleaved twin of
   ``corpus_index.pack_sequences``.  Text spans cost their token count,
@@ -172,47 +171,6 @@ def media_asset_table(
         "n_copies",
         "n_docs",
     )
-
-
-def media_dedup(
-    docs: DataFrame,
-    doc_id: str = "doc_id",
-    spans_col: str = "spans",
-) -> tuple[DataFrame, DataFrame]:
-    """(assets, rewritten): :func:`media_asset_table` plus the corpus
-    with every media span rewritten to
-    ``asset://<canonical_doc>/<canonical_pos>`` — duplicate references
-    collapse onto one stored asset; text spans pass through untouched.
-
-    The rewrite is an equi join of the exploded media spans against the
-    asset table on the content key (AQE broadcasts the asset side when
-    the distinct-asset count fits), then a reassembly; span order and
-    offsets are preserved bit-for-bit."""
-    assets = media_asset_table(docs, doc_id, spans_col)
-    flat = explode_spans(docs, doc_id, spans_col)
-    rewritten_flat = flat.join(
-        assets.select(
-            "media_ref",
-            F.concat(
-                F.lit("asset://"),
-                F.col("canonical_doc").cast("string"),
-                F.lit("/"),
-                F.col("canonical_pos").cast("string"),
-            ).alias("_canon"),
-        ),
-        "media_ref",
-        "left",
-    ).select(
-        doc_id,
-        "pos",
-        "kind",
-        "text",
-        F.when(F.col("kind") != TEXT_KIND, F.col("_canon"))
-        .otherwise(F.col("media_ref"))
-        .alias("media_ref"),
-        "offset",
-    )
-    return assets, reassemble_spans(rewritten_flat, doc_id)
 
 
 def pack_interleaved(

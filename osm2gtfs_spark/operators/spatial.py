@@ -455,6 +455,10 @@ def polyline_cell_coverage(
     tighten). All arithmetic is shared-IEEE double ops, so the DuckDB
     replay is bit-identical.
 
+    A segment with |lon2 − lon1| > 180 is sampled the long way around
+    (through every longitude between its endpoints, not across ±180),
+    in Spark and in the DuckDB replay alike.
+
     Scale shape: per-segment fanout is O(length in cells), hard-capped
     at ``max_steps`` (an antimeridian-length segment cannot explode a
     task); explode → project cell → distinct, one shuffle keyed by
@@ -1462,9 +1466,11 @@ def _segment_cells(
     segment lengths) instead of silently exploding a task.
 
     Limitation: the cover is the ix/iy RECTANGLE between endpoints, so
-    a segment crossing the antimeridian covers the long way around;
-    split such segments at ±180 first (the corpora here never cross
-    it)."""
+    a segment with |lon2 − lon1| > 180 is covered the long way around,
+    through every longitude column between its endpoints, not the
+    short way across ±180. Nothing in the engine splits such segments:
+    a pair that meets only across ±180 is missed, and the long-way
+    width counts against ``max_cells``."""
     p = prefix
     ix1, ix2 = cell_ix(f"{p}lon1", res), cell_ix(f"{p}lon2", res)
     iy1, iy2 = cell_iy(f"{p}lat1", res), cell_iy(f"{p}lat2", res)
@@ -1846,68 +1852,6 @@ def zonal_stats(
         F.sum(value_col).alias("sum_v"),
         F.min(value_col).alias("min_v"),
         F.max(value_col).alias("max_v"),
-    )
-
-
-def split_antimeridian(
-    segments: DataFrame,
-    id_col: str | None = None,
-) -> DataFrame:
-    """Normalize segments that cross the ±180 meridian into two pieces
-    split exactly at the crossing, so downstream bbox-cell covers
-    (:func:`_segment_cells` — documented to rectangle the SHORT way
-    only after this normalization) never wrap the long way around.
-
-    A segment crosses iff |lon2 − lon1| > 180 (the short great-circle
-    path goes through ±180). The crossing latitude is the linear
-    interpolation at the wrapped longitude gap:
-    t = (180 − |lon1|) / (360 − |lon2 − lon1|), lat* = lat1 +
-    t·(lat2 − lat1); piece 1 runs lon1 → ±180 (sign of lon1), piece 2
-    ∓180 → lon2. Non-crossing segments pass through unchanged with
-    ``piece = 0``; crossing ones emit pieces 1 and 2. Pure codegen —
-    one branching projection, no shuffle, no fanout beyond 2×."""
-    c = segments.columns
-    lat1, lon1, lat2, lon2 = (F.col(x) for x in ("lat1", "lon1", "lat2", "lon2"))
-    crosses = F.abs(lon2 - lon1) > 180.0
-    gap = F.lit(360.0) - F.abs(lon2 - lon1)
-    t = F.when(gap == 0, F.lit(0.0)).otherwise(
-        (F.lit(180.0) - F.abs(lon1)) / gap
-    )
-    lat_x = lat1 + t * (lat2 - lat1)
-    edge1 = F.when(lon1 >= 0, F.lit(180.0)).otherwise(F.lit(-180.0))
-    pieces = F.when(
-        crosses,
-        F.array(
-            F.struct(
-                lat1.alias("lat1"), lon1.alias("lon1"),
-                lat_x.alias("lat2"), edge1.alias("lon2"),
-                F.lit(1).alias("piece"),
-            ),
-            F.struct(
-                lat_x.alias("lat1"), (-edge1).alias("lon1"),
-                lat2.alias("lat2"), lon2.alias("lon2"),
-                F.lit(2).alias("piece"),
-            ),
-        ),
-    ).otherwise(
-        F.array(
-            F.struct(
-                lat1.alias("lat1"), lon1.alias("lon1"),
-                lat2.alias("lat2"), lon2.alias("lon2"),
-                F.lit(0).alias("piece"),
-            )
-        )
-    )
-    keep = [x for x in c if x not in ("lat1", "lon1", "lat2", "lon2")]
-    with_pieces = segments.select(*keep, pieces.alias("_pieces"))
-    out = with_pieces.select(*keep, F.explode("_pieces").alias("_p"))
-    return out.select(
-        *keep,
-        F.col("_p.lat1").alias("lat1"),
-        F.col("_p.lon1").alias("lon1"),
-        F.col("_p.lat2").alias("lat2"),
-        F.col("_p.lon2").alias("lon2"),
-        F.col("_p.piece").alias("piece"),
     )
 
 

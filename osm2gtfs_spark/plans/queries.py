@@ -2674,8 +2674,9 @@ def span_sequence_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitioned (rows land on arbitrary partitions), reassembled per
     doc and re-ordered by offset; the emitted fingerprint must equal
     the oracle's direct computation. This is the gate twin of the
-    transit pipeline's span_checksum pytest (sources/docs.span_checksum,
-    FIXTURES.md §1), using md5 so DuckDB reproduces it."""
+    transit docs' span-sequence pytest (``span_checksum`` in
+    tests/test_docs_roundtrip.py, FIXTURES.md §1), using md5 so DuckDB
+    reproduces it."""
     d = tpch.load(spark, sf_dir, "documents")
     i_seq = F.sequence(F.lit(0), F.lit(5))
     spans = F.transform(

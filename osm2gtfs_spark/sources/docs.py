@@ -390,22 +390,3 @@ def decode_schedule(docs: DataFrame) -> DataFrame:
         )
         .select("j.*", "row_idx")
     )
-
-
-def span_checksum(docs: DataFrame) -> DataFrame:
-    """Per-row span-sequence fingerprint for the shuffle invariant.
-
-    xxhash64 over the concatenated (kind, text, media_ref) in offset
-    order — two DataFrames with equal (doc_id → checksum) maps carry
-    identical span sequences (FIXTURES.md §1 invariant)."""
-    canon = F.array_join(
-        F.transform(
-            F.array_sort(
-                "spans",
-                lambda a, b: F.when(a.offset < b.offset, -1).when(a.offset > b.offset, 1).otherwise(0),
-            ),
-            lambda s: F.concat_ws("\x1f", s.kind, s.text, s.media_ref),
-        ),
-        "\x1e",
-    )
-    return docs.select("doc_id", F.xxhash64(canon).alias("span_checksum"))

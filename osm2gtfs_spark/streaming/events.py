@@ -2,15 +2,9 @@
 
 The reference is strictly batch (SURVEY.md §2.8); this module is the
 engine's Structured Streaming surface for the same operator shapes at
-ingest time:
-
-- :func:`windowed_counts` — watermarked tumbling-window aggregation
-  (late data dropped past the watermark); identical results to the
-  batch groupBy on a bounded input, which is exactly what the test
-  asserts via ``Trigger.AvailableNow``.
-- :func:`sessionize` — custom stateful operator via
-  ``applyInPandasWithState``: gap-based user sessions (the streaming
-  analog of the J7-style per-key sequential kernels).
+ingest time: :func:`sessionize`, a custom stateful operator via
+``applyInPandasWithState`` that emits gap-based user sessions (the
+streaming analog of the J7-style per-key sequential kernels).
 
 At production scale the source is a stream of doc/tile events; here the
 parquet events table doubles as a file-stream source.
@@ -47,19 +41,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
-    )
-
-
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window counts + cents sum per event_type."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "cents")
     )
 
 

@@ -11,9 +11,10 @@ against ``F.broadcast(...)`` under ``osm2gtfs_spark/operators/`` outside
 from __future__ import annotations
 
 import ast
-import pathlib
 
-OPS = pathlib.Path(__file__).resolve().parent.parent / "osm2gtfs_spark" / "operators"
+from ast_scan import PKG, nodes
+
+OPS = PKG / "operators"
 
 ALLOWED = {
     ("dedup.py", "bucket_pairs"): "the one banded candidate join",
@@ -33,27 +34,19 @@ def _is_broadcast(node: ast.AST) -> bool:
 def _anti_broadcast_sites():
     """(file, enclosing top-level function, line) of every
     ``x.join(broadcast(...), ..., "left_anti")`` call."""
-    for path in sorted(OPS.rglob("*.py")):
-        rel = path.relative_to(OPS).as_posix()
-        tree = ast.parse(path.read_text(), str(path))
-        stack: list[tuple[ast.AST, str]] = [(tree, "")]
-        while stack:
-            node, func = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not func:
-                func = node.name
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "join"
-                and node.args
-                and _is_broadcast(node.args[0])
-                and any(
-                    isinstance(a, ast.Constant) and a.value == "left_anti"
-                    for a in [*node.args, *(k.value for k in node.keywords)]
-                )
-            ):
-                yield rel, func, node.lineno
-            stack += [(child, func) for child in ast.iter_child_nodes(node)]
+    for rel, func, node in nodes(OPS):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "join"
+            and node.args
+            and _is_broadcast(node.args[0])
+            and any(
+                isinstance(a, ast.Constant) and a.value == "left_anti"
+                for a in [*node.args, *(k.value for k in node.keywords)]
+            )
+        ):
+            yield rel, func, node.lineno
 
 
 def test_hot_key_anti_joins_only_in_the_bucket_helpers():

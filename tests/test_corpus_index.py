@@ -15,6 +15,20 @@ from osm2gtfs_spark.operators import corpus_index as CI
 from osm2gtfs_spark.operators import text as TXT
 
 
+def _salted_min(sh, salt: str):
+    # NB: the transform lambda must be single-arg — PySpark passes the
+    # array index as a second argument when the lambda's arity is 2,
+    # which would silently replace a closed-over default parameter.
+    salt_col = F.lit(salt)
+    return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(salt_col, s))))
+
+
+def minhash_signature(sh, k: int = 8):
+    """The slow MinHash reference: k columns, each the lexicographic MIN
+    of salted MD5 over the shingle set."""
+    return [_salted_min(sh, f"{i}:").alias(f"mh{i}") for i in range(k)]
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     rows = [
@@ -172,13 +186,14 @@ def test_url_canonicalize_idempotent(spark):
 
 def test_minhash_fold_matches_per_column_family(spark):
     """minhash_signature_md5_fold is bit-identical to the k-column
-    formulation on adversarial texts (empty, 1 token, repeats)."""
+    reference :func:`minhash_signature` on adversarial texts (empty,
+    1 token, repeats)."""
     from osm2gtfs_spark.operators import dedup as DD
 
     texts = ["", "one", "a a a a", "x y z w v u t s r q", "a b", "  "]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
     sh = DD.shingles(F.col("text"))
-    old = df.select("i", *DD.minhash_signature(sh, 8))
+    old = df.select("i", *minhash_signature(sh, 8))
     new = df.select("i", DD.minhash_signature_md5_fold(sh, 8).alias("sig"))
     j = old.join(new, "i")
     bad = j.filter(

@@ -16,6 +16,12 @@ from osm2gtfs_spark.operators import multimodal as MM
 from osm2gtfs_spark.operators import similarity as SIM
 
 
+def dequantize(codes, scale):
+    """int8 codes + scale → approximate float vector: the inverse of
+    ``similarity.quantize_embeddings`` the roundtrip checks use."""
+    return F.transform(codes, lambda c: c.cast("double") * scale)
+
+
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
@@ -127,7 +133,9 @@ def test_media_decode_plumbing(spark):
     from osm2gtfs_spark.sources import docs as D
 
     docs = D.docs_df(spark, D.CitySpec(n_lines=2))
-    media = MM.media_spans(docs)
+    media = docs.select(
+        "doc_id", F.explode(F.filter("spans", lambda s: s.kind == F.lit("image"))).alias("s")
+    ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
     assert media.count() > 0
     meta = MM.decode_media(media, fake=True)
     rows = meta.collect()
@@ -444,7 +452,7 @@ def test_quantize_dequantize_roundtrip(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = SIM.quantize_embeddings(df)
     back = q.select(
-        "vec_id", "scale", SIM.dequantize(F.col("codes"), F.col("scale")).alias("approx")
+        "vec_id", "scale", dequantize(F.col("codes"), F.col("scale")).alias("approx")
     )
     got = {r.vec_id: r for r in back.join(df, "vec_id").collect()}
     for vid, orig in rows:
@@ -653,7 +661,7 @@ def test_ann_over_quantized_embeddings_recall(emb):
 
     q = SIM.quantize_embeddings(emb)
     deq = q.select(
-        "vec_id", SIM.dequantize(F.col("codes"), F.col("scale")).alias("embedding")
+        "vec_id", dequantize(F.col("codes"), F.col("scale")).alias("embedding")
     ).cache()
     queries = deq.filter(F.col("vec_id") < 15)
     approx = {

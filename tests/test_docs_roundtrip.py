@@ -13,6 +13,25 @@ from pyspark.sql import functions as F
 from osm2gtfs_spark.sources import docs as D
 
 
+def span_checksum(docs):
+    """Per-row span-sequence fingerprint for the shuffle invariant.
+
+    xxhash64 over the concatenated (kind, text, media_ref) in offset
+    order — two DataFrames with equal (doc_id → checksum) maps carry
+    identical span sequences (FIXTURES.md §1 invariant)."""
+    canon = F.array_join(
+        F.transform(
+            F.array_sort(
+                "spans",
+                lambda a, b: F.when(a.offset < b.offset, -1).when(a.offset > b.offset, 1).otherwise(0),
+            ),
+            lambda s: F.concat_ws("\x1f", s.kind, s.text, s.media_ref),
+        ),
+        "\x1e",
+    )
+    return docs.select("doc_id", F.xxhash64(canon).alias("span_checksum"))
+
+
 @pytest.fixture(scope="module")
 def city(spark):
     spec = D.CitySpec(n_lines=4, with_stop_areas=True, with_schedule=True)
@@ -82,13 +101,13 @@ def test_decode_schedule(city):
 def test_span_sequence_survives_shuffle(city):
     """North-rule invariant: (kind, text, media_ref, order) per row is
     identical after a repartition + join round-trip."""
-    before = D.span_checksum(city)
+    before = span_checksum(city)
     shuffled = (
         city.repartition(16, "doc_id")
         .join(city.select("doc_id"), "doc_id")
         .sortWithinPartitions("doc_id")
     )
-    after = D.span_checksum(shuffled)
+    after = span_checksum(shuffled)
     diff = (
         before.alias("b")
         .join(after.alias("a"), "doc_id", "full_outer")

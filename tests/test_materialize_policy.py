@@ -12,9 +12,8 @@ blocks before they return.
 from __future__ import annotations
 
 import ast
-import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "osm2gtfs_spark"
+from ast_scan import nodes
 
 HELPER = ("session.py", "materialize")
 CUTS = {"localCheckpoint", "checkpoint", "cache", "setCheckpointDir"}
@@ -28,21 +27,13 @@ SCOPED_PERSISTS = {
 def _cut_sites():
     """(file, enclosing top-level function, method, line) of every call
     of a lineage-cut method."""
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text(), str(path))
-        stack: list[tuple[ast.AST, str]] = [(tree, "")]
-        while stack:
-            node, func = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not func:
-                func = node.name
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr in CUTS | {"persist"}
-            ):
-                yield rel, func, node.func.attr, node.lineno
-            stack += [(child, func) for child in ast.iter_child_nodes(node)]
+    for rel, func, node in nodes():
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in CUTS | {"persist"}
+        ):
+            yield rel, func, node.func.attr, node.lineno
 
 
 def test_every_lineage_cut_goes_through_materialize():

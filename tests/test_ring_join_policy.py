@@ -12,9 +12,8 @@ floor: the ring join's probe side and the two segment rasterizers.
 from __future__ import annotations
 
 import ast
-import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "osm2gtfs_spark"
+from ast_scan import nodes
 
 ALLOWED = {
     "cell_ring": {
@@ -33,20 +32,12 @@ DEFINED_IN = {"cell_ring": "functions/geo.py"}
 def _call_sites():
     """(file, enclosing top-level function, callee, line) of every call
     of a guarded function, by bare name or as an attribute."""
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text(), str(path))
-        stack: list[tuple[ast.AST, str]] = [(tree, "")]
-        while stack:
-            node, func = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not func:
-                func = node.name
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                if name in ALLOWED:
-                    yield rel, func, name, node.lineno
-            stack += [(child, func) for child in ast.iter_child_nodes(node)]
+    for rel, func, node in nodes():
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in ALLOWED:
+                yield rel, func, name, node.lineno
 
 
 def test_cell_ring_and_floor_only_in_the_ring_helpers():

@@ -133,57 +133,3 @@ def test_turn_classify_right_and_deadband(spark):
         for r in turn_classify(verts, straight_eps_deg2=2.0).collect()
     }
     assert out_eps[2] == "S"
-
-
-def test_split_antimeridian(spark):
-    from osm2gtfs_spark.operators.spatial import split_antimeridian
-
-    segs = spark.createDataFrame(
-        [
-            (1, 10.0, 170.0, 20.0, -170.0),  # crosses eastward
-            (2, 0.0, -175.0, 10.0, 175.0),   # crosses westward
-            (3, 5.0, 10.0, 6.0, 20.0),       # plain segment
-        ],
-        "seg_id long, lat1 double, lon1 double, lat2 double, lon2 double",
-    )
-    out = {(r.seg_id, r.piece): r for r in split_antimeridian(segs).collect()}
-    assert set(out) == {(1, 1), (1, 2), (2, 1), (2, 2), (3, 0)}
-    # seg 1: piece 1 ends at +180 halfway up (t = 10/20 = 0.5 → lat 15)
-    p11, p12 = out[(1, 1)], out[(1, 2)]
-    assert (p11.lon2, p11.lat2) == (180.0, 15.0)
-    assert (p12.lon1, p12.lat1) == (-180.0, 15.0)
-    assert (p12.lon2, p12.lat2) == (-170.0, 20.0)
-    # seg 2: lon1 negative → splits at -180 first
-    p21, p22 = out[(2, 1)], out[(2, 2)]
-    assert p21.lon2 == -180.0 and p22.lon1 == 180.0
-    # untouched segment passes through bit-identical
-    p3 = out[(3, 0)]
-    assert (p3.lat1, p3.lon1, p3.lat2, p3.lon2) == (5.0, 10.0, 6.0, 20.0)
-
-
-def test_split_then_cover_stays_short_way(spark):
-    from osm2gtfs_spark.operators.spatial import (
-        _segment_cells,
-        split_antimeridian,
-    )
-
-    segs = spark.createDataFrame(
-        [(1, 0.0, 179.0, 0.0, -179.0)],
-        "seg_id long, lat1 double, lon1 double, lat2 double, lon2 double",
-    )
-    # unsplit: the rectangle cover wraps the LONG way (documented)
-    raw = _segment_cells(
-        segs.selectExpr(
-            "seg_id", "lat1 as _slat1", "lon1 as _slon1",
-            "lat2 as _slat2", "lon2 as _slon2"
-        ),
-        "seg_id", 6, 256, "_s",
-    ).count()
-    split = split_antimeridian(segs)
-    halves = split.selectExpr(
-        "seg_id", "lat1 as _slat1", "lon1 as _slon1",
-        "lat2 as _slat2", "lon2 as _slon2"
-    )
-    short = _segment_cells(halves, "seg_id", 6, 256, "_s").count()
-    assert short < raw  # split cover is the 2-cell short way, not 63
-    assert short <= 4

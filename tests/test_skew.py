@@ -1,8 +1,6 @@
-"""Skew tools: salted repartition / two-phase agg / replicated join.
+"""Skew tools: two-phase agg / replicated join.
 
-Semantics checks (results must equal the unsalted plan) plus the
-physical property that matters at scale: a hot key's rows really are
-spread across multiple partitions after salting.
+Semantics checks: results must equal the unsalted plan.
 """
 
 from __future__ import annotations
@@ -12,7 +10,6 @@ from pyspark.sql import functions as F
 from osm2gtfs_spark.operators.skew import (
     replicated_salted_join,
     salted_agg,
-    salted_repartition,
 )
 
 
@@ -55,18 +52,6 @@ def test_salted_agg_min_max(spark):
              df.groupBy("key").agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
              .collect()}
     assert out == plain
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    df = salted_repartition(_skewed_df(spark), "key", n_salts=8, num_partitions=8)
-    parts = (
-        df.filter(F.col("key") == "hot")
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert parts >= 4  # hot key no longer lives in one partition
 
 
 def test_replicated_salted_join_matches_plain_join(spark):

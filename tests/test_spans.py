@@ -88,21 +88,6 @@ def test_media_asset_table_winner_and_counts(spark, corpus):
     assert (o.canonical_doc, o.canonical_pos, o.n_copies, o.n_docs) == (2, 2, 1, 1)
 
 
-def test_media_dedup_rewrites_refs_preserves_text(spark, corpus):
-    _, rewritten = SP.media_dedup(corpus)
-    flat = {
-        (r.doc_id, r.pos): r
-        for r in SP.explode_spans(rewritten).collect()
-    }
-    # both shared refs now point at doc 1 pos 1; the unique one at itself
-    assert flat[(1, 1)].media_ref == "asset://1/1"
-    assert flat[(2, 0)].media_ref == "asset://1/1"
-    assert flat[(2, 2)].media_ref == "asset://2/2"
-    # text spans untouched (ref and text), offsets preserved bit-for-bit
-    assert flat[(1, 0)].media_ref == "" and flat[(1, 0)].text == "ab cd"
-    assert flat[(1, 0)].offset == 999 and flat[(2, 1)].offset == 7
-
-
 def _pack_rows(spark, rows, **kw):
     return SP.pack_interleaved(_docs(spark, rows), **kw).collect()
 

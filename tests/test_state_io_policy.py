@@ -16,9 +16,8 @@ An AST scan of ``osm2gtfs_spark/`` that fails when:
 from __future__ import annotations
 
 import ast
-import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "osm2gtfs_spark"
+from ast_scan import nodes
 
 # string marker -> the one (file, top-level function) allowed to hold it
 STATE_MARKERS = {
@@ -28,23 +27,9 @@ STATE_MARKERS = {
 DRAIN_FILE = "streaming/drain.py"
 
 
-def _nodes():
-    """(file, enclosing top-level function, node) for every AST node."""
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text(), str(path))
-        stack: list[tuple[ast.AST, str]] = [(tree, "")]
-        while stack:
-            node, func = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not func:
-                func = node.name
-            yield rel, func, node
-            stack += [(child, func) for child in ast.iter_child_nodes(node)]
-
-
 def test_state_io_and_drains_have_one_home():
     conf_sets, stray, seen = [], [], set()
-    for rel, func, node in _nodes():
+    for rel, func, node in nodes():
         where = f"{rel}:{getattr(node, 'lineno', 0)} in {func or '<module>'}"
         if (
             isinstance(node, ast.Call)

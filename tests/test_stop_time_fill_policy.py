@@ -12,9 +12,8 @@ would need it.
 from __future__ import annotations
 
 import ast
-import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "osm2gtfs_spark"
+from ast_scan import nodes
 
 NAME = "TRANSITFEED_RADIUS_M"
 ALLOWED = {("plans/gtfs.py", "interpolate_times_distance")}
@@ -24,21 +23,13 @@ DEFINED_IN = "functions/geo.py"
 def _uses():
     """(file, enclosing top-level function, line) of every name,
     attribute or import alias that refers to the radius."""
-    for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        tree = ast.parse(path.read_text(), str(path))
-        stack: list[tuple[ast.AST, str]] = [(tree, "")]
-        while stack:
-            node, func = stack.pop()
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not func:
-                func = node.name
-            if (
-                (isinstance(node, ast.Name) and node.id == NAME)
-                or (isinstance(node, ast.Attribute) and node.attr == NAME)
-                or (isinstance(node, ast.alias) and NAME in (node.name, node.asname))
-            ):
-                yield rel, func, getattr(node, "lineno", 0)
-            stack += [(child, func) for child in ast.iter_child_nodes(node)]
+    for rel, func, node in nodes():
+        if (
+            (isinstance(node, ast.Name) and node.id == NAME)
+            or (isinstance(node, ast.Attribute) and node.attr == NAME)
+            or (isinstance(node, ast.alias) and NAME in (node.name, node.asname))
+        ):
+            yield rel, func, getattr(node, "lineno", 0)
 
 
 def test_transitfeed_radius_only_in_the_one_fill():
