@@ -96,9 +96,12 @@ def xml_stages(selector: str, name_without: str, shapes: bool = True) -> tuple[S
     """Stages every XML city selector shares, from the ``stops_docs`` and
     ``routes_docs`` roots. Stages built from the routes XML carry a
     ``route_`` prefix; the stops stage, whose ``name_without`` is the
-    selector's own, carries the selector's prefix, so selectors sharing
-    a cache_dir never resume each other's data. ``shapes=False`` leaves
-    out the raw shape stages for selectors that write none."""
+    selector's own, carries the selector's prefix. The prefix is a
+    namespace: selectors sharing a cache_dir keep their own stops stage
+    instead of rebuilding over each other's. Stale data is kept out by
+    the stage's fingerprint (:func:`~osm2gtfs_spark.sources.checkpoint.
+    fingerprint`), not by its name. ``shapes=False`` leaves out the raw
+    shape stages for selectors that write none."""
     stop_nodes, stop_ways, _ = _decode_stages("stops_docs", "stop_")
     route_nodes, route_ways, route_relations = _decode_stages("routes_docs", "route_")
     stages = (
@@ -147,9 +150,12 @@ def _frequency_stages(name_without: str = "stop") -> tuple[Stage, ...]:
 
 
 def _schedule_stages(name_without: str = "stop") -> tuple[Stage, ...]:
-    """Stages whose schema differs from the frequency pipeline's
-    same-role stage carry a ``sched_`` prefix, so toggling the schedule
-    source against an existing cache_dir never resumes incompatible data."""
+    """Stages built unlike the frequency pipeline's same-role stage
+    (another builder or other inputs) carry a ``sched_`` prefix. The
+    prefix is a namespace: both graphs can share a cache_dir without
+    rebuilding over each other's stages. Stale data is kept out by the
+    stage's fingerprint (:func:`~osm2gtfs_spark.sources.checkpoint.
+    fingerprint`), not by its name."""
     return _osm_stages(name_without) + (
         Stage(("schedule",), ("docs",), docs_mod.decode_schedule),
         Stage(
@@ -191,13 +197,10 @@ def downstream(roots) -> list[str]:
 class _LocalStore:
     """The ``catalog=None`` stage store: every stage is an eager
     :func:`~osm2gtfs_spark.session.materialize` cut; none is ever
-    complete or has a manifest."""
+    resumed or has a manifest."""
 
-    def is_complete(self, name: str) -> bool:
-        return False
-
-    def run_stage(self, name: str, fn, inputs=None) -> DataFrame:
-        return materialize(fn(), eager=True)
+    def run_stage(self, name: str, fn, inputs, build) -> tuple[DataFrame, bool]:
+        return materialize(fn(), eager=True), False
 
     def manifest(self, name: str) -> None:
         return None
@@ -238,8 +241,7 @@ def _store_stage(store, st: Stage, frames: list[DataFrame]) -> dict[str, DataFra
     done = {}
     for name in st.names:
         t0 = time.perf_counter()
-        resumed = store.is_complete(name)
-        done[name] = store.run_stage(name, lambda name=name: output(name), list(st.deps))
+        done[name], resumed = store.run_stage(name, lambda name=name: output(name), list(st.deps), st.build)
         manifest = store.manifest(name)
         log.info(
             "stage %s %s: %s rows in %.2f s, inputs %s",

@@ -1,20 +1,26 @@
-"""Checkpoint/resume: per-partition lineage, manifest-gated recompute.
+"""Checkpoint/resume: one stage record, manifest-gated recompute.
 
 North-rule behaviors: (a) resume skips complete stages, (b) a killed
 job (data without manifest) is detected and recomputed, (c) resumed
-output is identical, (d) manifests carry per-partition rows+checksums.
+output is identical, (d) manifests carry the write job's row count and
+checksum and each file's footer row count, (e) a stage written by other
+code (another builder, another ``name_without``) is rebuilt, never
+read, and (f) recording a stage adds no Spark job and resuming one
+starts none.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
-from osm2gtfs_spark.plans import pipeline
+from osm2gtfs_spark.plans import abidjan, accra, default_city, florianopolis, gtfs, pipeline
 from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline
 from osm2gtfs_spark.sources import docs as D
-from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
+from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog, fingerprint
 
 
 @pytest.fixture()
@@ -26,12 +32,18 @@ def _rows(df):
     return sorted(map(str, df.collect()))
 
 
+def _complete(catalog, stage: str) -> bool:
+    """``stage`` of the frequency graph is complete for its current builder."""
+    build = next(st.build for st in pipeline._frequency_stages() if stage in st.names)
+    return catalog.is_complete(stage, fingerprint(build))
+
+
 def test_full_run_then_resume_identical(spark, catalog):
     docs = D.docs_df(spark, D.CitySpec(n_lines=3))
     t1 = run_frequency_pipeline(docs, catalog=catalog)
     st1 = _rows(t1.stop_times)
     snaps1 = {m["stage"]: m["snapshot_id"] for m in catalog.metrics()}
-    assert catalog.is_complete("stop_times") and catalog.is_complete("nodes")
+    assert _complete(catalog, "stop_times") and _complete(catalog, "nodes")
 
     # simulate mid-job kill: drop two late stages, resume
     catalog.invalidate("stop_times")
@@ -52,9 +64,9 @@ def test_incomplete_stage_detected(spark, catalog):
     run_frequency_pipeline(docs, catalog=catalog)
     # a crash between data write and manifest write leaves no manifest
     os.remove(catalog._manifest_path("trips"))
-    assert not catalog.is_complete("trips")
+    assert not _complete(catalog, "trips")
     t = run_frequency_pipeline(docs, catalog=catalog)
-    assert catalog.is_complete("trips")
+    assert _complete(catalog, "trips")
     assert t.trips.count() > 0
 
 
@@ -66,9 +78,9 @@ def test_missing_stage_data_rebuilt(spark, catalog):
     run_frequency_pipeline(docs, catalog=catalog)
     snap = catalog.manifest("trips")["snapshot_id"]
     shutil.rmtree(catalog._data_path("trips"))
-    assert not catalog.is_complete("trips")
+    assert not _complete(catalog, "trips")
     t = run_frequency_pipeline(docs, catalog=catalog)
-    assert catalog.is_complete("trips")
+    assert _complete(catalog, "trips")
     assert catalog.manifest("trips")["snapshot_id"] != snap
     assert t.trips.count() > 0
 
@@ -87,7 +99,7 @@ def test_truncated_stage_rebuilt(spark, catalog):
     parts = [f for f in os.listdir(data) if f.startswith("part-")]
     assert len(parts) > 1
     os.remove(os.path.join(data, max(parts, key=lambda f: os.path.getsize(os.path.join(data, f)))))
-    assert not catalog.is_complete("nodes")
+    assert not _complete(catalog, "nodes")
 
     run_frequency_pipeline(docs, catalog=catalog)
     snaps2 = _snaps(catalog)
@@ -105,7 +117,7 @@ def test_rebuilt_input_invalidates_dependants(spark, catalog):
     run_frequency_pipeline(docs, catalog=catalog)
     snaps1 = _snaps(catalog)
     catalog.invalidate("relations")
-    catalog.run_stage("relations", lambda: D.decode_relations(docs), ["docs"])
+    catalog.run_stage("relations", lambda: D.decode_relations(docs), ["docs"], D.decode_relations)
 
     run_frequency_pipeline(docs, catalog=catalog)
     snaps2 = _snaps(catalog)
@@ -121,9 +133,12 @@ def test_manifest_lineage_metrics(spark, catalog, tmp_path):
     ms = {m["stage"]: m for m in catalog.metrics()}
     st = ms["stop_times"]
     assert st["inputs"] == ["trips", "itin_stops"]
-    assert st["row_count"] == sum(p["rows"] for p in st["partitions"])
-    assert all("checksum" in p for p in st["partitions"])
-    assert st["row_count"] > 0 and st["schema"].startswith("struct<")
+    assert st["row_count"] == sum(f["rows"] for f in st["files"].values()) > 0
+    assert [f["name"] for f in st["schema"]["fields"]] == catalog.read("stop_times").columns
+    # the checksum is the data's, not the run's: a second cold build agrees
+    other = CheckpointCatalog(spark, str(tmp_path / "ckpt2"))
+    run_frequency_pipeline(docs, catalog=other)
+    assert other.manifest("stop_times")["checksum"] == st["checksum"] is not None
 
     # every stage's manifest inputs are its declared deps, on both pipelines
     sched_catalog = CheckpointCatalog(spark, str(tmp_path / "sched_ckpt"))
@@ -137,110 +152,123 @@ def test_manifest_lineage_metrics(spark, catalog, tmp_path):
         assert {m["stage"]: m["inputs"] for m in cat.metrics()} == declared
 
 
-def test_partlog_path_chars_and_empty_stage(spark, tmp_path):
-    """ADVICE r2: partition values containing path-reserved characters
-    must not escape the partlog dir, and a first run whose output is
-    empty must return an empty frame, not fail on a missing path."""
-    import os
+def _freq_names() -> set[str]:
+    return {n for st in pipeline._frequency_stages() for n in st.names}
 
-    from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
-    from pyspark.sql import functions as F
 
-    cat = CheckpointCatalog(spark, str(tmp_path / "ckpt"))
-    df = spark.createDataFrame(
-        [("a/../..", 1), ("plain", 2)], "tile string, v int"
+def test_changed_name_without_rebuilds_stops(spark, catalog):
+    """A stage built with another ``name_without`` is not resumed: the
+    stops stage and everything built from it rebuild, the rest resumes."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    run_frequency_pipeline(docs, catalog=catalog)
+    snaps1 = _snaps(catalog)
+    run_frequency_pipeline(docs, name_without="halt", catalog=catalog)
+    snaps2 = _snaps(catalog)
+    rebuilt = set(pipeline.downstream(["stops"])) & _freq_names()
+    assert {"stops", "stations", "parent_map", "stops_final"} <= rebuilt
+    for stage in rebuilt:
+        assert snaps2[stage] != snaps1[stage], f"{stage} must be rebuilt"
+    for stage in _freq_names() - rebuilt:
+        assert snaps2[stage] == snaps1[stage], f"{stage} must be reused"
+    assert {"nodes", "ways", "relations", "lines", "itineraries", "itin_stops", "trips"} <= _freq_names() - rebuilt
+
+
+def _narrow_trips(lines, itineraries):
+    return gtfs.build_trips(lines, itineraries).drop("trip_headsign")
+
+
+def test_stage_from_other_code_rebuilt_not_read(spark, catalog):
+    """A stage stored under the current name by another builder, with a
+    narrower schema, is rebuilt: downstream never reads its data."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    want = _rows(run_frequency_pipeline(docs, catalog=catalog).trips)
+    catalog.invalidate("trips")
+    lines, itins = catalog.read("lines"), catalog.read("itineraries")
+    catalog.run_stage(
+        "trips", lambda: _narrow_trips(lines, itins), ["lines", "itineraries"], _narrow_trips
     )
-    out = cat.run_partitioned_stage("weird", lambda: df, "tile")
-    assert {(r.tile, r.v) for r in out.collect()} == {("a/../..", 1), ("plain", 2)}
-    logdir = str(tmp_path / "ckpt" / "weird" / "partlog")
-    names = set(os.listdir(logdir))
-    # percent-encoding leaves no raw separators, so every record stays a
-    # direct child of partlog/ (".." without a slash is a plain filename)
-    assert names == {"a%2F..%2F...json", "plain.json"}
-    # resume skips both committed values (keyed by record body, not filename)
-    assert set(cat.committed_partitions("weird")) == {"a/../..", "plain"}
+    assert "trip_headsign" not in catalog.read("trips").columns
+    forged = catalog.manifest("trips")["snapshot_id"]
 
-    empty = spark.createDataFrame([], "tile string, v int")
-    out2 = cat.run_partitioned_stage("void", lambda: empty, "tile")
-    assert out2.count() == 0 and out2.schema == empty.schema
+    t = run_frequency_pipeline(docs, catalog=catalog)
+    assert _rows(t.trips) == want
+    m = catalog.manifest("trips")
+    assert m["snapshot_id"] != forged and m["fingerprint"] == fingerprint(gtfs.build_trips)
+    assert "trip_headsign" in catalog.read("trips").columns
 
 
-def test_mid_tiling_partition_resume(spark, tmp_path):
-    """North rule: a killed tiling job resumes at PARTITION granularity —
-    only the cells missing from the partition log are recomputed."""
-    import os
-    import shutil
+def _stage_tables():
+    return {
+        "frequency": pipeline._frequency_stages(),
+        "schedule": pipeline._schedule_stages(),
+        "accra": accra.stages(),
+        "abidjan": abidjan.stages(),
+        "florianopolis": florianopolis.stages(),
+        "default_city": default_city.stages(),
+    }
 
-    from osm2gtfs_spark.functions.geo import cell_id
-    from osm2gtfs_spark.operators.spatial import tile_coverage
-    from osm2gtfs_spark.sources import tpch
-    from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
-    from pyspark.sql import functions as F
 
-    cat = CheckpointCatalog(spark, str(tmp_path / "ckpt"))
-    sf = "/root/testdata/sf0.001"
+def test_stage_fingerprints_are_stable():
+    """Every declared stage fingerprints (no builder closes over an
+    object), fresh lambdas of one table agree, another process agrees,
+    and a changed closure value changes the fingerprint."""
+    first, second = _stage_tables(), _stage_tables()
+    fps = {k: [fingerprint(st.build) for st in t] for k, t in first.items()}
+    assert fps == {k: [fingerprint(st.build) for st in t] for k, t in second.items()}
+    assert first["frequency"][3].build is not second["frequency"][3].build
+    assert len(set(fps["frequency"])) == len(fps["frequency"])
 
-    def tiling():
-        return tile_coverage(tpch.stops(spark, sf), res=3)
-
-    full = cat.run_partitioned_stage("tiles", tiling, "cell_id")
-    want = {(r.cell_id, r.n_points) for r in tiling().collect()}
-    assert {(r.cell_id, r.n_points) for r in full.collect()} == want
-
-    log1 = cat.committed_partitions("tiles")
-    assert set(log1) == {str(c) for c, _ in want}
-
-    # simulate a mid-tiling kill: two cells lose their commit record
-    # (and one also its data — a half-written partition)
-    victims = sorted(log1)[:2]
-    for v in victims:
-        os.remove(str(tmp_path / "ckpt" / "tiles" / "partlog" / f"{v}.json"))
-    shutil.rmtree(
-        str(tmp_path / "ckpt" / "tiles" / "data" / f"cell_id={victims[0]}"),
-        ignore_errors=True,
+    probe = "from osm2gtfs_spark.plans import pipeline as p; from osm2gtfs_spark.sources.checkpoint import fingerprint as f; print(f(p._frequency_stages()[3].build))"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True, cwd=repo,
+        env={**os.environ, "PYTHONHASHSEED": "7", "PYTHONPATH": repo},
     )
+    assert out.stdout.strip() == fps["frequency"][3]
 
-    resumed = cat.run_partitioned_stage("tiles", tiling, "cell_id")
-    assert {(r.cell_id, r.n_points) for r in resumed.collect()} == want
-
-    log2 = cat.committed_partitions("tiles")
-    # survivors keep their original snapshot (NOT recomputed); victims got a new one
-    for v, rec in log1.items():
-        if v in victims:
-            assert log2[v]["snapshot_id"] != rec["snapshot_id"]
-        else:
-            assert log2[v]["snapshot_id"] == rec["snapshot_id"]
-        assert log2[v]["rows"] == rec["rows"]
-        assert log2[v]["checksum"] == rec["checksum"]
+    assert fingerprint(pipeline._frequency_stages("halt")[3].build) != fps["frequency"][3]
+    windows = [st for st in abidjan.stages({"sunrise": "05:30"}) if st.names == ("abidjan_windows",)]
+    assert fingerprint(windows[0].build) not in fps["abidjan"]
+    obj = object()
+    with pytest.raises(TypeError):
+        fingerprint(lambda: obj)
 
 
-def test_empty_stage_marker_readable(spark, tmp_path):
-    """ADVICE r3: an empty first run must commit a readable zero-row
-    marker (manifest with schema) so catalog.read(stage) by another
-    caller works and the stage shows in metrics(); a later run with
-    real data replaces the marker."""
-    from osm2gtfs_spark.sources.checkpoint import CheckpointCatalog
+def _void():
+    pass
 
-    cat = CheckpointCatalog(spark, str(tmp_path / "ckpt"))
+
+def test_empty_stage_resumes_with_schema(spark, catalog):
+    """An empty stage is one schema-only part file: it resumes, and
+    reads back with its schema."""
     empty = spark.createDataFrame([], "tile string, v int")
-    out = cat.run_partitioned_stage("void2", lambda: empty, "tile")
-    assert out.count() == 0
+    out, resumed = catalog.run_stage("void", lambda: empty, [], _void)
+    assert not resumed and out.count() == 0 and out.schema == empty.schema
+    m = catalog.manifest("void")
+    assert m["row_count"] == 0 and [f["rows"] for f in m["files"].values()] == [0]
+    again, resumed = catalog.run_stage("void", lambda: pytest.fail("rebuilt"), [], _void)
+    assert resumed and again.count() == 0 and again.schema == empty.schema
 
-    back = cat.read("void2")  # a DIFFERENT caller reading the stage
-    assert back.count() == 0 and back.schema == empty.schema
-    assert "void2" in {m["stage"] for m in cat.metrics()}
-    assert cat.is_complete("void2")
 
-    # review r4: a plain re-run of the still-empty stage keeps the
-    # committed marker (stable snapshot id), like non-empty partitions
-    snap1 = cat.manifest("void2")["snapshot_id"]
-    out_again = cat.run_partitioned_stage("void2", lambda: empty, "tile")
-    assert out_again.count() == 0
-    assert cat.manifest("void2")["snapshot_id"] == snap1
+def _new_jobs(spark, run) -> set[int]:
+    """Ids of the jobs ``run`` starts. Stage threads carry no job group,
+    so these are the ungrouped job ids that appear during the run."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run()
+    return set(tracker.getJobIdsForGroup(None)) - before
 
-    df = spark.createDataFrame([("t", 1)], "tile string, v int")
-    out2 = cat.run_partitioned_stage("void2", lambda: df, "tile")
-    assert out2.count() == 1
-    # marker manifest dropped once data exists (partlog tracks completion)
-    assert cat.manifest("void2") is None
-    assert cat.read("void2").count() == 1
+
+def test_stage_record_adds_no_job(spark, catalog):
+    """Writing a stage is one job: the metrics ride on the write, and
+    reading it back infers no schema."""
+    ids = spark.range(0, 1000, 1, 4)
+    jobs = _new_jobs(spark, lambda: catalog.run_stage("ids", lambda: ids, [], _void))
+    assert len(jobs) == 1
+    assert catalog.manifest("ids")["row_count"] == 1000
+
+
+def test_resume_starts_no_job(spark, catalog):
+    docs = D.docs_df(spark, D.CitySpec(n_lines=2))
+    run_frequency_pipeline(docs, catalog=catalog)
+    assert _new_jobs(spark, lambda: run_frequency_pipeline(docs, catalog=catalog)) == set()

@@ -1,7 +1,7 @@
 """Every package function is reached from an entry point.
 
-An AST scan of ``osm2gtfs_spark/`` that fails on any top-level function
-or class no entry point reaches. The roots are:
+An AST scan of ``osm2gtfs_spark/`` that fails on any top-level function,
+class or method no entry point reaches. The roots are:
 
 - every ``@register`` query in ``plans/queries.py``;
 - ``cli.main`` and ``osm2gtfs_spark/__main__.py``;
@@ -13,10 +13,11 @@ or class no entry point reaches. The roots are:
   functions by name.
 
 From there the scan follows, by bare name, every name, attribute and
-identifier-like string constant in each reached def's body; a reached
-class reaches all its methods. That over-approximates: a live function
-is never flagged, but a dead one that shares a name with a live one,
-or a dead method of a live class, is missed. Test-only helpers belong
+identifier-like string constant in each reached def's body. A reached
+class reaches its dunder methods, which Python calls implicitly; every
+other method is reached by its bare name, like a function. That
+over-approximates: a live function is never flagged, but a dead one
+that shares a name with a live one is missed. Test-only helpers belong
 in the test module that uses them. ``ALLOWED`` lists the unreached
 functions kept on purpose; the scan also fails when one of them becomes
 reachable or is gone.
@@ -47,13 +48,15 @@ ALLOWED = {
 }
 
 _NAME_STRING = re.compile(r"[A-Za-z_][\w.:]*")
+_DUNDER = re.compile(r"__\w+__")
 
 
 def _refs(tree_nodes):
     """({(file, top-level function or method): names its body references},
-    {(file, top-level def or class): its methods}, {alias: original names}).
-    Module-level code is keyed by the function ``""``; docstrings are not
-    references."""
+    {(file, unit): the bodies it reaches}, {alias: original names}); a
+    unit is a top-level def, a class (its dunder methods) or a method
+    (``Class.method``). Module-level code is keyed by the function
+    ``""``; docstrings are not references."""
     refs: dict[tuple[str, str], set[str]] = {}
     units: dict[tuple[str, str], set[str]] = {}
     aliases: dict[str, set[str]] = {}
@@ -65,9 +68,9 @@ def _refs(tree_nodes):
                 if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     units[rel, top.name] = {top.name}
                 elif isinstance(top, ast.ClassDef):
-                    units[rel, top.name] = {
-                        d.name for d in top.body if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef))
-                    }
+                    methods = [d.name for d in top.body if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef))]
+                    units[rel, top.name] = {m for m in methods if _DUNDER.fullmatch(m)}
+                    units.update({(rel, f"{top.name}.{m}"): {m} for m in methods if not _DUNDER.fullmatch(m)})
         if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
             doc = node.body[0] if node.body else None
             if isinstance(doc, ast.Expr) and isinstance(doc.value, ast.Constant):
@@ -105,12 +108,12 @@ def _qualified(rel: str, name: str) -> str:
 
 def _reachability():
     """(every package unit, the reached ones, the root names); a unit is
-    a top-level function or class, as (file, name)."""
+    a top-level function, class or method, as (file, name)."""
     pkg_nodes = list(nodes(PKG))
     refs, units, aliases = _refs(pkg_nodes)
     by_name: dict[str, set[tuple[str, str]]] = {}
     for rel, name in units:
-        by_name.setdefault(name, set()).add((rel, name))
+        by_name.setdefault(name.rsplit(".", 1)[-1], set()).add((rel, name))
 
     script_nodes = [
         n for pattern in ENTRY_SCRIPTS for path in sorted(REPO.glob(pattern))
