@@ -26,7 +26,8 @@ that outputs match ``gh_accra_gtfs.zip.ref`` (its committed golden):
 
 Flow: :func:`stages` is the shared XML stage table
 (:func:`~osm2gtfs_spark.plans.pipeline.xml_stages`) plus Accra's stop
-areas and trips; the stage walk stores each stage once, and
+areas and the frequency trips of ``gtfs.build_trips``, which the docs
+frequency pipeline shares; the stage walk stores each stage once, and
 :func:`build_accra_tables` derives the output tables from the stored
 stages.
 """
@@ -35,10 +36,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2gtfs_spark.operators.indexing import global_index
 from osm2gtfs_spark.operators.spatial import cluster_stops_greedy
 from osm2gtfs_spark.plans import gtfs, pipeline
 from osm2gtfs_spark.plans.pipeline import Stage
@@ -60,28 +60,7 @@ def stages() -> tuple[Stage, ...]:
     return pipeline.xml_stages("accra", ACCRA_NAME_WITHOUT) + (
         # stop areas: greedy 500 m clustering per name
         Stage(("accra_clusters",), ("accra_stops",), cluster_stops_greedy),
-        Stage(("accra_trips",), ("route_lines", "route_itineraries"), _trips),
-    )
-
-
-def _trips(lines: DataFrame, itins: DataFrame) -> DataFrame:
-    """transitfeed insertion order = sorted(ref) then member order."""
-    itin_order = Window.partitionBy("l_ref").orderBy("seq", "itinerary_osm_id")  # l_ref 1:1 line (J2); shares the index window partitioning
-    line_dim = F.broadcast(
-        lines.select("line_osm_id", F.col("route_id").alias("l_ref"), F.col("tags").alias("line_tags"))
-    )
-    return (
-        global_index(
-            itins.drop("route_id").join(line_dim, "line_osm_id"),
-            ["l_ref", "seq", "itinerary_osm_id"],
-            "_trip_idx",
-            start=0,
-        )
-        .withColumn("direction_id", (F.row_number().over(itin_order) - 1) % 2)
-        .withColumn("trip_id", F.col("_trip_idx").cast("string"))
-        .drop("_trip_idx")
-        .withColumn("frequency_min", gtfs.positive_int_tag("line_tags", "frequency", gtfs.DEFAULT_ROUTE_FREQUENCY))
-        .withColumn("travel_min", gtfs.positive_int_tag("tags", "travel_time", gtfs.DEFAULT_TRAVEL_TIME))
+        Stage(("accra_trips",), ("route_lines", "route_itineraries"), gtfs.build_trips),
     )
 
 
@@ -142,14 +121,6 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame, catalog=No
         .otherwise("")
         .alias("trip_headsign"),
     )
-    frequencies_out = trips_full.select(
-        "trip_id",
-        F.lit(gtfs.FREQ_START).alias("start_time"),
-        F.lit(gtfs.FREQ_END).alias("end_time"),
-        (F.col("frequency_min") * 60).cast("string").alias("headway_secs"),
-        # transitfeed writes exact_times=0 for AddFrequency (golden)
-        F.lit("0").alias("exact_times"),
-    )
     # --- shapes: per itinerary with trips --------------------------------
     shapes_out = gtfs.shapes_txt(
         s["route_shapes"].join(trips_full.select("itinerary_osm_id").distinct(), "itinerary_osm_id"),
@@ -160,6 +131,6 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame, catalog=No
         routes=routes_out,
         trips=trips_out,
         stop_times=gtfs.interpolated_stop_times(trips_full, s["route_itin_stops"], stop_points, "travel_min"),
-        frequencies=frequencies_out,
+        frequencies=gtfs.build_frequencies(trips_full),
         shapes=shapes_out,
     )

@@ -92,10 +92,7 @@ def stages(name_without: str = "stop") -> tuple[Stage, ...]:
             lambda lines: normalize_colour(lines, "colour", "colour_norm"),
         ),
         Stage(("default_per_service",), ("route_itineraries", "timetable"), _per_service),
-        Stage(
-            ("default_sched_trips",), ("default_per_service",),
-            lambda per_service: pipeline._schedule_trips_full(per_service, start=0),
-        ),
+        Stage(("default_sched_trips",), ("default_per_service",), pipeline._schedule_trips_full),
     )
 
 
@@ -155,16 +152,12 @@ def build_city_tables(
     # --- trips + stop_times (schedule join path, exact order) ----------
     trips_txt = trips_full.select("route_id", "trip_id", "trip_headsign", "service_id", "shape_id")
     filled = pipeline._schedule_filled(s["route_itin_stops"], stops, parent_map, stations, per_service)
-    stop_times_txt = (
-        pipeline._schedule_stop_times(filled, trips_full)
-        .join(stops.select("stop_key", "stop_id"), "stop_key")
-        .select(
-            "trip_id",
-            "arrival_time",
-            "departure_time",
-            "stop_id",
-            F.col("stop_sequence").cast("string").alias("stop_sequence"),
-        )
+    stop_times_txt = pipeline._schedule_stop_times(filled, trips_full).select(
+        "trip_id",
+        "arrival_time",
+        "departure_time",
+        "stop_id",
+        F.col("stop_sequence").cast("string").alias("stop_sequence"),
     )
     calendar, _ = SP.build_calendar(per_service.select("service"), feed_start, feed_end)
 

@@ -10,7 +10,8 @@ reference's row-at-a-time semantics recast as joins/windows:
 - build_lines      — P2/J1/J2/P8/P10 (master↔variant full outer)
 - itinerary_stops  — P4 (platform-role members, order preserved)
 - build_shapes     — J6 + O1 (two-hop geometry join + stitch kernel)
-- frequency_trips  — Accra path (gh_accra/trips_creator_gh_accra.py)
+- build_trips      — frequency trips (gh_accra/trips_creator_gh_accra.py),
+                     shared by the docs frequency pipeline and Accra
 - prune_unused     — P15/P16 anti joins
 
 Scale shape: all joins are equi joins on entity ids; the dimension
@@ -495,13 +496,15 @@ def interpolate_times_distance(rows: DataFrame, key: list[str]) -> DataFrame:
 
 
 def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
-    """Accra path: one trip per itinerary, with frequency/travel columns.
+    """Frequency trips, one per itinerary, with frequency/travel columns:
+    the docs frequency pipeline's and Accra's trips.
 
     Semantics (gh_accra/trips_creator_gh_accra.py:40-110):
     - direction_id alternates over the line's itineraries (W3)
     - headsign = 'to' tag; frequency from line tags, invalid → 30 min
     - travel_time from itinerary tags, invalid → 120 min
-    - trip_id deterministic from (route_id, itinerary seq) order (O5)
+    - trip_id is transitfeed's auto-increment from 0 in (route_id,
+      itinerary seq) order (O5)
 
     Pass materialized inputs (the pipelines pass stored stages): the
     ``SMALL_INDEX_THRESHOLD`` check counts the itinerary join. Store the
@@ -519,6 +522,7 @@ def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
             itineraries.drop("route_id").join(line_dim, "line_osm_id"),
             ["route_id", "seq", "itinerary_osm_id"],
             "_trip_idx",
+            start=0,
             small_threshold=SMALL_INDEX_THRESHOLD,
         )
         .withColumn("direction_id", (F.row_number().over(itin_order) - 1) % 2)
@@ -533,7 +537,10 @@ def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
             F.col("itinerary_id").alias("shape_id"),
             "direction_id",
             F.col("to").alias("trip_headsign"),
+            "line_osm_id",
             "itinerary_osm_id",
+            "fr",
+            "to",
             "frequency_min",
             "travel_min",
         )
@@ -542,40 +549,14 @@ def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
 
 
 def build_frequencies(trips: DataFrame) -> DataFrame:
-    """frequencies rows 05:00-22:00, headway = frequency*60 s."""
+    """frequencies rows 05:00-22:00, headway = frequency*60 s, and the
+    exact_times=0 transitfeed's AddFrequency writes."""
     return trips.select(
         "trip_id",
         F.lit(FREQ_START).alias("start_time"),
         F.lit(FREQ_END).alias("end_time"),
         (F.col("frequency_min") * 60).alias("headway_secs"),
         F.lit(0).alias("exact_times"),
-    )
-
-
-def build_stop_times(trips: DataFrame, itin_stops: DataFrame) -> DataFrame:
-    """stop_times of the docs frequency pipeline, spaced by stop COUNT.
-
-    The first stop departs 06:00:00 and the last at 06:00 +
-    travel_time; interior stops are equally spaced by raw member
-    position, floored to whole seconds. This is not the reference's W6
-    rule, which weights by distance (:func:`interpolate_times_distance`)."""
-    st = trips.select("trip_id", "itinerary_osm_id", "travel_min").join(
-        itin_stops, "itinerary_osm_id"
-    )
-    n_stops = Window.partitionBy("trip_id")
-    st = st.withColumn("n", F.max(F.col("pos") + 1).over(n_stops)).filter(F.col("n") >= 2)
-    secs = F.lit(FIRST_DEPARTURE_SECS) + F.floor(
-        F.col("travel_min") * 60 * F.col("pos") / (F.col("n") - 1)
-    )
-    return st.select(
-        "trip_id",
-        secs_to_gtfs(secs).alias("arrival_time"),
-        secs_to_gtfs(secs).alias("departure_time"),
-        "stop_key",
-        (F.col("pos") + 1).alias("stop_sequence"),
-        F.when((F.col("pos") == 0) | (F.col("pos") == F.col("n") - 1), 1)
-        .otherwise(0)
-        .alias("timepoint"),
     )
 
 
@@ -649,9 +630,10 @@ def shapes_txt(shapes: DataFrame, shape_id) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def prune_unused_stops(stops: DataFrame, stop_times: DataFrame) -> DataFrame:
-    """P15: left anti join — drop stops that no trip visits."""
-    used = stop_times.select("stop_key").distinct()
-    return stops.join(used, "stop_key", "left_semi")
+    """P15: left semi join on ``stop_id`` — drop stops that no trip
+    visits."""
+    used = stop_times.select("stop_id").distinct()
+    return stops.join(used, "stop_id", "left_semi")
 
 
 def prune_unused_routes(lines: DataFrame, trips: DataFrame) -> DataFrame:

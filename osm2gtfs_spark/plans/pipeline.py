@@ -28,10 +28,12 @@ Stop times (W6) have one fill, :func:`~osm2gtfs_spark.plans.gtfs.
 interpolate_times_distance`; each creator sets its own timepoints and
 calls it: the schedule path here (:func:`_schedule_filled`, which the
 default city shares with :func:`_schedule_trips_full` and
-:func:`_schedule_stop_times`), Accra and Abidjan
-(``gtfs.interpolated_stop_times``) and Florianópolis. The docs
-frequency pipeline's ``gtfs.build_stop_times`` spaces stops by count
-instead.
+:func:`_schedule_stop_times`), the frequency path here, Accra and
+Abidjan (``gtfs.interpolated_stop_times``) and Florianópolis. The
+frequency path and Accra share one trip builder, ``gtfs.build_trips``.
+Every pipeline numbers trips from 0 (transitfeed's auto-increment, O5)
+and writes the P11 ``stop_id`` into stop_times, the id stops.txt
+carries.
 """
 
 from __future__ import annotations
@@ -143,7 +145,10 @@ def _frequency_stages(name_without: str = "stop") -> tuple[Stage, ...]:
     return _osm_stages(name_without) + (
         Stage(("trips",), ("lines", "itineraries"), gtfs.build_trips),
         Stage(("frequencies",), ("trips",), gtfs.build_frequencies),
-        Stage(("stop_times",), ("trips", "itin_stops"), gtfs.build_stop_times),
+        Stage(
+            ("stop_times",), ("trips", "itin_stops", "stops"),
+            lambda trips, itin_stops, stops: gtfs.interpolated_stop_times(trips, itin_stops, stops, "travel_min"),
+        ),
         Stage(("stops_final",), ("stops", "stop_times", "parent_map"), _stops_final),
         Stage(("routes_final",), ("lines", "trips"), _routes_final),
     )
@@ -276,7 +281,7 @@ def _frequency_outputs(s: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return dict(
         stops=s["stops_final"],
         routes=s["routes_final"],
-        trips=s["trips"].drop("itinerary_osm_id", "frequency_min", "travel_min"),
+        trips=s["trips"].drop("line_osm_id", "itinerary_osm_id", "fr", "to", "frequency_min", "travel_min"),
         stop_times=s["stop_times"],
         shapes=s["shapes"],
         frequencies=s["frequencies"],
@@ -363,19 +368,19 @@ def _schedule_filled(itin_stops, stops, parent_map, stations, per_service):
         .select("itinerary_osm_id", "pos", "stop_key", "name", "parent_name")
     )
     aligned = SP.align_stops(named, per_service).join(
-        stops.select("stop_key", "lat", "lon"), "stop_key"
+        stops.select("stop_key", "stop_id", "lat", "lon"), "stop_key"
     )
     return gtfs.interpolate_times_distance(
         aligned, ["itinerary_osm_id", "service", "trip_seq"]
     ).drop("lat", "lon")
 
 
-def _schedule_trips_full(per_service, start=1):
+def _schedule_trips_full(per_service):
     """O5 id determinism for the schedule path: reference insertion order
     is lines by ref, itineraries in member order, services in
     first-occurrence order, then time rows — a two-phase global index
-    over (route, itinerary seq, service order, departure). Ids count
-    from ``start``: the default city's transitfeed ids from 0."""
+    over (route, itinerary seq, service order, departure). Ids are
+    transitfeed's, from 0; the default city shares this builder."""
     return (
         global_index(
             per_service.select(
@@ -390,7 +395,7 @@ def _schedule_trips_full(per_service, start=1):
             ),
             ["route_id", "seq", "itinerary_osm_id", "svc_order", "trip_seq"],
             "_trip_idx",
-            start=start,
+            start=0,
             small_threshold=SMALL_INDEX_THRESHOLD,
         )
         .withColumn("trip_id", F.col("_trip_idx").cast("string"))
@@ -421,7 +426,7 @@ def _schedule_stop_times(filled, trips_full):
             "trip_id",
             gtfs.secs_to_gtfs(F.col("time_secs_filled")).alias("arrival_time"),
             gtfs.secs_to_gtfs(F.col("time_secs_filled")).alias("departure_time"),
-            "stop_key",
+            "stop_id",
             F.row_number().over(st_order).alias("stop_sequence"),
             "timepoint",
         )

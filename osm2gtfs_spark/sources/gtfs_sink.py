@@ -161,7 +161,7 @@ def write_gtfs_zip(tables, zip_path: str, agency: dict | None = None) -> str:
         "stops.txt": stops,
         "routes.txt": tables.routes,
         "trips.txt": tables.trips,
-        "stop_times.txt": tables.stop_times.withColumnRenamed("stop_key", "stop_id"),
+        "stop_times.txt": tables.stop_times,
         "shapes.txt": tables.shapes,
         "calendar.txt": tables.calendar,
         "frequencies.txt": tables.frequencies,
@@ -211,21 +211,9 @@ def validate_feed(tables) -> DataFrame:
     four (stations, calendar_dates, frequencies, shapes) are optional.
     """
     spark = tables.trips.sparkSession
-    st = tables.stop_times
-    st_used_key = "stop_key" in st.columns
-    if st_used_key:
-        st = st.withColumnRenamed("stop_key", "stop_id")
-    stops = tables.stops
-    # the stops id column must MATCH whichever key stop_times carries:
-    # pipelines reference stops by stop_key; city plans that emit final
-    # GTFS stop_ids in stop_times (e.g. Florianópolis) must be checked
-    # against stops.stop_id, not stop_key
-    if st_used_key and "stop_key" in stops.columns:
-        stop_ids = stops.select(F.col("stop_key").alias("stop_id"))
-    elif "stop_id" in stops.columns:
-        stop_ids = stops.select("stop_id")
-    else:
-        stop_ids = stops.select(F.col("stop_key").alias("stop_id"))
+    st, stops = tables.stop_times, tables.stops
+    # every pipeline writes the stops.txt id (P11) into stop_times
+    stop_ids = stops.select("stop_id")
     stations = getattr(tables, "stations", None)
     if stations is not None:
         stop_ids = stop_ids.unionByName(stations.select(F.col("station_key").alias("stop_id")))

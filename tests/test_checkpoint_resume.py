@@ -132,7 +132,7 @@ def test_manifest_lineage_metrics(spark, catalog, tmp_path):
     run_frequency_pipeline(docs, catalog=catalog)
     ms = {m["stage"]: m for m in catalog.metrics()}
     st = ms["stop_times"]
-    assert st["inputs"] == ["trips", "itin_stops"]
+    assert st["inputs"] == ["trips", "itin_stops", "stops"]
     assert st["row_count"] == sum(f["rows"] for f in st["files"].values()) > 0
     assert [f["name"] for f in st["schema"]["fields"]] == catalog.read("stop_times").columns
     # the checksum is the data's, not the run's: a second cold build agrees

@@ -9,6 +9,7 @@ city instead of the (unavailable) Overpass fixtures.
 from __future__ import annotations
 
 import dataclasses
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,28 +78,67 @@ def test_trip_frequencies_semantics(tables):
         assert t.direction_id in (0, 1)
 
 
+def _secs(t: str) -> int:
+    h, m, s = t.split(":")
+    return int(h) * 3600 + int(m) * 60 + int(s)
+
+
 def test_stop_times_interpolation(tables):
-    """W6: first stop 06:00:00, last 06:00+travel, interior equally spaced."""
-    rows = tables.stop_times.orderBy("trip_id", "stop_sequence").collect()
+    """W6: first stop 06:00:00, last 06:00 + travel minutes, interior
+    stops by cumulative great-circle distance (transitfeed radius)."""
+    coords = {r.stop_id: (r.lat, r.lon) for r in tables.stops.collect()}
     by_trip: dict[str, list] = {}
-    for r in rows:
+    for r in tables.stop_times.collect():
         by_trip.setdefault(r.trip_id, []).append(r)
     assert by_trip
+    moved = 0
     for trip_id, sts in by_trip.items():
-        assert sts[0].arrival_time == "06:00:00"
-        assert [s.stop_sequence for s in sts] == list(range(1, len(sts) + 1))
-        secs = [
-            int(s.arrival_time[0:2]) * 3600 + int(s.arrival_time[3:5]) * 60 + int(s.arrival_time[6:8])
-            for s in sts
-        ]
-        assert secs == sorted(secs), f"non-monotone stop_times in trip {trip_id}"
-        # equal spacing by stop count (transitfeed interpolation semantics)
-        n = len(secs)
+        sts.sort(key=lambda s: int(s.stop_sequence))
+        seqs = [int(s.stop_sequence) for s in sts]
+        assert seqs[0] >= 1 and seqs == sorted(set(seqs)), trip_id
+        secs = [_secs(s.arrival_time) for s in sts]
+        assert [_secs(s.departure_time) for s in sts] == secs
+        assert secs[0] == 6 * 3600 and secs == sorted(secs), trip_id
         total = secs[-1] - secs[0]
-        for i, s in enumerate(secs):
-            assert s == secs[0] + int(total * i / (n - 1))
-        assert sts[0].timepoint == 1 and sts[-1].timepoint == 1
-        assert all(s.timepoint == 0 for s in sts[1:-1])
+        assert total > 0 and total % 60 == 0, trip_id
+        cum = [0.0]
+        for a, b in zip(sts, sts[1:]):
+            cum.append(cum[-1] + _haversine(*coords[a.stop_id], *coords[b.stop_id]))
+        for i, got in enumerate(secs):
+            want = secs[0] + total * cum[i] / cum[-1]
+            assert abs(got - want) <= 1, (trip_id, i, got, want)
+            moved += got != secs[0] + int(total * i / (len(secs) - 1))
+    assert moved, "no stop is timed off the count spacing"
+
+
+def _haversine(lat1, lon1, lat2, lon2, radius=6367000.0):
+    a = (
+        math.sin(math.radians(lat2 - lat1) / 2) ** 2
+        + math.cos(math.radians(lat1)) * math.cos(math.radians(lat2)) * math.sin(math.radians(lon2 - lon1) / 2) ** 2
+    )
+    return 2 * radius * math.asin(math.sqrt(a))
+
+
+def test_frequency_pipeline_matches_accra(spark, tables):
+    """One city through the docs frequency pipeline and the Accra
+    selector (the same docs as stops and routes) gives, per itinerary
+    and stop_sequence, the same trip id and arrival time: both use
+    ``gtfs.build_trips`` and ``gtfs.interpolated_stop_times``. Stop ids
+    differ by design: P11 against the bare osm_id."""
+    from osm2gtfs_spark.plans.accra import build_accra_tables
+
+    docs = D.docs_df(spark, D.CitySpec(n_lines=6, with_stop_areas=True))
+    accra = build_accra_tables(docs, docs)
+
+    def timetable(t, itinerary):
+        shapes = {r.trip_id: itinerary(r.shape_id) for r in t.trips.collect()}
+        return {
+            (shapes[r.trip_id], int(r.stop_sequence)): (r.trip_id, r.arrival_time)
+            for r in t.stop_times.collect()
+        }
+
+    freq = timetable(tables, lambda shape_id: int(shape_id.removeprefix("relation/")))
+    assert freq and freq == timetable(accra, int)
 
 
 def test_shapes_stitched_and_truncation(tables):
@@ -120,8 +160,8 @@ def test_shapes_stitched_and_truncation(tables):
 
 def test_pruning_anti_joins(tables):
     # every surviving stop is referenced by stop_times (P15)
-    used = {r.stop_key for r in tables.stop_times.select("stop_key").distinct().collect()}
-    have = {r.stop_key for r in tables.stops.select("stop_key").collect()}
+    used = {r.stop_id for r in tables.stop_times.select("stop_id").distinct().collect()}
+    have = {r.stop_id for r in tables.stops.select("stop_id").collect()}
     assert have <= used
     # every surviving route has trips (P16)
     troutes = {r.route_id for r in tables.trips.select("route_id").distinct().collect()}

@@ -19,10 +19,10 @@ from osm2gtfs_spark.sources.gtfs_sink import validate_feed, write_gtfs_zip
 
 # (pipeline, store) → sha256 of the zip written from that run's tables
 ZIP_PINS = {
-    ("frequency", "memory"): "69c36240e95e2fa201705a94e9a534bf80e76972c52f591c1d8d13004d7368c0",
-    ("frequency", "cache_dir"): "69c36240e95e2fa201705a94e9a534bf80e76972c52f591c1d8d13004d7368c0",
-    ("schedule", "memory"): "05693e2904d7e8f41a42a525439f4f127d0efc2d5ec458e07e488ee574b874cb",
-    ("schedule", "cache_dir"): "05693e2904d7e8f41a42a525439f4f127d0efc2d5ec458e07e488ee574b874cb",
+    ("frequency", "memory"): "f283a75256184ce43b53fd0988f6a608971167089801119e1c4ed4de7c21b0ec",
+    ("frequency", "cache_dir"): "f283a75256184ce43b53fd0988f6a608971167089801119e1c4ed4de7c21b0ec",
+    ("schedule", "memory"): "c46fda3a80a68905a0862af0c09a85c088e4c8a9d426f5681904ffa38f9977f0",
+    ("schedule", "cache_dir"): "c46fda3a80a68905a0862af0c09a85c088e4c8a9d426f5681904ffa38f9977f0",
 }
 
 
@@ -48,12 +48,21 @@ def feeds(spark, tmp_path_factory):
 
 def test_zip_pins(feeds, tmp_path):
     """The zip bytes of each docs-parquet pipeline, in memory and with a
-    cache_dir, are pinned."""
+    cache_dir, are pinned, and every stop_times.txt ``stop_id`` is a
+    stops.txt ``stop_id`` (a stop or a station)."""
     got = {}
     for (pipeline, store), t in feeds.items():
         path = write_gtfs_zip(t, str(tmp_path / f"{pipeline}_{store}.zip"))
         got[pipeline, store] = hashlib.sha256(open(path, "rb").read()).hexdigest()
+        with zipfile.ZipFile(path) as z:
+            stops, used = set(_stop_ids(z, "stops.txt")), _stop_ids(z, "stop_times.txt")
+        dangling = [i for i in used if i not in stops]
+        assert used and not dangling, (pipeline, store, f"{len(dangling)}/{len(used)} dangling", dangling[:3])
     assert got == ZIP_PINS
+
+
+def _stop_ids(z: zipfile.ZipFile, member: str) -> list[str]:
+    return [r["stop_id"] for r in csv.DictReader(io.StringIO(z.read(member).decode("utf-8")))]
 
 
 @pytest.mark.parametrize("pipeline", ["frequency", "schedule"])
@@ -145,7 +154,7 @@ def test_validate_feed_seeded_violations(spark):
             ("s3", "Twin", 3.0, 3.0),      # duplicate pair
             ("s4", "Twin", 3.000001, 3.0),
         ],
-        "stop_key string, name string, lat double, lon double",
+        "stop_id string, name string, lat double, lon double",
     )
     routes = spark.createDataFrame([("r1",)], "route_id string")
     calendar = spark.createDataFrame(
@@ -166,7 +175,7 @@ def test_validate_feed_seeded_violations(spark):
             ("t1", "ghost", 2, "bad", "bad"),       # dup seq + bad format + fk
             ("t_orphan", "s1", 1, "09:00:00", "09:00:00"),
         ],
-        "trip_id string, stop_key string, stop_sequence int, arrival_time string, departure_time string",
+        "trip_id string, stop_id string, stop_sequence int, arrival_time string, departure_time string",
     )
     freqs = spark.createDataFrame(
         [("t1", 0)], "trip_id string, headway_secs int"

@@ -86,7 +86,8 @@ def test_fill_zero_length_span_takes_the_earlier_time(spark):
 
 
 def test_frequency_creators_stop_times(spark):
-    """Accra and Abidjan (``gtfs.interpolated_stop_times``): the first
+    """The docs frequency pipeline, Accra and Abidjan
+    (``gtfs.interpolated_stop_times``): the first
     and last RESOLVED stops are the timepoints, 06:00:00 and 06:00 +
     travel time; stop_sequence is the raw member position + 1; a trip
     with one resolved stop writes no rows."""
