@@ -278,6 +278,6 @@ def build_abidjan_tables(
         # duration-tag travel time
         stop_times=gtfs.interpolated_stop_times(
             trips_full, s["route_itin_stops"], s["abidjan_stops"], "duration_min"
-        ),
+        ).drop("stop_key"),
         stops=gtfs.stops_txt(s["abidjan_stops"], F.col("stop_id"), "0", F.lit("")),
     )

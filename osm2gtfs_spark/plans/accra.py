@@ -117,7 +117,7 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame, catalog=No
         F.col("itinerary_osm_id").cast("string").alias("shape_id"),
         F.col("direction_id").cast("string").alias("direction_id"),
         # headsign only when BOTH fr and to exist (trips_creator_gh_accra:50-52)
-        F.when(F.col("fr").isNotNull() & F.col("to").isNotNull(), F.col("to"))
+        F.when(F.col("fr").isNotNull() & F.col("trip_headsign").isNotNull(), F.col("trip_headsign"))
         .otherwise("")
         .alias("trip_headsign"),
     )
@@ -130,7 +130,9 @@ def build_accra_tables(stops_docs: DataFrame, routes_docs: DataFrame, catalog=No
         stops=stops_out,
         routes=routes_out,
         trips=trips_out,
-        stop_times=gtfs.interpolated_stop_times(trips_full, s["route_itin_stops"], stop_points, "travel_min"),
+        stop_times=gtfs.interpolated_stop_times(trips_full, s["route_itin_stops"], stop_points, "travel_min").drop(
+            "stop_key"
+        ),
         frequencies=gtfs.build_frequencies(trips_full),
         shapes=shapes_out,
     )

@@ -540,7 +540,6 @@ def build_trips(lines: DataFrame, itineraries: DataFrame) -> DataFrame:
             "line_osm_id",
             "itinerary_osm_id",
             "fr",
-            "to",
             "frequency_min",
             "travel_min",
         )
@@ -567,7 +566,11 @@ def interpolated_stop_times(
     resolved stop at 06:00:00, the last at 06:00 + ``travel_min``
     minutes, interior stops by :func:`interpolate_times_distance`
     (gh_accra/trips_creator_gh_accra.py:88-110, ci_abidjan :178-221).
-    Trips with fewer than two resolved stops get none."""
+    A member that is not a stop writes no row, and stop_sequence keeps
+    the raw member position + 1; trips with fewer than two resolved
+    stops get none. Rows carry the stop's ``stop_key`` for the P15
+    prune (:func:`prune_unused_stops`); callers drop it from
+    stop_times.txt."""
     by_trip = Window.partitionBy("trip_id")
     st = (
         trips.select("trip_id", "itinerary_osm_id", travel_min)
@@ -587,6 +590,7 @@ def interpolated_stop_times(
         secs_to_gtfs(F.col("time_secs_filled")).alias("departure_time"),
         "stop_id",
         (F.col("pos") + 1).cast("string").alias("stop_sequence"),
+        "stop_key",
     )
 
 
@@ -630,10 +634,10 @@ def shapes_txt(shapes: DataFrame, shape_id) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def prune_unused_stops(stops: DataFrame, stop_times: DataFrame) -> DataFrame:
-    """P15: left semi join on ``stop_id`` — drop stops that no trip
-    visits."""
-    used = stop_times.select("stop_id").distinct()
-    return stops.join(used, "stop_id", "left_semi")
+    """P15: left semi join on ``stop_key`` — drop stops that no trip
+    visits. Not on ``stop_id``: two stops may share a ``ref`` (P11)."""
+    used = stop_times.select("stop_key").distinct()
+    return stops.join(used, "stop_key", "left_semi")
 
 
 def prune_unused_routes(lines: DataFrame, trips: DataFrame) -> DataFrame:

@@ -33,7 +33,8 @@ Abidjan (``gtfs.interpolated_stop_times``) and Florianópolis. The
 frequency path and Accra share one trip builder, ``gtfs.build_trips``.
 Every pipeline numbers trips from 0 (transitfeed's auto-increment, O5)
 and writes the P11 ``stop_id`` into stop_times, the id stops.txt
-carries.
+carries. Both docs pipelines keep a trip only when it has stop_times
+(:func:`_live_trips`) and prune stops on the unique ``stop_key``.
 """
 
 from __future__ import annotations
@@ -144,13 +145,14 @@ def _osm_stages(name_without: str) -> tuple[Stage, ...]:
 def _frequency_stages(name_without: str = "stop") -> tuple[Stage, ...]:
     return _osm_stages(name_without) + (
         Stage(("trips",), ("lines", "itineraries"), gtfs.build_trips),
-        Stage(("frequencies",), ("trips",), gtfs.build_frequencies),
         Stage(
             ("stop_times",), ("trips", "itin_stops", "stops"),
             lambda trips, itin_stops, stops: gtfs.interpolated_stop_times(trips, itin_stops, stops, "travel_min"),
         ),
+        Stage(("live_trips",), ("trips", "stop_times"), _live_trips),
+        Stage(("frequencies",), ("live_trips",), gtfs.build_frequencies),
         Stage(("stops_final",), ("stops", "stop_times", "parent_map"), _stops_final),
-        Stage(("routes_final",), ("lines", "trips"), _routes_final),
+        Stage(("routes_final",), ("lines", "live_trips"), _routes_final),
     )
 
 
@@ -281,8 +283,10 @@ def _frequency_outputs(s: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return dict(
         stops=s["stops_final"],
         routes=s["routes_final"],
-        trips=s["trips"].drop("line_osm_id", "itinerary_osm_id", "fr", "to", "frequency_min", "travel_min"),
-        stop_times=s["stop_times"],
+        trips=s["live_trips"].select(
+            "trip_id", "route_id", "service_id", "shape_id", "direction_id", "trip_headsign"
+        ),
+        stop_times=s["stop_times"].drop("stop_key"),
         shapes=s["shapes"],
         frequencies=s["frequencies"],
         stations=s["stations"],
@@ -320,7 +324,7 @@ def _schedule_outputs(s: dict[str, DataFrame], feed_start: str, feed_end: str) -
         stops=s["sched_stops_final"],
         routes=s["sched_routes_final"],
         trips=s["sched_live_trips"].drop("itinerary_osm_id", "service", "trip_seq"),
-        stop_times=s["sched_stop_times"],
+        stop_times=s["sched_stop_times"].drop("stop_key"),
         shapes=s["shapes"],
         stations=s["stations"],
         calendar=calendar,
@@ -429,11 +433,14 @@ def _schedule_stop_times(filled, trips_full):
             "stop_id",
             F.row_number().over(st_order).alias("stop_sequence"),
             "timepoint",
+            "stop_key",
         )
     )
 
 
 def _live_trips(trips_full, stop_times):
-    """Trips that lost all stops (invalid-time truncation at the first
-    stop) produce no stop_times and are pruned like unused routes."""
+    """Trips without stop_times are pruned like unused routes: on the
+    schedule path, those that lost all stops (invalid-time truncation
+    at the first stop); on the frequency path, those with fewer than
+    two resolved stops. Their ids leave a gap."""
     return trips_full.join(stop_times.select("trip_id").distinct(), "trip_id", "left_semi")

@@ -8,8 +8,11 @@ city instead of the (unavailable) Overpass fixtures.
 
 from __future__ import annotations
 
+import csv
 import dataclasses
+import io
 import math
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +20,7 @@ from pyspark.sql import functions as F
 from osm2gtfs_spark.plans import gtfs
 from osm2gtfs_spark.plans.pipeline import run_frequency_pipeline
 from osm2gtfs_spark.sources import docs as D
-from osm2gtfs_spark.sources.gtfs_sink import validate_feed
+from osm2gtfs_spark.sources.gtfs_sink import validate_feed, write_gtfs_zip
 
 
 @pytest.fixture(scope="module")
@@ -83,9 +86,14 @@ def _secs(t: str) -> int:
     return int(h) * 3600 + int(m) * 60 + int(s)
 
 
-def test_stop_times_interpolation(tables):
-    """W6: first stop 06:00:00, last 06:00 + travel minutes, interior
-    stops by cumulative great-circle distance (transitfeed radius)."""
+def test_stop_times_interpolation(spark, tables):
+    """W6: stop_sequence 1..n, first stop 06:00:00, last 06:00 + the
+    trip's travel_min, interior stops by cumulative great-circle
+    distance (transitfeed radius); no timepoint column, so the zip
+    writes it empty."""
+    assert "timepoint" not in tables.stop_times.columns
+    rels = D.decode_relations(D.docs_df(spark, D.CitySpec(n_lines=6, with_stop_areas=True)))
+    travel = {r.trip_id: r.travel_min for r in gtfs.build_trips(*gtfs.build_lines(rels)).collect()}
     coords = {r.stop_id: (r.lat, r.lon) for r in tables.stops.collect()}
     by_trip: dict[str, list] = {}
     for r in tables.stop_times.collect():
@@ -94,13 +102,12 @@ def test_stop_times_interpolation(tables):
     moved = 0
     for trip_id, sts in by_trip.items():
         sts.sort(key=lambda s: int(s.stop_sequence))
-        seqs = [int(s.stop_sequence) for s in sts]
-        assert seqs[0] >= 1 and seqs == sorted(set(seqs)), trip_id
+        assert [int(s.stop_sequence) for s in sts] == list(range(1, len(sts) + 1)), trip_id
         secs = [_secs(s.arrival_time) for s in sts]
         assert [_secs(s.departure_time) for s in sts] == secs
         assert secs[0] == 6 * 3600 and secs == sorted(secs), trip_id
+        assert secs[-1] == 6 * 3600 + travel[trip_id] * 60, trip_id
         total = secs[-1] - secs[0]
-        assert total > 0 and total % 60 == 0, trip_id
         cum = [0.0]
         for a, b in zip(sts, sts[1:]):
             cum.append(cum[-1] + _haversine(*coords[a.stop_id], *coords[b.stop_id]))
@@ -139,6 +146,56 @@ def test_frequency_pipeline_matches_accra(spark, tables):
 
     freq = timetable(tables, lambda shape_id: int(shape_id.removeprefix("relation/")))
     assert freq and freq == timetable(accra, int)
+
+
+def test_unresolved_members_and_one_stop_trips(spark, tmp_path):
+    """A member that is not a stop (its node is outside the extract)
+    writes no stop_times row and leaves a gap in stop_sequence. A trip
+    with fewer than two resolved stops is dropped from trips.txt and
+    frequencies.txt, and a route left without trips from routes.txt;
+    the kept trips keep their ids. The zip's references hold."""
+    docs = D.docs_df(spark, D.CitySpec(n_lines=6))
+    rels = D.decode_relations(docs)
+    lines, itins = gtfs.build_lines(rels)
+    members: dict[int, list[str]] = {}
+    for r in gtfs.itinerary_stops(rels).orderBy("pos").collect():
+        members.setdefault(r.itinerary_osm_id, []).append(r.stop_key)
+    by_line: dict[int, list[int]] = {}
+    for r in itins.orderBy("itinerary_osm_id").collect():
+        by_line.setdefault(r.line_osm_id, []).append(r.itinerary_osm_id)
+    (_, dead), (_, (gap, *_)) = sorted(by_line.items())[:2]
+    # every itinerary of one line keeps one stop; another drops a middle one
+    drop = {k for i in dead for k in members[i][1:]} | {members[gap][1]}
+    out = run_frequency_pipeline(docs.filter(~F.col("doc_id").isin(sorted(drop))))
+    every = {r.itinerary_osm_id: r for r in gtfs.build_trips(lines, itins).collect()}
+    trips = {r.trip_id: r for r in out.trips.collect()}
+    assert set(trips) == {t.trip_id for i, t in every.items() if i not in dead}
+    assert {r.trip_id for r in out.frequencies.collect()} == set(trips)
+    routes = {r.route_id for r in out.routes.collect()}
+    assert every[dead[0]].route_id not in routes and routes == {t.route_id for t in trips.values()}
+    seqs: dict[str, list[int]] = {}
+    for r in out.stop_times.collect():
+        seqs.setdefault(r.trip_id, []).append(int(r.stop_sequence))
+    assert set(seqs) == set(trips)
+    want = [p + 1 for p, k in enumerate(members[gap]) if k != members[gap][1]]
+    assert sorted(seqs[every[gap].trip_id]) == want and 2 not in want
+    checks = {r.check: r.n_bad for r in validate_feed(out).collect()}
+    assert not any(checks.values()), checks
+    path = write_gtfs_zip(out, str(tmp_path / "feed.zip"))
+    with zipfile.ZipFile(path) as z:
+        read = {n: list(csv.DictReader(io.StringIO(z.read(n).decode("utf-8")))) for n in z.namelist()}
+    assert {r["trip_id"] for r in read["stop_times.txt"]} == {r["trip_id"] for r in read["trips.txt"]}
+    assert {r["stop_id"] for r in read["stop_times.txt"]} <= {r["stop_id"] for r in read["stops.txt"]}
+
+
+def test_prune_unused_stops_by_key(spark):
+    """P15 prunes on the unique stop_key: of two stops sharing a ``ref``
+    (so one P11 stop_id), the one no trip visits goes."""
+    stops = spark.createDataFrame(
+        [("node/1", "P7"), ("node/2", "P7"), ("node/3", "node/3")], "stop_key string, stop_id string"
+    )
+    stop_times = spark.createDataFrame([("0", "P7", "node/1")], "trip_id string, stop_id string, stop_key string")
+    assert [r.stop_key for r in gtfs.prune_unused_stops(stops, stop_times).collect()] == ["node/1"]
 
 
 def test_shapes_stitched_and_truncation(tables):
